@@ -333,8 +333,11 @@ object Bench {
     // the synthetic kernel's r15 pin on the reference host (see above):
     // host-speed ratio at record time = synthetic_kernel_sec / this
     val syntheticRef = 0.0 // 0.0 = unpinned; set from the r15 record
+    // an unpinned reference is omitted, so no consumer divides by zero
+    val synthRefJson =
+      if (syntheticRef > 0) f""","synthetic_ref_sec":$syntheticRef%.3f""" else ""
     val synthJson = syntheticKernelSec
-      .map(s => f""","synthetic_kernel_sec":$s%.3f,"synthetic_ref_sec":$syntheticRef%.3f""")
+      .map(s => f""","synthetic_kernel_sec":$s%.3f$synthRefJson""")
       .getOrElse("")
     val calibration =
       if (probeRatios.isEmpty && syntheticKernelSec.isEmpty) "null"
@@ -354,16 +357,18 @@ object Bench {
     // contract line stays exactly as before (first and only JSON line);
     // the sidecars give any consumer the full machine-readable record,
     // and the short bracket-prefixed summary below fits ANY tail without
-    // being mistakable for the contract line.
+    // being mistakable for the contract line. The /tmp sidecar name
+    // carries the JVM pid so concurrent runs keep separate records.
+    val tmpSidecar = s"/tmp/graft_bench_${cpus}_${ProcessHandle.current().pid()}.json"
     Seq(java.nio.file.Paths.get("bench_results.json"),
-        java.nio.file.Paths.get(s"/tmp/graft_bench_$cpus.json")).foreach { p =>
+        java.nio.file.Paths.get(tmpSidecar)).foreach { p =>
       try java.nio.file.Files.write(p,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable =>
         System.err.println(s"[bench] sidecar write failed ($p): ${e.getMessage}") }
     }
     println(f"[bench] total=$total%.3f sec arms=${results.size} " +
-      f"failed=${failed.size} sidecar=bench_results.json,/tmp/graft_bench_$cpus.json")
+      f"failed=${failed.size} sidecar=bench_results.json,$tmpSidecar")
     spark.stop()
   }
 }

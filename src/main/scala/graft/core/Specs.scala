@@ -113,9 +113,9 @@ final case class LlmSpec(
     requestsPerMinute: Option[Int] = None,
     /** Shared-bucket scope (the reference's Redis scope key,
       * redis_rate_limiter.py). A filesystem path → exact ONE-host bucket
-      * via a lock-protected state file; `bucket://host:port/scope` →
-      * exact MULTI-host bucket via the [[graft.llm.TokenBucketServer]]
-      * daemon. None → per-executor split (rate = rpm / numExecutors). */
+      * via a lock-protected state file; `redis://host:port/scope` →
+      * exact MULTI-host bucket via [[graft.llm.RedisBucket]]. None →
+      * per-executor split (rate = rpm / numExecutors). */
     rateLimitScopeFile: Option[String] = None,
     /** Explicit executor count for the per-worker rpm split. Uncoordinated
       * buckets on a deployment where Spark's conf can't tell the fleet size

@@ -6,8 +6,7 @@ package graft.llm
   * logical bucket). Implementations: per-executor [[RateLimiter]] (rate =
   * rpm / numExecutors, the documented default split) and
   * [[FileCoordinatedBucket]] (exact global bucket for all executor JVMs
-  * on one host). A Redis/network-coordinated impl plugs in here without
-  * touching the Invoke operator.
+  * on one host) and [[RedisBucket]] (exact multi-host bucket).
   */
 trait GlobalBucket {
   /** Block until a token is available; returns wait time in ms. */

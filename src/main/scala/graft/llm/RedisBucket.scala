@@ -102,10 +102,10 @@ final class RedisBucket(
   }
 
   /** One RESP command round trip on the persistent connection, with up to
-    * 3 reconnects (same at-least-once caveat as [[SocketBucket]]: a
-    * repeated ACQUIRE forfeits at most one token, a repeated PENALIZE is
-    * idempotent via the script's max()). Throws [[RedisBucket.ErrorReply]]
-    * on a `-ERR`-class reply, IOException on transport failure. */
+    * 3 reconnects (at-least-once: a repeated ACQUIRE forfeits at most one
+    * token, a repeated PENALIZE is idempotent via the script's max()).
+    * Throws [[RedisBucket.ErrorReply]] on a `-ERR`-class reply,
+    * IOException on transport failure. */
   private def command(parts: Seq[String]): Any = synchronized {
     var lastErr: java.io.IOException = null
     var attempt = 0

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   * `max` aggregation whose shuffle is ≤ cols·2^p rows per partition)
   * — and the report's other columns are computed exactly as before.
   * ProfilerSpec pins the estimates within HLL error on known
-  * cardinalities; ScratchBench `profile_hll` records the wide-table
-  * win over the expand plan. Min/max are computed on the NATIVE
+  * cardinalities; BENCH_NOTES ("Profiler HLL tier") records the
+  * timings against the exact tier. Min/max are computed on the NATIVE
   * type (so numeric columns order numerically) and cast to string for
   * the uniform report schema. Complex-typed columns (arrays, maps,
   * structs) get counts only — their string rendering is engine-

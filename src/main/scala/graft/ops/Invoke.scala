@@ -58,8 +58,8 @@ object ClientPool {
       "uncoordinated rate_limit_rpm needs a knowable executor count to " +
         "split the global rate: set spark.executor.instances or " +
         "spark.dynamicAllocation.maxExecutors, or use a coordinated " +
-        "scope (redis://host:port/scope, bucket://host:port/scope, or " +
-        "a shared file path) which needs no split"))
+        "scope (redis://host:port/scope or a shared file path) which " +
+        "needs no split"))
 
   /** Parse `host:port` from a scope URI, failing with the scheme's usage
     * message instead of a raw MatchError/NumberFormatException. */
@@ -92,10 +92,9 @@ object ClientPool {
     *     local-fallback + circuit breaker on outage — the reference's
     *     production shape, redis_rate_limiter.py; scope is typically
     *     "provider:model")
-    *   - `bucket://host:port/scope` → [[SocketBucket]] against a
-    *     [[TokenBucketServer]] daemon (exact MULTI-host bucket, no Redis
-    *     dependency)
     *   - a filesystem path → [[FileCoordinatedBucket]] (exact one-host)
+    *   - any other `scheme://` → IllegalArgumentException (a mistyped
+    *     redis URI must not silently become a one-host lock file)
     *   - none → per-executor [[RateLimiter]] (rate = rpm / numExecutors)
     */
   def limiter(runId: String, rpm: Int, burst: Int,
@@ -135,14 +134,9 @@ object ClientPool {
                   math.max(1, rpm / split), math.max(1, burst / split))))
             case _ => throw new IllegalArgumentException(usage)
           }
-        case Some(uri) if uri.startsWith("bucket://") =>
-          val usage = s"bad bucket scope URI (want bucket://host:port/scope): $uri"
-          uri.stripPrefix("bucket://").split("/", 2) match {
-            case Array(hp, scope) =>
-              val (host, port) = hostPort(hp, usage)
-              new SocketBucket(host, port, scope, rpm, burst)
-            case _ => throw new IllegalArgumentException(usage)
-          }
+        case Some(uri) if uri.contains("://") =>
+          throw new IllegalArgumentException("unknown rate-limit scope " +
+            s"scheme (want redis://host:port/scope or a filesystem path): $uri")
         case Some(f) => new FileCoordinatedBucket(f, rpm, burst)
         case None    =>
           val split = requireSplit(splitHint.orElse(executorSplit))

@@ -34,6 +34,10 @@ object EventQueries {
       |  COUNT(DISTINCT user_id) AS n_users
       |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin
 
+  /** State-partition count for bounded streaming drains (BENCH_NOTES
+    * r12, "streaming drains sized by state partitions"). */
+  private val DrainStatePartitions = 8
+
   /** Drains a streaming frame into a fresh memory sink with
     * Trigger.AvailableNow and returns the sink table. The drain runs at
     * a bounded state-partition count: per-micro-batch state-store
@@ -45,14 +49,12 @@ object EventQueries {
     * must build the stream FROM the session it is handed — a plan built
     * on the parent session would plan with the parent's partition count.
     * Fresh temp checkpoints each run, so the state-repartition
-    * restriction never binds. The default count reads the session conf
-    * `graft.stream.drainStatePartitions` (8 where unset — measured best
-    * on this bench host) so a deployment tunes it without code changes. */
+    * restriction never binds. The default count is
+    * [[DrainStatePartitions]]. */
   private def drainToMemory(spark: SparkSession,
       mkStream: SparkSession => DataFrame,
       mode: String, sinkName: String, statePartitions: Int = 0): DataFrame = {
-    val n = if (statePartitions > 0) statePartitions
-      else spark.conf.get("graft.stream.drainStatePartitions", "8").toInt
+    val n = if (statePartitions > 0) statePartitions else DrainStatePartitions
     graft.ops.Parallelism.scopedShufflePartitions(spark, n) { scoped =>
       val query = mkStream(scoped).writeStream
         .outputMode(mode)

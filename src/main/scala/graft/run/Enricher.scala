@@ -216,16 +216,14 @@ final class Enricher(
     val hConf = spark.sessionState.newHadoopConf()
     // stale chunk stagings from crashed/budget-stopped attempts are pure
     // scratch (every attempt stages its own work set); sweep them so
-    // runDir doesn't accrete. Age-gated (default 1 h): concurrent
+    // runDir doesn't accrete. Age-gated (1 h): concurrent
     // attempts against one runDir are the registry's job to prevent, but
     // if one does overlap, its fresh staging must not be deleted from
     // under its in-flight chunk reads — only stagings old enough to be
     // from a dead attempt go. The staging name embeds the attempt's
     // wall-clock salt, so age needs no extra FS metadata call.
     runDir.foreach { rd =>
-      val sweepAgeMs = spark.conf
-        .get("graft.enrich.stagingSweepAgeMs", "3600000").toLong
-      val cutoff = attemptSalt - sweepAgeMs
+      val cutoff = attemptSalt - Enricher.StagingSweepAgeMs
       val root = new org.apache.hadoop.fs.Path(rd)
       val fs = root.getFileSystem(hConf)
       if (fs.exists(root))
@@ -276,10 +274,10 @@ final class Enricher(
     // chunk (quantile range slice) and re-probed the whole done-set once
     // per chunk (anti-join): both O(n) per chunk, so a fixed-chunk-size
     // run was O(n²/chunkRows) — measured 953 s for a 10M-row/100-chunk
-    // fresh run and 518 s for its no-op resume (EnrichLedgerProbe,
-    // BENCH_NOTES r14). Staged, each chunk's read is partition-pruned to
-    // exactly its own rows, per-chunk cost is O(chunk) and the run is
-    // O(n); a fully-covered resume runs ZERO chunks. The staged copy is
+    // fresh run and 518 s for its no-op resume (BENCH_NOTES r14).
+    // Staged, each chunk's read is partition-pruned to exactly its own
+    // rows, per-chunk cost is O(chunk) and the run is O(n); a
+    // fully-covered resume runs ZERO chunks. The staged copy is
     // prompts-only and transient (cleared once the ledger holds the
     // results, and on the next attempt's startup) — at scale one extra
     // prompt write is strictly cheaper than chunks-many input scans.
@@ -663,6 +661,10 @@ final class Enricher(
   * parser = json iff multi-column).
   */
 object Enricher {
+  /** Age past which a chunk staging left in a run dir is swept as the
+    * scratch of a dead attempt. */
+  private val StagingSweepAgeMs = 3600000L
+
   def enrich(df: DataFrame,
              template: String,
              outputColumns: Seq[String],

@@ -127,56 +127,6 @@ class RateLimiterSpec extends AnyFunSuite {
     intercept[NetworkError](doomed.invoke("y", None))
   }
 
-  test("socket bucket enforces ONE rate across separate client pools") {
-    // Two SocketBucket instances stand in for the ClientPools of two
-    // executor JVMs on DIFFERENT hosts — the case the file bucket cannot
-    // cover. Draining through both against one daemon scope must take the
-    // refill time of the SHARED bucket.
-    val daemon = graft.llm.TokenBucketServer.start()
-    try {
-      val rpm = 6000 // 100 tokens/sec
-      val a = new graft.llm.SocketBucket("127.0.0.1", daemon.port, "s1", rpm, 5)
-      val b = new graft.llm.SocketBucket("127.0.0.1", daemon.port, "s1", rpm, 5)
-      val t0 = System.nanoTime()
-      val counts = new java.util.concurrent.atomic.AtomicIntegerArray(2)
-      val threads = Seq((a, 0), (b, 1)).map { case (bucket, i) =>
-        new Thread(() => (0 until 8).foreach { _ =>
-          bucket.acquire(); counts.incrementAndGet(i)
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val elapsedMs = (System.nanoTime() - t0) / 1e6
-      // 16 acquisitions - 5 burst = 11 refill tokens at 100/s >= 110 ms
-      // ideal; assert half to stay robust on a loaded machine
-      assert(elapsedMs >= 55.0,
-        f"16 tokens through a shared 5-burst 100/s bucket in $elapsedMs%.0f ms")
-      assert(counts.get(0) == 8 && counts.get(1) == 8)
-      // independent scopes do NOT share state: s2 drains instantly
-      val c = new graft.llm.SocketBucket("127.0.0.1", daemon.port, "s2",
-        60000, 50)
-      val t1 = System.nanoTime()
-      (0 until 10).foreach(_ => c.acquire())
-      assert((System.nanoTime() - t1) / 1e6 < 1000.0)
-      a.close(); b.close(); c.close()
-    } finally daemon.close()
-  }
-
-  test("penalty via one host's socket bucket stalls the other host") {
-    val daemon = graft.llm.TokenBucketServer.start()
-    try {
-      val a = new graft.llm.SocketBucket("127.0.0.1", daemon.port, "p", 60000, 50)
-      val b = new graft.llm.SocketBucket("127.0.0.1", daemon.port, "p", 60000, 50)
-      a.acquire()
-      a.penalize(300) // host A saw the 429 retry-after
-      val t0 = System.nanoTime()
-      b.acquire()     // host B must honor it
-      val waitedMs = (System.nanoTime() - t0) / 1e6
-      assert(waitedMs >= 150.0,
-        f"server penalty must stall ALL hosts, waited only $waitedMs%.0f ms")
-      a.close(); b.close()
-    } finally daemon.close()
-  }
-
   test("uncoordinated rpm split: honest counts split, unknowable refuses") {
     import graft.ops.ClientPool.{splitFor, requireSplit}
     // local master: one JVM, no split needed
@@ -231,22 +181,6 @@ class RateLimiterSpec extends AnyFunSuite {
       assert(r1.fallbackRate === Some(300))
       graft.ops.ClientPool.shutdown(id3)
     } finally redis.close()
-  }
-
-  test("ClientPool dispatches bucket:// scopes to the socket bucket") {
-    val daemon = graft.llm.TokenBucketServer.start()
-    try {
-      val id = s"sockdisp-${System.nanoTime()}"
-      val l = graft.ops.ClientPool.limiter(id, 600, 10,
-        Some(s"bucket://127.0.0.1:${daemon.port}/run42"))
-      assert(l.isInstanceOf[graft.llm.SocketBucket])
-      l.acquire() // round-trips the wire
-      graft.ops.ClientPool.shutdown(id)
-      intercept[IllegalArgumentException] {
-        graft.ops.ClientPool.limiter(s"$id-bad", 600, 10,
-          Some("bucket://malformed"))
-      }
-    } finally daemon.close()
   }
 
   test("redis bucket enforces ONE aggregate rate through the RESP server") {
@@ -364,6 +298,16 @@ class RateLimiterSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] {
         graft.ops.ClientPool.limiter(s"$id-bad", 600, 10,
           Some("redis://malformed"))
+      }
+      // any other scheme is refused, not taken as a lock-file path: a
+      // mistyped redis URI must not quietly become a one-host bucket
+      for (uri <- Seq("bucket://127.0.0.1:1/s", "rediss://h:1/s",
+          "REDIS://h:1/s")) {
+        val e = intercept[IllegalArgumentException] {
+          graft.ops.ClientPool.limiter(s"$id-scheme", 600, 10, Some(uri))
+        }
+        assert(e.getMessage.contains("redis://host:port/scope"))
+        assert(e.getMessage.contains("filesystem path"))
       }
     } finally redis.close()
   }

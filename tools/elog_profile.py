@@ -28,7 +28,7 @@ def iter_lines(path):
             for line in p.stdout:
                 yield line
             p.wait()
-        elif not f.endswith(".inprogress") or True:
+        else:
             with open(f, "rb") as fh:
                 for line in fh:
                     yield line
