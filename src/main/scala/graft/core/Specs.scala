@@ -50,6 +50,21 @@ object StructuredModes {
   val Efforts: Set[String] = Set("minimal", "low", "medium", "high")
 }
 
+/** The one accepted `LlmSpec.rateLimitScopeFile` form,
+  * `redis://host:port/scope`, parsed in one place for the driver
+  * (`PipelineSpec.validate`) and the executor (`ClientPool.limiter`). */
+object RateLimitScope {
+  private val Uri = """redis://([^:/]+):(\d{1,5})/(.+)""".r
+
+  /** (host, port, scope); anything else — a bare path, another scheme, a
+    * malformed host:port — is an IllegalArgumentException. */
+  def parse(uri: String): (String, Int, String) = uri match {
+    case Uri(host, port, scope) => (host, port.toInt, scope)
+    case _ => throw new IllegalArgumentException("rate-limit scope must " +
+      s"be redis://host:port/scope (unset = per-executor split): $uri")
+  }
+}
+
 /** Failure sentinel written into output cells for skipped rows
   * (reference: ondine/core/models.py:14-18).
   */
@@ -112,10 +127,10 @@ final case class LlmSpec(
     /** Requests/minute across the whole run; divided across partitions. */
     requestsPerMinute: Option[Int] = None,
     /** Shared-bucket scope (the reference's Redis scope key,
-      * redis_rate_limiter.py). A filesystem path → exact ONE-host bucket
-      * via a lock-protected state file; `redis://host:port/scope` →
-      * exact MULTI-host bucket via [[graft.llm.RedisBucket]]. None →
-      * per-executor split (rate = rpm / numExecutors). */
+      * redis_rate_limiter.py): `redis://host:port/scope` → exact global
+      * bucket via [[graft.llm.RedisBucket]], on one host or many. None →
+      * per-executor split (rate = rpm / numExecutors). Any other value
+      * fails [[PipelineSpec.validate]] (see [[RateLimitScope]]). */
     rateLimitScopeFile: Option[String] = None,
     /** Explicit executor count for the per-worker rpm split. Uncoordinated
       * buckets on a deployment where Spark's conf can't tell the fleet size
@@ -220,6 +235,7 @@ final case class PipelineSpec(
     require(overlap.isEmpty,
       s"input/output column overlap: ${overlap.mkString(",")}")
     require(prompt.batchSize >= 1, "batchSize must be >= 1")
+    llm.rateLimitScopeFile.foreach(RateLimitScope.parse)
     // timeoutMs both arms the per-call interrupt AND scales the Invoke
     // dequeue backstop; <= 0 would disable both and let a hung client wedge
     // the task forever. "No deadline" stays available only to direct

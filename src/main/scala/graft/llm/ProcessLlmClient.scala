@@ -1,12 +1,7 @@
 package graft.llm
 
-import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
 import java.math.{BigDecimal => JBigDecimal}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, TimeUnit, TimeoutException}
-import java.util.concurrent.atomic.AtomicLong
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.util.concurrent.{TimeUnit, TimeoutException}
 
 /** Local-process inference client — the seam the reference fills with
   * MLX on Apple hardware (ondine/adapters/unified_litellm_client.py:197-339:
@@ -23,10 +18,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   *             | {"id":1,"error":"...","retryable":false}
   *
   * Responses may arrive out of order (the sidecar may batch internally);
-  * routing is by `id`. The child is shared per (command, JVM) — i.e. per
-  * executor, exactly one copy of the model in memory no matter how many
-  * partition threads call — writes are serialized, reads run on one
-  * daemon router thread completing per-id futures. A dead child fails
+  * routing is by `id`. The child is a [[Sidecar]] shared per
+  * (command, JVM) — i.e. per executor, exactly one copy of the model in
+  * memory no matter how many partition threads call. A dead child fails
   * in-flight calls with a retryable [[NetworkError]] and is respawned on
   * the next call, so the operator's retry/error policy heals sidecar
   * crashes like any transient provider fault. Local inference carries
@@ -47,13 +41,13 @@ class ProcessLlmClient(
 
   def invoke(prompt: String, systemMessage: Option[String]): LlmResponse = {
     val t0 = System.nanoTime()
-    val child = childFor(command)
+    val child = sidecars.childFor(command)
     val (id, fut) =
-      try child.submit(prompt, systemMessage)
+      try child.submit(Seq("prompt" -> prompt) ++ systemMessage.map("system" -> _): _*)
       catch { case e: java.io.IOException =>
         // write failed: the child died under us — evict so the next
         // call respawns, surface as retryable
-        evict(command, child)
+        sidecars.evict(command, child)
         throw new NetworkError(s"local model process write failed: ${e.getMessage}")
       }
     val reply =
@@ -69,7 +63,7 @@ class ProcessLlmClient(
           child.abandon(id)
           throw e
         case e: java.util.concurrent.ExecutionException =>
-          evict(command, child)
+          sidecars.evict(command, child)
           throw new NetworkError(
             s"local model process died: ${e.getCause.getMessage}")
       }
@@ -90,109 +84,8 @@ class ProcessLlmClient(
 }
 
 object ProcessLlmClient {
-  private val mapper = new ObjectMapper()
-  private val children = new ConcurrentHashMap[String, Child]()
-
-  /** One sidecar per (command, JVM); dead entries are replaced. */
-  private def childFor(command: Seq[String]): Child = {
-    val key = command.mkString("\u0000")
-    children.compute(key, (_, existing) =>
-      if (existing != null && existing.alive) existing
-      else {
-        if (existing != null) existing.close()
-        new Child(command)
-      })
-  }
-
-  private def evict(command: Seq[String], child: Child): Unit = {
-    children.remove(command.mkString("\u0000"), child)
-    child.close()
-  }
-
-  /** A live sidecar: serialized stdin writes, one daemon reader routing
-    * replies to per-id futures. */
-  private final class Child(command: Seq[String]) {
-    private val proc = {
-      val pb = new ProcessBuilder(command: _*)
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT) // executor log
-      pb.start()
-    }
-    private val stdin = new BufferedWriter(new OutputStreamWriter(
-      proc.getOutputStream, StandardCharsets.UTF_8))
-    private val pending = new ConcurrentHashMap[Long, CompletableFuture[JsonNode]]()
-    private val ids = new AtomicLong(0L)
-    @volatile private var dead = false
-
-    def alive: Boolean = !dead && proc.isAlive
-
-    private val reader = new Thread(() => {
-      val in = new BufferedReader(new InputStreamReader(
-        proc.getInputStream, StandardCharsets.UTF_8))
-      try {
-        var line = in.readLine()
-        while (line != null) {
-          // a sidecar's stray non-JSON stdout line must not kill routing
-          val node = try Some(mapper.readTree(line))
-            catch { case _: Exception => None }
-          for (n <- node if n.has("id")) {
-            val f = pending.remove(n.path("id").asLong())
-            if (f != null) f.complete(n)
-          }
-          line = in.readLine()
-        }
-      } catch { case _: java.io.IOException => () }
-      finally failAll("local model process closed its stdout")
-    }, s"graft-proc-llm-reader")
-    reader.setDaemon(true)
-    reader.start()
-
-    def submit(prompt: String, system: Option[String]): (Long, CompletableFuture[JsonNode]) = {
-      val id = ids.incrementAndGet()
-      val fut = new CompletableFuture[JsonNode]()
-      pending.put(id, fut)
-      val req = mapper.createObjectNode()
-      req.put("id", id)
-      req.put("prompt", prompt)
-      system.foreach(req.put("system", _))
-      try stdin.synchronized {
-        stdin.write(mapper.writeValueAsString(req)); stdin.write("\n")
-        stdin.flush()
-      } catch { case e: java.io.IOException =>
-        pending.remove(id)
-        throw e
-      }
-      (id, fut)
-    }
-
-    /** Forget a timed-out id so a late reply doesn't leak the future. */
-    def abandon(id: Long): Unit = pending.remove(id)
-
-    private def failAll(msg: String): Unit = {
-      dead = true
-      val it = pending.keySet().iterator()
-      while (it.hasNext) {
-        val f = pending.remove(it.next())
-        if (f != null) f.completeExceptionally(new java.io.IOException(msg))
-      }
-    }
-
-    def close(): Unit = {
-      dead = true
-      try stdin.close() catch { case _: Exception => () }
-      proc.destroy()
-      failAll("local model process closed")
-    }
-  }
+  private val sidecars = new SidecarPool("local model process")
 
   /** Test/ops hook: stop every sidecar this JVM started. */
-  def shutdownAll(): Unit = {
-    val it = children.keySet().iterator()
-    while (it.hasNext) {
-      val c = children.remove(it.next())
-      if (c != null) c.close()
-    }
-  }
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() => shutdownAll()))
+  def shutdownAll(): Unit = sidecars.shutdownAll()
 }

@@ -4,9 +4,8 @@ package graft.llm
   * port surface of the reference's scope-key design
   * (ondine/utils/redis_rate_limiter.py:1-120: N workers, one API key, one
   * logical bucket). Implementations: per-executor [[RateLimiter]] (rate =
-  * rpm / numExecutors, the documented default split) and
-  * [[FileCoordinatedBucket]] (exact global bucket for all executor JVMs
-  * on one host) and [[RedisBucket]] (exact multi-host bucket).
+  * rpm / numExecutors, the documented default split) and [[RedisBucket]]
+  * (exact global bucket for every executor JVM on one host or many).
   */
 trait GlobalBucket {
   /** Block until a token is available; returns wait time in ms. */
@@ -81,88 +80,6 @@ final class RateLimiter(requestsPerMinute: Int, burst: Int)
     tokens = capacity
     penaltyUntilMs = 0L
     lastRefillMs = System.nanoTime() / 1000000L
-  }
-}
-
-/** Exact one-host global bucket: every executor JVM on the machine shares
-  * token state through a lock-protected file — the no-Redis port of the
-  * reference's distributed limiter (redis_rate_limiter.py's token state +
-  * scope key become a state file per scope). Within a JVM a monitor
-  * serializes access (FileChannel locks are process-wide and would throw
-  * OverlappingFileLockException otherwise); across JVMs the OS file lock
-  * serializes. State: "tokensBits lastRefillMs penaltyUntilMs".
-  */
-final class FileCoordinatedBucket(scopeFile: String, requestsPerMinute: Int,
-                                  burst: Int) extends GlobalBucket {
-  require(requestsPerMinute > 0)
-  private val ratePerMs: Double = requestsPerMinute / 60000.0
-  private val capacity: Double = math.max(1, burst).toDouble
-
-  def acquire(): Long = {
-    var waited = 0L
-    while (true) {
-      val sleepMs = withLockedState { case (tokens0, last, penalty) =>
-        val now = System.nanoTime() / 1000000L
-        val tokens = math.min(capacity,
-          tokens0 + math.max(0L, now - last) * ratePerMs)
-        if (now < penalty) ((tokens, now, penalty), penalty - now)
-        else if (tokens >= 1.0) ((tokens - 1.0, now, penalty), 0L)
-        else ((tokens, now, penalty),
-          math.max(1L, math.ceil((1.0 - tokens) / ratePerMs).toLong))
-      }
-      if (sleepMs == 0L) return waited
-      Thread.sleep(math.min(sleepMs, 100L))
-      waited += sleepMs
-    }
-    waited
-  }
-
-  def penalize(delayMs: Long): Unit =
-    withLockedState { case (_, _, penalty) =>
-      val now = System.nanoTime() / 1000000L
-      ((0.0, now, math.max(penalty, now + delayMs)), ())
-    }
-
-  /** Read-modify-write the shared state under JVM monitor + OS file lock. */
-  private def withLockedState[T](
-      f: ((Double, Long, Long)) => ((Double, Long, Long), T)): T =
-    FileCoordinatedBucket.jvmLock(scopeFile).synchronized {
-      val raf = new java.io.RandomAccessFile(scopeFile, "rw")
-      try {
-        val ch = raf.getChannel
-        val lock = ch.lock()
-        try {
-          val state =
-            if (raf.length() == 0) (capacity, System.nanoTime() / 1000000L, 0L)
-            else {
-              raf.seek(0)
-              val parts = raf.readLine().trim.split(" ")
-              (java.lang.Double.longBitsToDouble(parts(0).toLong),
-                parts(1).toLong, parts(2).toLong)
-            }
-          val ((t, l, p), out) = f(state)
-          raf.setLength(0)
-          raf.seek(0)
-          raf.writeBytes(
-            s"${java.lang.Double.doubleToLongBits(t)} $l $p")
-          out
-        } finally lock.release()
-      } finally raf.close()
-    }
-}
-
-object FileCoordinatedBucket {
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  /** Key the intra-JVM monitor on the CANONICAL path: two instances
-    * addressing one scope file via different spellings (relative vs
-    * absolute, symlink) must share a monitor, else FileChannel.lock()
-    * throws OverlappingFileLockException on the second acquire. */
-  private def jvmLock(path: String): Object = {
-    val canonical =
-      try new java.io.File(path).getCanonicalPath
-      catch { case _: java.io.IOException => path }
-    jvmLocks.computeIfAbsent(canonical, _ => new Object)
   }
 }
 

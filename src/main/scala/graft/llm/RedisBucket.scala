@@ -26,13 +26,10 @@ import java.nio.charset.StandardCharsets
   *  - `penalize` writes max(stored, candidate) absolute deadline with a
   *    TTL ≈ the delay, visible to every worker on the scope
   *    (redis_rate_limiter.py:135-142,192-230).
-  *  - Circuit breaker: `breakerThreshold` consecutive failures open it;
-  *    after `breakerProbeMs` the next call goes half-open (one real
-  *    attempt; success closes, failure re-opens). While open, calls route
-  *    through the worker-local `fallback` limiter — lower ceiling, but
-  *    nothing drops (redis_rate_limiter.py:44-47,436-499). With no
-  *    fallback configured, errors propagate: the caller opted in to
-  *    fail-hard.
+  *  - Circuit breaker ([[Breaker]]): while open, calls route through
+  *    the worker-local `fallback` limiter — lower ceiling, but nothing
+  *    drops (redis_rate_limiter.py:44-47,436-499). With no fallback
+  *    configured, errors propagate: the caller opted in to fail-hard.
   *
   * Keys and TTLs: `{namespace:scope}:bucket` (hash: tok, at) and
   * `{namespace:scope}:penalty` (absolute deadline, seconds); the bucket
@@ -71,69 +68,19 @@ final class RedisBucket(
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
 
-  // ── circuit breaker ────────────────────────────────────────────────
-  private var failures = 0
-  private var openedAtMs = -1L
-  private def breakerOpen: Boolean = synchronized {
-    openedAtMs >= 0L &&
-      System.currentTimeMillis() - openedAtMs < breakerProbeMs
-  }
-  private def recordFailure(): Unit = synchronized {
-    failures += 1
-    if (failures >= breakerThreshold) openedAtMs = System.currentTimeMillis()
-  }
-  private def recordSuccess(): Unit = synchronized {
-    failures = 0; openedAtMs = -1L
-  }
-
-  // ── RESP wire ──────────────────────────────────────────────────────
-  private var sock: Socket = _
-  private var in: BufferedInputStream = _
-  private var out: BufferedOutputStream = _
-
-  private def ensureConnected(): Unit = {
-    if (sock == null || sock.isClosed) {
-      sock = new Socket()
-      sock.setTcpNoDelay(true)
-      sock.connect(new InetSocketAddress(host, port), 5000)
-      in = new BufferedInputStream(sock.getInputStream)
-      out = new BufferedOutputStream(sock.getOutputStream)
-    }
-  }
-
-  /** One RESP command round trip on the persistent connection, with up to
-    * 3 reconnects (at-least-once: a repeated ACQUIRE forfeits at most one
-    * token, a repeated PENALIZE is idempotent via the script's max()).
-    * Throws [[RedisBucket.ErrorReply]] on a `-ERR`-class reply,
-    * IOException on transport failure. */
-  private def command(parts: Seq[String]): Any = synchronized {
-    var lastErr: java.io.IOException = null
-    var attempt = 0
-    while (attempt < 3) {
-      try {
-        ensureConnected()
-        out.write(RedisBucket.encode(parts))
-        out.flush()
-        return RedisBucket.parse(in)
-      } catch {
-        case e: java.io.IOException =>
-          lastErr = e
-          try if (sock != null) sock.close() catch { case _: Exception => () }
-          sock = null
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(s"redis unreachable at $host:$port: $lastErr")
-  }
+  private val breaker = new Breaker(breakerThreshold, breakerProbeMs)
+  /** At-least-once with 3 attempts: a repeated ACQUIRE forfeits at most
+    * one token, a repeated PENALIZE is idempotent via the script's max(). */
+  private val conn = new RespConnection(host, port, attempts = 3)
 
   /** EVALSHA with EVAL fallback on NOSCRIPT. */
   private def evalScript(lua: String, sha: String, keys: Seq[String],
                          args: Seq[String]): Any = {
     val tail = Seq(keys.size.toString) ++ keys ++ args
-    try command(Seq("EVALSHA", sha) ++ tail)
+    try conn.command(Seq("EVALSHA", sha) ++ tail)
     catch {
       case e: RedisBucket.ErrorReply if e.getMessage.startsWith("NOSCRIPT") =>
-        command(Seq("EVAL", lua) ++ tail)
+        conn.command(Seq("EVAL", lua) ++ tail)
     }
   }
 
@@ -157,14 +104,14 @@ final class RedisBucket(
     * interval); returns total wait in ms. Transport failures route to the
     * fallback (or rethrow when none). */
   def acquire(): Long = {
-    if (breakerOpen && fallback.isDefined) return fallback.get.acquire()
+    if (breaker.isOpen && fallback.isDefined) return fallback.get.acquire()
     var waited = 0L
     while (true) {
       val granted =
-        try { val g = evalAcquire(1.0)._1; recordSuccess(); g }
+        try { val g = evalAcquire(1.0)._1; breaker.recordSuccess(); g }
         catch {
           case e: java.io.IOException =>
-            recordFailure()
+            breaker.recordFailure()
             fallback match {
               case Some(f) => return waited + f.acquire()
               case None => throw new NetworkError(s"redis bucket: $e")
@@ -181,17 +128,17 @@ final class RedisBucket(
     * deadline, max-merged server-side, TTL = delay + 1 s. */
   def penalize(delayMs: Long): Unit = {
     if (delayMs <= 0) return
-    if (breakerOpen && fallback.isDefined) {
+    if (breaker.isOpen && fallback.isDefined) {
       fallback.get.penalize(delayMs); return
     }
     val deadline = clock() + delayMs / 1000.0
     try {
       evalScript(RedisBucket.PenalizeLua, penalizeSha, Seq(penaltyKey),
         Seq(fmt(deadline), (delayMs + 1000L).toString))
-      recordSuccess()
+      breaker.recordSuccess()
     } catch {
       case e: java.io.IOException =>
-        recordFailure()
+        breaker.recordFailure()
         fallback match {
           case Some(f) => f.penalize(delayMs)
           case None => throw new NetworkError(s"redis bucket: $e")
@@ -205,11 +152,11 @@ final class RedisBucket(
     * [[NetworkError]] with no fallback) instead of dialing the dead
     * endpoint for ~15 s per probe. */
   def availableTokens: Double = {
-    if (breakerOpen && fallback.isDefined) return fallback.get.availableTokens
-    try { val d = evalAcquire(0.0)._2; recordSuccess(); d }
+    if (breaker.isOpen && fallback.isDefined) return fallback.get.availableTokens
+    try { val d = evalAcquire(0.0)._2; breaker.recordSuccess(); d }
     catch {
       case e: java.io.IOException =>
-        recordFailure()
+        breaker.recordFailure()
         fallback match {
           case Some(f) => f.availableTokens
           case None => throw new NetworkError(s"redis bucket: $e")
@@ -228,13 +175,74 @@ final class RedisBucket(
     * throttled by state the caller believes deleted. */
   def reset(): Unit = {
     fallback.foreach(_.reset())
-    if (breakerOpen && fallback.isDefined) return
-    try { command(Seq("DEL", bucketKey, penaltyKey)); recordSuccess() }
+    if (breaker.isOpen && fallback.isDefined) return
+    try { conn.command(Seq("DEL", bucketKey, penaltyKey)); breaker.recordSuccess() }
     catch {
       case e: java.io.IOException =>
-        recordFailure()
+        breaker.recordFailure()
         throw new NetworkError(s"redis bucket: $e")
     }
+  }
+
+  def close(): Unit = conn.close()
+}
+
+/** Consecutive-failure circuit breaker shared by the Redis clients:
+  * `threshold` consecutive failures open it; after `probeMs` the next
+  * call goes half-open (one real attempt; success closes, failure
+  * re-opens). */
+private[llm] final class Breaker(threshold: Int, probeMs: Long) {
+  private var failures = 0
+  private var openedAtMs = -1L
+  def isOpen: Boolean = synchronized {
+    openedAtMs >= 0L && System.currentTimeMillis() - openedAtMs < probeMs
+  }
+  def recordFailure(): Unit = synchronized {
+    failures += 1
+    if (failures >= threshold) openedAtMs = System.currentTimeMillis()
+  }
+  def recordSuccess(): Unit = synchronized {
+    failures = 0; openedAtMs = -1L
+  }
+}
+
+/** One persistent RESP connection to a Redis server, (re)opened lazily.
+  * `command` is one round trip with up to `attempts` tries, reconnecting
+  * after each transport failure; it throws [[RedisBucket.ErrorReply]] on
+  * a `-ERR`-class reply and IOException once every attempt failed. */
+private[llm] final class RespConnection(host: String, port: Int, attempts: Int) {
+  private var sock: Socket = _
+  private var in: BufferedInputStream = _
+  private var out: BufferedOutputStream = _
+
+  private def ensureConnected(): Unit = {
+    if (sock == null || sock.isClosed) {
+      sock = new Socket()
+      sock.setTcpNoDelay(true)
+      sock.connect(new InetSocketAddress(host, port), 5000)
+      in = new BufferedInputStream(sock.getInputStream)
+      out = new BufferedOutputStream(sock.getOutputStream)
+    }
+  }
+
+  def command(parts: Seq[String]): Any = synchronized {
+    var lastErr: java.io.IOException = null
+    var attempt = 0
+    while (attempt < attempts) {
+      try {
+        ensureConnected()
+        out.write(RedisBucket.encode(parts))
+        out.flush()
+        return RedisBucket.parse(in)
+      } catch {
+        case e: java.io.IOException =>
+          lastErr = e
+          try if (sock != null) sock.close() catch { case _: Exception => () }
+          sock = null
+      }
+      attempt += 1
+    }
+    throw new java.io.IOException(s"redis unreachable at $host:$port: $lastErr")
   }
 
   def close(): Unit = if (sock != null) sock.close()

@@ -51,11 +51,11 @@ object ResponseCacheCodec {
 }
 
 /** Redis-backed response cache: one GET on lookup, one SET PX on store,
-  * over the same hand-rolled RESP wire as [[RedisBucket]]. Identical
+  * over the [[RespConnection]] and [[Breaker]] [[RedisBucket]] uses. Identical
   * prompts from different executors/hosts mid-run answer from the shared
   * server with zero new spend.
   *
-  * Outage discipline mirrors [[RedisBucket]]'s breaker: `breakerThreshold`
+  * Outage discipline is [[RedisBucket]]'s breaker: `breakerThreshold`
   * consecutive transport failures open the breaker for `breakerProbeMs`;
   * while open every get is a miss and every put a no-op (the in-memory L1
   * in [[CachingClient]] keeps caching), then ONE probe call goes through.
@@ -70,90 +70,44 @@ final class RedisResponseCache(
   extends ResponseCacheBackend {
   require(ttlSeconds > 0, "ttlSeconds must be positive")
 
-  // ── breaker (same shape as RedisBucket's) ──────────────────────────
-  @transient private var failures = 0
-  @transient private var openedAtMs = -1L
-  private def breakerOpen: Boolean = synchronized {
-    openedAtMs >= 0L &&
-      System.currentTimeMillis() - openedAtMs < breakerProbeMs
-  }
-  private def recordFailure(): Unit = synchronized {
-    failures += 1
-    if (failures >= breakerThreshold) openedAtMs = System.currentTimeMillis()
-  }
-  private def recordSuccess(): Unit = synchronized {
-    failures = 0; openedAtMs = -1L
-  }
+  @transient private lazy val breaker = new Breaker(breakerThreshold, breakerProbeMs)
   /** Test hook: whether the outage breaker is currently open. */
-  private[graft] def breakerIsOpen: Boolean = breakerOpen
+  private[graft] def breakerIsOpen: Boolean = breaker.isOpen
 
-  // ── RESP wire (lazy, per-deserialized-copy = per-executor) ─────────
-  @transient private var sock: java.net.Socket = _
-  @transient private var in: java.io.BufferedInputStream = _
-  @transient private var out: java.io.BufferedOutputStream = _
-
-  private def ensureConnected(): Unit = {
-    if (sock == null || sock.isClosed) {
-      sock = new java.net.Socket()
-      sock.setTcpNoDelay(true)
-      sock.connect(new java.net.InetSocketAddress(host, port), 5000)
-      in = new java.io.BufferedInputStream(sock.getInputStream)
-      out = new java.io.BufferedOutputStream(sock.getOutputStream)
-    }
-  }
-
-  /** One command round trip; a single reconnect retry (GET is idempotent,
-    * a repeated SET overwrites with the same value). */
-  private def command(parts: Seq[String]): Any = synchronized {
-    var lastErr: java.io.IOException = null
-    var attempt = 0
-    while (attempt < 2) {
-      try {
-        ensureConnected()
-        out.write(RedisBucket.encode(parts))
-        out.flush()
-        return RedisBucket.parse(in)
-      } catch {
-        case e: java.io.IOException =>
-          lastErr = e
-          try if (sock != null) sock.close() catch { case _: Exception => () }
-          sock = null
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(s"redis unreachable at $host:$port: $lastErr")
-  }
+  /** Per deserialized copy = per executor. Two attempts: GET is
+    * idempotent, a repeated SET overwrites with the same value. */
+  @transient private lazy val conn = new RespConnection(host, port, attempts = 2)
 
   private def redisKey(key: String): String = s"$namespace:$key"
 
   def get(key: String): Option[LlmResponse] = {
-    if (breakerOpen) return None
+    if (breaker.isOpen) return None
     try {
-      val r = command(Seq("GET", redisKey(key)))
-      recordSuccess()
+      val r = conn.command(Seq("GET", redisKey(key)))
+      breaker.recordSuccess()
       r match {
         case s: String => ResponseCacheCodec.decode(s)
         case _ => None // null bulk = miss
       }
     } catch {
       case _: java.io.IOException | _: RedisBucket.ErrorReply =>
-        recordFailure(); None
+        breaker.recordFailure(); None
     }
   }
 
   def put(key: String, resp: LlmResponse): Unit = {
-    if (breakerOpen) return
+    if (breaker.isOpen) return
     try {
-      command(Seq("SET", redisKey(key), ResponseCacheCodec.encode(resp),
+      conn.command(Seq("SET", redisKey(key), ResponseCacheCodec.encode(resp),
         "PX", (ttlSeconds * 1000L).toString))
-      recordSuccess()
+      breaker.recordSuccess()
     } catch {
       case _: java.io.IOException | _: RedisBucket.ErrorReply =>
-        recordFailure()
+        breaker.recordFailure()
     }
   }
 
-  override def close(): Unit = if (sock != null) sock.close()
+  override def close(): Unit = conn.close()
 }
 
 /** Filesystem response cache (reference: with_disk_cache,

@@ -8,14 +8,14 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
-import graft.core.{ErrorPolicy, LlmSpec, ProcessingSpec, PromptSpec}
+import graft.core.{ErrorPolicy, LlmSpec, ProcessingSpec, PromptSpec, RateLimitScope}
 import graft.llm._
 
 /** Per-executor singletons for the Invoke operator: one rate-limit bucket and
   * one bounded call pool per run per JVM. On a cluster each executor holds a
-  * bucket with rate = rpm / numExecutors (the reference's per-worker split;
-  * its Redis bucket is the exact-global answer — ondine/utils/
-  * redis_rate_limiter.py's scope-key design ports directly when needed).
+  * bucket with rate = rpm / numExecutors (the reference's per-worker split)
+  * unless a `redis://` scope selects the one coordinated bucket,
+  * [[RedisBucket]] (the reference's redis_rate_limiter.py scope-key design).
   */
 object ClientPool {
   private val log = org.slf4j.LoggerFactory.getLogger(ClientPool.getClass)
@@ -27,8 +27,8 @@ object ClientPool {
 
   /** Executor count for the per-worker rpm split of NON-coordinated
     * buckets (worker-local limiter at rate = rpm / executors ≈ the global
-    * rate; the coordinated buckets need no split — they ARE the global
-    * bucket). local[*] → one JVM → Some(1). On a cluster:
+    * rate; the coordinated redis bucket needs no split — it IS the
+    * global bucket). local[*] → one JVM → Some(1). On a cluster:
     * `spark.executor.instances` when set; under dynamic allocation (which
     * leaves it unset) the `maxExecutors` bound — dividing by MORE than
     * the live count under-admits, the safe failure direction. A
@@ -58,18 +58,7 @@ object ClientPool {
       "uncoordinated rate_limit_rpm needs a knowable executor count to " +
         "split the global rate: set spark.executor.instances or " +
         "spark.dynamicAllocation.maxExecutors, or use a coordinated " +
-        "scope (redis://host:port/scope or a shared file path) which " +
-        "needs no split"))
-
-  /** Parse `host:port` from a scope URI, failing with the scheme's usage
-    * message instead of a raw MatchError/NumberFormatException. */
-  private def hostPort(hp: String, usage: String): (String, Int) =
-    hp.split(":", 2) match {
-      case Array(host, port) if host.nonEmpty && port.nonEmpty &&
-          port.forall(_.isDigit) && port.length <= 5 =>
-        (host, port.toInt)
-      case _ => throw new IllegalArgumentException(usage)
-    }
+        "scope (redis://host:port/scope) which needs no split"))
 
   /** Count of calls abandoned by the Invoke dequeue backstop whose pool
     * threads are still wedged (decremented if a wedged call ever
@@ -92,10 +81,10 @@ object ClientPool {
     *     local-fallback + circuit breaker on outage — the reference's
     *     production shape, redis_rate_limiter.py; scope is typically
     *     "provider:model")
-    *   - a filesystem path → [[FileCoordinatedBucket]] (exact one-host)
-    *   - any other `scheme://` → IllegalArgumentException (a mistyped
-    *     redis URI must not silently become a one-host lock file)
     *   - none → per-executor [[RateLimiter]] (rate = rpm / numExecutors)
+    *   - anything else → IllegalArgumentException from
+    *     [[RateLimitScope.parse]], the same check `PipelineSpec.validate`
+    *     runs on the driver
     */
   def limiter(runId: String, rpm: Int, burst: Int,
               scopeFile: Option[String] = None,
@@ -103,42 +92,33 @@ object ClientPool {
     limiters.computeIfAbsent(
       s"$runId:$rpm:$burst:${scopeFile.getOrElse("")}:${splitHint.getOrElse(0)}",
       _ => scopeFile match {
-        case Some(uri) if uri.startsWith("redis://") =>
-          val usage = s"bad redis scope URI (want redis://host:port/scope): $uri"
-          uri.stripPrefix("redis://").split("/", 2) match {
-            case Array(hp, scope) =>
-              val (host, port) = hostPort(hp, usage)
-              // outage fallback: worker-local bucket at rpm/executors —
-              // the per-worker SPLIT of the shared rate, so an outage
-              // degrades to the uncoordinated approximation instead of
-              // multiplying the aggregate admission N× (every executor's
-              // breaker opens at once). An explicit rate_limit_split hint
-              // wins (the user pre-declares the degraded rate); an
-              // unknowable count then keeps the legacy full-rate fallback
-              // rather than refusing — the user DID configure
-              // coordination, and a refusal at breaker-open time would
-              // turn a Redis outage into a hard stop — but the degraded
-              // rate is now DECLARED at config time, not discovered
-              // mid-outage
-              val known = splitHint.orElse(executorSplit)
-              if (known.isEmpty)
-                log.warn("coordinated scope '{}' on a deployment with no " +
-                  "knowable executor count: if the bucket server is " +
-                  "unreachable, the breaker-open fallback admits the FULL " +
-                  "{} rpm PER EXECUTOR (aggregate = rpm x fleet size); " +
-                  "set llm.rate_limit_split or spark.executor.instances " +
-                  "to pre-declare a safe degraded rate", scope, rpm)
-              val split = known.getOrElse(1)
-              new RedisBucket(host, port, scope, rpm, burst,
-                fallback = Some(new RateLimiter(
-                  math.max(1, rpm / split), math.max(1, burst / split))))
-            case _ => throw new IllegalArgumentException(usage)
-          }
-        case Some(uri) if uri.contains("://") =>
-          throw new IllegalArgumentException("unknown rate-limit scope " +
-            s"scheme (want redis://host:port/scope or a filesystem path): $uri")
-        case Some(f) => new FileCoordinatedBucket(f, rpm, burst)
-        case None    =>
+        case Some(uri) =>
+          val (host, port, scope) = RateLimitScope.parse(uri)
+          // outage fallback: worker-local bucket at rpm/executors —
+          // the per-worker SPLIT of the shared rate, so an outage
+          // degrades to the uncoordinated approximation instead of
+          // multiplying the aggregate admission N× (every executor's
+          // breaker opens at once). An explicit rate_limit_split hint
+          // wins (the user pre-declares the degraded rate); an
+          // unknowable count then keeps the legacy full-rate fallback
+          // rather than refusing — the user DID configure
+          // coordination, and a refusal at breaker-open time would
+          // turn a Redis outage into a hard stop — but the degraded
+          // rate is now DECLARED at config time, not discovered
+          // mid-outage
+          val known = splitHint.orElse(executorSplit)
+          if (known.isEmpty)
+            log.warn("coordinated scope '{}' on a deployment with no " +
+              "knowable executor count: if the bucket server is " +
+              "unreachable, the breaker-open fallback admits the FULL " +
+              "{} rpm PER EXECUTOR (aggregate = rpm x fleet size); " +
+              "set llm.rate_limit_split or spark.executor.instances " +
+              "to pre-declare a safe degraded rate", scope, rpm)
+          val split = known.getOrElse(1)
+          new RedisBucket(host, port, scope, rpm, burst,
+            fallback = Some(new RateLimiter(
+              math.max(1, rpm / split), math.max(1, burst / split))))
+        case None =>
           val split = requireSplit(splitHint.orElse(executorSplit))
           new RateLimiter(math.max(1, rpm / split), math.max(1, burst / split))
       })
@@ -172,9 +152,8 @@ object ClientPool {
     pools.keySet.asScala.filter(_.startsWith(prefix)).foreach(k =>
       Option(pools.remove(k)).foreach(_.shutdown()))
     limiters.keySet.asScala.filter(_.startsWith(prefix)).foreach { k =>
-      // socket/file buckets hold OS resources (a persistent TCP
-      // connection to the bucket daemon, a lock file) — close them or a
-      // long-lived executor JVM leaks one connection per finished run
+      // a redis bucket holds a persistent TCP connection — close it or
+      // a long-lived executor JVM leaks one connection per finished run
       Option(limiters.remove(k)).foreach {
         case c: AutoCloseable =>
           try c.close() catch { case _: Exception => () }

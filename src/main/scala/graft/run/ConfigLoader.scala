@@ -31,9 +31,9 @@ import graft.core._
   * evidence:   { id_col: claim_id, text_col: text, top_k: 3, min_score: 0.0 }
   * }}}
   *
-  * `llm.rate_limit_scope_file` selects the shared rate bucket: a
-  * filesystem path (exact one-host) or `redis://host:port/scope` (exact
-  * multi-host); `output.typed_schema` is a Spark DDL string.
+  * `llm.rate_limit_scope_file` selects the shared rate bucket:
+  * `redis://host:port/scope` (exact global bucket; the only accepted
+  * form); `output.typed_schema` is a Spark DDL string.
   */
 object ConfigLoader {
 

@@ -68,6 +68,7 @@ final class PipelineBuilder private () {
     { llm = llm.copy(adaptiveConcurrency = true, maxConcurrency = max); this }
   def withRateLimit(rpm: Int): this.type =
     { llm = llm.copy(requestsPerMinute = Some(rpm)); this }
+  /** Shared bucket scope, `redis://host:port/scope`. */
   def withRateLimitScope(stateFile: String): this.type =
     { llm = llm.copy(rateLimitScopeFile = Some(stateFile)); this }
   def withMaxRetries(n: Int): this.type =

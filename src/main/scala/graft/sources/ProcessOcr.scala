@@ -1,20 +1,19 @@
 package graft.sources
 
 import java.awt.image.BufferedImage
-import java.io.{BufferedReader, BufferedWriter, ByteArrayOutputStream, InputStreamReader, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, TimeUnit, TimeoutException}
-import java.util.concurrent.atomic.AtomicLong
+import java.io.ByteArrayOutputStream
+import java.util.concurrent.{TimeUnit, TimeoutException}
 
 import javax.imageio.ImageIO
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.llm.SidecarPool
 
 /** Sidecar-process OCR engine — the natural-scan seam the reference fills
   * with TesseractOCR/DocTROCR (ondine/knowledge/ocr.py:46-136). A JVM
   * cannot host those models, so the Spark-native shape is the
   * [[graft.llm.ProcessLlmClient]] idiom re-applied to rasters: one
-  * long-lived sidecar PER EXECUTOR speaking newline-delimited JSON over
+  * long-lived [[graft.llm.Sidecar]] PER EXECUTOR (its own pool, never
+  * shared with an LLM client) speaking newline-delimited JSON over
   * stdin/stdout — a real Tesseract wrapper is a ten-line script
   * (`pytesseract.image_to_string(Image.open(BytesIO(b64decode(...))))`)
   * and drops in with ZERO engine changes:
@@ -25,7 +24,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * Replies may arrive out of order (an engine may batch pages);
   * routing is by `id`. The child is shared per (command, JVM) — one
   * model in memory per executor no matter how many partition threads
-  * call — writes are serialized, replies route on one daemon thread.
+  * call.
   *
   * Failure semantics (matching the [[OcrEngine]] contract "never throws
   * on unreadable INPUT"): a per-image `{"error":...}` reply or an
@@ -50,11 +49,11 @@ final class ProcessOcrEngine(
         bos.toByteArray
       } catch { case _: Exception => null }
     if (png == null || png.length == 0) return "" // unreadable input → total
-    val child = childFor(command)
+    val child = sidecars.childFor(command)
     val (id, fut) =
-      try child.submit(java.util.Base64.getEncoder.encodeToString(png))
+      try child.submit("png_b64" -> java.util.Base64.getEncoder.encodeToString(png))
       catch { case e: java.io.IOException =>
-        evict(command, child)
+        sidecars.evict(command, child)
         throw new java.io.UncheckedIOException(
           s"OCR sidecar write failed: ${e.getMessage}", e)
       }
@@ -78,10 +77,10 @@ final class ProcessOcrEngine(
         case _: TimeoutException =>
           rounds += 1
           if (!child.alive) {
-            child.abandon(id); evict(command, child)
+            child.abandon(id); sidecars.evict(command, child)
             throw new RuntimeException("OCR sidecar died (process exited)")
           } else if (child.nanosSinceLastReply >= timeoutMs * 1000000L) {
-            child.abandon(id); evict(command, child)
+            child.abandon(id); sidecars.evict(command, child)
             throw new RuntimeException(
               s"OCR sidecar wedged (no reply to any request for ${timeoutMs}ms); evicted")
           } else if (rounds >= MaxWaitRounds) {
@@ -92,7 +91,7 @@ final class ProcessOcrEngine(
         case e: InterruptedException =>
           child.abandon(id); throw new RuntimeException(e)
         case e: java.util.concurrent.ExecutionException =>
-          evict(command, child)
+          sidecars.evict(command, child)
           throw new RuntimeException(
             s"OCR sidecar died: ${e.getCause.getMessage}")
       }
@@ -105,112 +104,8 @@ object ProcessOcrEngine {
   /** Max full timeout windows one page waits behind a busy-but-replying
     * sidecar before failing (without evicting the shared child). */
   private val MaxWaitRounds = 10
-  private val mapper = new ObjectMapper()
-  private val children = new ConcurrentHashMap[String, Child]()
-
-  /** One sidecar per (command, JVM); dead entries are replaced. */
-  private def childFor(command: Seq[String]): Child = {
-    val key = command.mkString("\u0000")
-    children.compute(key, (_, existing) =>
-      if (existing != null && existing.alive) existing
-      else {
-        if (existing != null) existing.close()
-        new Child(command)
-      })
-  }
-
-  private def evict(command: Seq[String], child: Child): Unit = {
-    children.remove(command.mkString("\u0000"), child)
-    child.close()
-  }
-
-  /** A live sidecar: serialized stdin writes, one daemon reader routing
-    * replies to per-id futures (the ProcessLlmClient.Child discipline). */
-  private final class Child(command: Seq[String]) {
-    private val proc = {
-      val pb = new ProcessBuilder(command: _*)
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT) // executor log
-      pb.start()
-    }
-    private val stdin = new BufferedWriter(new OutputStreamWriter(
-      proc.getOutputStream, StandardCharsets.UTF_8))
-    private val pending = new ConcurrentHashMap[Long, CompletableFuture[JsonNode]]()
-    private val ids = new AtomicLong(0L)
-    @volatile private var dead = false
-    /** Liveness signal for the activity-aware timeout: any stdout line
-      * counts — a child emitting replies (to anyone) is busy, not wedged. */
-    private val lastReplyNanos = new AtomicLong(System.nanoTime())
-
-    def alive: Boolean = !dead && proc.isAlive
-    def nanosSinceLastReply: Long = System.nanoTime() - lastReplyNanos.get()
-
-    private val reader = new Thread(() => {
-      val in = new BufferedReader(new InputStreamReader(
-        proc.getInputStream, StandardCharsets.UTF_8))
-      try {
-        var line = in.readLine()
-        while (line != null) {
-          lastReplyNanos.set(System.nanoTime())
-          val node = try Some(mapper.readTree(line))
-            catch { case _: Exception => None } // stray stdout must not kill routing
-          for (n <- node if n.has("id")) {
-            val f = pending.remove(n.path("id").asLong())
-            if (f != null) f.complete(n)
-          }
-          line = in.readLine()
-        }
-      } catch { case _: java.io.IOException => () }
-      finally failAll("OCR sidecar closed its stdout")
-    }, "graft-proc-ocr-reader")
-    reader.setDaemon(true)
-    reader.start()
-
-    def submit(pngB64: String): (Long, CompletableFuture[JsonNode]) = {
-      val id = ids.incrementAndGet()
-      val fut = new CompletableFuture[JsonNode]()
-      pending.put(id, fut)
-      val req = mapper.createObjectNode()
-      req.put("id", id)
-      req.put("png_b64", pngB64)
-      try stdin.synchronized {
-        stdin.write(mapper.writeValueAsString(req)); stdin.write("\n")
-        stdin.flush()
-      } catch { case e: java.io.IOException =>
-        pending.remove(id)
-        throw e
-      }
-      (id, fut)
-    }
-
-    /** Forget a timed-out id so a late reply doesn't leak the future. */
-    def abandon(id: Long): Unit = pending.remove(id)
-
-    private def failAll(msg: String): Unit = {
-      dead = true
-      val it = pending.keySet().iterator()
-      while (it.hasNext) {
-        val f = pending.remove(it.next())
-        if (f != null) f.completeExceptionally(new java.io.IOException(msg))
-      }
-    }
-
-    def close(): Unit = {
-      dead = true
-      try stdin.close() catch { case _: Exception => () }
-      proc.destroy()
-      failAll("OCR sidecar closed")
-    }
-  }
+  private val sidecars = new SidecarPool("OCR sidecar")
 
   /** Test/ops hook: stop every OCR sidecar this JVM started. */
-  def shutdownAll(): Unit = {
-    val it = children.keySet().iterator()
-    while (it.hasNext) {
-      val c = children.remove(it.next())
-      if (c != null) c.close()
-    }
-  }
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() => shutdownAll()))
+  def shutdownAll(): Unit = sidecars.shutdownAll()
 }

@@ -46,7 +46,7 @@ class ConfigLoaderSpec extends AnyFunSuite {
   test("typed schema, evidence, and rate-limit scope parse from yaml") {
     val spec = ConfigLoader.fromYaml(
       """prompt: {template: "T {text}"}
-        |llm: {rate_limit_scope_file: /tmp/scope.state}
+        |llm: {rate_limit_scope_file: "redis://127.0.0.1:6379/prov:model"}
         |output:
         |  output_columns: [label, score]
         |  response_format: typed
@@ -55,11 +55,15 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |""".stripMargin)
     assert(spec.output.responseFormat == ResponseFormat.Typed)
     assert(spec.output.typedSchema.get.fieldNames.toSeq == Seq("label", "score"))
-    assert(spec.llm.rateLimitScopeFile.contains("/tmp/scope.state"))
+    assert(spec.llm.rateLimitScopeFile.contains("redis://127.0.0.1:6379/prov:model"))
     val ev = spec.evidence.get
     assert(ev.idCol == "cid" && ev.textCol == "body" &&
       ev.topK == 2 && ev.minScore == 0.05)
     spec.validate()
+    // a non-redis scope fails on the driver, before any Invoke task runs
+    val stale = spec.copy(llm = spec.llm.copy(rateLimitScopeFile = Some("/tmp/scope.state")))
+    val e = intercept[IllegalArgumentException](stale.validate())
+    assert(e.getMessage.contains("redis://host:port/scope"))
   }
 
   test("endpoint, deadlines, and adaptive concurrency parse from yaml") {

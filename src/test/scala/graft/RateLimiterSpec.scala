@@ -52,46 +52,6 @@ class RateLimiterSpec extends AnyFunSuite {
     assert(RetryHandler.backoff(20, 100, 60000) == 60000)
   }
 
-  test("file-coordinated bucket enforces ONE rate across instances") {
-    // two bucket instances (stand-ins for two executor JVMs) share one
-    // scope file; draining burst + 10 refill tokens through BOTH must take
-    // at least the refill time of the SHARED bucket - if each instance had
-    // its own tokens the drain would be nearly instant.
-    val scope = java.nio.file.Files.createTempFile("graft_bucket", ".state")
-      .toString
-    val rpm = 6000 // 100 tokens/sec
-    val a = new graft.llm.FileCoordinatedBucket(scope, rpm, 5)
-    val b = new graft.llm.FileCoordinatedBucket(scope, rpm, 5)
-    val t0 = System.nanoTime()
-    val counts = new java.util.concurrent.atomic.AtomicIntegerArray(2)
-    val threads = Seq((a, 0), (b, 1)).map { case (bucket, i) =>
-      new Thread(() => (0 until 8).foreach { _ =>
-        bucket.acquire(); counts.incrementAndGet(i)
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    // 16 acquisitions - 5 burst = 11 refill tokens at 100/s >= 110 ms ideal;
-    // assert half that to stay robust on a loaded machine
-    assert(elapsedMs >= 55.0,
-      f"16 tokens through a shared 5-burst 100/s bucket in $elapsedMs%.0f ms")
-    assert(counts.get(0) == 8 && counts.get(1) == 8)
-  }
-
-  test("penalty through one instance stalls the other") {
-    val scope = java.nio.file.Files.createTempFile("graft_bucket2", ".state")
-      .toString
-    val a = new graft.llm.FileCoordinatedBucket(scope, 60000, 50)
-    val b = new graft.llm.FileCoordinatedBucket(scope, 60000, 50)
-    a.acquire() // initialize state
-    a.penalize(300)
-    val t0 = System.nanoTime()
-    b.acquire()
-    val waitedMs = (System.nanoTime() - t0) / 1e6
-    assert(waitedMs >= 150.0,
-      f"server penalty must stall ALL instances, waited only $waitedMs%.0f ms")
-  }
-
   test("router: weighted pick is deterministic, failover skips dead deployments") {
     import graft.llm._
     final class CountingClient(name: String, fail: Boolean = false)
@@ -299,15 +259,14 @@ class RateLimiterSpec extends AnyFunSuite {
         graft.ops.ClientPool.limiter(s"$id-bad", 600, 10,
           Some("redis://malformed"))
       }
-      // any other scheme is refused, not taken as a lock-file path: a
-      // mistyped redis URI must not quietly become a one-host bucket
+      // redis:// is the one accepted form: other schemes and bare paths
+      // (the retired one-host lock-file bucket) are refused by name
       for (uri <- Seq("bucket://127.0.0.1:1/s", "rediss://h:1/s",
-          "REDIS://h:1/s")) {
+          "REDIS://h:1/s", "/tmp/scope.state", "scope.state")) {
         val e = intercept[IllegalArgumentException] {
           graft.ops.ClientPool.limiter(s"$id-scheme", 600, 10, Some(uri))
         }
         assert(e.getMessage.contains("redis://host:port/scope"))
-        assert(e.getMessage.contains("filesystem path"))
       }
     } finally redis.close()
   }

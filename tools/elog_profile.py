@@ -7,6 +7,11 @@ Aggregates SparkListenerJobStart/JobEnd by the job description label
 ("arm:<name>" from Bench, or any setJobDescription value) and prints, per
 label: jobs, summed job wall (ms), tasks, max single-job wall, stages
 whose task count is 1 and wall > 300 ms (the parallelism-collapse flag).
+
+A stage's label is the job description in its own StageSubmitted
+Properties; a stage without one (e.g. never submitted) keeps the label of
+the FIRST job that lists it, so a stage shared by several jobs is not
+re-attributed to whichever job happened to start last.
 """
 import json, os, subprocess, sys
 from collections import defaultdict
@@ -39,9 +44,8 @@ def main():
     want = sys.argv[2] if len(sys.argv) > 2 else None
     jobs = {}           # jobId -> (label, submitted)
     agg = defaultdict(lambda: [0, 0.0, 0, 0.0])  # label -> [jobs, wall, tasks, maxjob]
-    stage_tasks = {}    # stageId -> numTasks (from job start)
     singles = defaultdict(list)  # label -> [(stageId, wall_s)]
-    stage_label = {}
+    stage_label = {}    # stageId -> label
     for raw in iter_lines(path):
         try:
             e = json.loads(raw)
@@ -53,8 +57,11 @@ def main():
                 "spark.job.description") or "(none)"
             jobs[e["Job ID"]] = (label, e["Submission Time"])
             for si in e.get("Stage Infos", []):
-                stage_tasks[si["Stage ID"]] = si["Number of Tasks"]
-                stage_label[si["Stage ID"]] = label
+                stage_label.setdefault(si["Stage ID"], label)
+        elif ev == "SparkListenerStageSubmitted":
+            desc = (e.get("Properties") or {}).get("spark.job.description")
+            if desc:
+                stage_label[e["Stage Info"]["Stage ID"]] = desc
         elif ev == "SparkListenerJobEnd":
             j = jobs.pop(e["Job ID"], None)
             if j:
