@@ -19,8 +19,14 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Cache hits from either tier return the original response text with
   * tokens and cost zeroed — run metrics then report actual spend, not
-  * what the calls would have cost uncached. The durable response ledger
-  * remains the cross-RUN cache; this seam is within-run.
+  * what the calls would have cost uncached.
+  *
+  * Within one run, Invoke already sends each distinct prompt at most once
+  * per executor (its single-flight table, which keeps the last 10,000
+  * answered prompts), so this wrapper's value is across runs in one JVM
+  * (L1), across executors and hosts (L2), and for repeats further apart
+  * than that table holds. The
+  * durable response ledger remains the per-run-dir resume record.
   */
 final class CachingClient(inner: LlmClient, cacheName: String,
                           maxEntries: Int = 100000,

@@ -58,8 +58,9 @@ object LlmClients {
       "weighted multi-provider split; per-call model recorded in the " +
         "ledger for deployment-distribution reporting"),
     ("cached", "code: CachingClient(inner)",
-      "exact-prompt response cache wrapper - repeat prompts spend " +
-        "nothing and issue no call"))
+      "exact-prompt response cache wrapper across runs and hosts - repeat " +
+        "prompts spend nothing and issue no call (within one run Invoke " +
+        "already sends each distinct prompt once per executor)"))
 
   def forSpec(spec: graft.core.LlmSpec): LlmClient = forSpec(spec, None)
 

@@ -14,7 +14,8 @@ import graft.ops._
 /** Run metrics (reference: ProcessingStats + CostEstimate,
   * ondine/core/models.py:72-82,143-355). Cost is exact Decimal, computed
   * from per-call records deduplicated by (attempt, call) — idempotent under
-  * Spark task retry. */
+  * Spark task retry. Calls, tokens and cost cover the first pass and the
+  * auto-retry redo calls. */
 final case class RunMetrics(
     rows: Long,
     calls: Long,
@@ -53,6 +54,14 @@ final case class EnrichResult(
   *    §7.4). Resume = LEFT ANTI JOIN input vs ledger; task-retry duplicates
   *    dedupe at read by preferring non-null results then latest attempt.
   *    Budget is enforced between chunks from the exact call ledger.
+  *
+  * Both shapes send each distinct prompt at most once per Invoke per
+  * executor (Invoke's single-flight table): rows repeating a prompt carry
+  * the leader's `_call_id` and spend columns, so per-call metrics (the
+  * head-row marker, or `dropDuplicates("_attempt", "_call_id")`) count the
+  * call once. Each auto-retry pass and each durable chunk is its own
+  * Invoke, so a blank answer is never served back to its own retry.
+  * The run's call pool and limiter are released when `enrich` returns.
   */
 final class Enricher(
     spec: PipelineSpec,
@@ -94,8 +103,10 @@ final class Enricher(
     val t0 = System.nanoTime()
     spec.validate()
     val attemptSalt = System.currentTimeMillis()
+    // unique per inline run: the run's call pool is shut down when it
+    // ends, which must not reach a concurrent run started the same ms
     val runId = runDir.map(_.replaceAll("[^A-Za-z0-9]", "_"))
-      .getOrElse(s"inline_$attemptSalt")
+      .getOrElse(s"inline_${attemptSalt}_${Enricher.inlineRuns.incrementAndGet()}")
 
     // 1. load-time equality filters (pushed to the scan by Catalyst)
     val filtered = spec.dataset.filters.foldLeft(df) { case (d, (c, v)) =>
@@ -122,6 +133,10 @@ final class Enricher(
     } catch { case e: Throwable =>
       observers.emit(RunFailed(runId, String.valueOf(e.getMessage)))
       throw e
+    } finally {
+      // the run's results are materialized (persisted); a recompute of
+      // `r.data` recreates the pool and limiter on demand
+      ClientPool.shutdown(runId)
     }
   }
 
@@ -156,13 +171,7 @@ final class Enricher(
     // the same pass that materializes the invocation.
     val parsed0 = ResponseParser.parse(invoked, spec.output)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val first = col(ColName) === col("_call_id")
-    val callAggs = Seq(
-      sum(when(first, 1L).otherwise(0L)).as("_calls"),
-      sum(when(first, col("tokens_in"))).as("_tin"),
-      sum(when(first, col("tokens_out"))).as("_tout"),
-      sum(when(first, col("cost"))).as("_cost"))
-    val aggCols = qualityAggs ++ callAggs
+    val aggCols = qualityAggs ++ headRowCallAggs
     val row0 = parsed0.agg(aggCols.head, aggCols.tail: _*).head()
 
     // per-call observability on the fast path: same ledger-shaped columns
@@ -172,8 +181,9 @@ final class Enricher(
 
     val needRetry = spec.processing.autoRetryAttempts > 0 &&
       lng(row0, "_blank") > 0
-    val parsed1 = if (needRetry) autoRetry(parsed0, formatted, runId)
-      else parsed0
+    val (parsed1, redoSpend) =
+      if (needRetry) autoRetry(parsed0, formatted, runId)
+      else (parsed0, Enricher.Spend.Zero)
     val parsed = if (spec.output.mergeStrategy == MergeStrategy.Update)
       overlap.foldLeft(parsed1)((d, c) =>
         d.withColumn(c, coalesce(col(c), col(s"_old_$c"))).drop(s"_old_$c"))
@@ -186,7 +196,7 @@ final class Enricher(
 
     val data = parsed.drop(internalCols: _*)
     val finalData = if (addedIndex) data.drop(ColName) else data
-    assemble(finalData, qrow, row0, t0)
+    assemble(finalData, qrow, spendOf(row0) + redoSpend, t0)
   }
 
   // --- durable / budgeted path -----------------------------------------
@@ -406,15 +416,12 @@ final class Enricher(
           // one aggregation per chunk over the persisted frame: row count
           // plus call count/cost via the head-row-of-call marker (all rows
           // of this chunk share one _attempt, so the marker is exact)
-          val st = p.agg(count(lit(1)).as("_rows"),
-            sum(when(col(ColName) === col("_call_id"), 1L).otherwise(0L))
-              .as("_calls"),
-            sum(when(col(ColName) === col("_call_id"), col("cost")))
-              .as("_cost"))
+          val st = p.agg(count(lit(1)).as("_rows"), headRowCallAggs: _*)
             .head()
+          val chunkSpend = spendOf(st)
           rowsDone += st.getLong(0)
-          callsDone += (if (st.isNullAt(1)) 0L else st.getLong(1))
-          if (!st.isNullAt(2)) spent = spent.add(st.getDecimal(2))
+          callsDone += chunkSpend.calls
+          spent = spent.add(chunkSpend.cost)
         } else if (ledgerDir.isEmpty) {
           p.count() // materialize the chunk before the next slice reuses it
         }
@@ -499,8 +506,9 @@ final class Enricher(
 
     val needRetry = spec.processing.autoRetryAttempts > 0 &&
       lng(row0, "_blank") > 0
-    val parsed = if (needRetry) autoRetry(parsed0, formatted, runId)
-      else parsed0
+    val (parsed, redoSpend) =
+      if (needRetry) autoRetry(parsed0, formatted, runId)
+      else (parsed0, Enricher.Spend.Zero)
     val qrow = if (needRetry)
       parsed.agg(qualityAggs.head, qualityAggs.tail: _*).head()
     else row0
@@ -510,7 +518,7 @@ final class Enricher(
     val merged = ResultMerger.merge(indexed.drop("prompt"), parsed, outs,
       spec.output.mergeStrategy)
     val finalData = if (addedIndex) merged.drop(ColName) else merged
-    assemble(finalData, qrow, row0, t0)
+    assemble(finalData, qrow, spendOf(row0) + redoSpend, t0)
   }
 
   // --- shared tail ------------------------------------------------------
@@ -526,10 +534,15 @@ final class Enricher(
   /** Auto-retry rows whose outputs all came back null/blank (reference:
     * ondine/api/pipeline.py:1741-1879; skipped rows carry the sentinel and
     * are NOT retried). Callers invoke this only when the aggregation pass
-    * saw at least one blank row, so the first iteration skips the probe. */
+    * saw at least one blank row, so the first iteration skips the probe.
+    * Returns the healed frame and the redo calls' spend, counted by the
+    * head-row marker in the action that materializes each redo. Redo spend
+    * is reported in [[RunMetrics]] but not checked against `maxBudget`,
+    * and redo calls are not ledgered. */
   private def autoRetry(parsed0: DataFrame, formatted: DataFrame,
-                        runId: String): DataFrame = {
+                        runId: String): (DataFrame, Enricher.Spend) = {
     var parsed = parsed0
+    var spent = Enricher.Spend.Zero
     val outs = spec.output.outputColumns
     val allBlank = allBlankExpr
     var attempt = 0
@@ -539,14 +552,16 @@ final class Enricher(
       val redo = Invoke(
         formatted.join(failedIdx, Seq(ColName), "left_semi"),
         client, spec.prompt, spec.llm, spec.processing, runId)
-        .withColumn("_attempt", lit(System.currentTimeMillis()))
       val redoParsed = ResponseParser.parse(redo, spec.output)
-        .select((ColName +: outs).map(col): _*)
+        .select((ColName +: outs ++: Seq("_call_id", "tokens_in",
+          "tokens_out", "cost")).map(col): _*)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      redoParsed.count()
+      spent = spent + spendOf(redoParsed
+        .agg(headRowCallAggs.head, headRowCallAggs.tail: _*).head())
       val keepCols = parsed.columns.toSeq
-      val renamed = outs.foldLeft(redoParsed)((d, c) =>
-        d.withColumnRenamed(c, s"_r_$c"))
+      val renamed = outs.foldLeft(
+        redoParsed.select((ColName +: outs).map(col): _*))(
+        (d, c) => d.withColumnRenamed(c, s"_r_$c"))
       parsed = parsed.join(renamed, Seq(ColName), "left")
       for (c <- outs)
         parsed = parsed.withColumn(c,
@@ -560,7 +575,25 @@ final class Enricher(
       mayHaveBlanks = attempt < spec.processing.autoRetryAttempts &&
         !parsed.filter(allBlank).isEmpty
     }
-    parsed
+    (parsed, spent)
+  }
+
+  /** Calls, tokens and cost over invoked rows, counting each call once by
+    * its head row (`_row_index == _call_id`; followers of a call never
+    * carry their own index). Exact when all rows come from one attempt. */
+  private def headRowCallAggs: Seq[org.apache.spark.sql.Column] = {
+    val head = col(ColName) === col("_call_id")
+    Seq(
+      sum(when(head, 1L).otherwise(0L)).as("_calls"),
+      sum(when(head, col("tokens_in"))).as("_tin"),
+      sum(when(head, col("tokens_out"))).as("_tout"),
+      sum(when(head, col("cost"))).as("_cost"))
+  }
+
+  private def spendOf(r: org.apache.spark.sql.Row): Enricher.Spend = {
+    val costAt = r.fieldIndex("_cost")
+    Enricher.Spend(lng(r, "_calls"), lng(r, "_tin"), lng(r, "_tout"),
+      if (r.isNullAt(costAt)) JBigDecimal.ZERO else r.getDecimal(costAt))
   }
 
   /** Quality counters + the auto-retry blank probe as aggregation columns
@@ -586,11 +619,10 @@ final class Enricher(
     if (r.isNullAt(i)) 0L else r.getLong(i)
   }
 
-  /** Build the result from the quality row (post-retry) and the call row
-    * (first-pass calls: fields _calls/_tin/_tout/_cost). */
+  /** Build the result from the quality row (post-retry) and the run's
+    * spend (first pass plus auto-retry). */
   private def assemble(finalData: DataFrame, qrow: org.apache.spark.sql.Row,
-                       callRow: org.apache.spark.sql.Row,
-                       t0: Long): EnrichResult = {
+                       spent: Enricher.Spend, t0: Long): EnrichResult = {
     val outs = spec.output.outputColumns
     val totalRows = lng(qrow, "_total")
     val valid = lng(qrow, "_valid")
@@ -598,14 +630,12 @@ final class Enricher(
     val rate = if (totalRows == 0) 0.0 else valid.toDouble / totalRows
     val q = QualityReport(totalRows, valid, perCol, rate,
       Quality.rating(rate))
-    val costAt = callRow.fieldIndex("_cost")
     val metrics = RunMetrics(
       rows = totalRows,
-      calls = lng(callRow, "_calls"),
-      tokensIn = lng(callRow, "_tin"),
-      tokensOut = lng(callRow, "_tout"),
-      cost = if (callRow.isNullAt(costAt)) JBigDecimal.ZERO
-        else callRow.getDecimal(costAt),
+      calls = spent.calls,
+      tokensIn = spent.tokensIn,
+      tokensOut = spent.tokensOut,
+      cost = spent.cost,
       skippedRows = lng(qrow, "_skipped"),
       durationMs = (System.nanoTime() - t0) / 1000000L)
     Quality.noOutputGuard(q, metrics.skippedRows,
@@ -664,6 +694,19 @@ object Enricher {
   /** Age past which a chunk staging left in a run dir is swept as the
     * scratch of a dead attempt. */
   private val StagingSweepAgeMs = 3600000L
+
+  /** Inline runs started in this JVM (makes each inline runId unique). */
+  private val inlineRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Calls, tokens and cost of a set of provider calls. */
+  private final case class Spend(calls: Long, tokensIn: Long, tokensOut: Long,
+                                 cost: JBigDecimal) {
+    def +(o: Spend): Spend = Spend(calls + o.calls, tokensIn + o.tokensIn,
+      tokensOut + o.tokensOut, cost.add(o.cost))
+  }
+  private object Spend {
+    val Zero: Spend = Spend(0L, 0L, 0L, JBigDecimal.ZERO)
+  }
 
   def enrich(df: DataFrame,
              template: String,

@@ -5,6 +5,7 @@ import graft.core._
 import graft.llm.MockLlmClient
 import graft.operators.Skew
 import graft.run.Enricher
+import scala.jdk.CollectionConverters._
 
 class AutoRetrySpec extends SparkSpec {
   import spark.implicits._
@@ -133,5 +134,46 @@ class AutoRetrySpec extends SparkSpec {
       s"skipped rows were re-invoked: ${MockLlmClient.calls.get() - before}")
     assert(r.metrics.skippedRows == 5)
     assert(r.quality.validRows == 5)
+  }
+
+  test("auto-retry redo calls count in run metrics on both paths") {
+    // the redo pass is billed like the first pass, so RunMetrics must
+    // report its calls and cost too (inline and durable)
+    def check(runDir: Option[String], tag: String): Unit = {
+      InvokeDedupSpec.reset()
+      val client = new AutoRetrySpec.BillingDropClient
+      val df = (0 until 30).map(i => s"$tag $i").toDF("text").repartition(1)
+      val spec = PipelineSpec(
+        dataset = DatasetSpec(Seq("text")),
+        prompt = PromptSpec("M:{text}", batchSize = 10),
+        processing = ProcessingSpec(autoRetryAttempts = 2),
+        output = OutputSpec(Seq("out")))
+      val before = MockLlmClient.calls.get()
+      val r = new Enricher(spec, client, runDir).enrich(df)
+      val made = MockLlmClient.calls.get() - before
+      assert(r.quality.validRows == 30)
+      assert(made > 3, s"expected redo calls past the 3 first-pass calls: $made")
+      assert(r.metrics.calls == made)
+      val billed = InvokeDedupSpec.billed.asScala.map(_._2)
+        .foldLeft(java.math.BigDecimal.ZERO)(_ add _)
+      assert(billed.signum > 0)
+      assert(r.metrics.cost.compareTo(billed) == 0,
+        s"reported ${r.metrics.cost}, billed $billed")
+    }
+    check(None, "spend-inline")
+    check(Some(java.nio.file.Files.createTempDirectory("graft_redo").toString),
+      "spend-durable")
+  }
+}
+
+object AutoRetrySpec {
+  /** Mock with non-zero prices that drops every 5th batch item on a
+    * payload's first call and records each call's cost. */
+  class BillingDropClient extends MockLlmClient(dropEveryNthBatchItem = 5) {
+    override def invoke(prompt: String, sys: Option[String]): graft.llm.LlmResponse = {
+      val r = super.invoke(prompt, sys)
+      InvokeDedupSpec.billed.add(prompt -> r.cost)
+      r
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.llm.MockLlmClient
 import graft.run.Enricher
+import scala.jdk.CollectionConverters._
 
 class EnricherSpec extends SparkSpec {
   import spark.implicits._
@@ -434,5 +435,22 @@ class EnricherSpec extends SparkSpec {
     // shutdown sweeps every config variant under the runId
     assert(ClientPool.pool(id, 2) ne null) // fresh after sweep, no throw
     ClientPool.shutdown(id)
+  }
+
+  test("ClientPool: finished inline runs leave no live call-pool threads") {
+    def poolThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-invoke-inline_"))
+      .toSet
+    val earlier = poolThreads
+    (0 until 5).foreach { i =>
+      val df = (0 until 16).map(j => s"leak $i $j").toDF("text").repartition(1)
+      Enricher.enrich(df, "L:{text}", Seq("out"), new MockLlmClient(
+        simulatedLatencyMs = 5L), concurrency = 4)
+    }
+    // each run used 4 threads; shutdown lets them exit right away
+    val deadline = System.nanoTime() + 10000000000L
+    def left = (poolThreads -- earlier).size
+    while (left >= 4 && System.nanoTime() < deadline) Thread.sleep(50L)
+    assert(left < 4, s"$left call-pool threads outlived their runs")
   }
 }
