@@ -311,6 +311,12 @@ private[graft] object PendingCall {
   *    one) and dropped with the last running task of that `apply`. No
   *    shuffle, no extra job; a run without repeats pays one
   *    concurrent-map operation per row at batch 1 (a few at batch > 1).
+  *  - Call journal (durable chunks only, set by the Enricher): each call's
+  *    emitted rows, followers included, are appended to the task's
+  *    [[CallJournal]] file in one write and flushed to the OS before the
+  *    next call is submitted, so a killed process loses at most the calls
+  *    in flight. The file opens at the task's first call; without a
+  *    journal target nothing is written.
   *
   * Output columns appended to the input row:
   *   result, error, skipped, _call_id, call_rows, tokens_in, tokens_out,
@@ -339,7 +345,14 @@ object Invoke {
     * columns pass through untouched.
     */
   def apply(df: DataFrame, client: LlmClient, prompt: PromptSpec,
-            llm: LlmSpec, proc: ProcessingSpec, runId: String): DataFrame = {
+            llm: LlmSpec, proc: ProcessingSpec, runId: String): DataFrame =
+    apply(df, client, prompt, llm, proc, runId, journal = None)
+
+  /** As above; with a `journal` target every call's rows are also appended
+    * to the call journal as they are emitted (durable chunks only). */
+  private[graft] def apply(df: DataFrame, client: LlmClient, prompt: PromptSpec,
+                           llm: LlmSpec, proc: ProcessingSpec, runId: String,
+                           journal: Option[CallJournal.Target]): DataFrame = {
     val inSchema = df.schema
     val outSchema = StructType(inSchema.fields ++ appendedFields)
     val idxAt = inSchema.fieldIndex(RowIndex.ColName)
@@ -375,6 +388,7 @@ object Invoke {
       implicit val ec: ExecutionContext =
         ClientPool.pool(runId, if (adaptiveOn) maxConc else conc)
       val flights = ClientPool.flights(token)
+      val journalWriter = journal.map(new CallJournal.Writer(_, outSchema))
 
       def emit(row: Row, result: String, error: String, skipped: Boolean,
                callId: Long, callRows: Int, resp: LlmResponse): Row = {
@@ -642,8 +656,11 @@ object Invoke {
             val out = awaitBounded(p)
             if (own) calls -= 1
             held -= rs.size
+            val emitted = emitAll(p, out, rs)
+            // journaled before the next call is submitted
+            journalWriter.foreach(_.append(emitted))
+            current = emitted.iterator
             fill()
-            current = emitAll(p, out, rs).iterator
           }
           current.next()
         }

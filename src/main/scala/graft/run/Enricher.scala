@@ -49,11 +49,19 @@ final case class EnrichResult(
   *    auto-retry blank probe, and per-call metrics together.
   *
   *  - DURABLE PATH (runDir set and/or budget capped): driver-chunked loop;
-  *    every completed call lands in `runDir/responses` parquet before the
-  *    run advances (reference headline: 0 rows lost on kill -9 — SURVEY
-  *    §7.4). Resume = LEFT ANTI JOIN input vs ledger; task-retry duplicates
-  *    dedupe at read by preferring non-null results then latest attempt.
-  *    Budget is enforced between chunks from the exact call ledger.
+  *    every completed call lands in the call journal
+  *    (`runDir/journal/<attempt>`, see [[graft.ops.CallJournal]]) as its
+  *    rows are emitted, and every chunk in the `runDir/responses` parquet
+  *    ledger before the run advances (reference headline: 0 rows lost on
+  *    kill -9 — SURVEY §7.4). A chunk's journal is deleted once the chunk
+  *    is in the ledger; a journal left by a killed attempt is folded into
+  *    the ledger by the next run before it reads the ledger (an attempt
+  *    that fails with an error folds its own), so a kill re-pays at most
+  *    the calls in flight. Resume = LEFT ANTI JOIN input vs ledger;
+  *    task-retry duplicates (and a journal that outlived its chunk's
+  *    commit) dedupe at read by preferring non-null results then latest
+  *    attempt. Budget is enforced before the first chunk and between
+  *    chunks from the exact call ledger.
   *
   * Both shapes send each distinct prompt at most once per Invoke per
   * executor (Invoke's single-flight table): rows repeating a prompt carry
@@ -218,12 +226,21 @@ final class Enricher(
     }
     val formatted = indexed.select(col(ColName), col("prompt"))
 
-    def invokeRows(rows: DataFrame): DataFrame =
-      Invoke(rows, client, spec.prompt, spec.llm, spec.processing, runId)
-        .withColumn("_attempt", lit(attemptSalt))
-
     val ledgerDir = runDir.map(_ + "/responses")
     val hConf = spark.sessionState.newHadoopConf()
+    // every call a chunk pays for is journaled as its rows are emitted;
+    // this attempt's journal is deleted once its chunk is in the ledger
+    val journalRoot = runDir.map(rd => s"$rd/${CallJournal.DirName}")
+    val journalDir = journalRoot.map(r => s"$r/$attemptSalt")
+    val journal = journalDir.map(d => CallJournal.Target(d, attemptSalt,
+      new org.apache.spark.util.SerializableConfiguration(hConf)))
+    def foldJournal(): Unit = for (root <- journalRoot; dir <- ledgerDir)
+      CallJournal.fold(spark, hConf, root, dir,
+        CallJournal.schema(formatted.schema))
+
+    def invokeRows(rows: DataFrame): DataFrame =
+      Invoke(rows, client, spec.prompt, spec.llm, spec.processing, runId,
+        journal).withColumn("_attempt", lit(attemptSalt))
     // stale chunk stagings from crashed/budget-stopped attempts are pure
     // scratch (every attempt stages its own work set); sweep them so
     // runDir doesn't accrete. Age-gated (1 h): concurrent
@@ -245,13 +262,18 @@ final class Enricher(
     }
     val chunkRows = spec.processing.chunkRows.toLong
 
+    // a killed attempt's journal holds the calls it paid for after its last
+    // chunk commit: fold them into the ledger before reading it, so the done
+    // set, the budget seed and the call metrics see them like any chunk
+    foldJournal()
+
     // The ledger is read ONCE, up front: chunks cover disjoint key ranges,
     // so newly-invoked rows can never reappear downstream — the done-set
     // needs no per-chunk refresh. Spend is kept incrementally (prior
     // ledger cost + each chunk's own cost, aggregated from the chunk's
     // cache before it is released), so per-chunk work is O(chunk), not
     // O(ledger) — flat in chunk count.
-    val priorLedger = ledgerDir.flatMap(readLedger(spark, _))
+    val priorLedger = ledgerDir.flatMap(readLedger(spark, hConf, _))
     val doneSet = priorLedger.map(
       _.filter(col("result").isNotNull || col("skipped"))
         .select(ColName)
@@ -273,6 +295,8 @@ final class Enricher(
       case _ => (0L, JBigDecimal.ZERO)
     }
     var spent = priorCost
+    // a resume whose prior spend is already over the cap invokes nothing
+    if (budgetOn) budget.check(spent)
     var rowsDone =
       if (trackStats) doneSet.map(_.count()).getOrElse(0L) else 0L
     var callsDone = priorCalls
@@ -411,11 +435,13 @@ final class Enricher(
     try {
       chunkSlices.zipWithIndex.foreach { case (mkSlice, chunkIdx) =>
         val p = invokeRows(mkSlice()).persist(StorageLevel.MEMORY_AND_DISK)
-        ledgerDir.foreach(dir => p.write.mode("append").parquet(dir))
         if (trackStats) {
           // one aggregation per chunk over the persisted frame: row count
           // plus call count/cost via the head-row-of-call marker (all rows
-          // of this chunk share one _attempt, so the marker is exact)
+          // of this chunk share one _attempt, so the marker is exact).
+          // Taken BEFORE the ledger write: the write refreshes every cached
+          // plan that reads the ledger, and on a resume `p` reads it
+          // through the done set, so afterwards `p` re-derives as empty.
           val st = p.agg(count(lit(1)).as("_rows"), headRowCallAggs: _*)
             .head()
           val chunkSpend = spendOf(st)
@@ -425,12 +451,21 @@ final class Enricher(
         } else if (ledgerDir.isEmpty) {
           p.count() // materialize the chunk before the next slice reuses it
         }
+        ledgerDir.foreach(dir => p.write.mode("append").parquet(dir))
         if (ledgerDir.isDefined) p.unpersist() else chunks :+= p
+        journalDir.foreach(CallJournal.delete(hConf, _))
         if (budgetOn) budget.check(spent)
         observers.emit(ChunkCompleted(runId, chunkIdx.toLong, spent))
         if (trackStats)
           observers.emit(RunProgress(runId, rowsDone, nRows, callsDone, spent))
       }
+    } catch { case scala.util.control.NonFatal(e) =>
+      // an attempt that fails folds its own journal now, so the calls it
+      // paid for reach the ledger (and every responses/ reader) at once
+      try foldJournal() catch { case scala.util.control.NonFatal(f) =>
+        e.addSuppressed(f)
+      }
+      throw e
     } finally {
       // once results are ledgered the staging is scratch — delete it even
       // on a budget stop (the next attempt re-stages its own remainder)
@@ -441,7 +476,7 @@ final class Enricher(
     }
     if (doneSet.isDefined && !staged) missingAll.unpersist(blocking = false)
     doneSet.foreach(_.unpersist())
-    val invoked = (ledgerDir.flatMap(readLedger(spark, _)) match {
+    val invoked = (ledgerDir.flatMap(readLedger(spark, hConf, _)) match {
       case Some(l) => l
       case None =>
         if (chunks.isEmpty) invokeRows(formatted.limit(0))
@@ -674,14 +709,19 @@ final class Enricher(
     }
   }
 
-  private def readLedger(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (!new java.io.File(dir).exists()) None
+  /** The parquet ledger at `dir` (a path or any Hadoop URI), if any. */
+  private def readLedger(spark: SparkSession,
+                         hConf: org.apache.hadoop.conf.Configuration,
+                         dir: String): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!path.getFileSystem(hConf).exists(path)) None
     else try Some(spark.read.parquet(dir))
     catch {
       // a crash can leave the dir with only an uncommitted _temporary
       // subdir — no schema to infer means no durable rows yet
       case _: org.apache.spark.sql.AnalysisException => None
     }
+  }
 
 }
 

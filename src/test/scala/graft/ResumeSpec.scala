@@ -52,6 +52,25 @@ class ResumeSpec extends SparkSpec {
     assert(got("text 42") == MockLlmClient.md5Hex("P:text 42"))
   }
 
+  test("run dir given as a file: URI: the ledger is read back on resume") {
+    val dir = "file:" + Files.createTempDirectory("graft_resume_uri").toString
+    val df = (0 until 100).map(i => s"text $i").toDF("text").repartition(1)
+    ResumeSpec.DeathCounter.set(0)
+    intercept[Exception] {
+      new Enricher(spec(), new ResumeSpec.DyingClient(60), Some(dir))
+        .enrich(df).data.count()
+    }
+    val durable = spark.read.parquet(s"$dir/responses")
+      .filter(col("result").isNotNull).count()
+    assert(durable > 0 && durable < 100)
+    val before = MockLlmClient.calls.get()
+    val r = new Enricher(spec(), new MockLlmClient(), Some(dir)).enrich(df)
+    assert(r.metrics.rows == 100 && r.quality.validRows == 100)
+    assert(MockLlmClient.calls.get() - before == 100 - durable)
+    val got = r.data.select("text", "out").as[(String, String)].collect().toMap
+    assert(got("text 42") == MockLlmClient.md5Hex("P:text 42"))
+  }
+
   test("completed run resumes with zero invocations") {
     val dir = Files.createTempDirectory("graft_resume2").toString
     val df = (0 until 30).map(i => s"v $i").toDF("text").repartition(1)

@@ -3,6 +3,7 @@
 
     python3 tools/bench_pairs.py PARENT_DIR CHANGE_DIR [--benchmark BENCHMARK.json]
                                  [--trace 0|1] [--workload NAME]
+                                 [--layer NAME[,NAME...]]
 
 Each DIR holds `perfbench/work/results/*.json` records (one per run). Runs
 pair by (workload, seed); when one side has several records for a pair,
@@ -18,6 +19,11 @@ direction, by more than the parent's q3 - q1); and the regression bound
 check (`FAIL` when the change median is worse than the parent median by
 more than the metric's relative bound). Exit status 1 when any bound
 check fails, else 0.
+
+With `--layer`, the table is over the named per-layer metrics of traced
+records instead (`--trace` is ignored): n, each side's median, q1 and q3
+over runs, and the gap. Per-layer metrics have no bounds, so there is no
+verdict and the exit status is 0.
 """
 import argparse
 import glob
@@ -45,18 +51,49 @@ def run_value(entry):
     return entry["median"] if "median" in entry else entry["value"]
 
 
-def load(directory, trace, workload):
-    """{(workload, seed): end_to_end dict} from the newest record per pair."""
+def load(directory, trace, workload, section="end_to_end"):
+    """{(workload, seed): section dict} from the newest record per pair;
+    per-layer sections come from traced records only."""
     out = {}
     for path in sorted(glob.glob(os.path.join(directory, "*.json"))):
         with open(path) as fh:
             rec = json.load(fh)
-        if "end_to_end" not in rec or int(rec.get("trace", 0)) != trace:
+        if not rec.get(section):
+            continue
+        if section == "end_to_end" and int(rec.get("trace", 0)) != trace:
             continue
         if workload and rec.get("workload") != workload:
             continue
-        out[(rec["workload"], rec["seed"])] = rec["end_to_end"]
+        out[(rec["workload"], rec["seed"])] = rec[section]
     return out
+
+
+def layer_value(v):
+    return run_value(v) if isinstance(v, dict) else v
+
+
+def layer_table(parent, change, pairs, names):
+    print(f"{'workload':15s} {'metric':30s} {'n':>3s} "
+          f"{'parent med [q1, q3]':>34s} {'change med [q1, q3]':>34s} "
+          f"{'gap':>7s}")
+    for wl in sorted({w for w, _ in pairs}):
+        seeds = [s for w, s in pairs if w == wl]
+        for name in names:
+            ps, cs = [], []
+            for s in seeds:
+                pe, ce = parent[(wl, s)].get(name), change[(wl, s)].get(name)
+                if pe is not None and ce is not None:
+                    ps.append(layer_value(pe))
+                    cs.append(layer_value(ce))
+            if not ps:
+                print(f"{wl:15s} {name:30s}   0  (absent from a side)")
+                continue
+            pq1, pmed, pq3 = quartiles(ps)
+            cq1, cmed, cq3 = quartiles(cs)
+            gap = (cmed - pmed) / abs(pmed) if pmed else 0.0
+            print(f"{wl:15s} {name:30s} {len(ps):3d} "
+                  f"{pmed:11.4g} [{pq1:9.4g}, {pq3:9.4g}] "
+                  f"{cmed:11.4g} [{cq1:9.4g}, {cq3:9.4g}] {gap:+7.1%}")
 
 
 def main():
@@ -68,15 +105,24 @@ def main():
         "BENCHMARK.json"))
     ap.add_argument("--trace", type=int, default=0)
     ap.add_argument("--workload")
+    ap.add_argument("--layer", help="comma-separated per-layer metrics")
     args = ap.parse_args()
 
-    with open(args.benchmark) as fh:
-        metrics = json.load(fh)["end_to_end"]
-    parent = load(args.parent, args.trace, args.workload)
-    change = load(args.change, args.trace, args.workload)
+    section = "per_layer" if args.layer else "end_to_end"
+    parent = load(args.parent, args.trace, args.workload, section)
+    change = load(args.change, args.trace, args.workload, section)
     pairs = sorted(set(parent) & set(change))
     if not pairs:
         sys.exit("bench_pairs: no (workload, seed) present on both sides")
+    unpaired = sorted((set(parent) | set(change)) - set(pairs))
+    if args.layer:
+        layer_table(parent, change, pairs, args.layer.split(","))
+        if unpaired:
+            print(f"unpaired (ignored): {unpaired}")
+        return
+
+    with open(args.benchmark) as fh:
+        metrics = json.load(fh)["end_to_end"]
 
     failed = False
     head = (f"{'workload':15s} {'metric':17s} {'n':>3s} {'wins':>5s} "
@@ -110,7 +156,6 @@ def main():
                   f"{cmed:11.4g} [{cq1:9.4g}, {cq3:9.4g}] "
                   f"{gap:+7.1%}  {'gain' if gain else '-':7s}  "
                   f"{'ok' if bound_ok else 'FAIL'} ({m['bound']:g})")
-    unpaired = sorted((set(parent) | set(change)) - set(pairs))
     if unpaired:
         print(f"unpaired (ignored): {unpaired}")
     sys.exit(1 if failed else 0)
