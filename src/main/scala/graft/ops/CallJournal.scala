@@ -105,8 +105,8 @@ private[graft] object CallJournal {
 
   /** Append every journal under `root` to the parquet ledger at `ledger`
     * (one Spark job, and only when some journal file holds bytes), then
-    * delete `root`. Assumes no other attempt writes to this run dir, as
-    * the chunk staging sweep does. */
+    * delete `root`. Assumes no other attempt writes to this run dir at
+    * the same time (one live run per run dir). */
   def fold(spark: SparkSession, conf: Configuration, root: String,
            ledger: String, schema: StructType): Unit = {
     val rootPath = new Path(root)

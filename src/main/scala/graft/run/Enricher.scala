@@ -48,7 +48,11 @@ final case class EnrichResult(
   *    the invocation (persisted) and emits quality counters, the
   *    auto-retry blank probe, and per-call metrics together.
   *
-  *  - DURABLE PATH (runDir set and/or budget capped): driver-chunked loop;
+  *  - DURABLE PATH (runDir set and/or budget capped): driver-chunked loop
+  *    over key-range slices of one work set (keys and prompts, flagged
+  *    done or missing against the ledger), materialized once per attempt
+  *    from a snapshot of the done keys that a chunk's ledger write cannot
+  *    refresh, so the input is read once whatever the chunk count;
   *    every completed call lands in the call journal
   *    (`runDir/journal/<attempt>`, see [[graft.ops.CallJournal]]) as its
   *    rows are emitted, and every chunk in the `runDir/responses` parquet
@@ -57,11 +61,13 @@ final case class EnrichResult(
   *    is in the ledger; a journal left by a killed attempt is folded into
   *    the ledger by the next run before it reads the ledger (an attempt
   *    that fails with an error folds its own), so a kill re-pays at most
-  *    the calls in flight. Resume = LEFT ANTI JOIN input vs ledger;
-  *    task-retry duplicates (and a journal that outlived its chunk's
-  *    commit) dedupe at read by preferring non-null results then latest
-  *    attempt. Budget is enforced before the first chunk and between
-  *    chunks from the exact call ledger.
+  *    the calls in flight. Resume = the input's rows whose keys the
+  *    ledger has no result for (an anti-join, as the work set's missing
+  *    rows); task-retry duplicates (and a journal that outlived its
+  *    chunk's commit) dedupe at read by preferring non-null results then
+  *    latest attempt. Budget is enforced before the first chunk, between
+  *    chunks and after each auto-retry pass, from the exact call ledger
+  *    plus the redo calls.
   *
   * Both shapes send each distinct prompt at most once per Invoke per
   * executor (Invoke's single-flight table): rows repeating a prompt carry
@@ -241,25 +247,6 @@ final class Enricher(
     def invokeRows(rows: DataFrame): DataFrame =
       Invoke(rows, client, spec.prompt, spec.llm, spec.processing, runId,
         journal).withColumn("_attempt", lit(attemptSalt))
-    // stale chunk stagings from crashed/budget-stopped attempts are pure
-    // scratch (every attempt stages its own work set); sweep them so
-    // runDir doesn't accrete. Age-gated (1 h): concurrent
-    // attempts against one runDir are the registry's job to prevent, but
-    // if one does overlap, its fresh staging must not be deleted from
-    // under its in-flight chunk reads — only stagings old enough to be
-    // from a dead attempt go. The staging name embeds the attempt's
-    // wall-clock salt, so age needs no extra FS metadata call.
-    runDir.foreach { rd =>
-      val cutoff = attemptSalt - Enricher.StagingSweepAgeMs
-      val root = new org.apache.hadoop.fs.Path(rd)
-      val fs = root.getFileSystem(hConf)
-      if (fs.exists(root))
-        fs.listStatus(root).filter { s =>
-          s.isDirectory && s.getPath.getName.startsWith("chunks_") &&
-            s.getPath.getName.stripPrefix("chunks_").toLongOption
-              .forall(_ < cutoff)
-        }.foreach(s => fs.delete(s.getPath, true))
-    }
     val chunkRows = spec.processing.chunkRows.toLong
 
     // a killed attempt's journal holds the calls it paid for after its last
@@ -274,18 +261,25 @@ final class Enricher(
     // cache before it is released), so per-chunk work is O(chunk), not
     // O(ledger) — flat in chunk count.
     val priorLedger = ledgerDir.flatMap(readLedger(spark, hConf, _))
-    val doneSet = priorLedger.map(
-      _.filter(col("result").isNotNull || col("skipped"))
+    // done keys, each once, over the ledger scan's RDD: its file list is
+    // fixed here, so no plan built on it names `responses/`, and a chunk's
+    // ledger write (which refreshes every cached plan that reads that
+    // path) can neither drop the work set's cache nor show a recompute the
+    // rows this attempt appends
+    val doneKeys = priorLedger.map { l =>
+      val keys = l.filter(col("result").isNotNull || col("skipped"))
         .select(ColName)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      spark.createDataFrame(keys.rdd, keys.schema).distinct()
+        .withColumn("_done", lit(true))
+    }
     val budgetOn = spec.processing.maxBudget.isDefined
     // the per-chunk/per-ledger counter aggregations exist to feed the
     // budget check and the live-progress observers — an unobserved,
     // unbudgeted run skips them entirely (the resume ledger stats in
     // particular are O(prior ledger) per run)
     val trackStats = budgetOn || observers.nonEmpty
-    // prior-attempt counters: spend seeds the budget check, and rows/calls
-    // seed the live-progress counters so a RESUMED run reports a monotone
+    // prior-attempt counters: spend seeds the budget check, and calls seed
+    // the live-progress counters so a RESUMED run reports a monotone
     // fraction of the whole input, not just this attempt's slice
     val (priorCalls, priorCost) = priorLedger match {
       case Some(l) if trackStats =>
@@ -297,151 +291,81 @@ final class Enricher(
     var spent = priorCost
     // a resume whose prior spend is already over the cap invokes nothing
     if (budgetOn) budget.check(spent)
-    var rowsDone =
-      if (trackStats) doneSet.map(_.count()).getOrElse(0L) else 0L
     var callsDone = priorCalls
 
-    // Work set = input minus ledger, ONE anti-join up front, then (when a
-    // run dir exists) ONE range-partition shuffle staging the remaining
-    // rows to parquet keyed by chunk id — the r14 rework of the chunk
-    // machinery. The previous shape re-scanned the full input once per
-    // chunk (quantile range slice) and re-probed the whole done-set once
-    // per chunk (anti-join): both O(n) per chunk, so a fixed-chunk-size
-    // run was O(n²/chunkRows) — measured 953 s for a 10M-row/100-chunk
-    // fresh run and 518 s for its no-op resume (BENCH_NOTES r14).
-    // Staged, each chunk's read is partition-pruned to exactly its own
-    // rows, per-chunk cost is O(chunk) and the run is O(n); a
-    // fully-covered resume runs ZERO chunks. The staged copy is
-    // prompts-only and transient (cleared once the ledger holds the
-    // results, and on the next attempt's startup) — at scale one extra
-    // prompt write is strictly cheaper than chunks-many input scans.
-    // Budget-only durable runs (no runDir) have no shared filesystem to
-    // stage on and no ledger to anti-join, so they keep the quantile
-    // range slices over the source — their chunks stay memory-resident
-    // anyway.
-    val missingAll = doneSet match {
-      case Some(done) => formatted.join(done, Seq(ColName), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      case None => formatted
+    // Work set = this input's keys and prompts, each flagged done or
+    // missing against the done keys (ONE join), sorted within partitions
+    // by key and persisted: the aggregation below materializes it, so the
+    // input is read once per attempt, and every chunk is a key-range
+    // filter over the cache that skips cached batches by their key
+    // min/max. Unpersisted, every chunk's filter would re-read the input
+    // (O(n) per chunk: 953 s for a 10M-row/100-chunk fresh run,
+    // BENCH_NOTES r14). Done rows stay in the set (prompts and all) so
+    // the input's row count and key scope below need no second read.
+    val (workAll, missing) = doneKeys match {
+      case Some(done) =>
+        (formatted.join(done, Seq(ColName), "left"), col("_done").isNull)
+      case None => (formatted, lit(true))
     }
-    // ONE up-front pass over the work set: the exact remaining count
-    // (ledger keys need not be a subset of this input's keys — a caller
-    // may enrich a shrunk/grown frame against an old run dir, so
-    // nRows - done.count() could under- or over-shoot) FUSED with a fine
-    // key-percentile sketch that the quantile-slice path reads its chunk
-    // cuts off — previously the count and the approxQuantile were two
-    // full passes (r14: one job per durable run saved; the sketch insert
-    // is O(1)/row against a count that materializes the persisted
-    // anti-join anyway). The sketch grid bounds the chunk count it can
-    // cut for; the (rare) finer-chunked run falls back to one exact
+    val workSet = workAll.sortWithinPartitions(ColName)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // ONE up-front pass over the work set: the input's row count, the
+    // exact remaining count (ledger keys need not be a subset of this
+    // input's keys — a caller may enrich a shrunk/grown frame against an
+    // old run dir) and a fine key-percentile sketch of the remaining rows
+    // that the chunk cuts come off. The sketch grid bounds the chunk count
+    // it can cut for; the (rare) finer-chunked run falls back to one exact
     // approxQuantile pass below.
     val sketchGrid = 256
-    val aggRow = missingAll.agg(
-      count(lit(1)).as("_n"),
-      percentile_approx(col(ColName),
+    val aggRow = workSet.agg(
+      count(lit(1)).as("_rows"),
+      count(when(missing, lit(1))).as("_n"),
+      percentile_approx(when(missing, col(ColName)),
         typedLit((1 until sketchGrid).map(_.toDouble / sketchGrid)),
         lit(10000)).as("_sketch")).head()
-    val nMissing = aggRow.getLong(0)
+    val nRows = aggRow.getLong(0)
+    val nMissing = aggRow.getLong(1)
     val keySketch: Seq[Long] =
-      if (aggRow.isNullAt(1)) Nil else aggRow.getSeq[Long](1)
-    // total input rows: only the live-progress observers need it beyond
-    // the chunking math (which runs off nMissing) — an unobserved resume
-    // skips the extra count pass over the full input entirely
-    val nRows =
-      if (doneSet.isEmpty) nMissing
-      else if (trackStats) formatted.agg(count(lit(1)).as("n")).head().getLong(0)
-      else nMissing
+      if (aggRow.isNullAt(2)) Nil else aggRow.getSeq[Long](2)
+    // rows of this input done by prior attempts, each counted once
+    var rowsDone = nRows - nMissing
     val numChunks =
       if (nMissing == 0) 0
       else math.max(1L, (nMissing + chunkRows - 1) / chunkRows).toInt
-    val stagingDir = runDir.map(rd => s"$rd/chunks_$attemptSalt")
-    // below ~1M remaining rows the staging round-trip's fixed job costs
-    // exceed what it saves (A/B in BENCH_NOTES r14: parity at 1M, 4x win
-    // at 10M, ~2x loss at 100k) — small multi-chunk runs keep the
-    // quantile slices, which are cheap at that scale (and on a resume
-    // slice the PERSISTED anti-join result, never re-probing the ledger)
-    val stageMinRows = spark.conf
-      .get("graft.enrich.stageChunksMinRows", "1000000").toLong
-    val staged = numChunks > 1 && stagingDir.isDefined &&
-      nMissing >= stageMinRows
-    val chunkSlices: Seq[() => DataFrame] =
-      if (numChunks == 0) Nil
-      else if (numChunks == 1) Seq(() => missingAll)
-      else if (staged) {
-        val dir = stagingDir.get
-        // stage each chunk as `fanout` consecutive range partitions, not
-        // one: a single-file chunk would read back as ONE task (until
-        // maxPartitionBytes splits it) and pin the whole chunk to one
-        // executor on a cluster. Ascending partition ids over an
-        // ascending range partitioning make id/fanout a contiguous chunk
-        // assignment, so the read-back arrives already split — no second
-        // shuffle per chunk. Fanout is capped so a very-many-chunk run
-        // cannot explode the staging write's task count.
-        val fanout = math.max(1, math.min(
-          spark.sparkContext.defaultParallelism, 65536 / numChunks))
-        missingAll
-          .repartitionByRange(numChunks * fanout, col(ColName))
-          .withColumn("_chunk", (spark_partition_id() / fanout).cast("int"))
-          .write.mode("overwrite").partitionBy("_chunk").parquet(dir)
-        if (doneSet.isDefined) missingAll.unpersist(blocking = false)
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = root.getFileSystem(hConf)
-        // skewed key ranges can leave some of the numChunks partitions
-        // empty (no directory); iterate what was actually written, in
-        // ascending key order
-        fs.listStatus(root)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("_chunk="))
-          .map(_.getPath.getName)
-          .sortBy(_.stripPrefix("_chunk=").toInt).toSeq
-          .map(d => () => spark.read.parquet(s"$dir/$d"))
-      } else {
-        // quantile-slice path (budget-only runs with no filesystem to
-        // stage on, and small multi-chunk runs under the staging
-        // threshold): cutoffs give ~chunkRows rows per slice for ANY key
-        // distribution (keys may be sparse or hashed — a dense stride
-        // would iterate ~2^63/chunkRows times); sentinel end-bounds keep
-        // the slices a complete partition of the key space even when the
-        // sketch is off by a few rows. Cuts come off the up-front fused
-        // sketch (zero extra jobs) while the grid can resolve them; a
-        // finer-chunked run than the grid pays the one exact
-        // approxQuantile pass it always used to.
-        val cuts: Seq[Long] =
-          if (numChunks <= sketchGrid && keySketch.size == sketchGrid - 1)
-            (1 until numChunks)
-              .map(i => keySketch(i * sketchGrid / numChunks - 1))
-              .toSeq.sorted
-          else {
-            val probes = (1 until numChunks)
-              .map(i => i.toDouble / numChunks).toArray
-            missingAll
-              .select(col(ColName).cast("double").as("_k"))
-              .stat.approxQuantile("_k", probes, 0.001)
-              .map(_.toLong).toSeq.sorted
-          }
-        val los = None +: cuts.map(Option(_))
-        val his = cuts.map(Option(_)) :+ None
-        los.zip(his).map { case (lo, hi) =>
-          () => (lo, hi) match {
-            case (None, None)       => missingAll
-            case (None, Some(h))    => missingAll.filter(col(ColName) < h)
-            case (Some(l), None)    => missingAll.filter(col(ColName) >= l)
-            case (Some(l), Some(h)) =>
-              missingAll.filter(col(ColName) >= l && col(ColName) < h)
-          }
-        }
+    // cutoffs give ~chunkRows rows per slice for ANY key distribution
+    // (keys may be sparse or hashed — a dense stride would iterate
+    // ~2^63/chunkRows times); sentinel end-bounds keep the slices a
+    // complete partition of the key space even when the sketch is off by
+    // a few rows. Cuts come off the up-front fused sketch (zero extra
+    // jobs) while the grid can resolve them; a finer-chunked run than the
+    // grid pays one exact approxQuantile pass.
+    val cuts: Seq[Long] =
+      if (numChunks <= 1) Nil
+      else if (numChunks <= sketchGrid && keySketch.size == sketchGrid - 1)
+        (1 until numChunks).map(i => keySketch(i * sketchGrid / numChunks - 1))
+          .sorted
+      else {
+        val probes = (1 until numChunks).map(_.toDouble / numChunks).toArray
+        workSet.filter(missing)
+          .select(col(ColName).cast("double").as("_k"))
+          .stat.approxQuantile("_k", probes, 0.001)
+          .map(_.toLong).toSeq.sorted
       }
+    val bounds =
+      if (numChunks == 0) Nil
+      else (None +: cuts.map(Option(_))).zip(cuts.map(Option(_)) :+ None)
+    def slice(lo: Option[Long], hi: Option[Long]): DataFrame =
+      workSet.filter((Seq(missing) ++ lo.map(col(ColName) >= _) ++
+        hi.map(col(ColName) < _)).reduce(_ && _)).select(ColName, "prompt")
 
     var chunks = Vector.empty[DataFrame]
     try {
-      chunkSlices.zipWithIndex.foreach { case (mkSlice, chunkIdx) =>
-        val p = invokeRows(mkSlice()).persist(StorageLevel.MEMORY_AND_DISK)
+      bounds.zipWithIndex.foreach { case ((lo, hi), chunkIdx) =>
+        val p = invokeRows(slice(lo, hi)).persist(StorageLevel.MEMORY_AND_DISK)
         if (trackStats) {
           // one aggregation per chunk over the persisted frame: row count
           // plus call count/cost via the head-row-of-call marker (all rows
-          // of this chunk share one _attempt, so the marker is exact).
-          // Taken BEFORE the ledger write: the write refreshes every cached
-          // plan that reads the ledger, and on a resume `p` reads it
-          // through the done set, so afterwards `p` re-derives as empty.
+          // of this chunk share one _attempt, so the marker is exact)
           val st = p.agg(count(lit(1)).as("_rows"), headRowCallAggs: _*)
             .head()
           val chunkSpend = spendOf(st)
@@ -460,22 +384,14 @@ final class Enricher(
           observers.emit(RunProgress(runId, rowsDone, nRows, callsDone, spent))
       }
     } catch { case scala.util.control.NonFatal(e) =>
+      workSet.unpersist(blocking = false)
       // an attempt that fails folds its own journal now, so the calls it
       // paid for reach the ledger (and every responses/ reader) at once
       try foldJournal() catch { case scala.util.control.NonFatal(f) =>
         e.addSuppressed(f)
       }
       throw e
-    } finally {
-      // once results are ledgered the staging is scratch — delete it even
-      // on a budget stop (the next attempt re-stages its own remainder)
-      if (staged) {
-        val root = new org.apache.hadoop.fs.Path(stagingDir.get)
-        root.getFileSystem(hConf).delete(root, true)
-      }
     }
-    if (doneSet.isDefined && !staged) missingAll.unpersist(blocking = false)
-    doneSet.foreach(_.unpersist())
     val invoked = (ledgerDir.flatMap(readLedger(spark, hConf, _)) match {
       case Some(l) => l
       case None =>
@@ -484,7 +400,7 @@ final class Enricher(
     }).persist(StorageLevel.MEMORY_AND_DISK)
 
     // one record per row: prefer non-null results, then latest attempt —
-    // scoped to THIS input's keys (left-semi vs the formatted frame) when
+    // scoped to THIS input's keys (left-semi vs the work set) when
     // a PRIOR ledger existed: a standing ledger may hold keys a shrunk
     // input no longer carries, and quality/row metrics describe the run's
     // input, not ledger history. A fresh run's ledger holds only keys it
@@ -512,7 +428,7 @@ final class Enricher(
           struct(col("result").isNotNull, col("_attempt"))).as("_best"))
         .select(col(ColName) +:
           payloadCols.map(c => col("_best").getField(c).as(c)): _*)
-        .join(formatted.select(col(ColName)), Seq(ColName), "left_semi")
+        .join(workSet.select(col(ColName)), Seq(ColName), "left_semi")
 
     // ONE action for quality + blank probe + call metrics: the two 1-row
     // aggregates (rows over parsed, calls over the deduplicated ledger —
@@ -536,13 +452,16 @@ final class Enricher(
     if (observers.wantsCallGrain) replayCallEvents(runId, invoked)
     // parsed0 (persisted and just materialized by row0) is the only
     // downstream consumer of the ledger rows — release the ledger cache
-    // now instead of carrying two copies of the run to the session's end
+    // now instead of carrying two copies of the run to the session's end;
+    // the work set's last reader was the key scope above
     invoked.unpersist(blocking = false)
+    workSet.unpersist(blocking = false)
 
     val needRetry = spec.processing.autoRetryAttempts > 0 &&
       lng(row0, "_blank") > 0
     val (parsed, redoSpend) =
-      if (needRetry) autoRetry(parsed0, formatted, runId)
+      if (needRetry) autoRetry(parsed0, formatted, runId,
+        redo => if (budgetOn) budget.check(spent.add(redo.cost)))
       else (parsed0, Enricher.Spend.Zero)
     val qrow = if (needRetry)
       parsed.agg(qualityAggs.head, qualityAggs.tail: _*).head()
@@ -571,11 +490,12 @@ final class Enricher(
     * are NOT retried). Callers invoke this only when the aggregation pass
     * saw at least one blank row, so the first iteration skips the probe.
     * Returns the healed frame and the redo calls' spend, counted by the
-    * head-row marker in the action that materializes each redo. Redo spend
-    * is reported in [[RunMetrics]] but not checked against `maxBudget`,
-    * and redo calls are not ledgered. */
+    * head-row marker in the action that materializes each redo, and hands
+    * the spend so far to `afterPass` after each redo pass (the durable
+    * path's budget check). Redo calls are not ledgered. */
   private def autoRetry(parsed0: DataFrame, formatted: DataFrame,
-                        runId: String): (DataFrame, Enricher.Spend) = {
+      runId: String, afterPass: Enricher.Spend => Unit = _ => ())
+      : (DataFrame, Enricher.Spend) = {
     var parsed = parsed0
     var spent = Enricher.Spend.Zero
     val outs = spec.output.outputColumns
@@ -593,6 +513,7 @@ final class Enricher(
         .persist(StorageLevel.MEMORY_AND_DISK)
       spent = spent + spendOf(redoParsed
         .agg(headRowCallAggs.head, headRowCallAggs.tail: _*).head())
+      afterPass(spent)
       val keepCols = parsed.columns.toSeq
       val renamed = outs.foldLeft(
         redoParsed.select((ColName +: outs).map(col): _*))(
@@ -731,10 +652,6 @@ final class Enricher(
   * parser = json iff multi-column).
   */
 object Enricher {
-  /** Age past which a chunk staging left in a run dir is swept as the
-    * scratch of a dead attempt. */
-  private val StagingSweepAgeMs = 3600000L
-
   /** Inline runs started in this JVM (makes each inline runId unique). */
   private val inlineRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 

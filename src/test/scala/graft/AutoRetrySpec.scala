@@ -164,6 +164,31 @@ class AutoRetrySpec extends SparkSpec {
     check(Some(java.nio.file.Files.createTempDirectory("graft_redo").toString),
       "spend-durable")
   }
+
+  test("a budgeted durable run stops when auto-retry redo spend passes the cap") {
+    val spec = PipelineSpec(
+      dataset = DatasetSpec(Seq("text")),
+      prompt = PromptSpec("B:{text}", batchSize = 10),
+      processing = ProcessingSpec(autoRetryAttempts = 2),
+      output = OutputSpec(Seq("out")))
+    def run(tag: String, cap: Option[BigDecimal]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_redo_cap").toString
+      val df = (0 until 30).map(i => s"$tag $i").toDF("text").repartition(1)
+      val sp = spec.copy(processing = spec.processing.copy(maxBudget = cap))
+      (dir, new Enricher(sp, new AutoRetrySpec.BillingDropClient, Some(dir))
+        .enrich(df))
+    }
+    // same-length prompts cost the same: the first pass is what the
+    // ledger holds, the redo passes are the rest of the run's spend
+    val (dir, r) = run("cap-a", None)
+    val firstPass = spark.read.parquet(s"$dir/responses")
+      .dropDuplicates("_attempt", "_call_id").agg(sum("cost")).head()
+      .getDecimal(0)
+    assert(r.metrics.cost.compareTo(firstPass) > 0, "no redo spend")
+    val cap = firstPass.add(r.metrics.cost).divide(new java.math.BigDecimal(2))
+    intercept[graft.run.BudgetExceededException](
+      run("cap-b", Some(BigDecimal(cap))))
+  }
 }
 
 object AutoRetrySpec {

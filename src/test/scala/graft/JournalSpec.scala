@@ -16,7 +16,8 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.llm.{BatchCodec, LlmResponse, MockLlmClient}
 import graft.ops.{CallJournal, ClientPool, Invoke}
-import graft.run.{BudgetExceededException, Enricher}
+import graft.run.{BudgetExceededException, CollectingObserver, Enricher,
+  ObserverDispatcher, RunProgress}
 
 /** The call journal of a durable run: every answered call is journaled as
   * its rows are emitted, so a process killed inside a chunk re-pays at most
@@ -207,6 +208,20 @@ class JournalSpec extends SparkSpec {
     assert(r.metrics.calls == 10)
     assert(r.metrics.cost.compareTo(once) == 0)
     assertMd5(r.data)
+
+    // with 10 more rows to run, progress counts each done key once
+    val dir2 = tmp("graft_journal_dup_progress")
+    val f2 = journalOf(dir2, 10)
+    Files.copy(f2.toPath, new File(f2.getParent, "part-0-999999.json").toPath)
+    val seen = new CollectingObserver
+    val r2 = new Enricher(spec(1), new MockLlmClient(), Some(dir2), Some("k"),
+      new ObserverDispatcher().register(seen))
+      .enrich(input(spark, repeat = false).filter(col("k") < 20))
+    assert(r2.quality.validRows == 20)
+    val progress = seen.events.asScala.collect { case p: RunProgress => p }
+    assert(progress.nonEmpty)
+    assert(progress.last.rowsDone == 20 && progress.last.totalRows == 20,
+      progress.toString)
   }
 
   test("each call is journaled before the next one starts; a clean run leaves no journal") {

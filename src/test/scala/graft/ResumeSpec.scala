@@ -82,9 +82,8 @@ class ResumeSpec extends SparkSpec {
     assert(r.quality.validRows == 30)
   }
   test("grown/shrunk input vs standing ledger: only truly-missing rows invoked, staging cleaned") {
-    // the staged-chunk path sizes chunks from the EXACT anti-join count,
-    // because ledger keys need not be a subset of the current input's —
-    // a caller may resume a grown or shrunk frame against an old run dir
+    // ledger keys need not be a subset of the current input's — a caller
+    // may resume a grown or shrunk frame against an old run dir
     val dir = Files.createTempDirectory("graft_resume_grow").toString
     def frame(n: Int) = (0 until n).map(i => i.toLong -> s"text $i")
       .toDF("k", "text")
@@ -111,42 +110,46 @@ class ResumeSpec extends SparkSpec {
     assert(MockLlmClient.calls.get() == before2,
       "shrunk input fully covered by the ledger must invoke nothing")
     assert(r3.quality.validRows == 15 && r3.data.count() == 15)
-    // chunk stagings are transient scratch: none may outlive a run
-    val stale = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("chunks_"))
-    assert(stale.isEmpty, s"staging dirs left behind: ${stale.mkString(",")}")
+    // a finished run leaves nothing but the ledger in its run dir
+    assert(new java.io.File(dir).list().toSeq == Seq("responses"))
   }
 
-  test("staged-chunk path (threshold forced): chunked run + resume + staging cleanup") {
-    // production engages staging only past ~1M remaining rows; force it
-    // down so the suite drives the staged write/read/delete arc end-to-end
-    val key = "graft.enrich.stageChunksMinRows"
-    spark.conf.set(key, "1")
-    try {
-      val dir = Files.createTempDirectory("graft_resume_staged").toString
-      val df = (0 until 80).map(i => i.toLong -> s"text $i").toDF("k", "text")
-      val sp = PipelineSpec(
-        dataset = DatasetSpec(Seq("text")),
-        prompt = PromptSpec("ST:{text}", batchSize = 1),
-        processing = ProcessingSpec(chunkRows = 20),
-        output = OutputSpec(Seq("out")))
-      def run() = new Enricher(sp, new MockLlmClient(), runDir = Some(dir),
-        keyColumn = Some("k")).enrich(df)
+  test("a durable attempt reads its source once, fresh or resumed") {
+    // the source sits behind an opaque step that counts the rows it
+    // yields, so no chunk's key-range filter can be pushed below the count
+    val n = 80
+    val read = spark.sparkContext.longAccumulator("source_rows")
+    val base = (0 until n).map(i => i.toLong -> s"text $i").toDF("k", "text")
+      .repartition(2)
+    val df = base.mapPartitions(_.map { r => read.add(1); r })(
+      org.apache.spark.sql.Encoders.row(base.schema))
+    def readBy(f: => Unit): Long = { val b = read.sum; f; read.sum - b }
 
-      val r1 = run()
-      assert(r1.quality.validRows == 80)
-      val got = r1.data.select("k", "out").as[(Long, String)].collect().toMap
-      assert(got(7L) == MockLlmClient.md5Hex("ST:text 7"))
-      // resume with a full ledger: zero chunks, zero invocations
-      val before = MockLlmClient.calls.get()
-      val r2 = run()
-      assert(MockLlmClient.calls.get() == before)
-      assert(r2.quality.validRows == 80)
-      // staging is transient scratch in every outcome
-      val stale = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("chunks_"))
-      assert(stale.isEmpty, s"staging left behind: ${stale.mkString(",")}")
-    } finally spark.conf.unset(key)
+    // fresh: 80 rows in 4 chunks of 20
+    val fresh = Files.createTempDirectory("graft_read_once").toString
+    val freshRead = readBy {
+      val r = new Enricher(spec(), new MockLlmClient(), Some(fresh), Some("k"))
+        .enrich(df)
+      assert(r.quality.validRows == n)
+    }
+    assert(freshRead <= n, s"fresh run read $freshRead source rows for $n")
+
+    // resume: the crash lands in chunk 2, so 3 chunks remain
+    val dir = Files.createTempDirectory("graft_read_once_resume").toString
+    ResumeSpec.DeathCounter.set(0)
+    intercept[Exception] {
+      new Enricher(spec(), new ResumeSpec.DyingClient(25), Some(dir), Some("k"))
+        .enrich(df).data.count()
+    }
+    val durable = spark.read.parquet(s"$dir/responses")
+      .filter(col("result").isNotNull).count()
+    assert(durable >= 20 && durable < 40, s"$durable rows durable")
+    val resumeRead = readBy {
+      val r = new Enricher(spec(), new MockLlmClient(), Some(dir), Some("k"))
+        .enrich(df)
+      assert(r.quality.validRows == n)
+    }
+    assert(resumeRead <= n, s"resume read $resumeRead source rows for $n")
   }
 
   test("string key column: durable run chunks by key quantiles, resumes cleanly") {
