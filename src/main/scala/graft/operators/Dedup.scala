@@ -410,33 +410,30 @@ object Dedup {
     * complement of [[dropNearDuplicates]]'s greedy rule — `cluster_id`
     * groups WHOLE dup chains, so keeping `id === cluster_id` drops
     * exactly one-per-component. Every input doc appears in the output;
-    * docs with no near-dup form singleton clusters.
-    *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min of its own label and its neighbors' labels; fixpoint
-    * = component minimum. Rounds needed = graph diameter, and dup
-    * components are near-cliques (mirrors of one origin), so it
-    * converges in 2-3 rounds. Each round is one shuffle-join + aggregate
-    * on (id, label) PAIRS — never text. If the graph has NOT converged
-    * after `starSwitchIters` rounds (adversarial chain topology: each doc
-    * near-dups only its neighbor, diameter ≈ n), the remaining work hands
-    * off to [[starComponents]] — large-star/small-star alternation that
-    * contracts any component in O(log n) rounds — so a pathological
-    * corpus can't run `maxIters` diameter-bound join rounds. Both paths
-    * produce exactly the component-minimum labels, so the DuckDB
-    * recursive-CTE oracle is unaffected by which one ran. */
+    * docs with no near-dup form singleton clusters. Components come from
+    * [[clusterLabels]] (driver union-find, or large-star/small-star for
+    * graphs the driver does not take); both paths yield exactly the
+    * component-minimum labels, so the DuckDB recursive-CTE oracle is
+    * unaffected by which one ran. */
   def nearDupClusters(df0: DataFrame, idCol: String, textCol: String,
                       numBands: Int = 8, shingleSize: Int = 3,
-                      threshold: Double = 0.5, maxBucketSize: Int = 100,
-                      maxIters: Int = 50,
-                      starSwitchIters: Int = 5,
-                      smallGraphPairs: Long = 5000000L): DataFrame = {
+                      threshold: Double = 0.5,
+                      maxBucketSize: Int = 100): DataFrame = {
     val df = Parallelism.ensure(df0)
     val pairs = nearDuplicatePairs(df, idCol, textCol, numBands,
       shingleSize, threshold, maxBucketSize)
-    clusterLabels(df.select(col(idCol)), idCol, pairs, maxIters,
-      starSwitchIters, smallGraphPairs)
+    clusterLabels(df.select(col(idCol)), idCol, pairs)
   }
+
+  /** Largest semi-filtered pair graph [[clusterLabels]] collects to the
+    * driver: ~16 B/edge, so ~80 MB of parent map. The pair count tracks
+    * the duplicate rate, not the corpus, so even 100 TB corpora with sane
+    * dup rates stay under it. */
+  private val DriverGraphPairs = 5000000L
+
+  /** Round cap of [[starComponents]]: O(log² n) rounds suffice for any
+    * graph, so reaching it means a contraction defect, not a big graph. */
+  private val StarMaxRounds = 50
 
   /** Connected-component labels over an ARBITRARY confirmed-pair graph:
     * every id in `ids` lands in the output with `cluster_id` = the
@@ -444,96 +441,55 @@ object Dedup {
     * label themselves). This is [[nearDupClusters]]'s machinery exposed
     * for other pair sources — embedding near-dups
     * ([[Similarity.embeddingNearDupClusters]] builds on it), winnowing
-    * matches, any dedup relation. Same algorithm and guarantees:
-    * min-label propagation (converges in ~diameter rounds; dup families
-    * are near-cliques → 2-3), large-star/small-star fallback after
-    * `starSwitchIters` non-converged rounds (chains contract in O(log n)
-    * rounds), per-round lineage staging. Edges touching ids ABSENT from
-    * `ids` are dropped (semi-filtered on both endpoints) — without that
-    * rule the two internal paths would disagree on such graphs: the
-    * propagation join ignores unlabeled endpoints while the star
-    * contraction would route connectivity through them.
+    * matches, any dedup relation.
     *
-    * Pair graphs that FIT THE DRIVER (≤ `smallGraphPairs` edges after
-    * the semi-filter; ~16 B/edge ⇒ the 5M default is ~80 MB) take a
-    * driver union-find fast path instead: one collect + one broadcast
-    * join replaces every propagation round, which on iteration-dominated
-    * workloads is most of the wall-clock (each round is a join + agg +
-    * checkpoint job whose FIXED cost dwarfs its data at any corpus size
-    * — the pair count tracks the duplicate rate, not the corpus, so
-    * even 100 TB corpora with sane dup rates stay under the threshold).
-    * Labels are identical by construction (component-min roots). Larger
-    * graphs, or exotic id types, run the distributed paths unchanged;
-    * `smallGraphPairs = 0` forces them. */
-  def clusterLabels(ids: DataFrame, idCol: String, pairs0: DataFrame,
-                    maxIters: Int = 50,
-                    starSwitchIters: Int = 5,
-                    smallGraphPairs: Long = 5000000L): DataFrame = {
+    * Two paths, chosen by what the graph is. A pair graph that FITS THE
+    * DRIVER (≤ `DriverGraphPairs` edges after the semi-filter, with
+    * integral or string ids) takes a driver union-find: one collect plus
+    * one broadcast join. Any other graph (more pairs, or an id type the
+    * driver map does not order, e.g. decimals or dates) runs
+    * [[starLabels]]: large-star/small-star contraction in O(log n)
+    * distributed rounds, even on chains. Both yield the component-minimum
+    * labels. Edges touching ids ABSENT from `ids` are dropped
+    * (semi-filtered on both endpoints) so the two paths agree on such
+    * graphs: union-find would label an absent endpoint nobody reads,
+    * while the star contraction would route connectivity through it. */
+  def clusterLabels(ids: DataFrame, idCol: String,
+                    pairs0: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types._
     val idOnly = ids.select(col(idCol).as("id"))
-    // staged once: every propagation round (and the star fallback)
-    // re-reads the pair set
+    // staged once: the count and whichever path runs re-read it
     val pairs = pairs0.select(col("id_a"), col("id_b"))
       .join(idOnly.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
       .join(idOnly.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
       .transform(Parallelism.stage)
     val dt = pairs.schema("id_a").dataType
-    val driverableType = {
-      import org.apache.spark.sql.types._
-      dt == LongType || dt == IntegerType || dt == ShortType ||
-        dt == ByteType || dt == StringType
-    }
-    val driverable = driverableType &&
-      smallGraphPairs > 0 && pairs.count() <= smallGraphPairs
-    if (driverable)
-      return unionFindLabels(idOnly, idCol, pairs, dt)
-    val edges = pairs.unionByName(
-      pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    // labels keep idCol's NATIVE type (string ids order fine under
-    // min/least; a numeric cast would null them out silently)
-    var labels = idOnly
-      .withColumn("lab", col("id")).transform(Parallelism.stage)
-    var changed = 1L
-    var iters = 0
-    val switchAt = math.min(math.max(1, starSwitchIters), maxIters)
-    while (changed > 0 && iters < switchAt) {
-      val prop = edges.join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst").as("pid")).agg(min(col("lab")).as("nlab"))
-      // eager stage, not persist: each round's plan references
-      // the previous round TWICE (the join and the changed-count), so
-      // without LINEAGE truncation the logical plan doubles per round —
-      // caching truncates execution but not analysis, and a long
-      // propagation run hangs the driver inside plan stringification
-      // (2^rounds tree nodes) before any task runs. The checkpoint
-      // blocks are (id, label) pairs, tiny, and bounded by switchAt
-      // rounds until the context cleaner releases them.
-      val next = labels.join(prop, labels("id") === prop("pid"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"))
-        .transform(Parallelism.stage)
-      changed = next.join(labels.select(col("id"), col("lab").as("old")),
-        Seq("id")).filter(col("lab") =!= col("old")).count()
-      labels = next
-      iters += 1
-    }
-    if (changed > 0) {
-      // diameter exceeded the propagation budget: contract with
-      // star alternation instead of walking the chain one hop per round
-      val (starLabs, _) = starComponents(pairs, maxRounds = maxIters)
-      labels = idOnly
-        .join(starLabs.select(col("id"), col("lab").as("slab")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("slab"), col("id")).as("lab"))
-        .transform(Parallelism.stage)
-    }
-    labels.select(col("id").as(idCol), col("lab").as("cluster_id"))
+    val driverableType = dt == LongType || dt == IntegerType ||
+      dt == ShortType || dt == ByteType || dt == StringType
+    if (driverableType && pairs.count() <= DriverGraphPairs)
+      unionFindLabels(idOnly, idCol, pairs, dt)
+    else starLabels(ids, idCol, pairs)
+  }
+
+  /** The distributed [[clusterLabels]] path: [[starComponents]] over
+    * `pairs`, left-joined onto `ids` so isolated ids label themselves.
+    * Takes `pairs` as given (no semi-filter); exposed so tests can run it
+    * on graphs the driver path would take. */
+  private[graft] def starLabels(ids: DataFrame, idCol: String,
+                                pairs: DataFrame): DataFrame = {
+    val (starLabs, _) = starComponents(pairs)
+    ids.select(col(idCol).as("id"))
+      .join(starLabs.select(col("id"), col("lab").as("slab")),
+        Seq("id"), "left")
+      .select(col("id").as(idCol),
+        coalesce(col("slab"), col("id")).as("cluster_id"))
   }
 
   /** Driver union-find over a collected pair set (the
     * [[clusterLabels]] small-graph fast path): min-ordered roots, path
     * compression, then one broadcast map-join back onto the ids.
-    * Produces exactly the component-min labels the distributed paths
-    * converge to. */
+    * Produces exactly the component-min labels [[starLabels]] converges
+    * to. */
   private def unionFindLabels(idOnly: DataFrame, idCol: String,
                               pairs: DataFrame,
                               dt: org.apache.spark.sql.types.DataType): DataFrame = {
@@ -554,7 +510,7 @@ object Dedup {
     // job PER PARTITION (32 single-task jobs per call in the r14 profile)
     // and buys no memory headroom here — the union-find parent map
     // already holds every endpoint, so driver memory is O(pairs) either
-    // way, and the caller's smallGraphPairs gate bounded that before
+    // way, and clusterLabels' DriverGraphPairs gate bounded that before
     // choosing this path.
     pairs.collect().foreach { row =>
       val (ra, rb) = (root(row.get(0).asInstanceOf[AnyRef]),
@@ -584,7 +540,7 @@ object Dedup {
     * that node's minimum neighborhood label, and SMALL-STAR re-points the
     * smaller neighbors; the edge set contracts to disjoint min-rooted
     * stars in O(log n) rounds even for a pure chain, where one-hop label
-    * propagation needs diameter rounds. Per round the graph moves as
+    * propagation would need diameter rounds. Per round the graph moves as
     * (node, neighbor) PAIRS through two groupBy-explode passes; per-node
     * neighborhood arrays are degree-bound (≤ numBands × maxBucketSize
     * with capped LSH buckets upstream).
@@ -595,12 +551,12 @@ object Dedup {
     * nodes don't appear (callers left-join and coalesce to the node's own
     * id). Exposed for direct graph-topology tests. */
   private[graft] def starComponents(pairs0: DataFrame,
-                                    maxRounds: Int = 50): (DataFrame, Int) = {
+                                    maxRounds: Int = StarMaxRounds): (DataFrame, Int) = {
     // eager stages throughout: each round's edge set references
     // the previous one several times (the bidir union and the fixpoint
     // check), so lineage must truncate per round or the logical plan
-    // grows exponentially (see the propagation loop's note in
-    // nearDupClusters)
+    // doubles per round — caching truncates execution but not analysis,
+    // and a deep run would hang the driver in plan stringification
     var e = pairs0.select(col("id_a").as("u"), col("id_b").as("v"))
       .filter(col("u") =!= col("v")).distinct().transform(Parallelism.stage)
     var rounds = 0
@@ -644,8 +600,8 @@ object Dedup {
     // return silently-wrong clusters. O(log² n) rounds suffice for any
     // graph, so hitting this means maxRounds was set far too small.
     if (!done) throw new IllegalStateException(
-      s"star contraction did not reach fixpoint in $maxRounds rounds; " +
-        "raise maxIters (components need O(log n) rounds)")
+      s"star contraction did not reach fixpoint in $maxRounds rounds " +
+        "(components need O(log n) rounds)")
     // at fixpoint every edge is (node, componentMin); nodes may carry one
     // edge each, roots appear only on the v side and label themselves
     val nonRoots = e.groupBy(col("u").as("id")).agg(min(col("v")).as("lab"))

@@ -316,25 +316,20 @@ object Similarity {
     * confirmed embedding-cosine near-dup graph, `cluster_id` = min vec id
     * per component (singletons label themselves) — the embedding-space
     * complement of [[Dedup.nearDupClusters]], sharing its exact component
-    * machinery ([[Dedup.clusterLabels]]: min-label propagation with the
-    * large-star/small-star fallback). Keeping `id === cluster_id` drops
-    * exactly one representative per semantic dup family — the curation
-    * rule for paraphrase/translation mirrors that text-level shingles
-    * can't see. */
+    * machinery ([[Dedup.clusterLabels]]: driver union-find, or
+    * large-star/small-star contraction for graphs the driver does not
+    * take). Keeping `id === cluster_id` drops exactly one representative
+    * per semantic dup family — the curation rule for paraphrase/
+    * translation mirrors that text-level shingles can't see. */
   def embeddingNearDupClusters(df0: DataFrame, threshold: Double,
                                numPlanes: Int = 4, idCol: String = "vec_id",
                                vecCol: String = "embedding",
-                               maxBucketSize: Int = 1000,
-                               maxIters: Int = 50,
-                               starSwitchIters: Int = 5,
-                               smallGraphPairs: Long = 5000000L): DataFrame = {
+                               maxBucketSize: Int = 1000): DataFrame = {
     // no ensure here: embeddingNearDupPairs ensures internally, and the
     // ids projection below carries no per-row compute worth widening
     val pairs = embeddingNearDupPairs(df0, threshold, numPlanes, idCol,
       vecCol, maxBucketSize)
-    Dedup.clusterLabels(df0.select(col(idCol)), idCol, pairs,
-      maxIters = maxIters, starSwitchIters = starSwitchIters,
-      smallGraphPairs = smallGraphPairs)
+    Dedup.clusterLabels(df0.select(col(idCol)), idCol, pairs)
   }
 
   /** Drop every row except one representative per semantic dup family —
@@ -372,7 +367,7 @@ object Similarity {
     * mega-cluster cannot go quadratic: capped-out clusters pass through
     * un-deduped (keep=1), the same recall-for-robustness trade as the LSH
     * bucket cap. Components use [[Dedup.clusterLabels]] (driver
-    * union-find under the bounded fast path, min-label propagation
+    * union-find under its pair bound, large-star/small-star contraction
     * above it).
     *
     * Emits one row per input vector: (id, cluster, keep ∈ {0,1}).

@@ -141,22 +141,23 @@ object EnrichQueries {
       |  'Grade: ' || COALESCE(text,'')) AS grade
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  /** BudgetController end-to-end with an exact oracle. Uniform per-row
-    * cost (2-char lang → constant prompt length → Decimal 0.000017/call)
-    * over ≤200 rows in 50-row chunks, cap = 125 rows' cost: the run MUST
-    * stop between chunks 3 and 4. The oracle avoids the quantile-boundary
-    * rows: it checks rows well inside the processed range (doc_id < 80),
-    * that the never-reached tail (doc_id ≥ 155) has zero ledger rows, and
-    * the stop verdict itself — chunk-cut slop of ±2 rows cannot move any
-    * of the three. */
+  /** BudgetController end-to-end with an exact oracle. One distinct
+    * prompt per row (`B:{doc_id}`, so Invoke's single-flight shares no
+    * call) and uniform per-row cost (≤ 5 chars → 1 input token → Decimal
+    * 0.000017/call) over ≤200 rows in 50-row chunks, cap = 125 rows'
+    * cost: the run MUST stop between chunks 3 and 4. The oracle avoids
+    * the quantile-boundary rows: it checks rows well inside the processed
+    * range (doc_id < 80), that the never-reached tail (doc_id ≥ 155) has
+    * zero ledger rows, and the stop verdict itself — chunk-cut slop of ±2
+    * rows cannot move any of the three. */
   def qBudgetStop(spark: SparkSession, dir: String): DataFrame = {
     import graft.core._
     val docs = tp(spark, dir, "documents").filter(col("doc_id") < 200)
     val runDir = java.nio.file.Files
       .createTempDirectory("graft_budget_q84").toString
     val spec = PipelineSpec(
-      dataset = DatasetSpec(inputColumns = Seq("lang")),
-      prompt = PromptSpec("B:{lang}"),
+      dataset = DatasetSpec(inputColumns = Seq("doc_id")),
+      prompt = PromptSpec("B:{doc_id}"),
       processing = ProcessingSpec(
         maxBudget = Some(BigDecimal("0.002125")), chunkRows = 50),
       output = OutputSpec(Seq("out")))
@@ -178,7 +179,7 @@ object EnrichQueries {
     """WITH d AS (
       |  SELECT doc_id, lang FROM documents WHERE doc_id < 200),
       |nn AS (SELECT count(*) AS n FROM d)
-      |SELECT doc_id, md5('B:' || lang) AS result,
+      |SELECT doc_id, md5('B:' || doc_id) AS result,
       |  (SELECT n FROM nn) > 125 AS stopped,
       |  CAST(CASE WHEN (SELECT n FROM nn) > 125 THEN 0
       |    ELSE (SELECT count(*) FROM d t WHERE t.doc_id >= 155) END

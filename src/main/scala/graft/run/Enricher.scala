@@ -372,8 +372,6 @@ final class Enricher(
           rowsDone += st.getLong(0)
           callsDone += chunkSpend.calls
           spent = spent.add(chunkSpend.cost)
-        } else if (ledgerDir.isEmpty) {
-          p.count() // materialize the chunk before the next slice reuses it
         }
         ledgerDir.foreach(dir => p.write.mode("append").parquet(dir))
         if (ledgerDir.isDefined) p.unpersist() else chunks :+= p

@@ -807,20 +807,12 @@ class CurationSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     // reference: tiny union-find over whatever pairs the deterministic
     // banding confirmed — clusters must equal its transitive closure,
-    // so the propagation loop is fully checked regardless of which
-    // candidate pairs formed
+    // so the labels are fully checked regardless of which candidate
+    // pairs formed
     val pairIds = graft.operators.Dedup.nearDuplicatePairs(
       docs, "doc_id", "text", 8, 2, 0.3)
       .select("id_a", "id_b").as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.Map(
-      clusters.keys.map(k => k -> k).toSeq: _*)
-    def find(x: Long): Long =
-      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-    pairIds.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expected = clusters.keys.map(k => k -> find(k)).toMap
+    val expected = ComponentClosure(clusters.keys, pairIds)
     assert(clusters == expected,
       s"clusters $clusters != union-find closure $expected (pairs ${pairIds.toSeq})")
     // and the fixture must actually exercise a multi-doc component
@@ -860,7 +852,7 @@ class CurationSpec extends SparkSpec {
 
   test("star fallback: chain topology converges in O(log n) rounds, labels identical") {
     // Direct graph case: a 64-node chain (diameter 63). One-hop min-label
-    // propagation needs 63 join rounds; large-star/small-star must
+    // propagation would need 63 join rounds; large-star/small-star must
     // contract it logarithmically with every label = component min = 0.
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (labs, rounds) = graft.operators.Dedup.starComponents(chain)
@@ -869,42 +861,55 @@ class CurationSpec extends SparkSpec {
       s"chain must collapse to root 0: $m")
     assert(rounds <= 16, s"star contraction took $rounds rounds on a 64-chain")
 
-    // End-to-end through nearDupClusters: chain-shaped texts (each doc
-    // overlaps only its neighbors), star path forced via starSwitchIters=1.
-    // Labels must match both the pure-propagation path and the union-find
+    // End-to-end on a near-dup graph: chain-shaped texts (each doc
+    // overlaps only its neighbors). nearDupClusters takes the driver
+    // union-find here; the star path clusterLabels runs for larger graphs
+    // must give the same labels, and both must equal the union-find
     // closure of the confirmed pairs (the CTE oracle's semantics).
     val words = (0 until 60).map(i => s"w$i")
     val docs = (0 until 16).map { i =>
       (i.toLong, words.slice(3 * i, 3 * i + 10).mkString(" "))
     }.toDF("doc_id", "text")
-    def run(switchIters: Int, smallGraph: Long = 0L): Map[Long, Long] =
-      graft.operators.Dedup
-        .nearDupClusters(docs, "doc_id", "text", numBands = 8,
-          shingleSize = 3, threshold = 0.3, starSwitchIters = switchIters,
-          smallGraphPairs = smallGraph)
-        .as[(Long, Long)].collect().toMap
-    val viaStar = run(1)
-    val viaProp = run(50)
-    assert(viaStar == viaProp,
-      s"star path $viaStar != propagation path $viaProp")
-    val viaDriver = run(1, smallGraph = 5000000L) // union-find fast path
-    assert(viaDriver == viaProp,
-      s"driver fast path $viaDriver != propagation path $viaProp")
-    val pairIds = graft.operators.Dedup.nearDuplicatePairs(
+    val viaDriver = graft.operators.Dedup
+      .nearDupClusters(docs, "doc_id", "text", numBands = 8,
+        shingleSize = 3, threshold = 0.3)
+      .as[(Long, Long)].collect().toMap
+    val pairDf = graft.operators.Dedup.nearDuplicatePairs(
       docs, "doc_id", "text", 8, 3, 0.3)
-      .select("id_a", "id_b").as[(Long, Long)].collect()
+    val viaStar = graft.operators.Dedup.starLabels(docs, "doc_id", pairDf)
+      .as[(Long, Long)].collect().toMap
+    assert(viaStar == viaDriver,
+      s"star path $viaStar != driver union-find $viaDriver")
+    val pairIds = pairDf.select("id_a", "id_b").as[(Long, Long)].collect()
     assert(pairIds.nonEmpty, "chain fixture produced no confirmed pairs")
-    val parent = scala.collection.mutable.Map(
-      viaStar.keys.map(k => k -> k).toSeq: _*)
-    def find(x: Long): Long =
-      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-    pairIds.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expected = viaStar.keys.map(k => k -> find(k)).toMap
+    val expected = ComponentClosure(viaStar.keys, pairIds)
     assert(viaStar == expected,
       s"star labels $viaStar != union-find closure $expected")
+  }
+
+  test("clusterLabels: decimal ids take the star path, labels = component minima") {
+    import org.apache.spark.sql.types.DecimalType
+    // DecimalType ids are not a type the driver union-find orders, so
+    // clusterLabels must contract this graph distributed: an 11-hop chain
+    // in scrambled id order, a 3-node chain, a singleton, and two edges
+    // through id 40, which is absent from the ids and must not join the
+    // two chains (the semi-filter that keeps both paths in agreement)
+    val chain = Seq(7L, 3L, 11L, 0L, 9L, 4L, 10L, 1L, 8L, 5L, 2L, 6L)
+    val present = chain.sliding(2).map(p => (p(0), p(1))).toSeq ++
+      Seq((20L, 15L), (15L, 17L))
+    val edges = present ++ Seq((17L, 40L), (40L, 2L))
+    val idSet = chain ++ Seq(15L, 17L, 20L, 30L)
+    val dec = DecimalType(20, 0)
+    val ids = idSet.toDF("id").select(col("id").cast(dec).as("id"))
+    val pairs = edges.toDF("id_a", "id_b")
+      .select(col("id_a").cast(dec).as("id_a"), col("id_b").cast(dec).as("id_b"))
+    val labels = graft.operators.Dedup.clusterLabels(ids, "id", pairs)
+    assert(labels.schema("cluster_id").dataType == dec)
+    val got = labels.collect().map(r =>
+      r.getDecimal(0).longValueExact -> r.getDecimal(1).longValueExact).toMap
+    val expected = ComponentClosure(idSet, present)
+    assert(got == expected, s"labels $got != union-find closure $expected")
+    assert(got.values.toSet == Set(0L, 15L, 30L))
   }
 
   test("token budget: per-group prefix, monotone cut, budget respected") {

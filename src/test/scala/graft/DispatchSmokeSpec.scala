@@ -15,7 +15,8 @@ import graft.operators.{Bpe, Dedup, QualityClassifier}
   * to dispatch branches).
   *
   * Dispatches covered, by bound:
-  *  - `Dedup.clusterLabels`         smallGraphPairs = 0  → propagation loop
+  *  - `Dedup.clusterLabels`         pair count / id type → star contraction
+  *                                  (run directly via `Dedup.starLabels`)
   *  - `Bpe.train`                   smallVocabWords = 0  → per-round Spark jobs
   *  - `Bpe.encodeColumn`            merges > MaxExprMerges → broadcast encoder
   *  - `QualityClassifier.scorePinned` terms > MaxLiteralTerms → broadcast scoring
@@ -26,15 +27,39 @@ class DispatchSmokeSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.01"
   private def documents = spark.read.parquet(s"$sfDir/documents.parquet")
 
-  test("dispatch smoke sf0.01: clusterLabels distributed propagation = driver union-find") {
+  test("dispatch smoke sf0.01: clusterLabels star contraction = driver union-find") {
+    // sf0.01's pair graph takes the driver path inside nearDupClusters;
+    // the star path clusterLabels takes above its pair bound must agree
     val fast = Dedup.nearDupClusters(documents, "doc_id", "text",
       numBands = 8, shingleSize = 3, threshold = 0.12)
-    val dist = Dedup.nearDupClusters(documents, "doc_id", "text",
-      numBands = 8, shingleSize = 3, threshold = 0.12, smallGraphPairs = 0L)
+    val pairs = Dedup.nearDuplicatePairs(documents, "doc_id", "text",
+      8, 3, 0.12)
+    val star = Dedup.starLabels(documents, "doc_id", pairs)
     val f = fast.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val d = star.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(f.size == documents.count())
-    assert(f == d, "distributed propagation must produce the union-find labels")
+    assert(f == d, "star contraction must produce the union-find labels")
+    val edges = pairs.select("id_a", "id_b").collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(edges.nonEmpty, "sf0.01 produced no confirmed pairs")
+    assert(d == ComponentClosure(d.keys, edges))
+  }
+
+  test("q84_budget_stop at sf0.01: the budget stops the run before the tail") {
+    // one distinct prompt per row, so single-flight shares no call and
+    // spend tracks rows: the 0.002125 cap must stop the run after chunk 3
+    val rows = graft.queries.EnrichQueries.qBudgetStop(spark, sfDir)
+      .collect()
+    def md5(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(rows.length == documents.filter(col("doc_id") < 80).count())
+    rows.foreach { r =>
+      val id = r.getAs[Long]("doc_id")
+      assert(r.getAs[Boolean]("stopped"), s"row $id: run did not stop")
+      assert(r.getAs[Long]("n_tail") == 0L, s"row $id: tail rows were paid")
+      assert(r.getAs[String]("result") == md5("B:" + id), s"row $id: result")
+    }
   }
 
   test("dispatch smoke sf0.01: BPE distributed trainer = driver trainer") {

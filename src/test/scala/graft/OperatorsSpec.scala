@@ -245,26 +245,16 @@ class OperatorsSpec extends SparkSpec {
       (0L, a), (1L, a.map(_ * 2f)), (2L, a.map(_ * 3f)),
       (10L, b), (11L, b.map(_ * 0.5f)),
       (20L, solo)).toDF("vec_id", "embedding")
-    // distributed propagation path (smallGraphPairs = 0 disables the
-    // driver fast path) — keeps the union-find check independent
-    val clusters = Similarity.embeddingNearDupClusters(vecs, 0.95, 4,
-      smallGraphPairs = 0L)
+    // a six-vector graph takes clusterLabels' driver union-find path
+    val clusters = Similarity.embeddingNearDupClusters(vecs, 0.95, 4)
       .as[(Long, Long)].collect().toMap
-    // the driver union-find fast path must agree exactly
-    val fast = Similarity.embeddingNearDupClusters(vecs, 0.95, 4)
+    // the distributed star path, run on the same pair graph, must agree
+    val pairDf = Similarity.embeddingNearDupPairs(vecs, 0.95, 4)
+    val star = graft.operators.Dedup.starLabels(vecs, "vec_id", pairDf)
       .as[(Long, Long)].collect().toMap
-    assert(fast == clusters, "fast path diverged from propagation path")
-    val pairs = Similarity.embeddingNearDupPairs(vecs, 0.95, 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.Map(
-      clusters.keys.map(k => k -> k).toSeq: _*)
-    def find(x: Long): Long =
-      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-    pairs.foreach { case (x, y) =>
-      val (rx, ry) = (find(x), find(y))
-      if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
-    }
-    assert(clusters == clusters.keys.map(k => k -> find(k)).toMap)
+    assert(star == clusters, "star path diverged from driver union-find")
+    val pairs = pairDf.select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(clusters == ComponentClosure(clusters.keys, pairs))
     assert(clusters(20L) == 20L, "singleton labels itself")
     assert(clusters(1L) == 0L && clusters(2L) == 0L, "family A collapses to 0")
     // cluster-exact removal keeps exactly the per-family minimum

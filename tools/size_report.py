@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Print the size of the engine's main code and the graft.* conf keys it reads.
+"""Print the size of the engine's main code, the graft.* conf keys it reads,
+and the default-valued parameters a caller can set.
 
     python3 tools/size_report.py [REPO_ROOT]
 
@@ -7,7 +8,15 @@ Lines are counted as `find src/main -name '*.scala' | xargs cat | wc -l`
 counts them (newline characters). A conf key counts when a main source
 passes it as a string literal to `.get`, `.getOption` or `.getConfString`
 (whitespace and line breaks between the call and the literal allowed), which
-is how the engine reads `spark.conf`. Stdlib only.
+is how the engine reads `spark.conf`.
+
+A default-valued parameter counts when it sits in a parameter list of a
+`def` under src/main whose own modifiers (the text between the statement's
+start and `def`) hold no `private` (so `private[graft]` is private too) and
+the parameter has a top-level `=` after its name (`x: Int = 5`; the `=>` of
+a function type is not one). Comments and string literals are blanked first.
+The enclosing class's visibility is not looked at, and case-class and class
+constructor fields are not defs, so neither counts. Stdlib only.
 """
 import os
 import re
@@ -15,13 +24,131 @@ import sys
 
 KEY_READ = re.compile(
     r'\.(?:get|getOption|getConfString)\s*\(\s*"(graft\.[A-Za-z0-9_.]+)"')
+DEF = re.compile(r'\bdef\s+[^\s(\[:=]+')
+PRIVATE = re.compile(r'\bprivate\b')
+
+
+def blank_comments_and_strings(src):
+    """Replace comment and string-literal text with spaces, keeping offsets."""
+    out = list(src)
+    i, n = 0, len(src)
+
+    def blank(a, b):
+        for k in range(a, b):
+            if out[k] != "\n":
+                out[k] = " "
+
+    while i < n:
+        if src.startswith("//", i):
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+            blank(i, j)
+            i = j
+        elif src.startswith("/*", i):
+            depth, j = 1, i + 2  # Scala block comments nest
+            while j < n and depth:
+                if src.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif src.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+            blank(i, j)
+            i = j
+        elif src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':  # """...""""" closes at the last
+                j += 1
+            blank(i, j)
+            i = j
+        elif src[i] == '"':
+            j = i + 1
+            while j < n and src[j] not in '"\n':
+                j += 2 if src[j] == "\\" else 1
+            blank(i, j + 1)
+            i = j + 1
+        elif src[i] == "'" and re.match(r"'(\\.[^']*|[^'\\\n])'", src[i:i + 12]):
+            j = src.index("'", i + 2 if src[i + 1] != "\\" else i + 3) + 1
+            blank(i, j)
+            i = j
+        else:
+            i += 1
+    return "".join(out)
+
+
+def balanced(src, i):
+    """Index just past the bracket group opening at src[i]."""
+    pairs = {"(": ")", "[": "]", "{": "}"}
+    stack = [pairs[src[i]]]
+    j = i + 1
+    while j < len(src) and stack:
+        c = src[j]
+        if c in pairs:
+            stack.append(pairs[c])
+        elif c == stack[-1]:
+            stack.pop()
+        j += 1
+    return j
+
+
+def top_level_split(body):
+    """Split a parameter list body on commas outside any bracket."""
+    parts, depth, start = [], 0, 0
+    for k, c in enumerate(body):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif c == "," and depth == 0:
+            parts.append(body[start:k])
+            start = k + 1
+    parts.append(body[start:])
+    return parts
+
+
+def has_default(param):
+    depth = 0
+    for k, c in enumerate(param):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif c == "=" and depth == 0:
+            prev = param[k - 1] if k else ""
+            nxt = param[k + 1] if k + 1 < len(param) else ""
+            if nxt not in "=>" and prev not in "=<>!":
+                return True
+    return False
+
+
+def default_params(src):
+    """Count default-valued parameters on the non-private defs of `src`."""
+    code = blank_comments_and_strings(src)
+    count = 0
+    for m in DEF.finditer(code):
+        stmt_start = max(code.rfind(c, 0, m.start()) for c in "\n;{}") + 1
+        if PRIVATE.search(code, stmt_start, m.start()):
+            continue
+        j = m.end()
+        while True:
+            while j < len(code) and code[j] in " \t\n":
+                j += 1
+            if j >= len(code) or code[j] not in "([":
+                break
+            end = balanced(code, j)
+            if code[j] == "(":
+                count += sum(has_default(p)
+                             for p in top_level_split(code[j + 1:end - 1]))
+            j = end
+    return count
 
 
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), os.pardir)
     main_dir = os.path.join(root, "src", "main")
-    lines = files = 0
+    lines = files = defaults = 0
     keys = set()
     for dirpath, _, names in os.walk(main_dir):
         for name in names:
@@ -29,13 +156,16 @@ def main():
                 continue
             with open(os.path.join(dirpath, name), "rb") as fh:
                 data = fh.read()
+            text = data.decode("utf-8", "replace")
             files += 1
             lines += data.count(b"\n")
-            keys.update(KEY_READ.findall(data.decode("utf-8", "replace")))
+            keys.update(KEY_READ.findall(text))
+            defaults += default_params(text)
     print(f"main scala: {lines:,} lines in {files} files")
     print(f"graft.* conf keys read by main code: {len(keys)}")
     for k in sorted(keys):
         print(f"  {k}")
+    print(f"default-valued parameters on non-private defs: {defaults}")
 
 
 if __name__ == "__main__":
