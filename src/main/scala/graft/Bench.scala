@@ -111,36 +111,6 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
 
-    // Host-speed probe, sf- and engine-code-independent (r15, the fix for
-    // the enrich-ratio probe bias declared in r14): a fixed synthetic
-    // CPU+shuffle kernel built ONLY from Spark built-ins over range() —
-    // no graft operator code on its path, so optimizing the engine can
-    // never move it, and no testdata on its path, so the scale factor
-    // can't either. Recorded raw (min of 2) alongside the (kept) enrich
-    // ratios; cross-round normalization divides by the r15 pin in
-    // "synthetic_ref_sec". Runs only for full records (a focused
-    // SPARK_GRAFT_ONLY A/B brings its own controls).
-    val syntheticKernelSec: Option[Double] =
-      if (only.nonEmpty) None
-      else {
-        spark.sparkContext.setJobDescription("calibration:synthetic_kernel")
-        val runs = (1 to 2).map { _ =>
-          try Some(time {
-            spark.range(0L, 32000000L, 1L, 64)
-              .select(pmod(xxhash64(col("id")), lit(100000L)).as("k"),
-                // modded so the ANSI-mode sum can never overflow a long
-                pmod(xxhash64(col("id"), lit(1L)), lit(1000000L)).as("h"))
-              .groupBy("k").agg(sum(col("h")).as("s"), count(lit(1)).as("c"))
-              .agg(sum(col("s")), sum(col("c"))).collect()
-          }) catch { case e: Throwable =>
-            System.err.println(s"[bench] synthetic probe failed: ${e.getMessage}")
-            None }
-        }
-        spark.sparkContext.setJobDescription(null)
-        val good = runs.flatten
-        if (good.isEmpty) None else Some(good.min)
-      }
-
     // Arms that write and re-scan a many-tiny-file corpus (500-2000 PDFs):
     // their first rep measures cold-page-cache small-file IO, not engine
     // speed — twice (r12, r13) a cross-round delta on them cost a full
@@ -330,24 +300,13 @@ object Bench {
       "enrich_100k_resume" -> 1.156, "enrich_100k_durable_10chunks" -> 2.736)
     val probeRatios = probeRef.flatMap { case (k, ref) =>
       results.getOrElse(k, None).map(_ / ref) }
-    // the synthetic kernel's r15 pin on the reference host (see above):
-    // host-speed ratio at record time = synthetic_kernel_sec / this
-    val syntheticRef = 0.0 // 0.0 = unpinned; set from the r15 record
-    // an unpinned reference is omitted, so no consumer divides by zero
-    val synthRefJson =
-      if (syntheticRef > 0) f""","synthetic_ref_sec":$syntheticRef%.3f""" else ""
-    val synthJson = syntheticKernelSec
-      .map(s => f""","synthetic_kernel_sec":$s%.3f$synthRefJson""")
-      .getOrElse("")
     val calibration =
-      if (probeRatios.isEmpty && syntheticKernelSec.isEmpty) "null"
-      else if (probeRatios.isEmpty)
-        s"""{"probe":"enrich_arms_vs_r4"$synthJson}"""
+      if (probeRatios.isEmpty) "null"
       else {
         val sorted = probeRatios.sorted
         val median = sorted(sorted.size / 2)
         f"""{"probe":"enrich_arms_vs_r4","median_speed_ratio":$median%.3f,"ratios":${
-          probeRatios.map(r => f"$r%.3f").mkString("[", ",", "]")}$synthJson}"""
+          probeRatios.map(r => f"$r%.3f").mkString("[", ",", "]")}}"""
       }
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"calibration":$calibration,"sf":"$sfDir"}"""
     println(line)

@@ -138,23 +138,8 @@ object Main {
         val d = new ObserverDispatcher
         for (regDir <- opts.get("registry"); runDir <- opts.get("run-dir"))
           d.register(new RegistryObserver(new RunRegistry(regDir), runDir))
-        // --otel http://collector:4318 (OTLP/HTTP) or a file path (NDJSON)
-        opts.get("otel").foreach { target =>
-          val sink =
-            if (target.startsWith("http://") || target.startsWith("https://"))
-              new graft.run.OtlpHttpSink(target)
-            else new graft.run.OtelFileSink(target)
-          d.register(new graft.run.OtelObserver(sink))
-        }
-        // --langfuse http://host (keys from LANGFUSE_* env) or a file path
-        opts.get("langfuse").foreach { target =>
-          val sink =
-            if (target.startsWith("http://") || target.startsWith("https://"))
-              graft.run.LangfuseHttpSink.fromEnv(
-                sys.env.toMap + ("LANGFUSE_HOST" -> target))
-            else new graft.run.LangfuseFileSink(target)
-          d.register(new graft.run.LangfuseObserver(sink))
-        }
+        for (flag <- Seq("otel", "langfuse"); target <- opts.get(flag))
+          d.register(new graft.run.OtelObserver(traceSink(flag, target, sys.env)))
         d
       }
 
@@ -204,6 +189,18 @@ object Main {
       }
     } finally spark.stop()
   }
+
+  /** The sink a `--otel`/`--langfuse` target names: `--otel
+    * http://collector:4318` posts OTLP/HTTP, `--langfuse http://host` posts
+    * OTLP to its `/api/public/otel` with keys from the LANGFUSE_* settings in
+    * `env`, and either flag given a file path appends OTLP NDJSON there. */
+  private[graft] def traceSink(flag: String, target: String,
+                               env: Map[String, String]): graft.run.OtelSink =
+    if (!target.startsWith("http://") && !target.startsWith("https://"))
+      new graft.run.OtelFileSink(target)
+    else if (flag == "langfuse")
+      graft.run.OtlpHttpSink.langfuseFromEnv(env + ("LANGFUSE_HOST" -> target))
+    else new graft.run.OtlpHttpSink(target)
 
   /** `validate` command body (reference: ondine/cli/main.py:743 — check a
     * config for errors without executing the pipeline): (exitCode, JSON).

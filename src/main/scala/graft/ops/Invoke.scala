@@ -353,6 +353,9 @@ object Invoke {
   private[graft] def apply(df: DataFrame, client: LlmClient, prompt: PromptSpec,
                            llm: LlmSpec, proc: ProcessingSpec, runId: String,
                            journal: Option[CallJournal.Target]): DataFrame = {
+    // every call runs under a deadline (PipelineSpec.validate rejects the
+    // same configs; callers that skip validate fail here, not by hanging)
+    require(llm.timeoutMs > 0, s"llm.timeoutMs must be > 0 (got ${llm.timeoutMs})")
     val inSchema = df.schema
     val outSchema = StructType(inSchema.fields ++ appendedFields)
     val idxAt = inSchema.fieldIndex(RowIndex.ColName)
@@ -442,7 +445,6 @@ object Invoke {
         * Clients that swallow the interrupt are caught one level up by the
         * dequeue backstop (see `awaitBounded`). */
       def timedInvoke(promptText: String, pending: PendingCall): LlmResponse = {
-        if (timeoutMs <= 0) return client.invoke(promptText, system)
         pending.attemptStartNs = System.nanoTime()
         val caller = Thread.currentThread()
         // `done` + lock close the cancel race: without it, a trigger
@@ -523,16 +525,13 @@ object Invoke {
         * shipped here would spin forever. Such calls resolve through the
         * error policy too, and a later start (a wedged thread finally
         * dying) finds the outcome set and issues no provider call for an
-        * already-emitted call. timeoutMs <= 0 keeps the old unbounded
-        * wait (mock/test clients only; PipelineSpec.validate rejects
-        * it). */
+        * already-emitted call. */
       val poolSize = if (adaptiveOn) maxConc else conc
       val abandonedCtr = ClientPool.abandonedCount(runId, poolSize)
       val wedgeBoundNs: Long =
         math.max(4L * timeoutMs, timeoutMs + 1000L) * 1000000L
       val task = TaskContext.get()
       def awaitBounded(p: PendingCall): PendingCall.Outcome = {
-        if (timeoutMs <= 0) return Await.result(p.outcome.future, Duration.Inf)
         val poll = Duration(math.max(timeoutMs / 4, 50L),
           java.util.concurrent.TimeUnit.MILLISECONDS)
         while (true) {

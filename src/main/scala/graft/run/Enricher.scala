@@ -137,7 +137,7 @@ final class Enricher(
       }
 
     val durable = runDir.isDefined || spec.processing.maxBudget.isDefined
-    observers.emit(RunStarted(runId, None))
+    observers.emit(RunStarted(runId))
     try {
       val r =
         if (durable) enrichDurable(pre, runId, attemptSalt, t0)

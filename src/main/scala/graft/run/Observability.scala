@@ -5,11 +5,12 @@ import scala.collection.mutable.ArrayBuffer
 /** Observer protocol + dispatcher (reference: ondine/observability/ —
   * observer registry, events PipelineStart/End, Error; ~1200 LoC of
   * Langfuse/OTel adapters reduce on Spark to: driver-side lifecycle events
-  * here + executor/task metrics from a SparkListener + whatever OTel the
-  * cluster config wires in).
+  * here + executor/task metrics from a SparkListener + ONE trace exporter,
+  * [[OtelObserver]], whose OTLP spans any collector or Langfuse's OTLP
+  * endpoint (`/api/public/otel`) ingests).
   */
 sealed trait PipelineEvent { def runId: String }
-final case class RunStarted(runId: String, rows: Option[Long]) extends PipelineEvent
+final case class RunStarted(runId: String) extends PipelineEvent
 final case class ChunkCompleted(runId: String, chunkIndex: Long,
     spentSoFar: java.math.BigDecimal) extends PipelineEvent
 /** Live counters at a durable-chunk boundary (reference:

@@ -10,35 +10,46 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 /** OpenTelemetry adapter for the run lifecycle — the reference's OTel
-  * observer (ondine/observability/otel_observer.py) re-expressed over the
-  * [[Observer]] seam: each run becomes one trace (root span `graft.run`
-  * with a child span per durable chunk), RunMetrics/QualityReport become
-  * OTLP sum/gauge data points. Payloads are the standard OTLP/HTTP JSON
-  * encoding (`ExportTraceServiceRequest` / `ExportMetricsServiceRequest`),
-  * so the output is ingestible by any collector's `/v1/traces` +
-  * `/v1/metrics` endpoints — or greppable from the file sink.
+  * and Langfuse observers (ondine/observability/otel_observer.py,
+  * langfuse_observer.py) re-expressed over the [[Observer]] seam as ONE
+  * exporter: each run becomes one trace (root span `graft.run` with a
+  * child span per durable chunk and per LLM call), RunMetrics/QualityReport
+  * become OTLP sum/gauge data points. Payloads are the standard OTLP/HTTP
+  * JSON encoding (`ExportTraceServiceRequest` /
+  * `ExportMetricsServiceRequest`), so the output is ingestible by any
+  * collector's `/v1/traces` + `/v1/metrics` endpoints, by Langfuse's OTLP
+  * endpoint ([[OtlpHttpSink.langfuseFromEnv]]) — or greppable from the
+  * file sink.
+  *
+  * Langfuse reads the spans through its documented OTel property mapping:
+  * a call span is a `generation` (`langfuse.observation.type`) with model,
+  * `gen_ai.usage.*_tokens` and `gen_ai.usage.cost`; the root span names
+  * the trace (`langfuse.trace.name`) and carries the run's final metrics
+  * (on failure: `success` false and the scrubbed error) as
+  * `langfuse.trace.output`. Run totals ride ONLY on the root span, never
+  * as usage or cost, so a trace's summed generation cost is the run's cost.
   *
   * Span/trace ids derive deterministically from the runId (md5), so
   * resumed runs extend the SAME trace — the reference ties observability
   * to run identity the same way (session_id = run_id).
   *
-  * Scale note: this is driver-side only — O(chunks) span objects per run,
-  * no per-row telemetry; executor-side aggregates ride in via
+  * Scale note: this is driver-side only — O(chunks) span objects per run
+  * plus call spans flushed in [[OtelObserver.CallBatch]]-sized posts, no
+  * per-row telemetry; executor-side aggregates ride in via
   * [[SparkMetricsObserver]]'s snapshot and export as resource attributes.
   */
 final class OtelObserver(
     sink: OtelSink,
     serviceName: String = "graft",
     sparkMetrics: Option[SparkMetricsObserver] = None,
-    clockNanos: () => Long = () => System.currentTimeMillis() * 1000000L,
-    /** Per-call spans via the Enricher's ledger replay (reference parity:
-      * one span per LLM call). Spans flush in [[OtelObserver.CallBatch]]-
-      * sized OTLP posts on the SAME trace id, so observer memory stays
-      * bounded no matter how many calls a run made. */
-    callGrain: Boolean = true)
+    clockNanos: () => Long = () => System.currentTimeMillis() * 1000000L)
   extends Observer {
 
-  override def wantsCallGrain: Boolean = callGrain
+  /** Per-call spans via the Enricher's ledger replay (reference parity:
+    * one generation per LLM call). Spans flush in
+    * [[OtelObserver.CallBatch]]-sized OTLP posts on the SAME trace id, so
+    * observer memory stays bounded no matter how many calls a run made. */
+  override def wantsCallGrain: Boolean = true
 
   private val mapper = new ObjectMapper()
 
@@ -125,11 +136,11 @@ final class OtelObserver(
       st.startNs, endNs)
     val attrs = rootSpan.putArray("attributes")
     attr(attrs, "graft.run_id", runId)
+    attr(attrs, "langfuse.trace.name", "graft-pipeline")
     rootAttrs(attrs)
     val status = rootSpan.putObject("status")
     status.put("code", if (ok) 1 else 2) // STATUS_CODE_OK / ERROR
-    // error text can carry prompt fragments — PII-scrub before export
-    error.foreach(e => status.put("message", TraceSanitizer.sanitizeText(e)))
+    error.foreach(status.put("message", _))
     spans.add(rootSpan)
     st.chunkSpans.foreach(spans.add)
     sink.export("traces", mapper.writeValueAsString(root))
@@ -170,7 +181,7 @@ final class OtelObserver(
   }
 
   def onEvent(e: PipelineEvent): Unit = e match {
-    case RunStarted(runId, _) =>
+    case RunStarted(runId) =>
       val now = clockNanos()
       runs(runId) = RunState(now, now, mutable.ArrayBuffer.empty)
 
@@ -199,10 +210,11 @@ final class OtelObserver(
         val attrs = s.putArray("attributes")
         attr(attrs, "graft.call_id", callId)
         attr(attrs, "graft.attempt", attempt)
+        attr(attrs, "langfuse.observation.type", "generation")
         if (model != null) attr(attrs, "gen_ai.response.model", model)
         attr(attrs, "gen_ai.usage.input_tokens", tIn)
         attr(attrs, "gen_ai.usage.output_tokens", tOut)
-        attr(attrs, "graft.cost_usd", cost.doubleValue)
+        attr(attrs, "gen_ai.usage.cost", cost.doubleValue)
         attr(attrs, "graft.call_rows", callRows)
         if (failed) s.putObject("status").put("code", 2)
         st.callSpans += s
@@ -219,6 +231,16 @@ final class OtelObserver(
           attr(attrs, "graft.llm_calls", m.calls)
           attr(attrs, "graft.cost_usd", m.cost.doubleValue)
           attr(attrs, "graft.quality_rating", q.rating)
+          // the run's final metrics (reference on_pipeline_end output)
+          val out = mapper.createObjectNode()
+          out.put("success", true)
+          out.put("rows_processed", m.rows)
+          out.put("rows_succeeded", q.validRows)
+          out.put("rows_failed", m.rows - q.validRows - m.skippedRows)
+          out.put("total_cost", m.cost.doubleValue)
+          out.put("total_tokens", m.tokensIn + m.tokensOut)
+          out.put("duration_ms", m.durationMs)
+          attr(attrs, "langfuse.trace.output", mapper.writeValueAsString(out))
         })
         exportMetrics(runId, m, q, now)
       }
@@ -226,12 +248,19 @@ final class OtelObserver(
     case RunFailed(runId, err) =>
       runs.remove(runId).foreach { st =>
         flushCallSpans(runId, st)
-        exportTrace(runId, st, clockNanos(), ok = false, Some(err), _ => ())
+        // error text can carry prompt fragments — PII-scrub before export
+        val msg = TraceSanitizer.sanitizeText(err)
+        exportTrace(runId, st, clockNanos(), ok = false, Some(msg), { attrs =>
+          val out = mapper.createObjectNode()
+          out.put("success", false)
+          out.put("error", msg)
+          attr(attrs, "langfuse.trace.output", mapper.writeValueAsString(out))
+        })
       }
 
-    // live counters are the registry's concern (RegistryObserver); the
-    // OTel trace already carries per-chunk spans with spend attributes
-    case _: RunProgress => ()
+    // live counters and router cooldowns are the registry's and the logs'
+    // concern; the trace already carries per-chunk spans with spend
+    case _: RunProgress | _: ProviderCooldown => ()
   }
 }
 
@@ -251,9 +280,10 @@ final class OtelFileSink(path: String) extends OtelSink {
 }
 
 /** OTLP/HTTP sink: POSTs each payload to `<endpoint>/v1/<signal>` as
-  * application/json — the standard collector ingest. Failures surface to
-  * the dispatcher, which logs and never fails the run. */
+  * application/json with `headers` added — the standard collector ingest.
+  * Failures surface to the dispatcher, which logs and never fails the run. */
 final class OtlpHttpSink(endpoint: String,
+                         headers: Map[String, String] = Map.empty,
                          timeoutMs: Long = 5000) extends OtelSink {
   private val client = java.net.http.HttpClient.newBuilder()
     .connectTimeout(java.time.Duration.ofMillis(timeoutMs)).build()
@@ -262,13 +292,33 @@ final class OtlpHttpSink(endpoint: String,
       .uri(java.net.URI.create(s"${endpoint.stripSuffix("/")}/v1/$signal"))
       .timeout(java.time.Duration.ofMillis(timeoutMs))
       .header("Content-Type", "application/json")
+    headers.foreach { case (k, v) => req.header(k, v) }
+    val resp = client.send(req
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(otlpJson))
-      .build()
-    val resp = client.send(req,
-      java.net.http.HttpResponse.BodyHandlers.ofString())
+      .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
     if (resp.statusCode() / 100 != 2)
       throw new RuntimeException(
         s"OTLP export to /v1/$signal failed: HTTP ${resp.statusCode()}")
+  }
+}
+
+object OtlpHttpSink {
+  /** Langfuse's OTLP endpoint from the standard LANGFUSE_* settings (the
+    * reference's client init): traces go to
+    * `{LANGFUSE_HOST}/api/public/otel/v1/traces` (cloud host by default)
+    * with HTTP Basic `publicKey:secretKey`. The endpoint ingests traces
+    * only, so the metrics signal is dropped. */
+  def langfuseFromEnv(env: Map[String, String]): OtelSink = {
+    def key(k: String) =
+      env.getOrElse(k, throw new IllegalArgumentException(s"$k unset"))
+    val auth = "Basic " + java.util.Base64.getEncoder.encodeToString(
+      s"${key("LANGFUSE_PUBLIC_KEY")}:${key("LANGFUSE_SECRET_KEY")}"
+        .getBytes(StandardCharsets.UTF_8))
+    val traces = new OtlpHttpSink(
+      env.getOrElse("LANGFUSE_HOST", "https://cloud.langfuse.com")
+        .stripSuffix("/") + "/api/public/otel",
+      Map("Authorization" -> auth))
+    (signal, otlpJson) => if (signal == "traces") traces.export(signal, otlpJson)
   }
 }
 

@@ -285,7 +285,7 @@ final class RegistryObserver(registry: RunRegistry, runDir: String,
       new ProgressForwarder(registry, id, minProgressIntervalMs))
 
   def onEvent(e: PipelineEvent): Unit = e match {
-    case RunStarted(id, _) =>
+    case RunStarted(id) =>
       if (registry.get(id).isEmpty) registry.register(id, runDir)
       registry.transition(id, RunState.Running)
       forwarder(id).reset()

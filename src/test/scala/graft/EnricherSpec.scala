@@ -291,6 +291,17 @@ class EnricherSpec extends SparkSpec {
     }
   }
 
+  test("Invoke called without validate still rejects a non-positive timeoutMs") {
+    val df = Seq((0L, "p0"), (1L, "p1")).toDF("_row_index", "prompt")
+    for (t <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException] {
+        graft.ops.Invoke(df, new MockLlmClient(), PromptSpec("{text}"),
+          LlmSpec(timeoutMs = t), ProcessingSpec(), "no-deadline")
+      }
+      assert(e.getMessage.contains("timeoutMs"))
+    }
+  }
+
   test("wedged-pool exhaustion: queued calls resolve instead of waiting forever") {
     // When interrupt-swallowing calls wedge EVERY pool thread, a queued
     // call can never start — its heartbeat never arms, so the per-attempt

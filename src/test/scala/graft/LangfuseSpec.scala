@@ -1,23 +1,25 @@
 package graft
 
 import java.math.{BigDecimal => JBigDecimal}
-import java.net.InetSocketAddress
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
 
 import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.sun.net.httpserver.HttpServer
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.QualityReport
 import graft.run._
 
-/** Asserts the Langfuse ingestion envelopes the observer emits — batch
-  * shape, trace/span/generation bodies, deterministic ids, PII scrubbing
-  * — and the HTTP sink's wire (path, Basic auth) via a loopback server.
-  */
+/** What Langfuse reads off the OTLP export through its OTel property
+  * mapping: the trace name and final output on the root span, chunk spans,
+  * generation spans, deterministic ids (resume extends the trace, a
+  * re-export upserts), the failure output, and the NDJSON file target of
+  * `--langfuse FILE`. */
 class LangfuseSpec extends AnyFunSuite {
+  import OtlpJson.{attrs, spans}
 
   private val mapper = new ObjectMapper()
 
@@ -26,246 +28,107 @@ class LangfuseSpec extends AnyFunSuite {
     skippedRows = 0, durationMs = 1234)
   private val quality =
     QualityReport(10, 9, Map("out" -> 1L), 0.9, "good")
+  private def call(runId: String, id: Long, attempt: Long = 1L) =
+    LlmCallCompleted(runId, id, attempt, model = "mock-1", tokensIn = 10,
+      tokensOut = 4, cost = new JBigDecimal("0.003"), latencyMs = 2.0,
+      callRows = 5, failed = false)
 
-  private final class Collecting extends LangfuseSink {
-    val out = ArrayBuffer.empty[String]
-    def ingest(json: String): Unit = out += json
+  private final class Collecting extends OtelSink {
+    val traces = ArrayBuffer.empty[String]
+    def export(signal: String, json: String): Unit =
+      if (signal == "traces") traces += json
   }
 
-  private def events(batches: Seq[String]): Seq[JsonNode] =
-    batches.flatMap { b =>
-      val arr = mapper.readTree(b).get("batch")
-      (0 until arr.size()).map(arr.get(_))
-    }
+  /** Every span one full run (start, a chunk, one call, end) exports. */
+  private def runOnce(runId: String, attempt: Long = 1L): Seq[JsonNode] = {
+    val sink = new Collecting
+    val obs = new OtelObserver(sink, clockNanos = () => 1000L)
+    obs.onEvent(RunStarted(runId))
+    obs.onEvent(ChunkCompleted(runId, 0, new JBigDecimal("0.003")))
+    obs.onEvent(call(runId, 0L, attempt))
+    obs.onEvent(RunCompleted(runId, metrics(10), quality))
+    spans(sink.traces.toSeq)
+  }
 
   test("run lifecycle: trace-create, chunk spans, generation, final upsert") {
-    val sink = new Collecting
-    var now = 1700000000000L
-    val obs = new LangfuseObserver(sink, clockMs = () => now)
-    obs.onEvent(RunStarted("run-1", Some(10)))
-    now += 500
-    obs.onEvent(ChunkCompleted("run-1", 0, new JBigDecimal("0.004")))
-    now += 700
-    obs.onEvent(RunCompleted("run-1", metrics(10), quality))
-
-    val evs = events(sink.out.toSeq)
-    assert(evs.map(_.get("type").asText) ===
-      Seq("trace-create", "span-create", "generation-create", "trace-create"))
-    // every event has a timestamp and a deduplicable id
-    assert(evs.forall(e => e.get("id").asText.length == 32 &&
-      e.get("timestamp").asText.startsWith("2023-")))
-
-    val trace = evs(0).get("body")
-    assert(trace.get("name").asText === "graft-pipeline")
-    assert(trace.get("id").asText.matches("[0-9a-f]{32}"))
-    assert(trace.at("/metadata/total_rows").asLong === 10)
-
-    val span = evs(1).get("body")
-    assert(span.get("traceId").asText === trace.get("id").asText)
-    assert(span.get("name").asText === "chunk-0")
-    assert(span.at("/metadata/cost_spent_usd").asDouble === 0.004)
-
-    val gen = evs(2).get("body")
-    assert(gen.get("traceId").asText === trace.get("id").asText)
-    assert(gen.at("/usageDetails/input").asLong === 100)
-    assert(gen.at("/usageDetails/output").asLong === 40)
-    assert(gen.at("/usageDetails/total").asLong === 140)
-    assert(gen.at("/costDetails/total").asDouble === 0.012)
-
-    val fin = evs(3).get("body")
-    assert(fin.get("id").asText === trace.get("id").asText) // upsert by id
-    assert(fin.at("/output/success").asBoolean)
-    assert(fin.at("/output/rows_succeeded").asLong === 9)
-    assert(fin.at("/output/total_cost").asDouble === 0.012)
+    val all = runOnce("run-1")
+    val root = all.find(_.get("name").asText == "graft.run").get
+    val traceId = root.get("traceId").asText
+    assert(all.forall(_.get("traceId").asText == traceId))
+    // trace: named, and its final output carries the run's metrics
+    val ra = attrs(root)
+    assert(ra("langfuse.trace.name").asText === "graft-pipeline")
+    val out = mapper.readTree(ra("langfuse.trace.output").asText)
+    assert(out.get("success").asBoolean)
+    assert(out.get("rows_processed").asLong === 10)
+    assert(out.get("rows_succeeded").asLong === 9)
+    assert(out.get("rows_failed").asLong === 1)
+    assert(out.get("total_cost").asDouble === 0.012)
+    assert(out.get("total_tokens").asLong === 140)
+    assert(out.get("duration_ms").asLong === 1234)
+    // chunk span: a plain span under the trace, with its spend
+    val chunk = all.find(_.get("name").asText == "graft.chunk").get
+    assert(chunk.get("parentSpanId").asText === root.get("spanId").asText)
+    assert(attrs(chunk)("graft.cost_spent_usd").asDouble === 0.003)
+    assert(!attrs(chunk).contains("langfuse.observation.type"))
+    // generation: the call span, the only observation with usage and cost
+    val gens = all.filter(s => attrs(s).get("langfuse.observation.type")
+      .exists(_.asText == "generation"))
+    assert(gens.map(_.get("name").asText) === Seq("graft.llm_call"))
+    assert(gens.head.get("parentSpanId").asText === root.get("spanId").asText)
+    assert(attrs(gens.head)("gen_ai.usage.cost").asDouble === 0.003)
   }
 
   test("trace and event ids are deterministic — resume extends, retry dedupes") {
-    val a = new Collecting; val b = new Collecting
-    new LangfuseObserver(a, clockMs = () => 1L)
-      .onEvent(RunStarted("same-run", None))
-    new LangfuseObserver(b, clockMs = () => 2L)
-      .onEvent(RunStarted("same-run", None))
-    val (ea, eb) = (events(a.out.toSeq).head, events(b.out.toSeq).head)
-    assert(ea.at("/body/id").asText === eb.at("/body/id").asText)
-    assert(ea.get("id").asText === eb.get("id").asText)
+    val first = runOnce("same-run")
+    val again = runOnce("same-run")
+    // the trace id is md5("graft:"+runId), the id the Langfuse ingestion
+    // exporter used before, so a resumed run extends an older trace too
+    val md5 = MessageDigest.getInstance("MD5")
+      .digest("graft:same-run".getBytes(StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+    assert((first ++ again).forall(_.get("traceId").asText == md5))
+    // re-exporting the same run yields the same span ids: Langfuse upserts
+    // each observation by id instead of counting it twice
+    def ids(ss: Seq[JsonNode]) = ss.map(_.get("spanId").asText)
+    assert(ids(first) === ids(again))
+    assert(ids(first).distinct.size === first.size)
+    // a new attempt at the same call is its own observation
+    val retried = runOnce("same-run", attempt = 2L)
+      .filter(_.get("name").asText == "graft.llm_call")
+    assert(!ids(first).contains(retried.head.get("spanId").asText))
   }
 
   test("failure: ERROR event with sanitized message + failure upsert") {
     val sink = new Collecting
-    val obs = new LangfuseObserver(sink, clockMs = () => 5L)
-    obs.onEvent(RunStarted("run-x", None))
+    val obs = new OtelObserver(sink, clockNanos = () => 5L)
+    obs.onEvent(RunStarted("run-x"))
     obs.onEvent(RunFailed("run-x", "boom for a.b@x.org at 192.168.0.1"))
-    val evs = events(sink.out.toSeq)
-    assert(evs.map(_.get("type").asText) ===
-      Seq("trace-create", "event-create", "trace-create"))
-    val err = evs(1).get("body")
-    assert(err.get("level").asText === "ERROR")
-    val msg = err.get("statusMessage").asText
+    val root = spans(sink.traces.toSeq).head
+    assert(root.at("/status/code").asInt === 2) // Langfuse level ERROR
+    val msg = root.at("/status/message").asText
     assert(msg.contains("[REDACTED]") && !msg.contains("a.b@x.org") &&
       !msg.contains("192.168.0.1"))
-    assert(!evs(2).at("/body/output/success").asBoolean)
-  }
-
-  test("HTTP sink posts to /api/public/ingestion with Basic auth") {
-    val received = ArrayBuffer.empty[(String, String, String)]
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/", { exchange =>
-      val body = new String(exchange.getRequestBody.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      received += ((exchange.getRequestURI.getPath,
-        exchange.getRequestHeaders.getFirst("Authorization"), body))
-      val rsp = """{"successes":[],"errors":[]}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      exchange.sendResponseHeaders(207, rsp.length)
-      exchange.getResponseBody.write(rsp)
-      exchange.close()
-    })
-    server.start()
-    try {
-      val port = server.getAddress.getPort
-      val sink = new LangfuseHttpSink(s"http://127.0.0.1:$port",
-        "pk-lf-test", "sk-lf-test")
-      new LangfuseObserver(sink, clockMs = () => 7L)
-        .onEvent(RunStarted("wire-run", Some(3)))
-      assert(received.size === 1)
-      val (path, auth, body) = received.head
-      assert(path === "/api/public/ingestion")
-      val expected = "Basic " + java.util.Base64.getEncoder.encodeToString(
-        "pk-lf-test:sk-lf-test".getBytes("UTF-8"))
-      assert(auth === expected)
-      assert(mapper.readTree(body).get("batch").size() === 1)
-
-      // non-2xx surfaces as an exception (the dispatcher logs it)
-      server.removeContext("/")
-      server.createContext("/", { ex =>
-        ex.sendResponseHeaders(401, -1); ex.close()
-      })
-      intercept[java.io.IOException] {
-        sink.ingest("""{"batch":[]}""")
-      }
-    } finally server.stop(0)
+    val out = mapper.readTree(attrs(root)("langfuse.trace.output").asText)
+    assert(!out.get("success").asBoolean)
+    assert(out.get("error").asText === msg)
   }
 
   test("file sink appends one parsable batch per line") {
     val f = Files.createTempFile("graft_lf", ".ndjson").toString
-    val sink = new LangfuseFileSink(f)
-    val obs = new LangfuseObserver(sink, clockMs = () => 9L)
-    obs.onEvent(RunStarted("file-run", None))
+    // exactly what `--langfuse FILE` wires: no keys needed for a file
+    val sink = Main.traceSink("langfuse", f, Map.empty)
+    val obs = new OtelObserver(sink, clockNanos = () => 9L)
+    obs.onEvent(RunStarted("file-run"))
+    obs.onEvent(call("file-run", 0L))
     obs.onEvent(RunCompleted("file-run", metrics(5), quality))
-    val lines = Files.readAllLines(java.nio.file.Paths.get(f))
-    assert(lines.size === 3) // start + generation + final upsert
-    lines.forEach(l => assert(mapper.readTree(l).has("batch")))
-  }
-
-  test("fromEnv requires keys and honors the host override") {
-    intercept[IllegalArgumentException] {
-      LangfuseHttpSink.fromEnv(Map.empty)
-    }
-    // present keys construct without touching the network
-    LangfuseHttpSink.fromEnv(Map(
-      "LANGFUSE_PUBLIC_KEY" -> "pk", "LANGFUSE_SECRET_KEY" -> "sk",
-      "LANGFUSE_HOST" -> "http://127.0.0.1:1"))
-  }
-}
-
-/** End-to-end per-call grain: a durable Enricher run replays its
-  * responses ledger into one `generation-create` per LLM call
-  * (the reference's LLMCallEvent grain), with ids deterministic from
-  * (runId, attempt, callId) so a RESUMED run re-emits the SAME ids —
-  * Langfuse upserts by id, never double-counts. */
-class LangfuseCallGrainSpec extends SparkSpec {
-  import spark.implicits._
-  import graft.core._
-  import graft.llm.MockLlmClient
-
-  private val mapper = new ObjectMapper()
-
-  private final class Collecting extends LangfuseSink {
-    val out = ArrayBuffer.empty[String]
-    def ingest(json: String): Unit = out += json
-  }
-
-  /** (eventId, body) of every generation-create in the sink. */
-  private def generations(sink: Collecting): Seq[(String, JsonNode)] =
-    sink.out.toSeq.flatMap { b =>
-      val arr = mapper.readTree(b).get("batch")
-      (0 until arr.size()).map(arr.get(_))
-    }.filter(_.get("type").asText() == "generation-create")
-      .map(e => e.get("id").asText() -> e.get("body"))
-
-  test("one generation per call; resume replays identical ids") {
-    val dir = Files.createTempDirectory("graft_lf_calls").toString
-    val df = (0 until 30).map(i => s"v $i").toDF("text").repartition(2)
-    val spec = PipelineSpec(
-      dataset = DatasetSpec(Seq("text")),
-      prompt = PromptSpec("G:{text}", batchSize = 5),
-      processing = ProcessingSpec(chunkRows = 15),
-      output = OutputSpec(Seq("out")))
-    val sink = new Collecting
-    val obs = new ObserverDispatcher()
-      .register(new LangfuseObserver(sink, clockMs = () => 42L))
-    val r = new Enricher(spec, new MockLlmClient(), Some(dir),
-      observers = obs).enrich(df)
-    // calls = per-(partition, chunk) grouping of 30 rows at batch 5 —
-    // the replay must mirror EXACTLY the run's own call count
-    val nCalls = r.metrics.calls.toInt
-    assert(nCalls >= 6) // ceil(30/5) is the floor; boundaries may split
-
-    val gens = generations(sink)
-    val (calls, aggregate) = gens.partition(_._2.has("metadata"))
-    val callGens = calls.filter(_._2.get("metadata").has("call_id"))
-    assert(callGens.size == nCalls,
-      s"want one generation per call ($nCalls), got ${callGens.size}")
-    assert(aggregate.size + (calls.size - callGens.size) == 1) // run-grain
-    assert(callGens.map(_._1).distinct.size == nCalls,
-      "event ids must differ")
-    // ledger consistency: per-call usage sums to the run totals
-    val tIn = callGens.map(_._2.get("usageDetails").get("input").asLong).sum
-    val tOut = callGens.map(_._2.get("usageDetails").get("output").asLong).sum
-    assert(tIn == r.metrics.tokensIn && tOut == r.metrics.tokensOut)
-    assert(callGens.forall(_._2.get("model") != null))
-
-    // resume: zero new calls, but the replay re-emits the SAME ids from
-    // the durable ledger — a Langfuse deployment upserts, not duplicates
-    val sink2 = new Collecting
-    val obs2 = new ObserverDispatcher()
-      .register(new LangfuseObserver(sink2, clockMs = () => 43L))
-    val before = MockLlmClient.calls.get()
-    new Enricher(spec, new MockLlmClient(), Some(dir),
-      observers = obs2).enrich(df)
-    assert(MockLlmClient.calls.get() == before)
-    val callGens2 = generations(sink2)
-      .filter(_._2.has("metadata"))
-      .filter(_._2.get("metadata").has("call_id"))
-    assert(callGens2.size == nCalls)
-    assert(callGens2.map(_._1).toSet == callGens.map(_._1).toSet,
-      "resume must replay identical event ids")
-
-    // an observer that does NOT opt in sees no per-call events
-    val sink3 = new Collecting
-    val obs3 = new ObserverDispatcher()
-      .register(new LangfuseObserver(sink3, clockMs = () => 44L,
-        callGrain = false))
-    new Enricher(spec, new MockLlmClient(), Some(dir),
-      observers = obs3).enrich(df)
-    assert(generations(sink3).count(
-      g => g._2.has("metadata") && g._2.get("metadata").has("call_id")) == 0)
-  }
-
-  test("fast path (no runDir) replays per-call generations too") {
-    val df = (0 until 12).map(i => s"w $i").toDF("text").repartition(1)
-    val sink = new Collecting
-    val obs = new ObserverDispatcher()
-      .register(new LangfuseObserver(sink, clockMs = () => 7L))
-    val res = new Enricher(PipelineSpec(
-      dataset = DatasetSpec(Seq("text")),
-      prompt = PromptSpec("F:{text}", batchSize = 4),
-      output = OutputSpec(Seq("out"))),
-      new MockLlmClient(), None, observers = obs).enrich(df)
-    assert(res.metrics.calls == 3)
-    val callGens = generations(sink)
-      .filter(_._2.has("metadata"))
-      .filter(_._2.get("metadata").has("call_id"))
-    assert(callGens.size == 3)
+    val lines = Files.readAllLines(Paths.get(f))
+    assert(lines.size === 3) // call batch + run trace + run metrics
+    val bodies = (0 until lines.size).map(i => mapper.readTree(lines.get(i)))
+    assert(bodies.map(_.get("signal").asText) ===
+      Seq("traces", "traces", "metrics"))
+    val traced = spans(bodies.filter(_.get("signal").asText == "traces")
+      .map(b => mapper.writeValueAsString(b.get("body"))))
+    assert(traced.map(_.get("name").asText) === Seq("graft.llm_call", "graft.run"))
   }
 }
