@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.integrations.LlmTransform
 import graft.llm.MockLlmClient
-import graft.run.{ConfigLoader, CostEstimator, Enricher, HealthCheck,
+import graft.run.{ConfigLoader, CostEstimator, HealthCheck,
   ObserverDispatcher, ProviderBatch, RegistryObserver, RunRegistry}
 import graft.sources.Sources
+import graft.sources.Sources.ReadOptions
 
 /** CLI entry (reference: ondine/cli/main.py:202-1270 — process, estimate,
   * submit, collect; run lifecycle commands :563-891). Usage:
@@ -27,8 +29,10 @@ import graft.sources.Sources
   *   graft.Main status   --registry DIR --run-id ID
   *   graft.Main health   --config cfg.yaml [--input PATH] [--run-dir DIR]
   *
-  * The client is the deterministic mock in this zero-egress build; a real
-  * HTTP client plugs in through the same LlmClient trait.
+  * `process` and `resume` run [[LlmTransform.run]], the same task body
+  * orchestrators call, so `llm.endpoint` selects the client (unset = the
+  * deterministic mock) and the last line printed is
+  * [[LlmTransform.TransformResult.toJson]].
   */
 object Main {
 
@@ -130,9 +134,9 @@ object Main {
         System.out.println(plan.preview)
         return
       }
-      val spec = ConfigLoader.fromFile(need("config"))
-      val input = Sources.read(spark, need("input"))
-      val client = new MockLlmClient()
+      lazy val spec = ConfigLoader.fromFile(need("config"))
+      lazy val input =
+        Sources.read(spark, need("input"), ReadOptions.of(spec.dataset))
 
       def observers: ObserverDispatcher = {
         val d = new ObserverDispatcher
@@ -143,26 +147,18 @@ object Main {
         d
       }
 
-      def runProcess(): Unit = {
-        val r = new Enricher(spec, client,
-          runDir = opts.get("run-dir"),
-          keyColumn = opts.get("key-column"),
-          observers = observers).enrich(input)
-        Sources.write(r.data, need("output"))
-        System.out.println(
-          s"""{"rows":${r.metrics.rows},"calls":${r.metrics.calls},""" +
-          s""""tokens_in":${r.metrics.tokensIn},"tokens_out":${r.metrics.tokensOut},""" +
-          s""""cost":"${r.metrics.cost}","skipped":${r.metrics.skippedRows},""" +
-          s""""quality":"${r.quality.rating}","success_rate":${r.quality.successRate}}""")
-      }
-
       cmd match {
-        case "process" => runProcess()
-        case "resume" =>
+        case "process" | "resume" =>
           // resume = re-drive the same runDir; the ledger anti-join skips
           // every completed call, the registry re-enters RUNNING
-          need("run-dir")
-          runProcess()
+          if (cmd == "resume") need("run-dir")
+          val r = LlmTransform.run(spark, need("config"),
+            inputPath = Some(need("input")),
+            outputPath = Some(need("output")),
+            runDir = opts.get("run-dir"),
+            keyColumn = opts.get("key-column"),
+            observers = observers)
+          System.out.println(r.toJson)
         case "estimate" =>
           val e = CostEstimator.estimate(input, spec)
           System.out.println(

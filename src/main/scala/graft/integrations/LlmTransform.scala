@@ -2,10 +2,10 @@ package graft.integrations
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.ResponseFormat
 import graft.llm.{LlmClient, LlmClients}
 import graft.run.{ConfigLoader, Enricher, ObserverDispatcher}
 import graft.sources.Sources
+import graft.sources.Sources.ReadOptions
 
 /** Orchestrator-facing one-call transform (reference:
   * ondine/integrations/airflow.py:23-166 `LLMTransformOperator` and
@@ -45,9 +45,8 @@ import graft.sources.Sources
   *     return output_path
   * }}}
   *
-  * The last line `graft.Main process` prints is the same JSON
-  * [[TransformResult.toJson]] renders — parse it for the XCom metrics
-  * push.
+  * `graft.Main process` runs this body, and the last line it prints is
+  * [[TransformResult.toJson]] — parse it for the XCom metrics push.
   */
 object LlmTransform {
 
@@ -59,9 +58,13 @@ object LlmTransform {
       rows: Long,
       validRows: Long,
       calls: Long,
+      tokensIn: Long,
+      tokensOut: Long,
+      skipped: Long,
       cost: String,
       durationMs: Long,
-      quality: String) {
+      quality: String,
+      successRate: Double) {
 
     /** One-line JSON for XCom / flow-state handoff. */
     def toJson: String = {
@@ -74,8 +77,9 @@ object LlmTransform {
       }
       s"""{"output_path":${outputPath.map(p => "\"" + esc(p) + "\"")
           .getOrElse("null")},"rows":$rows,"valid_rows":$validRows,""" +
-        s""""calls":$calls,"cost":"${esc(cost)}","duration_ms":$durationMs,""" +
-        s""""quality":"${esc(quality)}"}"""
+        s""""calls":$calls,"tokens_in":$tokensIn,"tokens_out":$tokensOut,""" +
+        s""""skipped":$skipped,"cost":"${esc(cost)}","duration_ms":$durationMs,""" +
+        s""""quality":"${esc(quality)}","success_rate":$successRate}"""
     }
   }
 
@@ -118,18 +122,16 @@ object LlmTransform {
     }
     val df = (inputData, inputPath) match {
       case (Some(d), _) => d
-      case (None, Some(p)) => Sources.read(spark, p)
+      case (None, Some(p)) => Sources.read(spark, p, ReadOptions.of(spec.dataset))
       case (None, None) => throw new IllegalArgumentException(
         "either inputData or inputPath is required")
     }
-    val cl = client.getOrElse(LlmClients.forSpec(spec.llm,
-      if (spec.output.responseFormat == ResponseFormat.Typed)
-        spec.output.typedSchema
-      else None))
+    val cl = client.getOrElse(LlmClients.forSpec(spec.llm, spec.output))
     val r = new Enricher(spec, cl, runDir, keyColumn, observers).enrich(df)
     outputPath.foreach(p => Sources.write(r.data, p))
-    TransformResult(r.data, outputPath, r.metrics.rows,
-      r.quality.validRows, r.metrics.calls, r.metrics.cost.toString,
-      r.metrics.durationMs, r.quality.rating)
+    val m = r.metrics
+    TransformResult(r.data, outputPath, m.rows, r.quality.validRows, m.calls,
+      m.tokensIn, m.tokensOut, m.skippedRows, m.cost.toString, m.durationMs,
+      r.quality.rating, r.quality.successRate)
   }
 }

@@ -62,15 +62,16 @@ object LlmClients {
         "prompts spend nothing and issue no call (within one run Invoke " +
         "already sends each distinct prompt once per executor)"))
 
-  def forSpec(spec: graft.core.LlmSpec): LlmClient = forSpec(spec, None)
-
-  /** With a typed output schema and a real endpoint, the client speaks the
-    * provider-native structured mode the detector picks — walking the
-    * fallback chain on structural rejection (see [[StructuredOutput]]).
-    * The mock path stays schema-free: its deterministic JSON already
-    * drives the Typed parser. */
-  def forSpec(spec: graft.core.LlmSpec,
-              typedSchema: Option[org.apache.spark.sql.types.StructType]): LlmClient =
+  /** The client `spec.endpoint` selects. With Typed output (`output`'s
+    * schema) and a real endpoint, the client speaks the provider-native
+    * structured mode the detector picks — walking the fallback chain on
+    * structural rejection (see [[StructuredOutput]]). The mock path stays
+    * schema-free: its deterministic JSON already drives the Typed parser. */
+  def forSpec(spec: graft.core.LlmSpec, output: graft.core.OutputSpec): LlmClient = {
+    val typedSchema =
+      if (output.responseFormat == graft.core.ResponseFormat.Typed)
+        output.typedSchema
+      else None
     spec.endpoint match {
       // local sidecar inference (MLX/llama.cpp-style runners): the
       // command line after "proc:", one shared child per executor.
@@ -106,6 +107,7 @@ object LlmClients {
       case None => new MockLlmClient(spec.model,
         inPer1k = spec.inputCostPer1k, outPer1k = spec.outputCostPer1k)
     }
+  }
 }
 
 object HttpLlmClient {

@@ -47,9 +47,12 @@ object McpServer {
     private val outputs = new ConcurrentHashMap[String, String]()
     private val counter = new java.util.concurrent.atomic.AtomicLong(0)
 
+    private def read(path: String, spec: graft.core.PipelineSpec) =
+      Sources.read(spark, path, Sources.ReadOptions.of(spec.dataset))
+
     def estimate(configYaml: String, inputPath: String): Map[String, Any] = {
       val spec = ConfigLoader.fromYaml(configYaml)
-      val e = CostEstimator.estimate(Sources.read(spark, inputPath), spec)
+      val e = CostEstimator.estimate(read(inputPath, spec), spec)
       Map("total_rows" -> e.totalRows, "sample_rows" -> e.sampleRows,
         "est_tokens_in" -> e.estTokensIn, "est_tokens_out" -> e.estTokensOut,
         "est_cost" -> e.estCost.toString, "confidence" -> e.confidence)
@@ -85,7 +88,7 @@ object McpServer {
           registry.transition(runId, RunState.Running)
           val r = new Enricher(spec, client, Some(runDir),
             observers = progressObs)
-            .enrich(Sources.read(spark, inputPath))
+            .enrich(read(inputPath, spec))
           Sources.write(r.data, outputPath)
           registry.transition(runId, RunState.Succeeded, rec => rec.copy(
             rows = r.metrics.rows, validRows = r.quality.validRows,

@@ -32,6 +32,7 @@ import org.apache.spark.sql.functions._
   * persisted, pruned, quantized index is the beyond-reference scale
   * path per the build brief. */
 object DenseIndex {
+  import Similarity.{IdCol, VecCol}
 
   /** Build and persist the index. Two corpus passes: the bounded
     * centroid collect, then ONE map-side projection (assignment +
@@ -44,7 +45,6 @@ object DenseIndex {
     * on clustered data (lower max/mean list size), so the same nProbe
     * reads fewer index bytes; the serving plan is unchanged. */
   def build(corpus0: DataFrame, dir: String, numCentroids: Int = 8,
-            idCol: String = "vec_id", vecCol: String = "embedding",
             corpusSize: Option[Long] = None,
             centroids: Option[DataFrame] = None): Unit = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
@@ -52,7 +52,7 @@ object DenseIndex {
       case Some(cdf) => Similarity.collectProvidedCentroids(cdf)
       case None =>
         val n = corpusSize.getOrElse(corpus.count())
-        Similarity.collectCentroids(corpus, numCentroids, n, idCol, vecCol)
+        Similarity.collectCentroids(corpus, numCentroids, n)
     }
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -60,16 +60,16 @@ object DenseIndex {
       .write.mode("overwrite").parquet(s"$dir/centroids")
     val lists =
       if (cents.isEmpty) // empty corpus: schema-only lists table
-        corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
+        corpus.select(col(IdCol).as("id"), col(VecCol).as("vec"),
           lit(0L).as("cluster"),
           array().cast("array<tinyint>").as("qc"),
           lit(0L).as("cn"))
       else
         graft.ops.Parallelism.barrier(
-          corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-            negate(array_max(Similarity.centScores(col(vecCol), cents))
+          corpus.select(col(IdCol).as("id"), col(VecCol).as("vec"),
+            negate(array_max(Similarity.centScores(col(VecCol), cents))
               .getField("nid")).as("cluster"),
-            Similarity.int8Codes(col(vecCol)).as("qc")))
+            Similarity.int8Codes(col(VecCol)).as("qc")))
           .withColumn("cn", Similarity.int8Dot(col("qc"), col("qc")))
     lists.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$dir/lists")
@@ -79,8 +79,7 @@ object DenseIndex {
     * centroids, partition-pruned quantized scoring over the probed
     * lists only, exact float re-rank of the k·refine shortlist. */
   def query(queries: DataFrame, dir: String, k: Int, nProbe: Int = 2,
-            refine: Int = 4, idCol: String = "vec_id",
-            vecCol: String = "embedding"): DataFrame = {
+            refine: Int = 4): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
     val spark = queries.sparkSession
     val cents: Seq[(Long, Seq[Double])] =
@@ -90,14 +89,14 @@ object DenseIndex {
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
         .sortBy(_._1)
     if (cents.isEmpty)
-      return queries.limit(0).select(col(idCol).as("query_id"),
-        lit(1).as("rank"), col(idCol).as("neighbor_id"), lit(0.0).as("sim"))
+      return queries.limit(0).select(col(IdCol).as("query_id"),
+        lit(1).as("rank"), col(IdCol).as("neighbor_id"), lit(0.0).as("sim"))
     // nProbe nearest lists per query — the cascade's exact probe rule
     val probed = transform(
-      slice(reverse(array_sort(Similarity.centScores(col(vecCol), cents))),
+      slice(reverse(array_sort(Similarity.centScores(col(VecCol), cents))),
         1, nProbe),
       s => negate(s.getField("nid")))
-    val queryLists = queries.select(col(idCol).as("query_id"),
+    val queryLists = queries.select(col(IdCol).as("query_id"),
       explode(probed).as("cluster"))
     // the batch's distinct probed clusters (≤ numCentroids — bounded
     // collect) push down as a PARTITION filter: un-probed lists are
@@ -107,8 +106,8 @@ object DenseIndex {
     val lists = spark.read.parquet(s"$dir/lists")
       .filter(col("cluster").isin(probedClusters: _*))
     val q = graft.ops.Parallelism.barrier(
-      queries.select(col(idCol).as("query_id"),
-        Similarity.int8Codes(col(vecCol)).as("qq")))
+      queries.select(col(IdCol).as("query_id"),
+        Similarity.int8Codes(col(VecCol)).as("qq")))
       .withColumn("qn", Similarity.int8Dot(col("qq"), col("qq")))
     val scored = lists
       .select(col("id").as("neighbor_id"), col("cluster"),
@@ -120,14 +119,11 @@ object DenseIndex {
         when(col("qn") === 0L || col("cn") === 0L, lit(0.0))
           .otherwise(Similarity.int8Dot(col("qq"), col("qc")).cast("double") /
             sqrt((col("qn") * col("cn")).cast("double"))), 6))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    val shortlist = scored.withColumn("qrank", row_number().over(ws))
-      .filter(col("qrank") <= k * refine)
+    val shortlist = Similarity.topKPerQuery(scored, "query_id", "qsim",
+      "neighbor_id", k * refine, "qrank")
       .select(col("query_id"), col("neighbor_id"))
     val floats = spark.read.parquet(s"$dir/lists")
-      .select(col("id").as(idCol), col("vec").as(vecCol))
-    Similarity.refineStage(queries, floats, shortlist, k, idCol, vecCol)
+      .select(col("id").as(IdCol), col("vec").as(VecCol))
+    Similarity.refineStage(queries, floats, shortlist, k)
   }
 }

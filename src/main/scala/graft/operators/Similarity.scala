@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.hash64
@@ -24,6 +25,49 @@ import graft.functions.TextFunctions.hash64
   */
 object Similarity {
 
+  /** The id and vector columns of every table the operators here read. */
+  val IdCol = "vec_id"
+  val VecCol = "embedding"
+
+  /** The per-query top-k tail every ranked search shares: number each
+    * `query` group's rows by `score` descending, ties toward the smaller
+    * `id`, into column `rank`, and keep ranks 1..k. Callers select and
+    * alias their own output columns. */
+  private[graft] def topKPerQuery(scored: DataFrame, query: String,
+      score: String, id: String, k: Int, rank: String): DataFrame = {
+    val w = Window.partitionBy(col(query)).orderBy(col(score).desc, col(id))
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** The stride-seed rule: with stride s, the ids 0, s, 2s, … below
+    * count·s, for an id given as a SQL expression. */
+  private def strideSeedRule(idSql: String, stride: Long,
+                             count: Int): Column =
+    expr(idSql) % stride === 0 && expr(s"$idSql div $stride") < count
+
+  /** Stride-picked seeds `(centroid_id, centv)` of an `n`-row corpus: the
+    * `count` vectors at ids 0, s, 2s, … for s = max(1, n / count). The
+    * rule assumes dense 0-based ids (the common shape for vector tables,
+    * and the rule the oracle reproduces). A sparse or hashed id space can
+    * strand the filter empty — then the `count` smallest ids seed instead
+    * (deterministic TakeOrdered), rather than silently returning zero
+    * neighbors for every query. */
+  private def strideSeeds(corpus: DataFrame, count: Int, n: Long): DataFrame = {
+    def seeds(df: DataFrame) =
+      df.select(col(IdCol).as("centroid_id"), col(VecCol).as("centv"))
+    val strided = seeds(corpus.filter(
+      strideSeedRule(IdCol, math.max(1L, n / count), count)))
+    if (strided.isEmpty) seeds(corpus.orderBy(col(IdCol)).limit(count))
+    else strided
+  }
+
+  /** An array cell of floats or doubles, read as doubles. */
+  private def doubles(cell: Seq[Any]): Seq[Double] = cell.map {
+    case f: java.lang.Float => f.doubleValue
+    case d: java.lang.Double => d.doubleValue
+    case x => x.asInstanceOf[Number].doubleValue
+  }
+
   /** Left-to-right double-precision dot product of two float vectors.
     * Native one-pass kernel — same product/accumulation order and the
     * same null semantics as the aggregate(zip_with) form (spec-compared
@@ -36,22 +80,17 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Exact top-k cosine neighbors for each query vector.
-    * queries/corpus: (idCol, vecCol). Output: query_id, neighbor_id, rank,
+    * queries/corpus: (IdCol, VecCol). Output: query_id, neighbor_id, rank,
     * sim (rounded 6dp). Self-matches excluded when ids collide. */
-  def bruteForceTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+  def bruteForceTopK(queries: DataFrame, corpus0: DataFrame,
+                     k: Int): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    val q = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "query_id", "sim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
   }
 
@@ -91,21 +130,16 @@ object Similarity {
     * exact cosine rank within bucket. Recall tunes with numPlanes (fewer
     * planes → bigger buckets → higher recall, more compute). */
   def lshTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
-              numPlanes: Int = 4, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
+              numPlanes: Int = 4): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      lshBucket(col(vecCol), numPlanes).as("bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      lshBucket(col(vecCol), numPlanes).as("bucket"))
+    val q = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"),
+      lshBucket(col(VecCol), numPlanes).as("bucket"))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"),
+      lshBucket(col(VecCol), numPlanes).as("bucket"))
     val scored = q.join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "query_id", "sim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
   }
 
@@ -117,30 +151,25 @@ object Similarity {
     * bucket-local; vectors join back only for surviving candidates, so
     * the wide embedding column never rides through the bucket shuffle. */
   def lshTopKMultiTable(queries: DataFrame, corpus0: DataFrame, k: Int,
-                        numPlanes: Int = 4, numTables: Int = 3,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
+                        numPlanes: Int = 4,
+                        numTables: Int = 3): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     def buckets(vec: Column): Column =
       array((0 until numTables).map(t => lshBucket(vec, numPlanes, t)): _*)
-    val qb = queries.select(col(idCol).as("query_id"),
-      posexplode(buckets(col(vecCol))).as(Seq("tbl", "bucket")))
-    val cb = corpus.select(col(idCol).as("neighbor_id"),
-      posexplode(buckets(col(vecCol))).as(Seq("tbl", "bucket")))
+    val qb = queries.select(col(IdCol).as("query_id"),
+      posexplode(buckets(col(VecCol))).as(Seq("tbl", "bucket")))
+    val cb = corpus.select(col(IdCol).as("neighbor_id"),
+      posexplode(buckets(col(VecCol))).as(Seq("tbl", "bucket")))
     val cands = qb.join(cb, Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
     val scored = cands
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      .join(queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv")),
         "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
+      .join(corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv")),
         "neighbor_id")
       .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "query_id", "sim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
   }
 
@@ -166,26 +195,11 @@ object Similarity {
     * centroid stride; pass `corpusSize` when it is already known. */
   def ivfTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
               numCentroids: Int = 8, nProbe: Int = 2,
-              idCol: String = "vec_id", vecCol: String = "embedding",
               corpusSize: Option[Long] = None): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     val n = corpusSize.getOrElse(corpus.count())
-    val stride = math.max(1L, n / numCentroids)
-    // stride-picked seeds assume dense 0-based ids (the common shape for
-    // vector tables, and the rule the oracle reproduces). A sparse or
-    // hashed id space can strand the filter empty — in that case fall
-    // back to the numCentroids smallest ids (deterministic TakeOrdered)
-    // instead of silently returning zero neighbors for every query.
-    val strided = corpus
-      .filter(col(idCol) % stride === 0 &&
-        expr(s"$idCol div $stride") < numCentroids)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    val cents =
-      if (strided.isEmpty)
-        corpus.orderBy(col(idCol)).limit(numCentroids)
-          .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-      else strided
-    ivfTopKWithCentroids(queries, corpus, k, cents, nProbe, idCol, vecCol)
+    ivfTopKWithCentroids(queries, corpus, k,
+      strideSeeds(corpus, numCentroids, n), nProbe)
   }
 
   /** IVF-flat probing against a CALLER-SUPPLIED centroid table
@@ -195,29 +209,24 @@ object Similarity {
     * the serving plan is unchanged — centroids broadcast, assignment
     * map-side, the corpus never re-shuffles by cluster. */
   def ivfTopKWithCentroids(queries: DataFrame, corpus0: DataFrame, k: Int,
-      centroids: DataFrame, nProbe: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      centroids: DataFrame, nProbe: Int): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     val cents = broadcast(centroids)
     // nearest centroid per corpus vector: broadcast cross + argmax with a
     // (sim, -id) struct so ties break toward the smaller centroid id —
     // the same ORDER BY sim DESC, id ASC the oracle uses
     val assigned = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+      .select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
       .crossJoin(cents)
       .withColumn("csim", cosine(col("cv"), col("centv")))
       .groupBy("neighbor_id")
       .agg(expr("max_by(centroid_id, struct(csim, -centroid_id))")
         .as("cluster"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val queryLists = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(cents)
-      .withColumn("csim", cosine(col("qv"), col("centv")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= nProbe)
+    val queryLists = topKPerQuery(queries
+        .select(col(IdCol).as("query_id"), col(VecCol).as("qv"))
+        .crossJoin(cents)
+        .withColumn("csim", cosine(col("qv"), col("centv"))),
+      "query_id", "csim", "centroid_id", nProbe, "prank")
       .select(col("query_id"), col("centroid_id").as("cluster"))
     // each neighbor lives in exactly one list, so (query, neighbor) pairs
     // are already unique — no dedup stage needed
@@ -225,28 +234,27 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
     val scored = cands
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      .join(queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv")),
         "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
+      .join(corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv")),
         "neighbor_id")
       .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "query_id", "sim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
   }
 
+  /** Floor of [[autoCentroids]]: tiny corpora keep meaningful lists. */
+  private val MinCentroids = 8
+
   /** Corpus-scaled IVF centroid count — the sqrt rule every IVF
     * deployment applies (list size ~sqrt(N) balances probe cost against
-    * list-scan cost), floored at `minCentroids` so tiny corpora keep
-    * meaningful lists. Probe ~sqrt(centroids) lists for the usual
-    * recall/cost balance. Like [[autoPlanes]], this is the tuning knob a
-    * real deployment wires in; the oracle query pins an explicit count
-    * so the inverted lists stay engine-reproducible. */
-  def autoCentroids(corpusSize: Long, minCentroids: Int = 8): Int =
-    math.max(minCentroids,
+    * list-scan cost), floored at [[MinCentroids]]. Probe
+    * ~sqrt(centroids) lists for the usual recall/cost balance. Like
+    * [[autoPlanes]], this is the tuning knob a real deployment wires in;
+    * the oracle query pins an explicit count so the inverted lists stay
+    * engine-reproducible. */
+  def autoCentroids(corpusSize: Long): Int =
+    math.max(MinCentroids,
       math.ceil(math.sqrt(math.max(1L, corpusSize).toDouble)).toInt)
 
   /** Corpus-scaled sign-LSH plane count: `minPlanes` up to `anchorCorpus`
@@ -272,15 +280,14 @@ object Similarity {
     * is a job-killer). The cap trades recall inside boilerplate-heavy
     * buckets, exactly like the MinHash path's cap. */
   def embeddingNearDupPairs(df0: DataFrame, threshold: Double,
-                            numPlanes: Int = 4, idCol: String = "vec_id",
-                            vecCol: String = "embedding",
+                            numPlanes: Int = 4,
                             maxBucketSize: Int = 1000): DataFrame = {
     val df = graft.ops.Parallelism.ensure(df0)
     // (id, bucket) pairs staged eagerly across the census and the pair
     // join — stage, not persist, so no CacheManager entry pins per call
     // (see Parallelism.stage for the checkpoint rule)
-    val ids = df.select(col(idCol).as("id"),
-      lshBucket(col(vecCol), numPlanes).as("bucket"))
+    val ids = df.select(col(IdCol).as("id"),
+      lshBucket(col(VecCol), numPlanes).as("bucket"))
       .transform(graft.ops.Parallelism.stage)
     // skew-safe cap: hot buckets drop via broadcast anti-join map-side
     // instead of all routing through one count-window reducer (see
@@ -299,7 +306,7 @@ object Similarity {
     // divide — identical operands, so results are bit-identical to the
     // unhoisted formula and the oracle is untouched
     val vecs = graft.ops.Parallelism.barrier(
-      df.select(col(idCol).as("id"), col(vecCol).as("v"))
+      df.select(col(IdCol).as("id"), col(VecCol).as("v"))
         .withColumn("nrm", norm(col("v"))))
     pairs
       .join(vecs.select(col("id").as("id_a"), col("v").as("va"),
@@ -322,14 +329,13 @@ object Similarity {
     * per semantic dup family — the curation rule for paraphrase/
     * translation mirrors that text-level shingles can't see. */
   def embeddingNearDupClusters(df0: DataFrame, threshold: Double,
-                               numPlanes: Int = 4, idCol: String = "vec_id",
-                               vecCol: String = "embedding",
+                               numPlanes: Int = 4,
                                maxBucketSize: Int = 1000): DataFrame = {
     // no ensure here: embeddingNearDupPairs ensures internally, and the
     // ids projection below carries no per-row compute worth widening
-    val pairs = embeddingNearDupPairs(df0, threshold, numPlanes, idCol,
-      vecCol, maxBucketSize)
-    Dedup.clusterLabels(df0.select(col(idCol)), idCol, pairs)
+    val pairs = embeddingNearDupPairs(df0, threshold, numPlanes,
+      maxBucketSize)
+    Dedup.clusterLabels(df0.select(col(IdCol)), IdCol, pairs)
   }
 
   /** Drop every row except one representative per semantic dup family —
@@ -339,14 +345,13 @@ object Similarity {
     * A~B~C keeps exactly A here, where the greedy rule drops both B and
     * C. All input columns pass through. */
   def dropSemanticDuplicates(df0: DataFrame, threshold: Double,
-                             numPlanes: Int = 4, idCol: String = "vec_id",
-                             vecCol: String = "embedding",
+                             numPlanes: Int = 4,
                              maxBucketSize: Int = 1000): DataFrame = {
-    val keep = embeddingNearDupClusters(df0, threshold, numPlanes, idCol,
-      vecCol, maxBucketSize)
-      .filter(col(idCol) === col("cluster_id"))
-      .select(col(idCol))
-    df0.join(keep, Seq(idCol), "left_semi")
+    val keep = embeddingNearDupClusters(df0, threshold, numPlanes,
+      maxBucketSize)
+      .filter(col(IdCol) === col("cluster_id"))
+      .select(col(IdCol))
+    df0.join(keep, Seq(IdCol), "left_semi")
   }
 
   /** SemDeDup (Abbas et al. 2023): semantic dedup scoped INSIDE coarse
@@ -375,26 +380,16 @@ object Similarity {
     * has only brute-force dense search — this tier goes beyond the
     * reference per the build brief. */
   def semDeDup(df0: DataFrame, threshold: Double, numCentroids: Int = 8,
-               idCol: String = "vec_id", vecCol: String = "embedding",
                maxClusterSize: Int = 1000,
                corpusSize: Option[Long] = None): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(df0)
     val n = corpusSize.getOrElse(corpus.count())
-    val stride = math.max(1L, n / numCentroids)
-    val strided = corpus
-      .filter(col(idCol) % stride === 0 &&
-        expr(s"$idCol div $stride") < numCentroids)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    val cents = broadcast(
-      if (strided.isEmpty)
-        corpus.orderBy(col(idCol)).limit(numCentroids)
-          .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-      else strided)
+    val cents = broadcast(strideSeeds(corpus, numCentroids, n))
     // nearest-centroid assignment, argmax on the UNROUNDED cosine with
     // smaller-centroid tie-break (the q44 rule, engine-stable); the
     // winning similarity is kept 6dp-rounded for the keeper election
     val assigned = corpus
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
+      .select(col(IdCol).as("id"), col(VecCol).as("v"))
       .crossJoin(cents)
       .withColumn("csim", cosine(col("v"), col("centv")))
       .groupBy("id")
@@ -406,7 +401,7 @@ object Similarity {
     // cluster-local τ-graph on hoisted-norm cosine (bit-identical to the
     // unhoisted formula — see embeddingNearDupPairs)
     val vecs = graft.ops.Parallelism.barrier(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      corpus.select(col(IdCol).as("id"), col(VecCol).as("v"))
         .withColumn("nrm", norm(col("v"))))
     val pairs = capped.select(col("id").as("id_a"), col("cluster"))
       .join(capped.select(col("id").as("id_b"), col("cluster")), Seq("cluster"))
@@ -430,7 +425,7 @@ object Similarity {
     // capped-out hot clusters pass through un-deduped
     val hot = assigned.join(capped.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("cluster"), lit(1).as("keep"))
-    flags.unionByName(hot).withColumnRenamed("id", idCol)
+    flags.unionByName(hot).withColumnRenamed("id", IdCol)
   }
 
   // --- int8-quantized similarity — the memory-bound scale path -----------
@@ -502,9 +497,8 @@ object Similarity {
     * and the float vectors page in only for the final re-rank of the
     * shortlist. Quantized similarity ties more often than float cosine;
     * (sim DESC, neighbor_id) keeps ranks deterministic. */
-  def int8TopK(queries: DataFrame, corpus0: DataFrame, k: Int,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
+  def int8TopK(queries: DataFrame, corpus0: DataFrame,
+               k: Int): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     // codes and norms hoist PER VECTOR behind barriers (projection
     // collapse would otherwise inline the quantization into the norm fold
@@ -512,7 +506,7 @@ object Similarity {
     // dot product and scalar arithmetic per pair, nothing vector-sized
     def sided(df: DataFrame, id: String, codes: String, n: String) =
       graft.ops.Parallelism.barrier(
-        df.select(col(idCol).as(id), int8Codes(col(vecCol)).as(codes)))
+        df.select(col(IdCol).as(id), int8Codes(col(VecCol)).as(codes)))
         .withColumn(n, int8Dot(col(codes), col(codes)))
     val q = sided(queries, "query_id", "qq", "qn")
     val c = sided(corpus, "neighbor_id", "qc", "cn")
@@ -522,11 +516,7 @@ object Similarity {
         when(col("qn") === 0L || col("cn") === 0L, lit(0.0))
           .otherwise(int8Dot(col("qq"), col("qc")).cast("double") /
             sqrt((col("qn") * col("cn")).cast("double"))), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "query_id", "qsim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("qsim"))
   }
 
@@ -540,13 +530,12 @@ object Similarity {
     * (integer shortlist ties → neighbor_id, float re-rank ties →
     * neighbor_id), so the whole cascade replays in SQL. */
   def int8RefineTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
-                     refine: Int = 4, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+                     refine: Int = 4): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
     val corpus = graft.ops.Parallelism.ensure(corpus0)
-    val shortlist = int8TopK(queries, corpus, k * refine, idCol, vecCol)
+    val shortlist = int8TopK(queries, corpus, k * refine)
       .select(col("query_id"), col("neighbor_id"))
-    refineStage(queries, corpus, shortlist, k, idCol, vecCol)
+    refineStage(queries, corpus, shortlist, k)
   }
 
   /** Exact float-cosine re-rank of a (query_id, neighbor_id) shortlist to
@@ -557,19 +546,14 @@ object Similarity {
     * each query vector k·refine times and blow the broadcast limit at
     * production Q. */
   private[operators] def refineStage(queries: DataFrame, corpus: DataFrame,
-                          shortlist: DataFrame, k: Int,
-                          idCol: String, vecCol: String): DataFrame = {
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+                          shortlist: DataFrame, k: Int): DataFrame = {
+    val qv = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"))
+    val cv = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
     val rescored = broadcast(shortlist)
       .join(cv, "neighbor_id")
       .join(broadcast(qv), "query_id")
       .withColumn("sim", round(cosine(col("qv"), col("cv")), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(rescored, "query_id", "sim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
   }
 
@@ -581,30 +565,16 @@ object Similarity {
     * sparse-id fallback) as [[ivfTopK]], reproducible across engines; a
     * zero centroid scores 0 against everything. */
   private[operators] def collectCentroids(corpus: DataFrame,
-      numCentroids: Int, n: Long, idCol: String,
-      vecCol: String): Seq[(Long, Seq[Double])] = {
-    val stride = math.max(1L, n / numCentroids)
-    val strided = corpus
-      .filter(col(idCol) % stride === 0 &&
-        expr(s"$idCol div $stride") < numCentroids)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    val centRows = (if (strided.isEmpty)
-        corpus.orderBy(col(idCol)).limit(numCentroids)
-          .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-      else strided).collect()
-    centRows.toSeq.map(normalizedCentroid)
-  }
+      numCentroids: Int, n: Long): Seq[(Long, Seq[Double])] =
+    strideSeeds(corpus, numCentroids, n).collect().toSeq
+      .map(normalizedCentroid)
 
   /** One (centroid_id, centv) row → driver-normalized (id, c/|c|) —
     * shared by the stride seeding above and the trained-centroid
     * override path ([[collectProvidedCentroids]]). */
   private def normalizedCentroid(r: org.apache.spark.sql.Row): (Long, Seq[Double]) = {
     val cid = r.get(0).asInstanceOf[Number].longValue
-    val cv = r.getSeq[Any](1).map {
-      case f: java.lang.Float => f.doubleValue
-      case d: java.lang.Double => d.doubleValue
-      case x => x.asInstanceOf[Number].doubleValue
-    }
+    val cv = doubles(r.getSeq[Any](1))
     // driver-normalized (x/|c|, both IEEE-identical to the oracle's
     // list arithmetic)
     val nrm = math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x))
@@ -666,36 +636,35 @@ object Similarity {
     * composition is where the Spark build is strictly better.) */
   def ivfInt8RefineTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
       numCentroids: Int = 8, nProbe: Int = 2, refine: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       corpusSize: Option[Long] = None): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
     require(numCentroids >= 1 && numCentroids <= 65536,
       s"numCentroids=$numCentroids: the centroid set collects to the driver")
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     val n = corpusSize.getOrElse(corpus.count())
-    val cents = collectCentroids(corpus, numCentroids, n, idCol, vecCol)
+    val cents = collectCentroids(corpus, numCentroids, n)
     if (cents.isEmpty)
-      return queries.limit(0).select(col(idCol).as("query_id"),
-        lit(1).as("rank"), col(idCol).as("neighbor_id"), lit(0.0).as("sim"))
+      return queries.limit(0).select(col(IdCol).as("query_id"),
+        lit(1).as("rank"), col(IdCol).as("neighbor_id"), lit(0.0).as("sim"))
     // corpus pass: cluster assignment + quantization in ONE map-side
     // projection (codes/norms hoisted per vector behind the barrier,
     // exactly like int8TopK)
     val c = graft.ops.Parallelism.barrier(
-      corpus.select(col(idCol).as("neighbor_id"),
-        negate(array_max(centScores(col(vecCol), cents)).getField("nid"))
+      corpus.select(col(IdCol).as("neighbor_id"),
+        negate(array_max(centScores(col(VecCol), cents)).getField("nid"))
           .as("cluster"),
-        int8Codes(col(vecCol)).as("qc")))
+        int8Codes(col(VecCol)).as("qc")))
       .withColumn("cn", int8Dot(col("qc"), col("qc")))
     val q = graft.ops.Parallelism.barrier(
-      queries.select(col(idCol).as("query_id"),
-        int8Codes(col(vecCol)).as("qq")))
+      queries.select(col(IdCol).as("query_id"),
+        int8Codes(col(VecCol)).as("qq")))
       .withColumn("qn", int8Dot(col("qq"), col("qq")))
     // nProbe nearest lists per query: sort desc by (score, -id) — ties
     // toward the smaller centroid id, like the assignment argmax
     val probed = transform(
-      slice(reverse(array_sort(centScores(col(vecCol), cents))), 1, nProbe),
+      slice(reverse(array_sort(centScores(col(VecCol), cents))), 1, nProbe),
       s => negate(s.getField("nid")))
-    val queryLists = queries.select(col(idCol).as("query_id"),
+    val queryLists = queries.select(col(IdCol).as("query_id"),
       explode(probed).as("cluster"))
     val scored = c.join(broadcast(queryLists), Seq("cluster"))
       .join(broadcast(q), Seq("query_id"))
@@ -704,13 +673,10 @@ object Similarity {
         when(col("qn") === 0L || col("cn") === 0L, lit(0.0))
           .otherwise(int8Dot(col("qq"), col("qc")).cast("double") /
             sqrt((col("qn") * col("cn")).cast("double"))), 6))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    val shortlist = scored.withColumn("qrank", row_number().over(ws))
-      .filter(col("qrank") <= k * refine)
-      .select(col("query_id"), col("neighbor_id"))
-    refineStage(queries, corpus, shortlist, k, idCol, vecCol)
+    val shortlist =
+      topKPerQuery(scored, "query_id", "qsim", "neighbor_id", k * refine,
+        "qrank").select(col("query_id"), col("neighbor_id"))
+    refineStage(queries, corpus, shortlist, k)
   }
 
   // --- Product quantization (the FAISS PQ memory tier) -------------------
@@ -720,88 +686,24 @@ object Similarity {
     * deterministic, SQL-replayable seeding rule as [[ivfTopK]]'s coarse
     * quantizer, here seeding `m` per-subspace codebooks of `k` centroids
     * each. Data-adaptive (real corpus subvectors) without any RNG or
-    * float-mean nondeterminism; [[pqTrain]] refines these seeds with
-    * Lloyd iterations when reproducibility-in-SQL is not required.
-    * Bounded driver collect (≤ k rows). */
+    * float-mean nondeterminism; [[pqTrainExact]] refines these seeds
+    * with integer-exact Lloyd iterations. Bounded driver collect (≤ k
+    * rows). */
   def pqStrideCodebooks(corpus0: DataFrame, m: Int, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       corpusSize: Option[Long] = None): Seq[Seq[Seq[Double]]] = {
     require(m >= 1, "m must be >= 1")
     require(k >= 1 && k <= 65536,
       s"k=$k: the codebook seeds collect to the driver")
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     val n = corpusSize.getOrElse(corpus.count())
-    val stride = math.max(1L, n / k)
-    val strided = corpus
-      .filter(col(idCol) % stride === 0 &&
-        expr(s"$idCol div $stride") < k)
-      .orderBy(col(idCol)).select(col(vecCol))
-    val rows = (if (strided.isEmpty)
-        corpus.orderBy(col(idCol)).limit(k).select(col(vecCol))
-      else strided).collect()
+    val rows = strideSeeds(corpus, k, n).collect().toSeq
+      .sortBy(_.get(0).asInstanceOf[Number].longValue)
     require(rows.nonEmpty, "empty corpus: no codebook seeds")
-    val vecs = rows.toSeq.map(_.getSeq[Any](0).map {
-      case f: java.lang.Float => f.doubleValue
-      case d: java.lang.Double => d.doubleValue
-      case x => x.asInstanceOf[Number].doubleValue
-    })
+    val vecs = rows.map(r => doubles(r.getSeq[Any](1)))
     val d = vecs.head.size
     require(d % m == 0, s"vector dim $d not divisible by m=$m subspaces")
     val ds = d / m
     (0 until m).map(j => vecs.map(v => v.slice(j * ds, (j + 1) * ds)))
-  }
-
-  /** Lloyd-refined PQ codebooks over a BOUNDED collected sample (the
-    * [[Dedup]] union-find driver-bound discipline): stride seeds, then
-    * `iters` assign/mean rounds per subspace in fixed sample order (ties
-    * toward the smaller centroid index, empty clusters keep their
-    * centroid). Deterministic for a given corpus, but float means are
-    * not engine-replayable — the declared query (q111) uses the stride
-    * seeds; this is the offline-training quality path (the q105
-    * pinned-vs-trained split). Quantization MSE is non-increasing per
-    * round by construction (each step is a Lloyd descent step —
-    * OperatorsSpec asserts it on real embeddings). */
-  def pqTrain(corpus0: DataFrame, m: Int, k: Int, iters: Int = 5,
-      sampleCap: Int = 100000, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Seq[Seq[Seq[Double]]] = {
-    require(iters >= 0, "iters must be >= 0")
-    require(sampleCap >= k && sampleCap <= 1000000,
-      s"sampleCap=$sampleCap: the training sample collects to the driver")
-    val seeds = pqStrideCodebooks(corpus0, m, k, idCol, vecCol)
-    val sample = graft.ops.Parallelism.ensure(corpus0)
-      .orderBy(col(idCol)).limit(sampleCap).select(col(vecCol))
-      .collect().toSeq.map(_.getSeq[Any](0).map {
-        case f: java.lang.Float => f.doubleValue
-        case d: java.lang.Double => d.doubleValue
-        case x => x.asInstanceOf[Number].doubleValue
-      })
-    val ds = seeds.head.head.size
-    seeds.zipWithIndex.map { case (seed, j) =>
-      val subs = sample.map(v => v.slice(j * ds, (j + 1) * ds))
-      var cents = seed.map(_.toArray).toArray
-      for (_ <- 0 until iters) {
-        val sums = Array.fill(cents.length, ds)(0.0)
-        val counts = new Array[Long](cents.length)
-        subs.foreach { s =>
-          var best = 0; var bestD = Double.MaxValue
-          var i = 0
-          while (i < cents.length) {
-            var dd = 0.0; var x = 0
-            while (x < ds) { val t = s(x) - cents(i)(x); dd += t * t; x += 1 }
-            if (dd < bestD) { bestD = dd; best = i }
-            i += 1
-          }
-          var x = 0
-          while (x < ds) { sums(best)(x) += s(x); x += 1 }
-          counts(best) += 1L
-        }
-        cents = cents.zipWithIndex.map { case (c, i) =>
-          if (counts(i) == 0L) c
-          else sums(i).map(_ / counts(i))
-        }
-      }
-      cents.map(_.toSeq).toSeq
-    }
   }
 
   /** PQ encode: array of `m` codes (tinyint), code j = index of the
@@ -867,24 +769,23 @@ object Similarity {
     * with [[pqAdcRefineTopK]] for the exact-re-rank cascade, or bucket/
     * IVF-prune the scan exactly as [[int8TopK]] documents. */
   def pqAdcTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
-      codebooks: Seq[Seq[Seq[Double]]], idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     // per-(j,i) centroid norm² in micro units — the reconstructed norm
     // of a coded vector is a pure integer function of its codes
     val normTab: Seq[Seq[Long]] = codebooks.map(_.map(c =>
       math.round(c.map(x => x * x).sum * 1e6)))
     val c = graft.ops.Parallelism.barrier(
-      corpus.select(col(idCol).as("neighbor_id"),
-        pqCodes(col(vecCol), codebooks).as("pc")))
+      corpus.select(col(IdCol).as("neighbor_id"),
+        pqCodes(col(VecCol), codebooks).as("pc")))
       .withColumn("rn", aggregate(
         zip_with(col("pc"), typedlit(normTab),
           (cd, tab) => element_at(tab, cd.cast("int") + 1)),
         lit(0L), (a, v) => a + v))
     val q = graft.ops.Parallelism.barrier(
-      queries.select(col(idCol).as("query_id"),
-        adcMicroTable(col(vecCol), codebooks).as("adc"),
-        round(aggregate(col(vecCol), lit(0.0),
+      queries.select(col(IdCol).as("query_id"),
+        adcMicroTable(col(VecCol), codebooks).as("adc"),
+        round(aggregate(col(VecCol), lit(0.0),
           (a, x) => a + x.cast("double") * x.cast("double")) * 1e6, 0)
           .cast("long").as("qn")))
     val scored = q.crossJoin(c)
@@ -896,11 +797,7 @@ object Similarity {
               (cd, row) => element_at(row, cd.cast("int") + 1)),
               lit(0L), (a, v) => a + v).cast("double") /
             sqrt(col("qn").cast("double") * col("rn").cast("double"))), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "query_id", "qsim", "neighbor_id", k, "rank")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("qsim"))
   }
 
@@ -909,13 +806,12 @@ object Similarity {
     * candidates per query, the float vectors join back only for the
     * shortlist re-rank ([[refineStage]], shared by all cascades). */
   def pqAdcRefineTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
-      codebooks: Seq[Seq[Seq[Double]]], refine: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      codebooks: Seq[Seq[Seq[Double]]], refine: Int = 4): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
     val corpus = graft.ops.Parallelism.ensure(corpus0)
-    val shortlist = pqAdcTopK(queries, corpus, k * refine, codebooks,
-      idCol, vecCol).select(col("query_id"), col("neighbor_id"))
-    refineStage(queries, corpus, shortlist, k, idCol, vecCol)
+    val shortlist = pqAdcTopK(queries, corpus, k * refine, codebooks)
+      .select(col("query_id"), col("neighbor_id"))
+    refineStage(queries, corpus, shortlist, k)
   }
 
   /** IVF + PQ + float re-rank — the billion-scale production ANN shape
@@ -935,59 +831,40 @@ object Similarity {
     * SQL (q112). */
   def ivfPqRefineTopK(queries: DataFrame, corpus0: DataFrame, k: Int,
       codebooks: Seq[Seq[Seq[Double]]], numCentroids: Int = 8,
-      nProbe: Int = 2, refine: Int = 4, idCol: String = "vec_id",
-      vecCol: String = "embedding",
+      nProbe: Int = 2, refine: Int = 4,
       corpusSize: Option[Long] = None): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
     require(numCentroids >= 1 && numCentroids <= 65536,
       s"numCentroids=$numCentroids: the centroid set collects to the driver")
     val corpus = graft.ops.Parallelism.ensure(corpus0)
     val n = corpusSize.getOrElse(corpus.count())
-    val stride = math.max(1L, n / numCentroids)
-    val strided = corpus
-      .filter(col(idCol) % stride === 0 &&
-        expr(s"$idCol div $stride") < numCentroids)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    val centRows = (if (strided.isEmpty)
-        corpus.orderBy(col(idCol)).limit(numCentroids)
-          .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-      else strided).collect()
-    if (centRows.isEmpty)
-      return queries.limit(0).select(col(idCol).as("query_id"),
-        lit(1).as("rank"), col(idCol).as("neighbor_id"), lit(0.0).as("sim"))
-    val cents: Seq[(Long, Seq[Double])] = centRows.toSeq.map { r =>
-      val cid = r.get(0).asInstanceOf[Number].longValue
-      val cv = r.getSeq[Any](1).map {
-        case f: java.lang.Float => f.doubleValue
-        case d: java.lang.Double => d.doubleValue
-        case x => x.asInstanceOf[Number].doubleValue
-      }
-      val nrm = math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x))
-      (cid, if (nrm == 0.0) cv.map(_ => 0.0) else cv.map(_ / nrm))
-    }
+    val cents = collectCentroids(corpus, numCentroids, n)
+    if (cents.isEmpty)
+      return queries.limit(0).select(col(IdCol).as("query_id"),
+        lit(1).as("rank"), col(IdCol).as("neighbor_id"), lit(0.0).as("sim"))
     val normTab: Seq[Seq[Long]] = codebooks.map(_.map(c =>
       math.round(c.map(x => x * x).sum * 1e6)))
     // ONE map-side corpus projection: cluster assignment + PQ encode +
     // reconstructed norm — the corpus is never shuffled
     val c = graft.ops.Parallelism.barrier(
-      corpus.select(col(idCol).as("neighbor_id"),
-        negate(array_max(centScores(col(vecCol), cents)).getField("nid"))
+      corpus.select(col(IdCol).as("neighbor_id"),
+        negate(array_max(centScores(col(VecCol), cents)).getField("nid"))
           .as("cluster"),
-        pqCodes(col(vecCol), codebooks).as("pc")))
+        pqCodes(col(VecCol), codebooks).as("pc")))
       .withColumn("rn", aggregate(
         zip_with(col("pc"), typedlit(normTab),
           (cd, tab) => element_at(tab, cd.cast("int") + 1)),
         lit(0L), (a, v) => a + v))
     val q = graft.ops.Parallelism.barrier(
-      queries.select(col(idCol).as("query_id"),
-        adcMicroTable(col(vecCol), codebooks).as("adc"),
-        round(aggregate(col(vecCol), lit(0.0),
+      queries.select(col(IdCol).as("query_id"),
+        adcMicroTable(col(VecCol), codebooks).as("adc"),
+        round(aggregate(col(VecCol), lit(0.0),
           (a, x) => a + x.cast("double") * x.cast("double")) * 1e6, 0)
           .cast("long").as("qn")))
     val probed = transform(
-      slice(reverse(array_sort(centScores(col(vecCol), cents))), 1, nProbe),
+      slice(reverse(array_sort(centScores(col(VecCol), cents))), 1, nProbe),
       s => negate(s.getField("nid")))
-    val queryLists = queries.select(col(idCol).as("query_id"),
+    val queryLists = queries.select(col(IdCol).as("query_id"),
       explode(probed).as("cluster"))
     val scored = c.join(broadcast(queryLists), Seq("cluster"))
       .join(broadcast(q), Seq("query_id"))
@@ -999,22 +876,17 @@ object Similarity {
               (cd, row) => element_at(row, cd.cast("int") + 1)),
               lit(0L), (a, v) => a + v).cast("double") /
             sqrt(col("qn").cast("double") * col("rn").cast("double"))), 6))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    val shortlist = scored.withColumn("qrank", row_number().over(ws))
-      .filter(col("qrank") <= k * refine)
-      .select(col("query_id"), col("neighbor_id"))
-    refineStage(queries, corpus, shortlist, k, idCol, vecCol)
+    val shortlist =
+      topKPerQuery(scored, "query_id", "qsim", "neighbor_id", k * refine,
+        "qrank").select(col("query_id"), col("neighbor_id"))
+    refineStage(queries, corpus, shortlist, k)
   }
 
   /** INTEGER-EXACT distributed PQ training — per-subspace Lloyd's
     * k-means under [[KMeans]]'s micro-grid discipline, so the trained
     * codebooks are deterministic under any partitioning AND replayable
     * in DuckDB SQL (the q131 trained-IVF precedent, extended to the m
-    * independent subspace clusterings FAISS PQ trains). This is the
-    * declared-query trainer; [[pqTrain]] remains the float offline
-    * path.
+    * independent subspace clusterings FAISS PQ trains).
     *
     * Rules shared with the oracle (all [[KMeans]]'s verbatim, with the
     * subspace index joined into every key):
@@ -1039,7 +911,6 @@ object Similarity {
     * an exchange. Returns float codebooks (micro / 1e6) that slot
     * unchanged into [[pqCodes]] / [[pqAdcRefineTopK]] serving. */
   def pqTrainExact(corpus0: DataFrame, m: Int, k: Int, iters: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       sampleCap: Long = 65536L): Seq[Seq[Seq[Double]]] = {
     require(m >= 1, "m must be >= 1")
     require(k >= 1 && k <= 4096,
@@ -1058,11 +929,11 @@ object Similarity {
     val trainStride = math.max(1L, nAll / sampleCap)
     val corpus =
       if (trainStride == 1L) corpusAll
-      else corpusAll.filter(col(idCol).cast("long") % trainStride === 0)
+      else corpusAll.filter(col(IdCol).cast("long") % trainStride === 0)
     // dimension from the first NON-NULL vector (size(null) reads as a
     // null cell that head().getInt would NPE on)
-    val dim = corpus.filter(col(vecCol).isNotNull)
-      .select(size(col(vecCol))).head().getInt(0)
+    val dim = corpus.filter(col(VecCol).isNotNull)
+      .select(size(col(VecCol))).head().getInt(0)
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m")
     val ds = dim / m
     // one micro-quantize + subspace explode, staged so every
@@ -1074,8 +945,8 @@ object Similarity {
     // barrier keeps the kernel single-eval under the filter.
     val sv = graft.ops.Parallelism.stage(
       graft.ops.Parallelism.barrier(
-          corpus.select(col(idCol).cast("long").as("__graft_id"),
-            KMeans.microVec(col(vecCol)).as("__graft_mv")))
+          corpus.select(col(IdCol).cast("long").as("__graft_id"),
+            KMeans.microVec(col(VecCol)).as("__graft_mv")))
         .filter(col("__graft_mv").isNotNull)
         .select(col("__graft_id"),
           posexplode(array((0 until m).map(j =>
@@ -1104,12 +975,10 @@ object Similarity {
     // for dense ids; identity when the cap doesn't bind), so a capped
     // train still seeds ~k centroids instead of whatever survives the
     // double-stride intersection
-    val ord = expr(s"__graft_id div $trainStride")
+    val ord = s"(__graft_id div $trainStride)"
     val init: Map[(Int, Long), Array[Long]] = sv
-      .filter(ord % stride === 0 &&
-        expr(s"(__graft_id div $trainStride) div $stride") < k)
-      .select(col("__graft_j"),
-        expr(s"(__graft_id div $trainStride) div $stride").as("__graft_c"),
+      .filter(strideSeedRule(ord, stride, k))
+      .select(col("__graft_j"), expr(s"$ord div $stride").as("__graft_c"),
         col("__graft_s"))
       .collect().map { r =>
         (r.getInt(0), r.getLong(1)) -> r.getSeq[Long](2).toArray

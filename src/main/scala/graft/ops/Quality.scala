@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.Sentinels
@@ -8,9 +7,9 @@ import graft.core.Sentinels
 /** Output quality accounting (reference: ondine/core/models.py:262-355
   * QualityReport + the whole-run output guard ondine/api/pipeline.py:1685-1739).
   *
-  * One aggregation pass over the output columns: a cell is invalid when
-  * null, blank, or the `[SKIPPED]` sentinel; a row succeeds when every
-  * output cell is valid.
+  * A cell is invalid when null, blank, or the `[SKIPPED]` sentinel; a row
+  * succeeds when every output cell is valid. `Enricher.qualityAggs` counts
+  * both inside the run's own aggregation pass.
   */
 final case class QualityReport(
     totalRows: Long,
@@ -26,21 +25,6 @@ object Quality {
     // and ANSI mode rejects int === '[SKIPPED]'
     val s = col(c).cast("string")
     col(c).isNull || trim(s) === "" || s === Sentinels.SkippedOutput
-  }
-
-  def report(df: DataFrame, outputCols: Seq[String]): QualityReport = {
-    val aggs =
-      count(lit(1)).as("_total") +:
-      sum(when(outputCols.map(invalidCell).reduce(_ || _), 0L).otherwise(1L)).as("_valid") +:
-      outputCols.map(c => sum(when(invalidCell(c), 1L).otherwise(0L)).as(s"_bad_$c"))
-    val row: Row = df.agg(aggs.head, aggs.tail: _*).head()
-    val total = row.getLong(0)
-    val valid = Option(row.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val perCol = outputCols.zipWithIndex.map { case (c, i) =>
-      c -> Option(row.get(i + 2)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    }.toMap
-    val rate = if (total == 0) 0.0 else valid.toDouble / total
-    QualityReport(total, valid, perCol, rate, rating(rate))
   }
 
   /** success-rate buckets (reference: models.py:283-297). */

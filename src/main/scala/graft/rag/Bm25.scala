@@ -91,11 +91,8 @@ object Bm25 {
       .withColumn("__graft_micro", round(term * 1e6, 0).cast("long"))
       .groupBy(col("query_id"), col("doc"))
       .agg(sum(col("__graft_micro")).as("__graft_s"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("__graft_s").desc, col("doc"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    graft.operators.Similarity.topKPerQuery(scored, "query_id", "__graft_s",
+        "doc", k, "rank")
       .select(col("query_id"), col("rank"), col("doc").as("doc_id"),
         round(col("__graft_s").cast("double") / 1e6, 6).as("score"))
   }

@@ -117,11 +117,8 @@ object Reranker {
       .join(broadcast(candidates), idCol)
       .join(broadcast(queries.select(col(qidCol), col(qtextCol))), qidCol)
       .withColumn("rerank_score", pairScore(col(qtextCol), col(textCol)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(qidCol))
-      .orderBy(col("rerank_score").desc, col(idCol))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    graft.operators.Similarity.topKPerQuery(joined, qidCol, "rerank_score",
+        idCol, k, "rank")
       .select(col(qidCol), col("rank"), col(idCol), col("rerank_score"))
   }
 }

@@ -1,10 +1,10 @@
 package graft.rag
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.tokens
+import graft.operators.Similarity
 
 /** DataFrame-native sparse text search index — the Spark re-expression of
   * the reference's SQLite-FTS5 hybrid search core
@@ -158,8 +158,9 @@ object SparseIndex {
     * row-scale groupBy(query_id, term) exchange AND the qlen aggregate +
     * join the exploded shape paid (guide §2.4 — for the
     * broadcastQueries=false callers the query side is row-scale, so these
-    * were two full shuffles of the query corpus). All in-repo callers
-    * feed id-unique query frames. */
+    * were two full shuffles of the query corpus). The search enforces
+    * it: a `qidCol` value fed by two rows whose texts hold terms fails
+    * the query with an error naming the value. */
   def search(index: SparseIndexFrames, queries: DataFrame,
              qidCol: String, qtextCol: String, k: Int,
              broadcastQueries: Boolean = true): DataFrame = {
@@ -180,16 +181,25 @@ object SparseIndex {
     // df 0), read from the build-time narrow aggregate — not re-derived
     // from the fully joined+weighted postings chain
     val df_ = index.docFreqs
-    val qpost = qpost0
+    val weighted = qpost0
       .join(df_, Seq("term"), "left")
       .withColumn("w_q",
         round((col("cnt") / col("qlen")) *
           (log(lit((n + 1).toDouble) / (coalesce(col("df"), lit(0L)) + 1)) + 1.0), 12)
           .cast("decimal(18,12)"))
-      .select("query_id", "term", "w_q")
-    val qnorm = qpost
+    val qpost = weighted.select("query_id", "term", "w_q")
+    // the one-row-per-query precondition, checked inside the query-norm
+    // aggregate the search pays anyway: one row's term counts sum to its
+    // own qlen, so an id fed by two rows sums past either row's qlen
+    val qnorm = weighted
       .withColumn("w2", (col("w_q") * col("w_q")).cast("decimal(38,24)"))
-      .groupBy("query_id").agg(sqrt(sum("w2").cast("double")).as("qnorm"))
+      .groupBy("query_id").agg(sqrt(sum("w2").cast("double")).as("__graft_qn"),
+        (sum("cnt") === max("qlen")).as("__graft_one"))
+      .select(col("query_id"), when(col("__graft_one"), col("__graft_qn"))
+        .otherwise(raise_error(concat(
+          lit(s"SparseIndex.search: more than one query row has $qidCol = "),
+          col("query_id").cast("string"))))
+        .as("qnorm"))
 
     // in the interactive shape the query side is small — broadcast it so
     // the postings (the 100 TB side) never shuffle for the probe join
@@ -203,10 +213,7 @@ object SparseIndex {
       .join(qnormSide, "query_id")
       .withColumn("score",
         round(col("dot").cast("double") / (col("norm") * col("qnorm")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topKPerQuery(scored, "query_id", "score", "id", k, "rank")
       .select(col("query_id"), col("rank"), col("id"), col("score"))
   }
 
@@ -228,10 +235,7 @@ object SparseIndex {
       .unionByName(b.select(col("query_id"), col("id"), contrib.as("_rrf_c")))
       .groupBy(col("query_id"), col("id"))
       .agg(round(sum(col("_rrf_c")), 9).as("rrf"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("id"))
-    fused.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topKPerQuery(fused, "query_id", "rrf", "id", k, "rank")
       .select(col("query_id"), col("rank"), col("id"), col("rrf"))
   }
 }

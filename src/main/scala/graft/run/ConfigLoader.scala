@@ -28,8 +28,14 @@ import graft.core._
   * output:     { output_columns: [sentiment], response_format: raw|json|regex|typed,
   *               regex_patterns: {col: pattern}, merge_strategy: replace|append|update,
   *               typed_schema: "label STRING, score INT" }
-  * evidence:   { id_col: claim_id, text_col: text, top_k: 3, min_score: 0.0 }
+  * evidence:   { id_col: claim_id, text_col: text, source_col: src, top_k: 3,
+  *               min_score: 0.1 }
   * }}}
+  *
+  * A missing key takes the spec case class's own default, so a file and
+  * the builder agree on every value left unset. An unknown
+  * `error_policy`, `response_format` or `merge_strategy` is an error that
+  * names the accepted values.
   *
   * `llm.rate_limit_scope_file` selects the shared rate bucket:
   * `redis://host:port/scope` (exact global bucket; the only accepted
@@ -84,6 +90,14 @@ object ConfigLoader {
       Option(n.get(f)).filterNot(_.isNull).toSeq.flatMap { arr =>
         (0 until arr.size()).map(arr.get(_).asText())
       }
+    /** `section.f`, one of `accepted` (case-insensitive) when present. */
+    def choice[A](n: JsonNode, section: String, f: String,
+                  accepted: Seq[(String, A)]): Option[A] =
+      str(n, f).map { v =>
+        accepted.collectFirst { case (name, a) if name == v.toLowerCase => a }
+          .getOrElse(throw new IllegalArgumentException(
+            s"$section.$f '$v' not in ${accepted.map(_._1).mkString("/")}"))
+      }
     def strMap(n: JsonNode, f: String): Map[String, String] =
       Option(n.get(f)).filterNot(_.isNull).map { o =>
         val it = o.fieldNames()
@@ -106,70 +120,83 @@ object ConfigLoader {
     val inputCols = ds.map(strs(_, "input_columns")).filter(_.nonEmpty)
       .getOrElse(TemplateCompiler.variables(template, templateFormat))
 
+    val dsDef = DatasetSpec(inputColumns = Nil)
+    val prDef = PromptSpec(template = "")
+    val lmDef = LlmSpec()
+    val pcDef = ProcessingSpec()
+    val outDef = OutputSpec(outputColumns = Nil)
+    val evDef = EvidenceSpec()
     PipelineSpec(
       dataset = DatasetSpec(
         inputColumns = inputCols,
-        filters = ds.map(strMap(_, "filters")).getOrElse(Map.empty),
-        delimiter = ds.flatMap(str(_, "delimiter")).getOrElse(","),
-        encoding = ds.flatMap(str(_, "encoding")).getOrElse("UTF-8")),
+        filters = ds.map(strMap(_, "filters")).getOrElse(dsDef.filters),
+        delimiter = ds.flatMap(str(_, "delimiter"))
+          .getOrElse(dsDef.delimiter),
+        encoding = ds.flatMap(str(_, "encoding")).getOrElse(dsDef.encoding)),
       prompt = PromptSpec(
         template = template,
         templateFormat = templateFormat,
         systemMessage = str(pr, "system_message"),
-        batchSize = num(pr, "batch_size").getOrElse(1)),
+        batchSize = num(pr, "batch_size").getOrElse(prDef.batchSize)),
       llm = lm.map(n => LlmSpec(
-        model = str(n, "model").getOrElse("mock"),
-        inputCostPer1k = dec(n, "input_cost_per_1k").getOrElse(BigDecimal(0)),
-        outputCostPer1k = dec(n, "output_cost_per_1k").getOrElse(BigDecimal(0)),
-        concurrency = num(n, "concurrency").getOrElse(8),
-        adaptiveConcurrency = bool(n, "adaptive_concurrency").getOrElse(false),
-        maxConcurrency = num(n, "max_concurrency").getOrElse(64),
+        model = str(n, "model").getOrElse(lmDef.model),
+        inputCostPer1k = dec(n, "input_cost_per_1k")
+          .getOrElse(lmDef.inputCostPer1k),
+        outputCostPer1k = dec(n, "output_cost_per_1k")
+          .getOrElse(lmDef.outputCostPer1k),
+        concurrency = num(n, "concurrency").getOrElse(lmDef.concurrency),
+        adaptiveConcurrency = bool(n, "adaptive_concurrency")
+          .getOrElse(lmDef.adaptiveConcurrency),
+        maxConcurrency = num(n, "max_concurrency")
+          .getOrElse(lmDef.maxConcurrency),
         requestsPerMinute = num(n, "requests_per_minute"),
         rateLimitScopeFile = str(n, "rate_limit_scope_file"),
         rateLimitSplit = num(n, "rate_limit_split"),
-        maxRetries = num(n, "max_retries").getOrElse(3),
-        backoffBaseMs = num(n, "backoff_base_ms").map(_.toLong).getOrElse(10L),
-        backoffCapMs = num(n, "backoff_cap_ms").map(_.toLong).getOrElse(60000L),
-        timeoutMs = num(n, "timeout_ms").map(_.toLong).getOrElse(180000L),
+        maxRetries = num(n, "max_retries").getOrElse(lmDef.maxRetries),
+        backoffBaseMs = num(n, "backoff_base_ms").map(_.toLong)
+          .getOrElse(lmDef.backoffBaseMs),
+        backoffCapMs = num(n, "backoff_cap_ms").map(_.toLong)
+          .getOrElse(lmDef.backoffCapMs),
+        timeoutMs = num(n, "timeout_ms").map(_.toLong)
+          .getOrElse(lmDef.timeoutMs),
         endpoint = str(n, "endpoint"),
         apiKeyEnv = str(n, "api_key_env"),
         structuredMode = str(n, "structured_mode"),
         reasoningEffort = str(n, "reasoning_effort")))
-        .getOrElse(LlmSpec()),
+        .getOrElse(lmDef),
       processing = pc.map(n => ProcessingSpec(
-        errorPolicy = str(n, "error_policy").map {
-          case "skip" => ErrorPolicy.Skip
-          case "fail" => ErrorPolicy.Fail
-          case "use_default" => ErrorPolicy.UseDefault
-          case _ => ErrorPolicy.Retry
-        }.getOrElse(ErrorPolicy.Retry),
-        defaultValue = str(n, "default_value").getOrElse(""),
+        errorPolicy = choice(n, "processing", "error_policy", Seq(
+          "retry" -> ErrorPolicy.Retry, "skip" -> ErrorPolicy.Skip,
+          "fail" -> ErrorPolicy.Fail, "use_default" -> ErrorPolicy.UseDefault))
+          .getOrElse(pcDef.errorPolicy),
+        defaultValue = str(n, "default_value").getOrElse(pcDef.defaultValue),
         maxBudget = dec(n, "max_budget"),
-        chunkRows = num(n, "chunk_rows").getOrElse(100000),
-        autoRetryAttempts = num(n, "auto_retry_attempts").getOrElse(0),
-        preprocessInput = bool(n, "preprocess_input").getOrElse(false),
+        chunkRows = num(n, "chunk_rows").getOrElse(pcDef.chunkRows),
+        autoRetryAttempts = num(n, "auto_retry_attempts")
+          .getOrElse(pcDef.autoRetryAttempts),
+        preprocessInput = bool(n, "preprocess_input")
+          .getOrElse(pcDef.preprocessInput),
         maxInputLength = num(n, "max_input_length")))
-        .getOrElse(ProcessingSpec()),
+        .getOrElse(pcDef),
       output = OutputSpec(
         outputColumns = strs(out, "output_columns"),
-        responseFormat = str(out, "response_format").map {
-          case "json" => ResponseFormat.Json
-          case "regex" => ResponseFormat.Regex
-          case "typed" => ResponseFormat.Typed
-          case _ => ResponseFormat.Raw
-        }.getOrElse(ResponseFormat.Raw),
+        responseFormat = choice(out, "output", "response_format", Seq(
+          "raw" -> ResponseFormat.Raw, "json" -> ResponseFormat.Json,
+          "regex" -> ResponseFormat.Regex, "typed" -> ResponseFormat.Typed))
+          .getOrElse(outDef.responseFormat),
         regexPatterns = strMap(out, "regex_patterns"),
-        mergeStrategy = str(out, "merge_strategy").map {
-          case "append" => MergeStrategy.Append
-          case "update" => MergeStrategy.Update
-          case _ => MergeStrategy.Replace
-        }.getOrElse(MergeStrategy.Replace),
+        mergeStrategy = choice(out, "output", "merge_strategy", Seq(
+          "replace" -> MergeStrategy.Replace,
+          "append" -> MergeStrategy.Append,
+          "update" -> MergeStrategy.Update))
+          .getOrElse(outDef.mergeStrategy),
         typedSchema = str(out, "typed_schema").map(
           org.apache.spark.sql.types.StructType.fromDDL)),
       evidence = section("evidence").map(n => EvidenceSpec(
-        idCol = str(n, "id_col").getOrElse("claim_id"),
-        textCol = str(n, "text_col").getOrElse("text"),
-        topK = num(n, "top_k").getOrElse(3),
-        minScore = str(n, "min_score").map(_.toDouble).getOrElse(0.0))))
+        idCol = str(n, "id_col").getOrElse(evDef.idCol),
+        textCol = str(n, "text_col").getOrElse(evDef.textCol),
+        sourceCol = str(n, "source_col"),
+        topK = num(n, "top_k").getOrElse(evDef.topK),
+        minScore = str(n, "min_score").map(_.toDouble).getOrElse(evDef.minScore))))
   }
 }

@@ -201,10 +201,7 @@ final class PipelineBuilder private () {
     val client = clientOpt
       // Typed output over a real endpoint gets provider-native structured
       // modes (tools / json_schema / json + fallback chain).
-      .orElse(llm.endpoint.map(_ => graft.llm.LlmClients.forSpec(llm,
-        if (output.responseFormat == graft.core.ResponseFormat.Typed)
-          output.typedSchema
-        else None)))
+      .orElse(llm.endpoint.map(_ => graft.llm.LlmClients.forSpec(llm, output)))
       .getOrElse(throw new IllegalArgumentException(
         "withClient(...) or withEndpoint(...) is required before run()"))
     // cache wrap is outermost so a hit skips the whole client stack;

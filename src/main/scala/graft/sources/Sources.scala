@@ -14,11 +14,16 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
   */
 object Sources {
 
+  /** The CSV options a pipeline's `dataset` section sets. A CSV always
+    * reads with a header row and an inferred schema. */
   final case class ReadOptions(
       delimiter: String = ",",
-      encoding: String = "UTF-8",
-      header: Boolean = true,
-      inferSchema: Boolean = true)
+      encoding: String = "UTF-8")
+
+  object ReadOptions {
+    def of(dataset: graft.core.DatasetSpec): ReadOptions =
+      ReadOptions(dataset.delimiter, dataset.encoding)
+  }
 
   /** Read any supported file by suffix: .csv / .tsv / .parquet / .pq /
     * .json / .jsonl / .ndjson / .orc / .xlsx. */
@@ -31,8 +36,8 @@ object Sources {
       spark.read.orc(path)
     else if (lower.endsWith(".csv") || lower.endsWith(".tsv"))
       spark.read
-        .option("header", opts.header.toString)
-        .option("inferSchema", opts.inferSchema.toString)
+        .option("header", "true")
+        .option("inferSchema", "true")
         .option("delimiter", if (lower.endsWith(".tsv")) "\t" else opts.delimiter)
         .option("encoding", opts.encoding)
         // multiline/quote handling so text columns round-trip
@@ -42,7 +47,7 @@ object Sources {
              lower.endsWith(".ndjson"))
       spark.read.json(path)
     else if (lower.endsWith(".xlsx"))
-      Xlsx.read(spark, path, opts.header) // driver-side; see Xlsx scaladoc
+      Xlsx.read(spark, path) // driver-side; see Xlsx scaladoc
     else if (lower.endsWith(".xls")) {
       // The reference accepts legacy .xls via pandas
       // (ondine/stages/data_loader_stage.py:95-108). Files named .xls are
@@ -55,7 +60,7 @@ object Sources {
         try { val b = new Array[Byte](8); in.read(b); b } finally in.close()
       }
       if (magic(0) == 'P'.toByte && magic(1) == 'K'.toByte)
-        Xlsx.read(spark, path, opts.header) // mislabeled xlsx
+        Xlsx.read(spark, path) // mislabeled xlsx
       else if (magic.take(4).sameElements(
           Array(0xD0, 0xCF, 0x11, 0xE0).map(_.toByte)))
         throw new IllegalArgumentException(

@@ -97,8 +97,8 @@ object Xlsx {
   }
 
   /** Read the first worksheet of `path` into a DataFrame of strings.
-    * `header = true` takes row 1 as column names (`_c0`-style otherwise). */
-  def read(spark: SparkSession, path: String, header: Boolean = true): DataFrame = {
+    * Row 1 holds the column names; a blank name cell reads as `_c<i>`. */
+  def read(spark: SparkSession, path: String): DataFrame = {
     val zip = new ZipFile(path)
     try {
       val shared = sharedStrings(zip)
@@ -152,12 +152,9 @@ object Xlsx {
       r.close()
       val width = if (rows.isEmpty) 0 else rows.map(_.length).max
       val padded = rows.map(rw => rw.padTo(width, null).toSeq)
-      val (names, data) =
-        if (header && padded.nonEmpty)
-          (padded.head.zipWithIndex.map { case (n, i) =>
-            Option(n).getOrElse(s"_c$i")
-          }, padded.tail)
-        else ((0 until width).map(i => s"_c$i"), padded.toSeq)
+      val names = padded.headOption.toSeq.flatMap(_.zipWithIndex.map {
+        case (n, i) => Option(n).getOrElse(s"_c$i") })
+      val data = padded.drop(1)
       val schema = StructType(names.map(n =>
         StructField(n, StringType, nullable = true)).toSeq)
       spark.createDataFrame(

@@ -87,6 +87,77 @@ class IntegrationsSpec extends SparkSpec {
       "retry must not re-issue completed calls")
   }
 
+  test("a ;-delimited csv reads with the dataset's delimiter") {
+    val in = Files.createTempDirectory("graft_int_semi")
+      .resolve("in.csv")
+    Files.writeString(in,
+      "id;text\n" + (0 until 6).map(i => s"$i;semi $i").mkString("\n"))
+    val cfg = Files.createTempFile("graft_int_semi", ".yaml")
+    Files.writeString(cfg,
+      "dataset:\n  input_columns: [text]\n  delimiter: \";\"\n" +
+        "prompt:\n  template: \"IT: {text}\"\noutput:\n  output_columns: [res]")
+    val r = LlmTransform.run(spark, cfg.toString,
+      inputPath = Some(in.toString), client = Some(new MockLlmClient()))
+    assert(r.rows == 6 && r.validRows == 6)
+    assert(r.data.filter("res is null").count() == 0)
+  }
+
+  test("graft.Main process reaches the spec's proc: endpoint") {
+    val py = sys.env.getOrElse("PATH", "").split(java.io.File.pathSeparator)
+      .map(d => new java.io.File(d, "python3")).find(_.canExecute)
+      .getOrElse(cancel("python3 not on PATH"))
+    val dir = Files.createTempDirectory("graft_cli_proc")
+    val sidecar = dir.resolve("sidecar.py")
+    Files.writeString(sidecar,
+      """import sys, json
+        |for line in sys.stdin:
+        |    req = json.loads(line)
+        |    text = "sidecar " + req["prompt"]
+        |    sys.stdout.write(json.dumps({"id": req["id"], "text": text,
+        |        "tokens_in": len(req["prompt"]), "tokens_out": len(text)}) + "\n")
+        |    sys.stdout.flush()
+        |""".stripMargin)
+    val in = dir.resolve("in.csv")
+    Files.writeString(in, "text\n" + (0 until 4).map(i => s"cli $i").mkString("\n"))
+    val cfg = dir.resolve("cfg.yaml")
+    Files.writeString(cfg,
+      s"llm:\n  endpoint: \"proc:$py $sidecar\"\n" +
+        "prompt:\n  template: \"IT: {text}\"\noutput:\n  output_columns: [res]")
+    val out = dir.resolve("out.parquet").toString
+    // the CLI stops its Spark session on exit, so it runs in its own JVM
+    // with this JVM's flags and classpath
+    val jvmFlags = scala.jdk.CollectionConverters.ListHasAsScala(
+        java.lang.management.ManagementFactory.getRuntimeMXBean
+          .getInputArguments).asScala
+      .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
+      jvmFlags ++ Seq("-cp", sys.props("java.class.path"), "graft.Main",
+        "process", "--config", cfg.toString, "--input", in.toString,
+        "--output", out)
+    val log = dir.resolve("stdout.txt")
+    val pb = new ProcessBuilder(cmd: _*)
+      .redirectError(ProcessBuilder.Redirect.DISCARD)
+      .redirectOutput(log.toFile)
+    pb.environment().put("SPARK_MASTER", "local[2]")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val proc = pb.start()
+    val exited = proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) proc.destroyForcibly().waitFor()
+    val stdout = Files.readString(log)
+    assert(exited && proc.exitValue() == 0, stdout)
+    val j = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(stdout.linesIterator.filter(_.startsWith("{")).toSeq.last)
+    assert(j.get("rows").asLong == 4 && j.get("skipped").asLong == 0)
+    assert(j.get("tokens_in").asLong > 0 && j.get("tokens_out").asLong > 0)
+    assert(j.get("success_rate").asDouble == 1.0)
+    assert(j.get("output_path").asText == out)
+    val spark = this.spark
+    import spark.implicits._
+    assert(spark.read.parquet(out).select("text", "res").as[(String, String)]
+      .collect().toSet == (0 until 4).map(i =>
+        (s"cli $i", s"sidecar IT: cli $i")).toSet)
+  }
+
   test("no input is an explicit error") {
     intercept[IllegalArgumentException] {
       LlmTransform.run(spark, writeCfg())

@@ -604,7 +604,7 @@ class OperatorsSpec extends SparkSpec {
       }.sum / vecs.length
     }
     val errs = (0 to 3).map(it =>
-      mse(Similarity.pqTrain(corpus, m = 4, k = 8, iters = it)))
+      mse(Similarity.pqTrainExact(corpus, m = 4, k = 8, iters = it)))
     assert(errs.sliding(2).forall(p => p(1) <= p(0) + 1e-12),
       s"Lloyd MSE must be non-increasing: $errs")
     assert(errs.last < errs.head, s"training never improved the seeds: $errs")

@@ -129,6 +129,39 @@ class ConfigLoaderSpec extends AnyFunSuite {
     assert(expand("model: ${NOPE:-fallback}") == "model: fallback")
     intercept[IllegalArgumentException](expand("model: ${NOPE}"))
   }
+
+  test("missing keys take the spec defaults; source_col is read") {
+    val spec = ConfigLoader.fromYaml(
+      """prompt: {template: "T {text}"}
+        |llm: {model: m}
+        |processing: {max_budget: 1.0}
+        |output: {output_columns: [out]}
+        |evidence: {source_col: origin}
+        |""".stripMargin)
+    assert(spec.evidence.contains(EvidenceSpec(sourceCol = Some("origin"))))
+    assert(spec.llm == LlmSpec(model = "m"))
+    assert(spec.processing ==
+      ProcessingSpec(maxBudget = Some(BigDecimal("1.0"))))
+  }
+
+  test("unknown enum strings are rejected with the accepted values") {
+    def load(processing: String, output: String) = ConfigLoader.fromYaml(
+      s"""prompt: {template: "T {text}"}
+         |processing: {$processing}
+         |output: {output_columns: [out]$output}
+         |""".stripMargin)
+    def rejected(processing: String, output: String): String =
+      intercept[IllegalArgumentException](load(processing, output))
+        .getMessage
+    assert(rejected("error_policy: skp", "") ==
+      "processing.error_policy 'skp' not in retry/skip/fail/use_default")
+    assert(rejected("", ", response_format: yml") ==
+      "output.response_format 'yml' not in raw/json/regex/typed")
+    assert(rejected("", ", merge_strategy: upsert") ==
+      "output.merge_strategy 'upsert' not in replace/append/update")
+    assert(load("error_policy: Skip", "").processing.errorPolicy ==
+      ErrorPolicy.Skip)
+  }
 }
 
 class AdaptiveLimiterSpec extends AnyFunSuite {

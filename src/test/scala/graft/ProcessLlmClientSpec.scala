@@ -121,7 +121,7 @@ class ProcessLlmClientSpec extends AnyFunSuite {
     val py = python3.getOrElse(cancel("python3 not available"))
     val spec = graft.core.LlmSpec(model = "m",
       endpoint = Some(s"proc:$py ${script.toString}"))
-    val c = LlmClients.forSpec(spec)
+    val c = LlmClients.forSpec(spec, graft.core.OutputSpec(Seq("out")))
     assert(c.isInstanceOf[ProcessLlmClient])
     try assert(c.invoke("via spec", None).text === sha1("via spec"))
     finally ProcessLlmClient.shutdownAll()

@@ -291,6 +291,26 @@ class RagSpec extends SparkSpec {
     assert(sa === sb)
   }
 
+  test("sparse search rejects a query id fed by two rows") {
+    val docs = Seq((1L, "spark join data"), (2L, "big query data"))
+      .toDF("id", "text")
+    val idx = SparseIndex.build(docs, "id", "text")
+    // an empty twin adds no terms, so it cannot skew the scores
+    val ok = Seq((1L, "spark data"), (1L, ""), (2L, "query"))
+      .toDF("qid", "qtext")
+    assert(SparseIndex.search(idx, ok, "qid", "qtext", k = 2).count() == 3)
+    for (bq <- Seq(true, false)) {
+      val twins = Seq((1L, "spark data"), (1L, "big query"), (2L, "query"))
+        .toDF("qid", "qtext")
+      val e = intercept[Exception](SparseIndex.search(idx, twins, "qid",
+        "qtext", k = 2, broadcastQueries = bq).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("more than one query row has qid = 1")),
+        s"broadcastQueries=$bq: ${e.getMessage}")
+    }
+  }
+
   test("r12 bm25 postings (term_counts kernel) equal the explode+groupBy census") {
     import graft.rag.Bm25
     import graft.functions.TextFunctions

@@ -1,9 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{KMeans, Similarity}
-import graft.tools.RecallProbe.{recallOf, truthOf}
 
 /** Recall floors for the ANN cascades at their declared-query settings —
   * pinning the BENCH_NOTES recall table's floors so a regression in any
@@ -19,6 +19,25 @@ class RecallSpec extends SparkSpec {
   private val k = 5
   private lazy val queries = emb.filter(col("vec_id") < 20)
   private lazy val truth = truthOf(queries, emb, k)
+
+  /** Mean over queries of |predicted ∩ true-top-k| / |true-top-k|. */
+  private def recallOf(pred: DataFrame, truth: Map[Long, Set[Long]]): Double = {
+    val by = neighbors(pred)
+    val per = truth.toSeq.map { case (q, t) =>
+      if (t.isEmpty) 1.0
+      else (by.getOrElse(q, Set.empty[Long]) intersect t).size.toDouble / t.size
+    }
+    per.sum / per.size
+  }
+
+  private def truthOf(queries: DataFrame, corpus: DataFrame,
+                      k: Int): Map[Long, Set[Long]] =
+    neighbors(Similarity.bruteForceTopK(queries, corpus, k))
+
+  private def neighbors(ranked: DataFrame): Map[Long, Set[Long]] =
+    ranked.select(col("query_id"), col("neighbor_id")).collect()
+      .groupBy(_.getLong(0))
+      .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
 
   test("ivf_sq8 cascade recall floor at q109 settings") {
     val r = recallOf(Similarity.ivfInt8RefineTopK(queries, emb, k,
@@ -67,7 +86,7 @@ class RecallSpec extends SparkSpec {
   }
 
   test("trained PQ (production shape) recovers high recall") {
-    val cbT = Similarity.pqTrain(emb, 8, 64, iters = 5, sampleCap = 1000)
+    val cbT = Similarity.pqTrainExact(emb, 8, 64, iters = 5, sampleCap = 1000)
     val r = recallOf(Similarity.pqAdcRefineTopK(queries, emb, k, cbT,
       refine = 8), truth)
     assert(r >= 0.90, s"trained pq recall@$k=$r (recorded 0.95)")

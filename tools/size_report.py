@@ -2,7 +2,7 @@
 """Print the size of the engine's main code, the graft.* conf keys it reads,
 and the default-valued parameters a caller can set.
 
-    python3 tools/size_report.py [REPO_ROOT]
+    python3 tools/size_report.py [--list] [REPO_ROOT]
 
 Lines are counted as `find src/main -name '*.scala' | xargs cat | wc -l`
 counts them (newline characters). A conf key counts when a main source
@@ -16,7 +16,10 @@ start and `def`) hold no `private` (so `private[graft]` is private too) and
 the parameter has a top-level `=` after its name (`x: Int = 5`; the `=>` of
 a function type is not one). Comments and string literals are blanked first.
 The enclosing class's visibility is not looked at, and case-class and class
-constructor fields are not defs, so neither counts. Stdlib only.
+constructor fields are not defs, so neither counts. `--list` also prints
+each counted parameter as `file:line def param` (file relative to the repo
+root), so two checkouts' lists diff to the knobs that went or came. Stdlib
+only.
 """
 import os
 import re
@@ -24,7 +27,8 @@ import sys
 
 KEY_READ = re.compile(
     r'\.(?:get|getOption|getConfString)\s*\(\s*"(graft\.[A-Za-z0-9_.]+)"')
-DEF = re.compile(r'\bdef\s+[^\s(\[:=]+')
+DEF = re.compile(r'\bdef\s+([^\s(\[:=]+)')
+PARAM_NAME = re.compile(r'\s*(?:implicit\s+)?(?:(?:val|var)\s+)?([^\s:]+)')
 PRIVATE = re.compile(r'\bprivate\b')
 
 
@@ -93,7 +97,8 @@ def balanced(src, i):
 
 
 def top_level_split(body):
-    """Split a parameter list body on commas outside any bracket."""
+    """Split a parameter list body on commas outside any bracket, as
+    (offset in body, text) pairs."""
     parts, depth, start = [], 0, 0
     for k, c in enumerate(body):
         if c in "([{":
@@ -101,9 +106,9 @@ def top_level_split(body):
         elif c in ")]}":
             depth -= 1
         elif c == "," and depth == 0:
-            parts.append(body[start:k])
+            parts.append((start, body[start:k]))
             start = k + 1
-    parts.append(body[start:])
+    parts.append((start, body[start:]))
     return parts
 
 
@@ -123,9 +128,10 @@ def has_default(param):
 
 
 def default_params(src):
-    """Count default-valued parameters on the non-private defs of `src`."""
+    """The default-valued parameters on the non-private defs of `src`, as
+    (line, def name, parameter name) triples."""
     code = blank_comments_and_strings(src)
-    count = 0
+    found = []
     for m in DEF.finditer(code):
         stmt_start = max(code.rfind(c, 0, m.start()) for c in "\n;{}") + 1
         if PRIVATE.search(code, stmt_start, m.start()):
@@ -138,34 +144,49 @@ def default_params(src):
                 break
             end = balanced(code, j)
             if code[j] == "(":
-                count += sum(has_default(p)
-                             for p in top_level_split(code[j + 1:end - 1]))
+                for off, p in top_level_split(code[j + 1:end - 1]):
+                    if has_default(p):
+                        name = PARAM_NAME.match(p)
+                        at = j + 1 + off + name.start(1)
+                        found.append((code.count("\n", 0, at) + 1,
+                                      m.group(1), name.group(1)))
             j = end
-    return count
+    return found
 
 
 def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+    args = sys.argv[1:]
+    listing = "--list" in args
+    args = [a for a in args if a != "--list"]
+    root = args[0] if args else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), os.pardir)
     main_dir = os.path.join(root, "src", "main")
     lines = files = defaults = 0
     keys = set()
+    params = []
     for dirpath, _, names in os.walk(main_dir):
         for name in names:
             if not name.endswith(".scala"):
                 continue
-            with open(os.path.join(dirpath, name), "rb") as fh:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
                 data = fh.read()
             text = data.decode("utf-8", "replace")
             files += 1
             lines += data.count(b"\n")
             keys.update(KEY_READ.findall(text))
-            defaults += default_params(text)
+            found = default_params(text)
+            defaults += len(found)
+            rel = os.path.relpath(path, root)
+            params += [(rel, ln, d, p) for ln, d, p in found]
     print(f"main scala: {lines:,} lines in {files} files")
     print(f"graft.* conf keys read by main code: {len(keys)}")
     for k in sorted(keys):
         print(f"  {k}")
     print(f"default-valued parameters on non-private defs: {defaults}")
+    if listing:
+        for rel, ln, d, p in sorted(params):
+            print(f"{rel}:{ln} {d} {p}")
 
 
 if __name__ == "__main__":
