@@ -1,10 +1,12 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Json
 import graft.integrations.LlmTransform
 import graft.llm.MockLlmClient
-import graft.run.{ConfigLoader, CostEstimator, HealthCheck,
+import graft.run.{ConfigLoader, HealthCheck,
   ObserverDispatcher, ProviderBatch, RegistryObserver, RunRegistry}
 import graft.sources.Sources
 import graft.sources.Sources.ReadOptions
@@ -32,7 +34,9 @@ import graft.sources.Sources.ReadOptions
   * `process` and `resume` run [[LlmTransform.run]], the same task body
   * orchestrators call, so `llm.endpoint` selects the client (unset = the
   * deterministic mock) and the last line printed is
-  * [[LlmTransform.TransformResult.toJson]].
+  * [[LlmTransform.TransformResult.toJson]]. Every line is one JSON
+  * object; the commands shared with the MCP server print the objects
+  * [[Commands]] returns.
   */
 object Main {
 
@@ -52,11 +56,7 @@ object Main {
         if (code != 0) sys.exit(code)
         return
       case "list-providers" =>
-        graft.llm.LlmClients.providers.foreach { case (id, sel, desc) =>
-          System.out.println(
-            s"""{"provider":${jsonStr(id)},"selector":${jsonStr(sel)},""" +
-              s""""description":${jsonStr(desc)}}""")
-        }
+        Commands.listProviders().foreach(print)
         return
       case "health" =>
         // exit 0 healthy / 1 unhealthy — readiness-probe friendly
@@ -68,7 +68,7 @@ object Main {
         return
       case "list-runs" =>
         val reg = new RunRegistry(need("registry"))
-        reg.list().foreach(r => System.out.println(reg.render(r)))
+        reg.list().foreach(r => print(reg.toJson(r)))
         return
       case "status" =>
         // reference `status <run_id>` (ondine/cli/main.py:1125): registry
@@ -91,13 +91,8 @@ object Main {
         val reg = new RunRegistry(need("registry"))
         reg.get(need("run-id")) match {
           case Some(r) =>
-            val ledger = new java.io.File(r.runDir, "responses")
-            val files = Option(ledger.listFiles()).map(_.toSeq).getOrElse(Nil)
-              .filter(_.getName.endsWith(".parquet"))
-            System.out.println(reg.render(r))
-            System.out.println(
-              s"""{"ledger_files":${files.size},""" +
-              s""""ledger_bytes":${files.map(_.length()).sum}}""")
+            print(reg.toJson(r))
+            print(Commands.ledgerStats(r.runDir))
           case None =>
             System.err.println(s"unknown run: ${need("run-id")}")
             sys.exit(1)
@@ -160,26 +155,20 @@ object Main {
             observers = observers)
           System.out.println(r.toJson)
         case "estimate" =>
-          val e = CostEstimator.estimate(input, spec)
-          System.out.println(
-            s"""{"total_rows":${e.totalRows},"sample_rows":${e.sampleRows},""" +
-            s""""est_tokens_in":${e.estTokensIn},"est_tokens_out":${e.estTokensOut},""" +
-            s""""est_cost":"${e.estCost}","confidence":"${e.confidence}",""" +
-            s""""batch_fit":${jsonStr(e.batchFit.getOrElse("ok"))}}""")
+          print(Commands.estimate(input, spec))
         case "submit" =>
           val dir = need("run-dir")
           val backend = new ProviderBatch.LocalMockBackend(spark, s"$dir/provider")
           val run = ProviderBatch.submit(input, spec, dir, backend,
             opts.get("key-column"))
-          System.out.println(
-            s"""{"job_id":"${run.jobId}","state":"${run.state}"}""")
+          print(Json.obj("job_id" -> run.jobId, "state" -> run.state))
         case "collect" =>
           val dir = need("run-dir")
           val backend = new ProviderBatch.LocalMockBackend(spark, s"$dir/provider")
           val out = ProviderBatch.collect(input, spec, dir, backend,
             opts.get("key-column"))
           Sources.write(out, need("output"))
-          System.out.println(s"""{"state":"SUCCEEDED","rows":${out.count()}}""")
+          print(Json.obj("state" -> "SUCCEEDED", "rows" -> out.count()))
         case other =>
           System.err.println(s"unknown command: $other"); usage(); sys.exit(2)
       }
@@ -198,29 +187,12 @@ object Main {
       graft.run.OtlpHttpSink.langfuseFromEnv(env + ("LANGFUSE_HOST" -> target))
     else new graft.run.OtlpHttpSink(target)
 
-  /** `validate` command body (reference: ondine/cli/main.py:743 — check a
-    * config for errors without executing the pipeline): (exitCode, JSON).
-    * Pure config parsing + spec-combination checks, NO Spark session —
-    * safe as a pre-flight in CI or an Airflow sensor. Public so the spec
-    * suite drives exactly what the CLI wires. */
-  def validateConfig(path: String): (Int, String) =
-    try {
-      val spec = ConfigLoader.fromFile(path)
-      spec.validate()
-      val cols = (s: Seq[String]) => s.map(jsonStr).mkString("[", ",", "]")
-      (0,
-        s"""{"valid":true,"input_columns":${cols(spec.dataset.inputColumns)},""" +
-        s""""output_columns":${cols(spec.output.outputColumns)},""" +
-        s""""model":${jsonStr(spec.llm.model)},""" +
-        s""""batch_size":${spec.prompt.batchSize},""" +
-        s""""concurrency":${spec.llm.concurrency},""" +
-        s""""response_format":${jsonStr(String.valueOf(spec.output.responseFormat))},""" +
-        s""""max_budget":${spec.processing.maxBudget
-            .map(b => jsonStr(b.toString)).getOrElse("null")}}""")
-    } catch {
-      case e: Exception =>
-        (1, s"""{"valid":false,"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-    }
+  /** `validate` as the CLI prints it: (exit code, JSON line) — 0 valid,
+    * 1 invalid, no Spark session ([[Commands.validate]]). */
+  def validateConfig(path: String): (Int, String) = {
+    val n = Commands.validate(ConfigLoader.fromFile(path))
+    (if (n.path("valid").asBoolean) 0 else 1, Json.write(n))
+  }
 
   /** `inspect --input` command body (reference: ondine/cli/main.py:906 —
     * file info, per-column dtypes with null counts, first-N preview):
@@ -241,76 +213,30 @@ object Main {
           .otherwise(0L)))
     val stats = df.agg(countCols.head, countCols.tail: _*).head()
     val rows = stats.getLong(0)
-    val summary = s"""{"path":${jsonStr(path)},"rows":$rows,""" +
-      s""""columns":${fields.length}}"""
+    val summary = Json.write(Json.obj("path" -> path, "rows" -> rows,
+      "columns" -> fields.length))
     val colLines = fields.zipWithIndex.map { case (f, i) =>
       val nulls = if (stats.isNullAt(i + 1)) 0L else stats.getLong(i + 1)
-      s"""{"column":${jsonStr(f.name)},""" +
-        s""""type":${jsonStr(f.dataType.simpleString)},"nulls":$nulls}"""
+      Json.write(Json.obj("column" -> f.name,
+        "type" -> f.dataType.simpleString, "nulls" -> nulls))
     }
     (summary +: colLines) ++ df.limit(head).toJSON.collect().toSeq
   }
 
-  /** `status` command body (reference: ondine/cli/main.py:1125 — poll the
-    * live status of a run): the registry row, a progress line with the
-    * done/total fraction, and — for a SUBMITTED_REMOTE run — the provider
-    * job id plus a LIVE provider poll, all without collecting results or
-    * starting Spark. Returns (exitCode, output lines); public so the spec
-    * suite drives exactly what the CLI wires. */
-  def statusJson(registryDir: String, runId: String): (Int, Seq[String]) = {
-    val reg = new RunRegistry(registryDir)
-    reg.get(runId) match {
-      case None =>
-        // jsonStr: a user-supplied run id holding a quote or backslash
-        // must not break the error JSON
-        (1, Seq(s"""{"error":${jsonStr(s"unknown run: $runId")}}"""))
-      case Some(r) =>
-        val pct =
-          if (r.totalRows > 0) r.rows.toDouble / r.totalRows * 100.0 else 0.0
-        val progress =
-          s"""{"progress_pct":${math.round(pct * 10) / 10.0},""" +
-          s""""rows_done":${r.rows},"total_rows":${r.totalRows},""" +
-          s""""cost":${jsonStr(r.cost)}}"""
-        val provider =
-          if (r.state != graft.run.RunState.SubmittedRemote) Nil
-          else graft.run.ProviderBatch.loadState(r.runDir).map { b =>
-            val live = graft.run.ProviderBatch.LocalMockBackend
-              .poll(s"${r.runDir}/provider", b.jobId)
-            s"""{"provider_job_id":${jsonStr(b.jobId)},""" +
-            s""""provider_state":${jsonStr(live)}}"""
-          }.toSeq
-        (0, Seq(reg.render(r), progress) ++ provider)
+  /** `status` as the CLI prints it: (exit code, JSON lines) — the lines
+    * of [[Commands.status]], or its error line with exit code 1. */
+  def statusJson(registryDir: String, runId: String): (Int, Seq[String]) =
+    Commands.status(new RunRegistry(registryDir), runId) match {
+      case Left(err) => (1, Seq(Json.write(err)))
+      case Right(lines) => (0, lines.map(Json.write))
     }
-  }
 
-  /** `list-checkpoints` command body (reference: ondine/cli/main.py:836 —
-    * list resumable checkpoints with their progress): the subset of
-    * list-runs whose state the resume path can re-drive (RUNNING = a
-    * crashed attempt, FAILED, PARTIAL — the ledger anti-join skips every
-    * completed call), one line per run with its ledger file stats. */
-  def listCheckpoints(registryDir: String): Seq[String] = {
-    val reg = new RunRegistry(registryDir)
-    val resumable = Set(graft.run.RunState.Running,
-      graft.run.RunState.Failed, graft.run.RunState.Partial)
-    reg.list().filter(r => resumable(r.state)).map { r =>
-      val ledger = new java.io.File(r.runDir, "responses")
-      val files = Option(ledger.listFiles()).map(_.toSeq).getOrElse(Nil)
-        .filter(_.getName.endsWith(".parquet"))
-      reg.render(r).stripSuffix("}") +
-        s""","ledger_files":${files.size},""" +
-        s""""ledger_bytes":${files.map(_.length()).sum}}"""
-    }
-  }
+  /** `list-checkpoints` as the CLI prints it, one JSON line per run
+    * ([[Commands.listCheckpoints]]). */
+  def listCheckpoints(registryDir: String): Seq[String] =
+    Commands.listCheckpoints(new RunRegistry(registryDir)).map(Json.write)
 
-  /** JSON string literal with escaping — the batch_fit message embeds the
-    * user-supplied model id, which must not break the output JSON. */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private def print(n: JsonNode): Unit = System.out.println(Json.write(n))
 
   private def parseOpts(args: Array[String]): Map[String, String] =
     args.sliding(2, 2).collect {

@@ -4,19 +4,12 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    * Shared with [[graft.tools.VerifySome]]'s subset dump. */
-  private[graft] def jsonQuote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** `oracle_sql.json` in `outDir`: one query name -> DuckDB SQL pair per
+    * entry of `sqls`. */
+  private[graft] def writeOracleSql(outDir: String,
+                                    sqls: Map[String, String]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.core.Json.write(graft.core.Json.obj(sqls.toSeq: _*)))
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -38,10 +31,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
 }

@@ -2,8 +2,10 @@ package graft.integrations
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Json
 import graft.llm.{LlmClient, LlmClients}
-import graft.run.{ConfigLoader, Enricher, ObserverDispatcher}
+import graft.run.{ConfigLoader, Enricher, Observer, ObserverDispatcher,
+  PipelineEvent, RunCompleted, RunFailed}
 import graft.sources.Sources
 import graft.sources.Sources.ReadOptions
 
@@ -67,20 +69,11 @@ object LlmTransform {
       successRate: Double) {
 
     /** One-line JSON for XCom / flow-state handoff. */
-    def toJson: String = {
-      def esc(s: String): String = s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      s"""{"output_path":${outputPath.map(p => "\"" + esc(p) + "\"")
-          .getOrElse("null")},"rows":$rows,"valid_rows":$validRows,""" +
-        s""""calls":$calls,"tokens_in":$tokensIn,"tokens_out":$tokensOut,""" +
-        s""""skipped":$skipped,"cost":"${esc(cost)}","duration_ms":$durationMs,""" +
-        s""""quality":"${esc(quality)}","success_rate":$successRate}"""
-    }
+    def toJson: String = Json.write(Json.obj("output_path" -> outputPath,
+      "rows" -> rows, "valid_rows" -> validRows, "calls" -> calls,
+      "tokens_in" -> tokensIn, "tokens_out" -> tokensOut,
+      "skipped" -> skipped, "cost" -> cost, "duration_ms" -> durationMs,
+      "quality" -> quality, "success_rate" -> successRate))
   }
 
   /** The task body. Input comes from exactly one of `inputData` (a frame
@@ -127,8 +120,26 @@ object LlmTransform {
         "either inputData or inputPath is required")
     }
     val cl = client.getOrElse(LlmClients.forSpec(spec.llm, spec.output))
-    val r = new Enricher(spec, cl, runDir, keyColumn, observers).enrich(df)
-    outputPath.foreach(p => Sources.write(r.data, p))
+    // the observers hear of the run's completion once its output is
+    // written: a registry row that reads SUCCEEDED or PARTIAL has its
+    // output in place, and a failed write ends the run FAILED
+    var completed: Option[RunCompleted] = None
+    val held = new ObserverDispatcher
+    if (observers.nonEmpty) held.register(new Observer {
+      def onEvent(e: PipelineEvent): Unit = e match {
+        case c: RunCompleted => completed = Some(c)
+        case other => observers.emit(other)
+      }
+      override def wantsCallGrain: Boolean = observers.wantsCallGrain
+    })
+    val r = new Enricher(spec, cl, runDir, keyColumn, held).enrich(df)
+    try outputPath.foreach(p => Sources.write(r.data, p))
+    catch { case e: Throwable =>
+      completed.foreach(c =>
+        observers.emit(RunFailed(c.runId, String.valueOf(e.getMessage))))
+      throw e
+    }
+    completed.foreach(observers.emit)
     val m = r.metrics
     TransformResult(r.data, outputPath, m.rows, r.quality.validRows, m.calls,
       m.tokensIn, m.tokensOut, m.skippedRows, m.cost.toString, m.durationMs,

@@ -4,14 +4,16 @@ import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream, Pr
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Commands
+import graft.core.Json
+import graft.integrations.LlmTransform
 import graft.llm.LlmClient
-import graft.run.{ConfigLoader, CostEstimator, Enricher, Observer,
-  ObserverDispatcher, PipelineEvent, ProgressForwarder, RunProgress,
+import graft.run.{ConfigLoader, ObserverDispatcher, RegistryObserver,
   RunRegistry, RunState}
 import graft.sources.Sources
 
@@ -22,79 +24,79 @@ import graft.sources.Sources
   * the wire protocol directly on JDK + Jackson, so it is drivable — and
   * tested — through in-process piped streams).
   *
-  * Tools (same contract as the reference):
+  * Tools (same contract as the reference; each shared one answers with
+  * what the CLI command of the same name prints):
   *   - `graft_estimate(config_yaml, input_path)` — sample-based cost
   *     projection; spends nothing.
   *   - `graft_run(config_yaml, input_path, output_path, budget)` — starts
-  *     an ASYNC run, returns `run_id` immediately. `budget` is MANDATORY
-  *     and must be positive: an LLM tool client must never start an
-  *     unbounded spend (server.py:141-151).
-  *   - `graft_status(run_id)` — registry state + metrics so far; a
+  *     an ASYNC run of the CLI's `process` body, with the client that
+  *     `llm.endpoint` selects, and returns `run_id` immediately. `budget`
+  *     is MANDATORY and must be positive: an LLM tool client must never
+  *     start an unbounded spend (server.py:141-151).
+  *   - `graft_status(run_id)` — the CLI `status` lines as one object; a
   *     RUNNING job reports LIVE rows/calls/cost/total_rows.
-  *   - `graft_collect(run_id)` — terminal state + output location, or an
-  *     explicit not-finished/failed answer.
-  *   - `graft_validate(config_yaml)` — config pre-flight without a run
-  *     (CLI `validate` parity); spends nothing.
+  *   - `graft_collect(run_id)` — terminal state + output location
+  *     (SUCCEEDED or PARTIAL), or an explicit not-finished/failed answer.
+  *   - `graft_validate(config_yaml)` — config pre-flight without a run;
+  *     spends nothing.
   *   - `graft_list_providers()` — the client registry.
+  *   - `graft_list_checkpoints()` — resumable runs with ledger stats.
   */
 object McpServer {
   val ProtocolVersion = "2024-11-05"
 
-  /** Tool logic, callable without the wire (tests drive both layers). */
-  final class Service(spark: SparkSession, client: LlmClient,
-                      workDir: String) {
+  /** Tool logic, callable without the wire (tests drive both layers).
+    * Every tool but `graft_collect` answers with the object (or objects)
+    * the CLI command of the same name prints ([[graft.Commands]]), and
+    * `graft_run` runs the CLI's task body, [[LlmTransform.run]]. `client`
+    * is a test seam; None selects the client by `llm.endpoint`. */
+  final class Service private (spark: SparkSession, workDir: String,
+                               client: Option[LlmClient]) {
+    def this(spark: SparkSession, workDir: String) = this(spark, workDir, None)
+    def this(spark: SparkSession, client: LlmClient, workDir: String) =
+      this(spark, workDir, Some(client))
+
     private val registry = new RunRegistry(s"$workDir/registry")
     private val outputs = new ConcurrentHashMap[String, String]()
     private val counter = new java.util.concurrent.atomic.AtomicLong(0)
 
-    private def read(path: String, spec: graft.core.PipelineSpec) =
-      Sources.read(spark, path, Sources.ReadOptions.of(spec.dataset))
-
-    def estimate(configYaml: String, inputPath: String): Map[String, Any] = {
+    def estimate(configYaml: String, inputPath: String): ObjectNode = {
       val spec = ConfigLoader.fromYaml(configYaml)
-      val e = CostEstimator.estimate(read(inputPath, spec), spec)
-      Map("total_rows" -> e.totalRows, "sample_rows" -> e.sampleRows,
-        "est_tokens_in" -> e.estTokensIn, "est_tokens_out" -> e.estTokensOut,
-        "est_cost" -> e.estCost.toString, "confidence" -> e.confidence)
+      Commands.estimate(Sources.read(spark, inputPath,
+        Sources.ReadOptions.of(spec.dataset)), spec)
     }
 
+    /** Starts the run on a daemon thread and returns its `mcp-N` id. The
+      * run's events land on that registry row, so it ends SUCCEEDED,
+      * PARTIAL or FAILED by the same rule as `graft.Main process
+      * --registry`; a failure before the run starts (e.g. reading the
+      * input) marks it FAILED here. A config that does not parse is
+      * refused before a run id is spent. [[LlmTransform.run]] reads its
+      * config from a file, so the YAML is kept as `mcp-N.yaml` in the work
+      * dir. */
     def run(configYaml: String, inputPath: String, outputPath: String,
             budget: BigDecimal): String = {
       require(budget > 0,
         s"budget must be positive, got $budget — a tool client may not " +
           "start an unbounded spend")
-      val spec0 = ConfigLoader.fromYaml(configYaml)
-      val spec = spec0.copy(processing =
-        spec0.processing.copy(maxBudget = Some(budget)))
+      ConfigLoader.fromYaml(configYaml)
       val runId = s"mcp-${counter.incrementAndGet()}"
       val runDir = s"$workDir/$runId"
+      val config = java.nio.file.Files.writeString(java.nio.file.Files
+        .createDirectories(java.nio.file.Paths.get(workDir))
+        .resolve(s"$runId.yaml"), configYaml)
       registry.register(runId, runDir)
       outputs.put(runId, outputPath)
-      // live mid-run progress: the Enricher's RunProgress events land on
-      // THIS registry row (the Enricher derives its own internal runId
-      // from runDir, so the forwarder re-keys them), making graft_status
-      // show monotone rows/calls/cost while the job is still RUNNING
-      // (reference: ondine/mcp/progress.py)
-      val forwarder = new ProgressForwarder(registry, runId)
-      val progressObs = new ObserverDispatcher().register(new Observer {
-        def onEvent(e: PipelineEvent): Unit = e match {
-          case RunProgress(_, rowsDone, totalRows, calls, spent) =>
-            forwarder.offer(rowsDone, totalRows, calls, spent.toString)
-          case _ => ()
-        }
-      })
       val worker = new Thread(() => {
-        try {
-          registry.transition(runId, RunState.Running)
-          val r = new Enricher(spec, client, Some(runDir),
-            observers = progressObs)
-            .enrich(read(inputPath, spec))
-          Sources.write(r.data, outputPath)
-          registry.transition(runId, RunState.Succeeded, rec => rec.copy(
-            rows = r.metrics.rows, validRows = r.quality.validRows,
-            calls = r.metrics.calls, cost = r.metrics.cost.toString))
-        } catch {
-          case e: Throwable =>
+        try LlmTransform.run(spark, config.toString,
+          inputPath = Some(inputPath), outputPath = Some(outputPath),
+          maxBudget = Some(budget), runDir = Some(runDir),
+          observers = new ObserverDispatcher()
+            .register(RegistryObserver.onRow(registry, runDir, runId)),
+          client = client)
+        catch { case e: Throwable =>
+          // a failure after RunStarted is on the row already
+          if (registry.get(runId).exists(_.state == RunState.Pending))
             registry.transition(runId, RunState.Failed,
               rec => rec.copy(note = String.valueOf(e.getMessage)))
         }
@@ -104,70 +106,35 @@ object McpServer {
       runId
     }
 
-    def status(runId: String): Map[String, Any] =
-      registry.get(runId) match {
-        case Some(r) => Map("run_id" -> runId, "state" -> r.state.toString,
-          "rows" -> r.rows, "valid_rows" -> r.validRows,
-          "calls" -> r.calls, "cost" -> r.cost,
-          "total_rows" -> r.totalRows, "note" -> r.note)
-        case None => Map("error" -> s"unknown run: $runId")
+    /** The CLI's `status` lines merged into one object. */
+    def status(runId: String): ObjectNode =
+      Commands.status(registry, runId) match {
+        case Left(err) => err
+        case Right(lines) =>
+          lines.foldLeft(Json.obj())((o, l) => o.setAll[ObjectNode](l))
       }
 
-    /** Config pre-flight without a run (CLI `validate` parity — the
-      * reference checks configuration without executing, cli/main.py
-      * :743): parse + spec-combination checks, spends nothing. */
-    def validate(configYaml: String): Map[String, Any] =
-      try {
-        val spec = ConfigLoader.fromYaml(configYaml)
-        spec.validate()
-        Map("valid" -> true,
-          "input_columns" -> spec.dataset.inputColumns.mkString(","),
-          "output_columns" -> spec.output.outputColumns.mkString(","),
-          "model" -> spec.llm.model,
-          "batch_size" -> spec.prompt.batchSize,
-          "concurrency" -> spec.llm.concurrency,
-          "max_budget" -> spec.processing.maxBudget
-            .map(_.toString).getOrElse("none"))
-      } catch {
-        case e: Exception =>
-          Map("valid" -> false, "error" -> String.valueOf(e.getMessage))
-      }
+    def validate(configYaml: String): ObjectNode =
+      Commands.validate(ConfigLoader.fromYaml(configYaml))
 
-    /** Resumable runs with their ledger stats (CLI `list-checkpoints`
-      * parity — reference cli/main.py:836): RUNNING = a crashed attempt,
-      * FAILED, PARTIAL — the states the resume path can re-drive. */
-    def listCheckpoints(): Map[String, Any] = {
-      val resumable = Set(RunState.Running, RunState.Failed,
-        RunState.Partial)
-      Map("checkpoints" -> registry.list()
-        .filter(r => resumable(r.state)).map { r =>
-          val ledger = new java.io.File(r.runDir, "responses")
-          val files = Option(ledger.listFiles()).map(_.toSeq).getOrElse(Nil)
-            .filter(_.getName.endsWith(".parquet"))
-          s"${r.runId} | ${r.state} | rows=${r.rows}/${r.totalRows} | " +
-            s"cost=${r.cost} | ledger_files=${files.size} | " +
-            s"ledger_bytes=${files.map(_.length()).sum}"
-        }.mkString("\n"))
-    }
+    def listCheckpoints(): ObjectNode =
+      Json.obj("checkpoints" -> Commands.listCheckpoints(registry))
 
-    /** The client registry (CLI `list-providers` parity). */
-    def listProviders(): Map[String, Any] =
-      Map("providers" -> graft.llm.LlmClients.providers.map {
-        case (pid, sel, desc) => s"$pid | $sel | $desc"
-      }.mkString("\n"))
+    def listProviders(): ObjectNode =
+      Json.obj("providers" -> Commands.listProviders())
 
-    def collect(runId: String): Map[String, Any] =
+    def collect(runId: String): ObjectNode =
       registry.get(runId) match {
-        case None => Map("error" -> s"unknown run: $runId")
-        case Some(r) if r.state == RunState.Succeeded =>
-          Map("run_id" -> runId, "state" -> r.state.toString,
+        case None => Json.obj("error" -> s"unknown run: $runId")
+        case Some(r) if r.state == RunState.Succeeded ||
+            r.state == RunState.Partial =>
+          Json.obj("run_id" -> runId, "state" -> r.state,
             "output_path" -> outputs.getOrDefault(runId, ""),
             "rows" -> r.rows, "cost" -> r.cost)
         case Some(r) if r.state == RunState.Failed =>
-          Map("run_id" -> runId, "state" -> r.state.toString,
-            "error" -> r.note)
+          Json.obj("run_id" -> runId, "state" -> r.state, "error" -> r.note)
         case Some(r) =>
-          Map("run_id" -> runId, "state" -> r.state.toString,
+          Json.obj("run_id" -> runId, "state" -> r.state,
             "error" -> "run not finished — poll graft_status")
       }
   }
@@ -205,61 +172,35 @@ object McpServer {
   /** Newline-delimited JSON-RPC loop over the given streams (the MCP
     * stdio transport). Returns when the input stream closes. */
   def serve(in: InputStream, out: OutputStream, service: Service): Unit = {
-    val mapper = new ObjectMapper()
+    import Json.obj
     val reader = new BufferedReader(
       new InputStreamReader(in, StandardCharsets.UTF_8))
     val writer = new PrintWriter(
       new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8), true)
 
-    def obj(fields: (String, Any)*): ObjectNode = {
-      val n = mapper.createObjectNode()
-      fields.foreach {
-        case (k, v: String) => n.put(k, v)
-        case (k, v: Long) => n.put(k, v)
-        case (k, v: Int) => n.put(k, v)
-        case (k, v: Boolean) => n.put(k, v)
-        case (k, v: JsonNode) => n.set[JsonNode](k, v)
-        case (k, null) => n.putNull(k)
-        case (k, v) => n.put(k, String.valueOf(v))
-      }
-      n
-    }
-
     def reply(id: JsonNode, result: JsonNode): Unit =
-      writer.println(mapper.writeValueAsString(
+      writer.println(Json.write(
         obj("jsonrpc" -> "2.0", "id" -> id, "result" -> result)))
 
     def replyError(id: JsonNode, code: Int, message: String): Unit = {
       val e = obj("code" -> code, "message" -> message)
-      writer.println(mapper.writeValueAsString(
+      writer.println(Json.write(
         obj("jsonrpc" -> "2.0", "id" -> id, "error" -> e)))
     }
 
     /** Tool output: MCP content array with one JSON-text block. */
-    def toolResult(payload: Map[String, Any], isError: Boolean = false): JsonNode = {
-      val body = mapper.createObjectNode()
-      payload.foreach {
-        case (k, v: Long) => body.put(k, v)
-        case (k, v: Int) => body.put(k, v)
-        case (k, v) => body.put(k, String.valueOf(v))
-      }
-      val text = obj("type" -> "text",
-        "text" -> mapper.writeValueAsString(body))
-      val content = mapper.createArrayNode(); content.add(text)
-      val r = mapper.createObjectNode()
-      r.set[com.fasterxml.jackson.databind.JsonNode]("content", content)
-      r.put("isError", isError)
-      r
-    }
+    def toolResult(payload: ObjectNode, isError: Boolean): JsonNode =
+      obj("content" -> Seq(obj("type" -> "text", "text" -> Json.write(payload))),
+        "isError" -> isError)
 
     var line = reader.readLine()
     while (line != null) {
       if (line.trim.nonEmpty) {
         val req =
-          try Some(mapper.readTree(line)) catch { case _: Exception => None }
+          try Some(Json.read(line)) catch { case _: Exception => None }
         req match {
           case None =>
-            replyError(mapper.nullNode(), -32700, "parse error")
+            replyError(Json.mapper.nullNode(), -32700, "parse error")
           case Some(r) =>
             val id = r.path("id")
             def param(k: String): String = r.path("params")
@@ -273,24 +214,13 @@ object McpServer {
               case "notifications/initialized" => () // notification: no reply
               case "ping" => reply(id, obj())
               case "tools/list" =>
-                val arr = mapper.createArrayNode()
-                Tools.foreach { t =>
-                  val props = mapper.createObjectNode()
-                  t.required.foreach { case (n2, typ, desc) =>
-                    props.set[JsonNode](n2, obj("type" -> typ, "description" -> desc))
-                  }
-                  val reqd = mapper.createArrayNode()
-                  t.required.foreach { case (n2, _, _) => reqd.add(n2) }
-                  val schema = mapper.createObjectNode()
-                  schema.put("type", "object")
-                  schema.set[com.fasterxml.jackson.databind.JsonNode]("properties", props)
-                  schema.set[com.fasterxml.jackson.databind.JsonNode]("required", reqd)
-                  val td = obj("name" -> t.name, "description" -> t.description)
-                  td.set[com.fasterxml.jackson.databind.JsonNode]("inputSchema", schema)
-                  arr.add(td)
-                }
-                val res = mapper.createObjectNode(); res.set[com.fasterxml.jackson.databind.JsonNode]("tools", arr)
-                reply(id, res)
+                reply(id, obj("tools" -> Tools.map { t =>
+                  obj("name" -> t.name, "description" -> t.description,
+                    "inputSchema" -> obj("type" -> "object",
+                      "properties" -> obj(t.required.map { case (n, typ, desc) =>
+                        n -> obj("type" -> typ, "description" -> desc) }: _*),
+                      "required" -> t.required.map(_._1)))
+                }))
               case "tools/call" =>
                 val name = r.path("params").path("name").asText("")
                 try {
@@ -301,7 +231,7 @@ object McpServer {
                       val b = r.path("params").path("arguments").path("budget")
                       require(b.isNumber || b.isTextual,
                         "budget is mandatory")
-                      Map("run_id" -> service.run(param("config_yaml"),
+                      obj("run_id" -> service.run(param("config_yaml"),
                         param("input_path"), param("output_path"),
                         BigDecimal(b.asText())))
                     case "graft_status"  => service.status(param("run_id"))
@@ -314,7 +244,7 @@ object McpServer {
                     case other =>
                       throw new NoSuchElementException(s"unknown tool: $other")
                   }
-                  reply(id, toolResult(payload))
+                  reply(id, toolResult(payload, isError = false))
                 } catch {
                   case e: NoSuchElementException =>
                     replyError(id, -32602, e.getMessage)
@@ -322,7 +252,7 @@ object McpServer {
                     // tool-level failure: an MCP error RESULT, not a
                     // protocol error (the client LLM should read it)
                     reply(id, toolResult(
-                      Map("error" -> String.valueOf(e.getMessage)),
+                      obj("error" -> String.valueOf(e.getMessage)),
                       isError = true))
                 }
               case "" => replyError(id, -32600, "invalid request")
@@ -347,8 +277,7 @@ object McpServer {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try serve(System.in, System.out,
-      new Service(spark, new graft.llm.MockLlmClient(), workDir))
+    try serve(System.in, System.out, new Service(spark, workDir))
     finally spark.stop()
   }
 }

@@ -103,30 +103,4 @@ object ResponseParser {
         out.drop(parsedCol)
     }
   }
-
-  /** Typed structured-output parse — the Pydantic-schema equivalent
-    * (reference: instructor-enforced responses,
-    * ondine/adapters/unified_litellm_client.py:1055-1131): parse the
-    * response against a caller-supplied StructType; `strict` fails the run
-    * on any row that does not validate (reference strict mode:
-    * response_parser_stage.py:83-116). Fields land as typed columns. */
-  def parseTyped(df: DataFrame, schema: org.apache.spark.sql.types.StructType,
-                 strict: Boolean = false): DataFrame = {
-    val parsedCol = "_graft_typed"
-    val withStruct = df.withColumn(parsedCol,
-      from_json(extractJsonObject(col("result")), schema))
-    val out = schema.fields.foldLeft(withStruct) { (d, f) =>
-      d.withColumn(f.name, col(s"$parsedCol.${f.name}"))
-    }
-    val result = out.drop(parsedCol)
-    if (strict) {
-      val bad = df.filter(!col("skipped") &&
-        from_json(extractJsonObject(col("result")), schema).isNull)
-      val n = bad.count()
-      if (n > 0) throw new IllegalStateException(
-        s"strict structured-output parse failed for $n rows")
-    }
-    result
-  }
-
 }

@@ -22,74 +22,67 @@ private[queries] object OracleCtes {
     s"(($a) // ($b) - CASE WHEN ($a) % ($b) <> 0 AND " +
       s"((($a) < 0) <> (($b) < 0)) THEN 1 ELSE 0 END)"
 
-  /** Whitespace tokens of a text expression — the oracle twin of
+  /** Whitespace tokens of column `text` — the oracle twin of
     * `TextFunctions.tokens` (split on \s+, drop empties). */
-  def tokensExpr(textExpr: String = "text"): String =
-    s"list_filter(regexp_split_to_array(trim($textExpr), '\\s+'), x -> x <> '')"
+  val tokensExpr: String =
+    "list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')"
 
-  /** `<alias> AS (SELECT <id>, tokens AS <w> FROM <table>)`. */
-  def tokensCte(alias: String = "toks", table: String = "documents",
-                idCol: String = "doc_id", textExpr: String = "text",
-                wCol: String = "w"): String =
+  /** `<alias> AS (SELECT doc_id, tokens AS w FROM documents)`. */
+  def tokensCte(alias: String): String =
     s"""$alias AS (
-       |  SELECT $idCol,
-       |    ${tokensExpr(textExpr)} AS $wCol
-       |  FROM $table)""".stripMargin
+       |  SELECT doc_id,
+       |    $tokensExpr AS w
+       |  FROM documents)""".stripMargin
 
-  /** Distinct word k-shingles of a token list `w` — the oracle twin of
+  /** Distinct word k-shingles of the token list `w` — the oracle twin of
     * `TextFunctions.shingles` (space-joined k-grams, deduped; short
     * docs yield an empty list). */
-  def shinglesExpr(k: Int, wCol: String = "w"): String =
-    s"list_distinct(CASE WHEN len($wCol) < $k THEN []::VARCHAR[]\n" +
-      s"    ELSE [array_to_string($wCol[i:i+${k - 1}], ' ')\n" +
-      s"          for i in range(1, len($wCol) - ${k - 2})] END)"
+  def shinglesExpr(k: Int): String =
+    s"list_distinct(CASE WHEN len(w) < $k THEN []::VARCHAR[]\n" +
+      s"    ELSE [array_to_string(w[i:i+${k - 1}], ' ')\n" +
+      s"          for i in range(1, len(w) - ${k - 2})] END)"
 
   /** tokens + shingles as a two-CTE chain: `<toks>, <sh>` where `<sh>`
-    * holds (idCol, shingles). */
+    * holds (doc_id, shingles). */
   def shingleCtes(k: Int, toksAlias: String = "toks",
-                  shAlias: String = "sh", table: String = "documents",
-                  idCol: String = "doc_id", textExpr: String = "text",
-                  wCol: String = "w"): String =
-    s"""${tokensCte(toksAlias, table, idCol, textExpr, wCol)},
+                  shAlias: String = "sh"): String =
+    s"""${tokensCte(toksAlias)},
        |$shAlias AS (
-       |  SELECT $idCol, ${shinglesExpr(k, wCol)} AS shingles
+       |  SELECT doc_id, ${shinglesExpr(k)} AS shingles
        |  FROM $toksAlias)""".stripMargin
 
-  /** MinHash band column b over an unnested shingle variable: the min of
-    * a 60-bit slice of sha256('<seed>|' || shingle) — the oracle twin of
+  /** MinHash band column b over the unnested shingle variable `s`: the
+    * min of a 60-bit slice of sha256('<seed>|' || s) — the oracle twin of
     * `Dedup.minhashSignatures`' band formula (4 bands per digest, 15 hex
     * chars each). */
-  def bandMinExpr(b: Int, shingleVar: String = "s"): String =
-    s"min(('0x' || substr(sha256('${b / 4}|' || $shingleVar), " +
+  def bandMinExpr(b: Int): String =
+    s"min(('0x' || substr(sha256('${b / 4}|' || s), " +
       s"${1 + (b % 4) * 15}, 15))::UBIGINT)::BIGINT AS band_$b"
 
-  /** All `numBands` band columns, comma-joined. */
-  def bandMinExprs(numBands: Int, shingleVar: String = "s",
-                   sep: String = ",\n  "): String =
-    (0 until numBands).map(bandMinExpr(_, shingleVar)).mkString(sep)
+  /** All `numBands` band columns, one per line. */
+  def bandMinExprs(numBands: Int): String =
+    (0 until numBands).map(bandMinExpr).mkString(",\n  ")
 
-  /** Unpivot band_0..band_{n-1} of `table` into (id, band_idx, band_val)
+  /** Unpivot band_0..band_{n-1} of `bands` into (id, band_idx, band_val)
     * rows — mirrors the Spark side's posexplode over the band array. */
-  def bandUnpivot(numBands: Int, table: String = "bands",
-                  idCol: String = "doc_id"): String =
+  def bandUnpivot(numBands: Int): String =
     (0 until numBands).map(b =>
-      s"SELECT $idCol AS id, $b AS band_idx, band_$b AS band_val FROM $table")
+      s"SELECT doc_id AS id, $b AS band_idx, band_$b AS band_val FROM bands")
       .mkString("\n  UNION ALL ")
 
-  /** 1e-6 micro quantization of a float vector column — the oracle twin
-    * of `KMeans.microVec` (round-half-up to BIGINT on the 1e-6 grid). */
-  def microVecExpr(vecCol: String = "embedding"): String =
-    s"list_transform($vecCol,\n" +
-      s"      x -> CAST(round((x::DOUBLE) * 1000000.0, 0) AS BIGINT))"
+  /** 1e-6 micro quantization of column `embedding` — the oracle twin of
+    * `KMeans.microVec` (round-half-up to BIGINT on the 1e-6 grid). */
+  val microVecExpr: String =
+    "list_transform(embedding,\n" +
+      "      x -> CAST(round((x::DOUBLE) * 1000000.0, 0) AS BIGINT))"
 
-  /** `<alias> AS (SELECT vec_id, micro(v) AS <vCol> FROM <table>)` — the
-    * opening CTE of every micro-exact vector oracle. */
-  def microVecCte(alias: String, table: String = "embeddings",
-                  vecCol: String = "embedding", vCol: String = "v"): String =
+  /** `<alias> AS (SELECT vec_id, micro(embedding) AS v FROM embeddings)` —
+    * the opening CTE of every micro-exact vector oracle. */
+  def microVecCte(alias: String): String =
     s"""$alias AS (
        |  SELECT vec_id,
-       |    ${microVecExpr(vecCol)} AS $vCol
-       |  FROM $table)""".stripMargin
+       |    $microVecExpr AS v
+       |  FROM embeddings)""".stripMargin
 
   /** The quoted stopword list every quality oracle interpolates. */
   val stopsList: String = graft.functions.TextFunctions.EnglishStopwords

@@ -104,8 +104,7 @@ object Reranker {
     * Input: candidates (query_id, id) + corpus (id, text) + queries
     * (query_id, qtext). Output re-ranked top-k with rerank_score. */
   def rerank(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
-             k: Int, idCol: String = "id", textCol: String = "text",
-             qidCol: String = "query_id", qtextCol: String = "qtext"): DataFrame = {
+             k: Int): DataFrame = {
     // join strategy pinned, not estimated (guide §3.1): candidates are a
     // top-k shortlist (≤ k·|queries| rows by construction) and queries are
     // the query set — both orders of magnitude below any corpus, while the
@@ -113,13 +112,13 @@ object Reranker {
     // Size ESTIMATES after the retriever's window/filter chain are
     // unknown-large, so without the hint the planner can pick a sort-merge
     // join that exchanges the corpus by id.
-    val joined = corpus.select(col(idCol), col(textCol))
-      .join(broadcast(candidates), idCol)
-      .join(broadcast(queries.select(col(qidCol), col(qtextCol))), qidCol)
-      .withColumn("rerank_score", pairScore(col(qtextCol), col(textCol)))
-    graft.operators.Similarity.topKPerQuery(joined, qidCol, "rerank_score",
-        idCol, k, "rank")
-      .select(col(qidCol), col("rank"), col(idCol), col("rerank_score"))
+    val joined = corpus.select(col("id"), col("text"))
+      .join(broadcast(candidates), "id")
+      .join(broadcast(queries.select(col("query_id"), col("qtext"))), "query_id")
+      .withColumn("rerank_score", pairScore(col("qtext"), col("text")))
+    graft.operators.Similarity.topKPerQuery(joined, "query_id", "rerank_score",
+        "id", k, "rank")
+      .select(col("query_id"), col("rank"), col("id"), col("rerank_score"))
   }
 }
 

@@ -106,17 +106,14 @@ final class RemoteReranker(
     * driver: it is top-N-per-query by construction (bounded), and the
     * remote API is a per-query HTTP call either way. */
   def rerankFrame(candidates: DataFrame, corpus: DataFrame,
-                  queries: DataFrame, k: Int,
-                  idCol: String = "id", textCol: String = "text",
-                  qidCol: String = "query_id",
-                  qtextCol: String = "qtext"): DataFrame = {
+                  queries: DataFrame, k: Int): DataFrame = {
     val spark = candidates.sparkSession
 
     val shortlist = candidates
-      .join(corpus.select(col(idCol), col(textCol)), idCol)
-      .join(queries.select(col(qidCol), col(qtextCol)), qidCol)
-      .select(col(qidCol).cast("string"), col(idCol).cast("string"),
-        col(textCol), col(qtextCol))
+      .join(corpus.select(col("id"), col("text")), "id")
+      .join(queries.select(col("query_id"), col("qtext")), "query_id")
+      .select(col("query_id").cast("string"), col("id").cast("string"),
+        col("text"), col("qtext"))
       .collect()
 
     val byQuery = shortlist.groupBy(_.getString(0)).toSeq.sortBy(_._1)
@@ -142,16 +139,16 @@ final class RemoteReranker(
 
     import spark.implicits._
     val remote = remoteRows.result()
-      .toDF(qidCol, "rank", idCol, "rerank_score")
+      .toDF("query_id", "rank", "id", "rerank_score")
     val failed = failedQueries.result()
     if (failed.isEmpty) remote
     else {
       // degrade per query to the local joint scorer — same schema
       val localPart = Reranker.rerank(
-        candidates.filter(col(qidCol).cast("string").isInCollection(failed)),
-        corpus, queries, k, idCol, textCol, qidCol, qtextCol)
-        .select(col(qidCol).cast("string"), col("rank"),
-          col(idCol).cast("string"), col("rerank_score"))
+        candidates.filter(col("query_id").cast("string").isInCollection(failed)),
+        corpus, queries, k)
+        .select(col("query_id").cast("string"), col("rank"),
+          col("id").cast("string"), col("rerank_score"))
       remote.unionByName(localPart)
     }
   }

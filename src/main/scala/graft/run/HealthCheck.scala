@@ -2,7 +2,7 @@ package graft.run
 
 import java.nio.file.{Files, Paths}
 
-import graft.core.PipelineSpec
+import graft.core.{Json, PipelineSpec}
 
 /** Pre-flight health / readiness report for a configured pipeline —
   * the operational-monitoring surface (reference:
@@ -19,16 +19,9 @@ object HealthCheck {
 
   final case class Status(status: String, checks: Seq[Check]) {
     def isHealthy: Boolean = status == "healthy"
-    def toJson: String = {
-      def q(s: String) = "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-      val cs = checks.map(c =>
-        s"""{"name":${q(c.name)},"status":${q(c.status)},"detail":${q(c.detail)}}""")
-        .mkString("[", ",", "]")
-      s"""{"status":${q(status)},"checks":$cs}"""
-    }
+    def toJson: String = Json.write(Json.obj("status" -> status,
+      "checks" -> checks.map(c => Json.obj("name" -> c.name,
+        "status" -> c.status, "detail" -> c.detail))))
   }
 
   /** Status rollup: any error → unhealthy; warnings keep "healthy" like

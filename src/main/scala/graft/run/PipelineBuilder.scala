@@ -41,10 +41,6 @@ final class PipelineBuilder private () {
     { dataset = dataset.copy(inputColumns = cols); this }
   def withFilter(column: String, value: String): this.type =
     { dataset = dataset.copy(filters = dataset.filters + (column -> value)); this }
-  def withDelimiter(d: String): this.type =
-    { dataset = dataset.copy(delimiter = d); this }
-  def withEncoding(e: String): this.type =
-    { dataset = dataset.copy(encoding = e); this }
 
   // --- prompt -----------------------------------------------------------
   def withTemplate(t: String): this.type =

@@ -3,6 +3,10 @@ package graft.run
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import graft.core.Json
+
 /** Run lifecycle record (reference: ondine/orchestration/run_registry.py
   * :49-286 — RunRecord + the PENDING → RUNNING → SUCCEEDED / FAILED /
   * PARTIAL state machine, plus SUBMITTED_REMOTE for the provider-batch
@@ -179,86 +183,27 @@ final class RunRegistry(baseDir: String) {
     // hidden non-.json suffix: a crash-orphaned temp file must never be
     // picked up (or half-read) by list()
     val tmp = Files.createTempFile(dir, ".tmp_", ".part")
-    Files.writeString(tmp, render(rec))
+    Files.writeString(tmp, Json.write(toJson(rec)))
     Files.move(tmp, fileFor(rec.runId), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r")
-
-  def render(r: RunRecord): String =
-    s"""{"run_id":"${esc(r.runId)}","run_dir":"${esc(r.runDir)}",""" +
-    s""""state":"${r.state}","created_ms":${r.createdMs},""" +
-    s""""updated_ms":${r.updatedMs},"rows":${r.rows},""" +
-    s""""valid_rows":${r.validRows},"calls":${r.calls},""" +
-    s""""total_rows":${r.totalRows},""" +
-    s""""cost":"${esc(r.cost)}","note":"${esc(r.note)}"}"""
-
-  /** Inverse of esc(): one left-to-right scan consuming an escape pair at
-    * a time — sequential global replaces corrupt strings whose ESCAPED form
-    * contains backslash-n (e.g. a note holding a regex or Windows path). */
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n'   => sb.append('\n')
-          case 'r'   => sb.append('\r')
-          case '"'   => sb.append('"')
-          case '\\'  => sb.append('\\')
-          case other => sb.append('\\').append(other)
-        }
-        i += 2
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  /** The record as the JSON object its file holds and the CLI prints. */
+  def toJson(r: RunRecord): ObjectNode = Json.obj(
+    "run_id" -> r.runId, "run_dir" -> r.runDir, "state" -> r.state,
+    "created_ms" -> r.createdMs, "updated_ms" -> r.updatedMs,
+    "rows" -> r.rows, "valid_rows" -> r.validRows, "calls" -> r.calls,
+    "total_rows" -> r.totalRows, "cost" -> r.cost, "note" -> r.note)
 
   private def parse(txt: String): RunRecord = {
-    def str(k: String): String =
-      ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-        .findFirstMatchIn(txt).map(m => unescape(m.group(1)))
-        .getOrElse("")
-    def num(k: String): Long =
-      ("\"" + k + "\":(-?[0-9]+)").r
-        .findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(0L)
+    val n = Json.read(txt)
+    def str(k: String): String = n.path(k).asText("")
+    def num(k: String): Long = n.path(k).asLong(0L)
     RunRecord(str("run_id"), str("run_dir"), str("state"),
       num("created_ms"), num("updated_ms"), num("rows"),
       num("valid_rows"), num("calls"), str("cost"), str("note"),
       num("total_rows"))
   }
-}
-
-/** Throttled best-effort forwarder of live counters onto ONE registry row
-  * (reference: ondine/mcp/progress.py RegistryProgressObserver — the
-  * forwarder knows which run it serves and which registry to write to,
-  * nothing else). Writes are collapsed to one per `minIntervalMs`, writes
-  * with unchanged rows-done are skipped (no new information), and a write
-  * failure never propagates — the terminal transition is the source of
-  * truth for final state. */
-final class ProgressForwarder(registry: RunRegistry, runId: String,
-                              minIntervalMs: Long = 250L) {
-  private var lastWriteNs = 0L
-  private var lastRows = -1L
-
-  def offer(rowsDone: Long, totalRows: Long, calls: Long,
-            cost: String): Unit = {
-    val now = System.nanoTime()
-    if (rowsDone != lastRows &&
-        (lastWriteNs == 0L ||
-          now - lastWriteNs >= minIntervalMs * 1000000L)) {
-      lastWriteNs = now
-      lastRows = rowsDone
-      try registry.updateMetrics(runId, rowsDone, calls, cost, totalRows)
-      catch { case _: Exception => () }
-    }
-  }
-
-  def reset(): Unit = { lastWriteNs = 0L; lastRows = -1L }
 }
 
 /** Observer wiring the registry into the enrichment lifecycle: RUNNING on
@@ -274,31 +219,56 @@ final class ProgressForwarder(registry: RunRegistry, runId: String,
   * store without making human-scale polling any fresher. Writes with
   * unchanged rows-done are skipped outright (no new information), and a
   * write failure never kills the run — the terminal transition is the
-  * source of truth. */
+  * source of truth.
+  *
+  * Events land on the row named by the run's own id, which the Enricher
+  * derives from its run dir, or on one given row ([[RegistryObserver.onRow]]).
+  */
 final class RegistryObserver(registry: RunRegistry, runDir: String,
                              minProgressIntervalMs: Long = 250L)
     extends Observer {
-  private val forwarders =
-    scala.collection.mutable.Map.empty[String, ProgressForwarder]
-  private def forwarder(id: String): ProgressForwarder =
-    forwarders.getOrElseUpdate(id,
-      new ProgressForwarder(registry, id, minProgressIntervalMs))
+  /** The one row every event lands on; None = the run's own id. */
+  private var row: Option[String] = None
+
+  /** Per row: (nanoTime of the last progress write, rows it wrote). */
+  private val lastWrite = scala.collection.mutable.Map.empty[String, (Long, Long)]
 
   def onEvent(e: PipelineEvent): Unit = e match {
-    case RunStarted(id) =>
+    case RunStarted(run) =>
+      val id = row.getOrElse(run)
       if (registry.get(id).isEmpty) registry.register(id, runDir)
       registry.transition(id, RunState.Running)
-      forwarder(id).reset()
-    case RunProgress(id, rowsDone, totalRows, calls, spent) =>
-      forwarder(id).offer(rowsDone, totalRows, calls, spent.toString)
-    case RunCompleted(id, m, q) =>
+      lastWrite -= id
+    case RunProgress(run, rowsDone, totalRows, calls, spent) =>
+      val id = row.getOrElse(run)
+      val now = System.nanoTime()
+      val (lastNs, lastRows) = lastWrite.getOrElse(id, (0L, -1L))
+      if (rowsDone != lastRows && (lastNs == 0L ||
+          now - lastNs >= minProgressIntervalMs * 1000000L)) {
+        lastWrite(id) = (now, rowsDone)
+        try registry.updateMetrics(id, rowsDone, calls, spent.toString,
+          totalRows)
+        catch { case _: Exception => () }
+      }
+    case RunCompleted(run, m, q) =>
       val to = if (q.validRows + m.skippedRows < m.rows) RunState.Partial
         else RunState.Succeeded
-      registry.transition(id, to, r => r.copy(rows = m.rows,
+      registry.transition(row.getOrElse(run), to, r => r.copy(rows = m.rows,
         validRows = q.validRows, calls = m.calls, cost = m.cost.toString))
-    case RunFailed(id, err) =>
-      registry.transition(id, RunState.Failed,
+    case RunFailed(run, err) =>
+      registry.transition(row.getOrElse(run), RunState.Failed,
         r => r.copy(note = String.valueOf(err).take(500)))
     case _ => ()
+  }
+}
+
+object RegistryObserver {
+  /** An observer that records every event of a run on registry row
+    * `rowId`, whatever id the run carries (the MCP server's `mcp-N`). */
+  def onRow(registry: RunRegistry, runDir: String,
+            rowId: String): RegistryObserver = {
+    val o = new RegistryObserver(registry, runDir)
+    o.row = Some(rowId)
+    o
   }
 }

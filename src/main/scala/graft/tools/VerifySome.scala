@@ -25,15 +25,9 @@ object VerifySome {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       println(s"[verify-some] wrote $name")
     }
-    // subset oracle dump so tools/verify_local.py runs against outDir;
-    // same full-control-char escaper as the driver-contract dump
-    val sqls = graft.SparkEntry.oracleSql.filter(kv => picked.contains(kv._1))
-    val json = sqls.map { case (k, v) =>
-      s"${graft.Verify.jsonQuote(k)}: ${graft.Verify.jsonQuote(v)}"
-    }.mkString("{", ",\n", "}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
-      json.getBytes("UTF-8"))
+    // subset oracle dump so tools/verify_local.py runs against outDir
+    graft.Verify.writeOracleSql(outDir,
+      graft.SparkEntry.oracleSql.filter(kv => picked.contains(kv._1)))
     spark.stop()
   }
 }

@@ -190,6 +190,35 @@ class HealthCheckSpec extends AnyFunSuite {
     assert(byId("crashed").get("ledger_files").asInt == 0)
   }
 
+  test("list-runs, status and inspect print strict JSON for a tab or \\u0001") {
+    import graft.run.{RunRegistry, RunState}
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+    val regDir = java.nio.file.Files.createTempDirectory("graft_cli_ctl")
+      .toString
+    val runDir = s"$regDir/run\tdir\u0001x"
+    val note = "failed:\tcolumn\u0001 gone"
+    val reg = new RunRegistry(regDir)
+    reg.register("ctl", runDir)
+    reg.transition("ctl", RunState.Running)
+    reg.transition("ctl", RunState.Failed, r => r.copy(note = note))
+    def check(line: String): Unit = {
+      val n = strict.readTree(line)
+      assert(n.get("run_dir").asText == runDir && n.get("note").asText == note)
+    }
+    val (lc, listed) = ChildCli.run("list-runs", "--registry", regDir)
+    assert(lc == 0 && listed.size == 1)
+    check(listed.head)
+    val (sc, status) = Main.statusJson(regDir, "ctl")
+    assert(sc == 0)
+    check(status.head)
+    status.foreach(strict.readTree)
+    val (ic, inspected) = ChildCli.run("inspect", "--registry", regDir,
+      "--run-id", "ctl")
+    assert(ic == 0 && inspected.size == 2)
+    check(inspected.head)
+    assert(strict.readTree(inspected(1)).get("ledger_files").asInt == 0)
+  }
+
   test("CLI list-providers registry covers the factory's dispatch arms") {
     val ids = graft.llm.LlmClients.providers.map(_._1)
     assert(ids.contains("mock") && ids.contains("http") &&

@@ -4,7 +4,8 @@ import java.io.{PipedInputStream, PipedOutputStream, PrintWriter}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import graft.llm.MockLlmClient
 import graft.mcp.McpServer
@@ -143,18 +144,19 @@ class McpSpec extends SparkSpec {
       w.println(call(20, "graft_validate", "config_yaml" -> good))
       val ok = toolJson(read())
       assert(ok.path("valid").asBoolean)
-      assert(ok.path("input_columns").asText == "text")
+      assert(ok.path("input_columns").path(0).asText == "text")
       w.println(call(21, "graft_validate", "config_yaml" -> bad))
       val no = toolJson(read())
       assert(!no.path("valid").asBoolean)
       assert(no.path("error").asText.contains("nope"))
       w.println(call(22, "graft_list_providers"))
-      val prov = toolJson(read()).path("providers").asText
+      val provs = toolJson(read()).path("providers")
+      val prov = (0 until provs.size).map(provs.get(_).path("provider").asText)
       assert(prov.contains("mock") && prov.contains("http") &&
         prov.contains("proc"))
       // list-checkpoints: empty registry -> empty listing, not an error
       w.println(call(23, "graft_list_checkpoints"))
-      assert(toolJson(read()).path("checkpoints").asText == "")
+      assert(toolJson(read()).path("checkpoints").size == 0)
     }
   }
 
@@ -180,9 +182,9 @@ class McpSpec extends SparkSpec {
     while (state != "SUCCEEDED" && state != "FAILED" &&
         System.nanoTime() < deadline) {
       val s = service.status(runId)
-      state = s("state").toString
-      snaps += ((state, s("rows").asInstanceOf[Long],
-        s("calls").asInstanceOf[Long], s("total_rows").asInstanceOf[Long]))
+      state = s.path("state").asText
+      snaps += ((state, s.path("rows").asLong,
+        s.path("calls").asLong, s.path("total_rows").asLong))
       Thread.sleep(20)
     }
     assert(state == "SUCCEEDED", s"run ended $state")
@@ -192,6 +194,139 @@ class McpSpec extends SparkSpec {
     assert(mid.forall(_._4 == 40), "total_rows absent from live status")
     val rows = snaps.filter(_._1 == "RUNNING").map(_._2).toSeq
     assert(rows == rows.sorted, "live counters must be monotone")
-    assert(service.status(runId)("rows") == 40L)
+    assert(service.status(runId).path("rows").asLong == 40L)
+  }
+
+  private val terminal = Set("SUCCEEDED", "PARTIAL", "FAILED")
+
+  /** Polls graft_status until the run ends; returns the last status. */
+  private def await(service: McpServer.Service, runId: String) = {
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    var st = service.status(runId)
+    while (!terminal(st.path("state").asText) &&
+        System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      st = service.status(runId)
+    }
+    st
+  }
+
+  private def csv(lines: Seq[String]): String = {
+    val p = Files.createTempDirectory("graft_mcp_csv").resolve("in.csv")
+    Files.writeString(p, ("text" +: lines).mkString("\n"))
+    p.toString
+  }
+
+  private def out(): String =
+    Files.createTempDirectory("graft_mcp_o").resolve("out.parquet").toString
+
+  test("graft_run reaches the spec's proc: endpoint") {
+    val py = sys.env.getOrElse("PATH", "").split(java.io.File.pathSeparator)
+      .map(d => new java.io.File(d, "python3")).find(_.canExecute)
+      .getOrElse(cancel("python3 not on PATH"))
+    val dir = Files.createTempDirectory("graft_mcp_proc")
+    val sidecar = dir.resolve("sidecar.py")
+    Files.writeString(sidecar,
+      """import sys, json
+        |for line in sys.stdin:
+        |    req = json.loads(line)
+        |    text = "sidecar " + req["prompt"]
+        |    sys.stdout.write(json.dumps({"id": req["id"], "text": text,
+        |        "tokens_in": len(req["prompt"]), "tokens_out": len(text)}) + "\n")
+        |    sys.stdout.flush()
+        |""".stripMargin)
+    val cfg = s"llm:\n  endpoint: \"proc:$py $sidecar\"\n" +
+      "prompt:\n  template: \"MC: {text}\"\noutput:\n  output_columns: [res]"
+    val service = new McpServer.Service(spark, dir.resolve("work").toString)
+    val o = out()
+    val runId = service.run(cfg, csv((0 until 4).map(i => s"mcp $i")), o,
+      BigDecimal(1))
+    val st = await(service, runId)
+    assert(st.path("state").asText == "SUCCEEDED", st.toString)
+    val session = spark
+    import session.implicits._
+    assert(session.read.parquet(o).select("text", "res").as[(String, String)]
+      .collect().toSet == (0 until 4).map(i =>
+        (s"mcp $i", s"sidecar MC: mcp $i")).toSet)
+  }
+
+  test("a run with blank outputs ends PARTIAL and still collects") {
+    // every 5th batch item dropped and no auto-retry: those rows stay null
+    val service = new McpServer.Service(spark,
+      new MockLlmClient(dropEveryNthBatchItem = 5),
+      Files.createTempDirectory("graft_mcp_partial").toString)
+    val cfg = "dataset:\n  input_columns: [text]\nprompt:\n  " +
+      "template: \"MQ: {text}\"\n  batch_size: 10\n" +
+      "output:\n  output_columns: [res]"
+    val o = out()
+    val runId = service.run(cfg, csv((0 until 30).map(i => s"p $i")), o,
+      BigDecimal(5))
+    val st = await(service, runId)
+    assert(st.path("state").asText == "PARTIAL", st.toString)
+    assert(st.path("valid_rows").asLong < 30 && st.path("rows").asLong == 30)
+    val coll = service.collect(runId)
+    assert(coll.path("output_path").asText == o)
+    assert(spark.read.parquet(o).count() == 30)
+  }
+
+  test("list-checkpoints (CLI and MCP) counts the ledger of a file: run dir") {
+    val work = Files.createTempDirectory("graft_mcp_uri").toString
+    val service = new McpServer.Service(spark, new MockLlmClient(), work)
+    val reg = new graft.run.RunRegistry(s"$work/registry")
+    val runDir = Files.createTempDirectory("graft_mcp_uri_run")
+    Files.writeString(Files.createDirectories(runDir.resolve("responses"))
+      .resolve("part-0000.snappy.parquet"), "x" * 64)
+    reg.register("crashed", runDir.toUri.toString) // file:/...
+    reg.transition("crashed", graft.run.RunState.Running)
+    val cli = mapper.readTree(Main.listCheckpoints(s"$work/registry").head)
+    assert(cli.path("run_dir").asText.startsWith("file:"))
+    assert(cli.path("ledger_files").asInt == 1)
+    assert(cli.path("ledger_bytes").asLong == 64)
+    val mcp = service.listCheckpoints().path("checkpoints")
+    assert(mcp.size == 1 && mcp.get(0).path("ledger_files").asInt == 1)
+  }
+
+  test("each shared command's MCP payload equals the CLI's JSON") {
+    val work = Files.createTempDirectory("graft_mcp_parity").toString
+    val service = new McpServer.Service(spark, new MockLlmClient(), work)
+    // what the wire carries: the payload written, then read back
+    def wire(n: JsonNode) = mapper.readTree(graft.core.Json.write(n))
+    def merged(lines: Seq[String]) = lines.foldLeft(mapper.createObjectNode())(
+      (o, l) => o.setAll[ObjectNode](mapper.readTree(l).asInstanceOf[ObjectNode]))
+    def array(lines: Seq[String]) =
+      mapper.valueToTree[JsonNode](lines.map(mapper.readTree).toArray)
+    val good = "dataset:\n  input_columns: [text]\nprompt:\n  " +
+      "template: \"PY: {text}\"\n  batch_size: 4\n" +
+      "processing:\n  max_budget: 2.5\noutput:\n  output_columns: [res]"
+    val bad = good.replace("{text}", "{nope}")
+    for (yaml <- Seq(good, bad)) {
+      val f = Files.createTempFile("graft_parity", ".yaml")
+      Files.writeString(f, yaml)
+      assert(wire(service.validate(yaml)) ==
+        mapper.readTree(Main.validateConfig(f.toString)._2))
+    }
+
+    val reg = new graft.run.RunRegistry(s"$work/registry")
+    reg.register("r1", s"$work/r1")
+    reg.transition("r1", graft.run.RunState.Running)
+    reg.updateMetrics("r1", rows = 3, calls = 1, cost = "0.01", totalRows = 8)
+    assert(wire(service.status("r1")) ==
+      merged(Main.statusJson(s"$work/registry", "r1")._2))
+    assert(wire(service.status("nope")) ==
+      merged(Main.statusJson(s"$work/registry", "nope")._2))
+    assert(wire(service.listCheckpoints()).path("checkpoints") ==
+      array(Main.listCheckpoints(s"$work/registry")))
+
+    // list-providers and estimate through the CLI process itself
+    val (pc, providers) = ChildCli.run("list-providers")
+    assert(pc == 0 &&
+      wire(service.listProviders()).path("providers") == array(providers))
+    val in = csv((0 until 12).map(i => s"estimate row $i"))
+    val cfg = Files.createTempFile("graft_parity_est", ".yaml")
+    Files.writeString(cfg, good)
+    val (ec, est) = ChildCli.run("estimate", "--config", cfg.toString,
+      "--input", in)
+    assert(ec == 0 && est.size == 1)
+    assert(wire(service.estimate(good, in)) == mapper.readTree(est.head))
   }
 }

@@ -570,6 +570,24 @@ class RunRegistrySpec extends SparkSpec {
     }
   }
 
+  test("a record file in the earlier format, raw tab in the note, still reads") {
+    // the earlier writer escaped only \\ " \n \r, so a tab sat raw
+    val dir = Files.createTempDirectory("graft_reg_old")
+    Files.writeString(dir.resolve("old.json"),
+      "{\"run_id\":\"old\",\"run_dir\":\"/tmp/old\",\"state\":\"FAILED\"," +
+        "\"created_ms\":1,\"updated_ms\":2,\"rows\":3,\"valid_rows\":2," +
+        "\"calls\":1,\"total_rows\":5,\"cost\":\"0.01\"," +
+        "\"note\":\"col\ta said \\\"no\\\"\\nat C:\\\\new\"}")
+    val back = new RunRegistry(dir.toString).get("old").get
+    assert(back == RunRecord("old", "/tmp/old", RunState.Failed, 1L, 2L,
+      3L, 2L, 1L, "0.01", "col\ta said \"no\"\nat C:\\new", 5L))
+    // and the next save writes it back as strict JSON
+    new RunRegistry(dir.toString).transition("old", RunState.Running)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(dir.resolve("old.json")))
+      .get("note").asText == back.note)
+  }
+
   test("registry observer: FAILED -> resume -> SUCCEEDED arc") {
     val spark = SparkSpec.session
     import spark.implicits._

@@ -116,24 +116,25 @@ class RagSpec extends SparkSpec {
     assert(store.contradictions.count() == 1)
   }
 
-  test("typed structured-output parse with strict mode") {
-    val good = Seq(
+  test("typed structured-output parse lands typed fields, null on non-JSON") {
+    val replies = Seq(
       (0L, """{"brand":"acme","price":9}""", false),
       (1L, """```json
              |{"brand":"zenith","price":12}
-             |```""".stripMargin, false))
+             |```""".stripMargin, false),
+      (2L, "not json at all", false))
       .toDF("_row_index", "result", "skipped")
     val schema = StructType(Seq(
       StructField("brand", StringType), StructField("price", IntegerType)))
-    val parsed = ResponseParser.parseTyped(good, schema, strict = true)
-      .select("brand", "price").as[(String, Int)].collect().toMap
-    assert(parsed("acme") == 9 && parsed("zenith") == 12)
-
-    val bad = Seq((0L, "not json at all", false))
-      .toDF("_row_index", "result", "skipped")
-    intercept[IllegalStateException] {
-      ResponseParser.parseTyped(bad, schema, strict = true)
-    }
+    val parsed = ResponseParser.parse(replies, OutputSpec(Seq("brand", "price"),
+      responseFormat = ResponseFormat.Typed, typedSchema = Some(schema)))
+    assert(parsed.schema("price").dataType == IntegerType)
+    val byRow = parsed.select("_row_index", "brand", "price").collect()
+      .map(r => r.getLong(0) -> (Option(r.getString(1)),
+        if (r.isNullAt(2)) None else Some(r.getInt(2)))).toMap
+    assert(byRow(0L) == ((Some("acme"), Some(9))))
+    assert(byRow(1L) == ((Some("zenith"), Some(12))))
+    assert(byRow(2L) == ((None, None)))
   }
 
   test("semantic chunking groups sentences at similarity breaks") {

@@ -2,7 +2,7 @@
 """Print the size of the engine's main code, the graft.* conf keys it reads,
 and the default-valued parameters a caller can set.
 
-    python3 tools/size_report.py [--list] [REPO_ROOT]
+    python3 tools/size_report.py [--list] [--against OTHER_ROOT] [REPO_ROOT]
 
 Lines are counted as `find src/main -name '*.scala' | xargs cat | wc -l`
 counts them (newline characters). A conf key counts when a main source
@@ -18,12 +18,15 @@ a function type is not one). Comments and string literals are blanked first.
 The enclosing class's visibility is not looked at, and case-class and class
 constructor fields are not defs, so neither counts. `--list` also prints
 each counted parameter as `file:line def param` (file relative to the repo
-root), so two checkouts' lists diff to the knobs that went or came. Stdlib
-only.
+root). `--against OTHER_ROOT` also prints OTHER_ROOT's totals and the knobs
+removed (in OTHER_ROOT only, at its line) and added (here only, at this
+tree's line) between the two checkouts, matched by (file, def, param) so
+lines shifted by other edits do not show as changes. Stdlib only.
 """
 import os
 import re
 import sys
+from collections import Counter
 
 KEY_READ = re.compile(
     r'\.(?:get|getOption|getConfString)\s*\(\s*"(graft\.[A-Za-z0-9_.]+)"')
@@ -154,14 +157,10 @@ def default_params(src):
     return found
 
 
-def main():
-    args = sys.argv[1:]
-    listing = "--list" in args
-    args = [a for a in args if a != "--list"]
-    root = args[0] if args else os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), os.pardir)
+def scan(root):
+    """(lines, files, conf keys, [(file, line, def, param)]) of src/main."""
     main_dir = os.path.join(root, "src", "main")
-    lines = files = defaults = 0
+    lines = files = 0
     keys = set()
     params = []
     for dirpath, _, names in os.walk(main_dir):
@@ -175,18 +174,58 @@ def main():
             files += 1
             lines += data.count(b"\n")
             keys.update(KEY_READ.findall(text))
-            found = default_params(text)
-            defaults += len(found)
             rel = os.path.relpath(path, root)
-            params += [(rel, ln, d, p) for ln, d, p in found]
+            params += [(rel, ln, d, p) for ln, d, p in default_params(text)]
+    return lines, files, keys, params
+
+
+def knob_diff(old, new):
+    """The knobs of `old` missing from `new` and those of `new` missing from
+    `old`, matched by (file, def, param) with multiplicity (overloads)."""
+    def unmatched(a, b):
+        left = Counter((f, d, p) for f, _, d, p in b)
+        out = []
+        for f, ln, d, p in sorted(a):
+            if left[(f, d, p)]:
+                left[(f, d, p)] -= 1
+            else:
+                out.append((f, ln, d, p))
+        return out
+    return unmatched(old, new), unmatched(new, old)
+
+
+def main():
+    args = sys.argv[1:]
+    listing = "--list" in args
+    args = [a for a in args if a != "--list"]
+    against = None
+    if "--against" in args:
+        i = args.index("--against")
+        against = args[i + 1]
+        del args[i:i + 2]
+    root = args[0] if args else os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), os.pardir)
+    lines, files, keys, params = scan(root)
     print(f"main scala: {lines:,} lines in {files} files")
     print(f"graft.* conf keys read by main code: {len(keys)}")
     for k in sorted(keys):
         print(f"  {k}")
-    print(f"default-valued parameters on non-private defs: {defaults}")
+    print(f"default-valued parameters on non-private defs: {len(params)}")
     if listing:
         for rel, ln, d, p in sorted(params):
             print(f"{rel}:{ln} {d} {p}")
+    if against:
+        o_lines, o_files, _, o_params = scan(against)
+        removed, added = knob_diff(o_params, params)
+        print(f"against {against}: {o_lines:,} -> {lines:,} lines, "
+              f"{o_files} -> {files} files, "
+              f"{len(o_params)} -> {len(params)} default-valued parameters")
+        print(f"knobs removed: {len(removed)}")
+        for rel, ln, d, p in removed:
+            print(f"- {rel}:{ln} {d} {p}")
+        print(f"knobs added: {len(added)}")
+        for rel, ln, d, p in added:
+            print(f"+ {rel}:{ln} {d} {p}")
 
 
 if __name__ == "__main__":
