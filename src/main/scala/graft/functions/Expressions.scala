@@ -117,14 +117,6 @@ object ExprHelpers {
         java.security.MessageDigest.getInstance("SHA-256")
     }
 
-  /** Core of the native MinHash band kernel: fold one shingle's digests
-    * into the running band minima. Replicates EXACTLY the declarative
-    * formula the oracles replay — per digest group g,
-    * `sha256(utf8("g|" + shingle))`, then each lane's band value is hex
-    * chars [lane·15, lane·15+15) of the digest read as an unsigned
-    * 60-bit integer (what `conv(substring(hex, 1+lane*15, 15), 16, 10)`
-    * computes) — without materializing the hex string or parsing it
-    * back. */
   /** Unsigned value of 15 hex digits of `d` starting at nibble `start` —
     * what `conv(substring(hex, 1+start, 15), 16, 10)` parses, read off
     * the digest bytes directly. */
@@ -140,6 +132,14 @@ object ExprHelpers {
     v
   }
 
+  /** Core of the native MinHash band kernel: fold one shingle's digests
+    * into the running band minima. Replicates EXACTLY the declarative
+    * formula the oracles replay — per digest group g,
+    * `sha256(utf8("g|" + shingle))`, then each lane's band value is hex
+    * chars [lane·15, lane·15+15) of the digest read as an unsigned
+    * 60-bit integer (what `conv(substring(hex, 1+lane*15, 15), 16, 10)`
+    * computes) — without materializing the hex string or parsing it
+    * back. */
   private def foldShingle(shingleUtf8: Array[Byte], prefixes: Array[Array[Byte]],
                           numBands: Int, mins: Array[Long]): Unit = {
     val md = sha256Local.get()
@@ -165,43 +165,15 @@ object ExprHelpers {
     Array.tabulate((numBands + 3) / 4)(g =>
       s"$g|".getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Band minima over an explicit shingle array (null elements skipped —
-    * `concat_ws` never produces them, but stay total). Null when the
-    * array is empty: every band's `array_min` over no digests is null,
-    * and `element_at(null, i)` recovers the per-band nulls. */
-  def bandMins(sh: org.apache.spark.sql.catalyst.util.ArrayData,
-               numBands: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val m = sh.numElements()
-    val prefixes = digestPrefixes(numBands)
-    val mins = Array.fill(numBands)(Long.MaxValue)
-    var any = false
-    var i = 0
-    while (i < m) {
-      if (!sh.isNullAt(i)) {
-        any = true
-        foldShingle(sh.getUTF8String(i).getBytes, prefixes, numBands, mins)
-      }
-      i += 1
-    }
-    if (!any) null
-    else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(mins)
-  }
-
-  /** Fused tokens → distinct word-k-shingles → band minima: one pass,
-    * no shingle-array or hex-array materialization. Shingle strings are
-    * built with a reused StringBuilder and de-duplicated with a hash set
-    * (pure work-skipping — minima are duplicate-blind, matching the
-    * `array_distinct` in the declarative chain). Fewer than k tokens →
-    * null (no shingles → all-null bands). */
-  def wordShingleBandMins(toks: org.apache.spark.sql.catalyst.util.ArrayData,
-                          k: Int, numBands: Int):
-      org.apache.spark.sql.catalyst.util.ArrayData = {
+  /** The one word-k-shingle walk of the shingle kernels: hands `f` each
+    * shingle of `toks` in position order, its k tokens joined by one
+    * space under `concat_ws` semantics (null tokens skipped, not
+    * rendered), built in one reused StringBuilder. Fewer than k tokens →
+    * no shingles. */
+  private def foreachShingle(
+      toks: org.apache.spark.sql.catalyst.util.ArrayData, k: Int)(
+      f: String => Unit): Unit = {
     val n = toks.numElements()
-    if (n < k) return null
-    val prefixes = digestPrefixes(numBands)
-    val mins = Array.fill(numBands)(Long.MaxValue)
-    val seen = new java.util.HashSet[String]()
     val sb = new java.lang.StringBuilder()
     var i = 0
     while (i <= n - k) {
@@ -209,7 +181,6 @@ object ExprHelpers {
       var j = i
       var first = true
       while (j < i + k) {
-        // concat_ws semantics: null elements are skipped, not rendered
         if (!toks.isNullAt(j)) {
           if (!first) sb.append(' ')
           sb.append(toks.getUTF8String(j).toString)
@@ -217,12 +188,34 @@ object ExprHelpers {
         }
         j += 1
       }
-      val s = sb.toString
-      if (seen.add(s))
-        foldShingle(s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          prefixes, numBands, mins)
+      f(sb.toString)
       i += 1
     }
+  }
+
+  /** [[foreachShingle]] de-duplicated with a hash set: the UTF-8 bytes of
+    * each DISTINCT shingle in first-occurrence order — the
+    * `array_distinct(shingles(toks, k))` both MinHash kernels replay. */
+  private def foreachDistinctShingle(
+      toks: org.apache.spark.sql.catalyst.util.ArrayData, k: Int)(
+      f: Array[Byte] => Unit): Unit = {
+    val seen = new java.util.HashSet[String]()
+    foreachShingle(toks, k) { s =>
+      if (seen.add(s)) f(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  /** Fused tokens → distinct word-k-shingles → band minima: one pass,
+    * no shingle-array or hex-array materialization (minima are
+    * duplicate-blind, so the distinct walk is pure work-skipping).
+    * Fewer than k tokens → null (no shingles → all-null bands). */
+  def wordShingleMinhash(toks: org.apache.spark.sql.catalyst.util.ArrayData,
+                         k: Int, numBands: Int):
+      org.apache.spark.sql.catalyst.util.ArrayData = {
+    if (toks.numElements() < k) return null
+    val prefixes = digestPrefixes(numBands)
+    val mins = Array.fill(numBands)(Long.MaxValue)
+    foreachDistinctShingle(toks, k)(foldShingle(_, prefixes, numBands, mins))
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(mins)
   }
@@ -237,41 +230,23 @@ object ExprHelpers {
     * band minima): the whole per-doc MinHash/Jaccard preparation in one
     * pass. `hsh` replicates `hash64` (60-bit md5-prefix) per distinct
     * shingle in first-occurrence order (`array_distinct` semantics);
-    * `bm` the band minima of [[bandMins]]. Neither the shingle strings
-    * nor any hex string ever materializes into a row. Fewer than k
-    * tokens → (empty hsh, null bm) — exactly the declarative chain's
-    * empty-set / all-null-bands pair. */
+    * `bm` the band minima of [[wordShingleMinhash]]. Neither the
+    * shingle strings nor any hex string ever materializes into a row.
+    * `numBands = 0` skips the sha256 band digests altogether (`bm` is
+    * then empty) for callers that need only `hsh`. Fewer than k tokens →
+    * (empty hsh, null bm) — exactly the declarative chain's empty-set /
+    * all-null-bands pair. */
   def shingleHashBands(toks: org.apache.spark.sql.catalyst.util.ArrayData,
                        k: Int, numBands: Int):
       org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    val n = toks.numElements()
     val prefixes = digestPrefixes(numBands)
     val mins = Array.fill(numBands)(Long.MaxValue)
-    val seen = new java.util.HashSet[String]()
     val hsh = new scala.collection.mutable.ArrayBuilder.ofLong
     val md = md5Local.get()
-    val sb = new java.lang.StringBuilder()
-    var i = 0
-    while (n >= k && i <= n - k) {
-      sb.setLength(0)
-      var j = i
-      var first = true
-      while (j < i + k) {
-        if (!toks.isNullAt(j)) {
-          if (!first) sb.append(' ')
-          sb.append(toks.getUTF8String(j).toString)
-          first = false
-        }
-        j += 1
-      }
-      val s = sb.toString
-      if (seen.add(s)) {
-        val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        md.reset()
-        hsh += nibbles60(md.digest(bytes), 0)
-        foldShingle(bytes, prefixes, numBands, mins)
-      }
-      i += 1
+    foreachDistinctShingle(toks, k) { bytes =>
+      md.reset()
+      hsh += nibbles60(md.digest(bytes), 0)
+      foldShingle(bytes, prefixes, numBands, mins)
     }
     val hs = hsh.result()
     val bm =
@@ -338,28 +313,9 @@ object ExprHelpers {
     * concat_ws rule); fewer than k elements → empty array. */
   def wordShingles(toks: org.apache.spark.sql.catalyst.util.ArrayData,
                    k: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val n = toks.numElements()
-    if (n < k)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[AnyRef])
-    val out = new Array[AnyRef](n - k + 1)
-    val sb = new java.lang.StringBuilder()
+    val out = new Array[AnyRef](math.max(toks.numElements() - k + 1, 0))
     var i = 0
-    while (i <= n - k) {
-      sb.setLength(0)
-      var j = i
-      var first = true
-      while (j < i + k) {
-        if (!toks.isNullAt(j)) {
-          if (!first) sb.append(' ')
-          sb.append(toks.getUTF8String(j).toString)
-          first = false
-        }
-        j += 1
-      }
-      out(i) = UTF8String.fromString(sb.toString)
-      i += 1
-    }
+    foreachShingle(toks, k) { s => out(i) = UTF8String.fromString(s); i += 1 }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
@@ -1062,43 +1018,24 @@ case class KgramRollingHashes(child: Expression, k: Int)
     copy(child = c)
 }
 
-case class BandMins(child: Expression, numBands: Int)
+case class WordShingleMinhash(child: Expression, k: Int, numBands: Int)
     extends UnaryExpression {
   override def nullable: Boolean = true
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(v: Any): Any =
-    ExprHelpers.bandMins(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], numBands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ExprHelpers.bandMins($c, $numBands);
-      ${ev.isNull} = ${ev.value} == null;""")
-
-  override protected def withNewChildInternal(c: Expression): BandMins =
-    copy(child = c)
-}
-
-case class WordShingleBandMins(child: Expression, k: Int, numBands: Int)
-    extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.wordShingleBandMins(
+    ExprHelpers.wordShingleMinhash(
       v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       k, numBands)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
       ${ev.value} =
-        graft.functions.ExprHelpers.wordShingleBandMins($c, $k, $numBands);
+        graft.functions.ExprHelpers.wordShingleMinhash($c, $k, $numBands);
       ${ev.isNull} = ${ev.value} == null;""")
 
-  override protected def withNewChildInternal(c: Expression): WordShingleBandMins =
+  override protected def withNewChildInternal(c: Expression): WordShingleMinhash =
     copy(child = c)
 }
 
@@ -1640,11 +1577,9 @@ object Expressions {
     ColumnBridge.column(KgramRollingHashes(ColumnBridge.expression(c), k))
   def window_mins(c: Column, w: Int): Column =
     ColumnBridge.column(WindowMins(ColumnBridge.expression(c), w))
-  def band_mins(c: Column, numBands: Int): Column =
-    ColumnBridge.column(BandMins(ColumnBridge.expression(c), numBands))
-  def word_shingle_band_mins(c: Column, k: Int, numBands: Int): Column =
+  def word_shingle_minhash(c: Column, k: Int, numBands: Int): Column =
     ColumnBridge.column(
-      WordShingleBandMins(ColumnBridge.expression(c), k, numBands))
+      WordShingleMinhash(ColumnBridge.expression(c), k, numBands))
   def shingle_hash_bands(c: Column, k: Int, numBands: Int): Column =
     ColumnBridge.column(
       ShingleHashBands(ColumnBridge.expression(c), k, numBands))

@@ -66,6 +66,21 @@ object McpServer {
         Sources.ReadOptions.of(spec.dataset)), spec)
     }
 
+    /** The next `mcp-N` id that has no registry row, claimed by creating
+      * its run dir: the creation is atomic, so neither another run of
+      * this server nor another server over the same work dir (whose
+      * counter also starts at 1) can be handed the same id, row or
+      * ledger. */
+    private def claimRunId(): String = {
+      val root = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(workDir))
+      Iterator.continually(s"mcp-${counter.incrementAndGet()}").find { id =>
+        registry.get(id).isEmpty &&
+          (try { java.nio.file.Files.createDirectory(root.resolve(id)); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false })
+      }.get
+    }
+
     /** Starts the run on a daemon thread and returns its `mcp-N` id. The
       * run's events land on that registry row, so it ends SUCCEEDED,
       * PARTIAL or FAILED by the same rule as `graft.Main process
@@ -80,11 +95,10 @@ object McpServer {
         s"budget must be positive, got $budget — a tool client may not " +
           "start an unbounded spend")
       ConfigLoader.fromYaml(configYaml)
-      val runId = s"mcp-${counter.incrementAndGet()}"
+      val runId = claimRunId()
       val runDir = s"$workDir/$runId"
-      val config = java.nio.file.Files.writeString(java.nio.file.Files
-        .createDirectories(java.nio.file.Paths.get(workDir))
-        .resolve(s"$runId.yaml"), configYaml)
+      val config = java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(workDir, s"$runId.yaml"), configYaml)
       registry.register(runId, runDir)
       outputs.put(runId, outputPath)
       val worker = new Thread(() => {

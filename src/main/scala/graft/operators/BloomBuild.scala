@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Shared builder for the one-shot bloom filters behind
-  * [[Dedup.dropSeenBefore]] and [[Decontamination.flagContaminatedBloom]].
+  * [[Dedup.dropSeenBefore]], [[Dedup.dropNearSeenBefore]],
+  * [[Dedup.dropDuplicateLines]] and [[SeenLedger]].
   *
   * Spark's `BloomFilterAggregate` silently clamps its size to
   * `spark.sql.optimizer.runtime.bloomFilter.{maxNumItems,maxNumBits}`

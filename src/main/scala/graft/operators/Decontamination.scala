@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -54,59 +54,6 @@ object Decontamination {
     val hits = trainSh
       .select(col(idCol), explode(col("sh")).as("g"))
       .join(broadcast(evalGrams), Seq("g"))
-      .select(col(idCol), col("g")).distinct()
-      .groupBy(idCol).agg(count(lit(1)).as("matched_shingles"))
-    trainSh.select(idCol).join(hits, Seq(idCol), "left").select(
-      col(idCol),
-      coalesce(col("matched_shingles"), lit(0L)).as("matched_shingles"),
-      when(col("matched_shingles").isNotNull, 1).otherwise(0)
-        .as("contaminated"))
-  }
-
-  /** Bloom-prefiltered variant for eval sets too large to broadcast as a
-    * hash relation: the eval shingles compress into one bloom filter
-    * (~9 bits/item at 3% fpp — 10^8 shingles ≈ 110 MB, still a single
-    * broadcastable binary), the corpus side drops every gram the bloom
-    * rejects MAP-SIDE (no false negatives, so nothing real is lost), and
-    * only the tiny surviving candidate set enters the exact-confirm join
-    * that removes bloom false positives. Output is IDENTICAL to
-    * [[flagContaminated]] — the bloom only prunes join input, never
-    * changes the answer. Spark's own runtime row-level filtering uses the
-    * same BloomFilterAggregate / might_contain pair; here it is applied
-    * declaratively through the bridge. */
-  def flagContaminatedBloom(train: DataFrame, eval: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    def shingled(df: DataFrame): DataFrame =
-      shingledBarrier(df, idCol, textCol, k)
-    val trainSh = shingled(train)
-    def distinctEvalGrams: DataFrame =
-      shingled(eval).select(explode(col("sh")).as("g")).distinct()
-    // cached only across the two eager jobs (count + bloom build), then
-    // released — repeated calls in a long session leak no cached blocks;
-    // the lazy confirm join below recomputes the distinct once at
-    // materialization (eval sets are the small side by construction)
-    val evalCached = distinctEvalGrams
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bloomBytes =
-      try {
-        val nEval = evalCached.count()
-        if (nEval == 0)
-          return trainSh.select(col(idCol),
-            lit(0L).as("matched_shingles"), lit(0).as("contaminated"))
-        // sized to the real gram count — not clamped to Spark's 4M-item
-        // runtime-pruning default (see BloomBuild)
-        BloomBuild.bloomBytes(evalCached, xxhash64(col("g")), nEval)
-      } finally evalCached.unpersist(blocking = false)
-    val mightContain = BloomBuild.mightContain(bloomBytes, xxhash64(col("g")))
-
-    // bloom prune, then exact broadcast confirm, THEN distinct: both
-    // filters run map-side before anything shuffles, so the distinct
-    // processes only true hits plus nothing (the join already killed the
-    // bloom's false positives)
-    val hits = trainSh
-      .select(col(idCol), explode(col("sh")).as("g"))
-      .filter(mightContain) // map-side prune: only bloom-passing grams move
-      .join(broadcast(distinctEvalGrams), Seq("g")) // exact confirm kills FPs
       .select(col(idCol), col("g")).distinct()
       .groupBy(idCol).agg(count(lit(1)).as("matched_shingles"))
     trainSh.select(idCol).join(hits, Seq(idCol), "left").select(

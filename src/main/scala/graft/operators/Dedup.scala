@@ -133,44 +133,16 @@ object Dedup {
     val df = Parallelism.ensure(df0)
     // fused native kernel: tokens -> distinct shingles -> band minima in
     // ONE expression — no shingle-array or hex-array ever materializes
-    // (the declarative chain built both; see bandSignatures for the
-    // shared-arithmetic contract). One barrier so the per-band
+    // (the declarative chain built both; the kernel replays its
+    // sha256/hex-slice arithmetic byte for byte, which the DuckDB
+    // oracles replay too). One barrier so the per-band
     // element_at projection reads a materialized array instead of
     // re-evaluating the kernel numBands times.
-    val bm = graft.functions.Expressions.word_shingle_band_mins(
+    val bm = graft.functions.Expressions.word_shingle_minhash(
       tokens(col(textCol)), shingleSize, numBands)
     val mat = Parallelism.barrier(
       df.select(col(idCol), bm.as("__graft_bm")))
     mat.select(col(idCol) +: (0 until numBands).map(b =>
-      element_at(col("__graft_bm"), b + 1).as(s"band_$b")): _*)
-  }
-
-  /** Append band_0..band_{numBands-1} MinHash columns computed from a
-    * shingle-array expression, keeping only `keep` columns.
-    *
-    * Hash-slicing: one sha256 per shingle yields FOUR independent 60-bit
-    * lanes (64 hex chars = 4 × 15-char slices), so bands come in groups
-    * of 4 per digest — a 4-band signature costs ONE digest pass per
-    * shingle where the salted-md5-per-band formulation cost four. Two
-    * [[Parallelism.barrier]] stages keep every pass single: the shingle
-    * chain materializes once (not once per digest group), then the digest
-    * arrays materialize once (not once per band) — measured 4× overcost
-    * at 10× without them. Portable: DuckDB replays the identical
-    * arithmetic via sha256()/substr()/::UBIGINT. */
-  private[operators] def bandSignatures(df: DataFrame, keep: Seq[String],
-      sh: Column, numBands: Int): DataFrame = {
-    // native digest kernel per shingle array: per group g of 4 bands,
-    // sha256("g|" + shingle), band value = hex chars [lane·15, +15) as
-    // an unsigned 60-bit integer — byte-for-byte the arithmetic of the
-    // declarative transform(sha2)/conv(substring) chain the DuckDB
-    // oracles replay, WITHOUT materializing hex-string arrays between
-    // two barrier stages (measured q34 at 10×: the hex/conv form cost
-    // ~2× the digests alone). One barrier so the per-band element_at
-    // projection reads a materialized minima array.
-    val mat = Parallelism.barrier(df.select(keep.map(col) :+
-      graft.functions.Expressions.band_mins(sh, numBands)
-        .as("__graft_bm"): _*))
-    mat.select(keep.map(col) ++ (0 until numBands).map(b =>
       element_at(col("__graft_bm"), b + 1).as(s"band_$b")): _*)
   }
 
@@ -179,13 +151,6 @@ object Dedup {
     * `maxBucketSize` skips degenerate buckets (boilerplate content that
     * collides everywhere) — the standard guard against quadratic bucket
     * blowup at scale; real near-dups still meet in their other bands. */
-  def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-                        numBands: Int = 8, shingleSize: Int = 3,
-                        maxBucketSize: Int = 100): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, numBands, shingleSize)
-    candidatesFromSignatures(sigs, idCol, numBands, maxBucketSize)
-  }
-
   private def candidatesFromSignatures(sigs: DataFrame, idCol: String,
                                        numBands: Int,
                                        maxBucketSize: Int): DataFrame = {
@@ -275,15 +240,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Greedy near-dup removal: drop every doc that has a CONFIRMED
-    * (Jaccard ≥ threshold) near-duplicate with a smaller id; the min-id
-    * doc of each dup relation survives. This is the standard greedy
-    * keep-min rule over [[nearDuplicatePairs]] — not transitive-closure
-    * clustering (exact connected components needs iterative joins): if
-    * B dups A and C dups B but not A, both B and C drop even though C's
-    * only "keeper" was itself dropped. For corpus curation that bias is
-    * the safe direction (over-dropping borderline chains), and the rule
-    * is deterministic and single-pass at any scale. */
   /** Exact CONTAINMENT-similarity pairs — the asymmetric near-dup the
     * Jaccard family misses: a short document quoted inside a much
     * longer one has |A∩B|/|A| ≈ 1 but Jaccard |A∩B|/|A∪B| ≈ |A|/|B|,
@@ -311,26 +267,10 @@ object Dedup {
     require(shingleSize >= 1 && shingleSize <= 16, s"bad k=$shingleSize")
     require(threshold > 0.0 && threshold <= 1.0, s"bad threshold=$threshold")
     require(maxDf >= 2, s"maxDf=$maxDf must allow a pair")
-    val df = Parallelism.ensure(df0)
-    // the native shingle kernel's "hsh" lane is already per-doc
-    // DISTINCT 60-bit md5 shingle hashes — no distinct() shuffle needed
-    val sh = Parallelism.stage(df.select(col(idCol).as("__graft_id"),
-      explode(graft.functions.Expressions.shingle_hash_bands(
-        tokens(lower(col(textCol))), shingleSize, 1).getField("hsh"))
-        .as("__graft_s")))
-    val kept = Parallelism.stage(sh.join(
-      sh.groupBy(col("__graft_s")).agg(count(lit(1)).as("__graft_df"))
-        .filter(col("__graft_df") <= maxDf)
-        .select(col("__graft_s")),
-      Seq("__graft_s"), "left_semi"))
+    val (kept, pairs) = cappedShinglePairs(
+      Parallelism.ensure(df0), idCol, textCol, shingleSize, maxDf)
     val sizes = kept.groupBy(col("__graft_id"))
       .agg(count(lit(1)).as("__graft_sz"))
-    val pairs = kept.select(col("__graft_s"), col("__graft_id").as("id_a"))
-      .join(kept.select(col("__graft_s"), col("__graft_id").as("id_b")),
-        Seq("__graft_s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
     val cAb = col("inter").cast("double") / col("size_a").cast("double")
     val cBa = col("inter").cast("double") / col("size_b").cast("double")
     pairs
@@ -344,15 +284,45 @@ object Dedup {
         round(cAb, 6).as("c_ab"), round(cBa, 6).as("c_ba"))
   }
 
+  /** The df-capped shingle inverted index [[containmentPairs]] and
+    * [[fuzzyDuplicatePairs]] both join over. Postings are the native
+    * kernel's per-doc DISTINCT 60-bit md5 shingle hashes of the
+    * lower-cased text (asked for 0 bands, so no sha256 band digest runs;
+    * no distinct() shuffle needed); shingles in more than `maxDf` docs
+    * are dropped before pairing, so per-shingle pair fan-out is at most
+    * maxDf². Returns the staged capped postings (`__graft_id`,
+    * `__graft_s`) and the pairs (id_a, id_b, inter), id_a < id_b, where
+    * `inter` counts the capped shingles the two docs share. */
+  private def cappedShinglePairs(df: DataFrame, idCol: String,
+      textCol: String, shingleSize: Int,
+      maxDf: Int): (DataFrame, DataFrame) = {
+    val sh = Parallelism.stage(df.select(col(idCol).as("__graft_id"),
+      explode(graft.functions.Expressions.shingle_hash_bands(
+        tokens(lower(col(textCol))), shingleSize, 0).getField("hsh"))
+        .as("__graft_s")))
+    val kept = Parallelism.stage(sh.join(
+      sh.groupBy(col("__graft_s")).agg(count(lit(1)).as("__graft_df"))
+        .filter(col("__graft_df") <= maxDf)
+        .select(col("__graft_s")),
+      Seq("__graft_s"), "left_semi"))
+    val pairs = kept.select(col("__graft_s"), col("__graft_id").as("id_a"))
+      .join(kept.select(col("__graft_s"), col("__graft_id").as("id_b")),
+        Seq("__graft_s"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("inter"))
+    (kept, pairs)
+  }
+
   /** Typo-tolerant duplicate pairs — EDIT-DISTANCE confirmation over
     * shingle-blocked candidates: the record-linkage primitive for
     * near-identical strings (OCR'd twins, typo'd re-submissions,
     * boilerplate with one token swapped) where MinHash thresholds are
     * cruder than "at most k edits".
     *
-    * Blocking reuses the [[containmentPairs]] df-capped inverted
-    * index (postings are the native kernel's distinct shingle hashes,
-    * never text; per-shingle fan-out ≤ maxDf²); candidate pairs must
+    * Blocking is the df-capped inverted index of [[containmentPairs]]
+    * ([[cappedShinglePairs]]: shingle-hash postings, never text,
+    * per-shingle fan-out ≤ maxDf²); candidate pairs must
     * share ≥ `minShared` capped shingles BEFORE any text moves — a
     * k-edit pair at shingle size s loses at most k·s shingles, so
     * `minShared` trades candidate volume against the shortest
@@ -367,21 +337,7 @@ object Dedup {
     require(maxDist >= 1 && maxDist <= 100, s"bad maxDist=$maxDist")
     require(minShared >= 1, s"bad minShared=$minShared")
     val df = Parallelism.ensure(df0)
-    val sh = Parallelism.stage(df.select(col(idCol).as("__graft_id"),
-      explode(graft.functions.Expressions.shingle_hash_bands(
-        tokens(lower(col(textCol))), shingleSize, 1).getField("hsh"))
-        .as("__graft_s")))
-    val kept = Parallelism.stage(sh.join(
-      sh.groupBy(col("__graft_s")).agg(count(lit(1)).as("__graft_df"))
-        .filter(col("__graft_df") <= maxDf)
-        .select(col("__graft_s")),
-      Seq("__graft_s"), "left_semi"))
-    val pairs = kept.select(col("__graft_s"), col("__graft_id").as("id_a"))
-      .join(kept.select(col("__graft_s"), col("__graft_id").as("id_b")),
-        Seq("__graft_s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
+    val pairs = cappedShinglePairs(df, idCol, textCol, shingleSize, maxDf)._2
       .filter(col("inter") >= minShared)
     val txt = df.select(col(idCol), col(textCol))
     pairs
@@ -395,6 +351,15 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("inter"), col("dist"))
   }
 
+  /** Greedy near-dup removal: drop every doc that has a CONFIRMED
+    * (Jaccard ≥ threshold) near-duplicate with a smaller id; the min-id
+    * doc of each dup relation survives. This is the standard greedy
+    * keep-min rule over [[nearDuplicatePairs]] — not transitive-closure
+    * clustering (exact connected components needs iterative joins): if
+    * B dups A and C dups B but not A, both B and C drop even though C's
+    * only "keeper" was itself dropped. For corpus curation that bias is
+    * the safe direction (over-dropping borderline chains), and the rule
+    * is deterministic and single-pass at any scale. */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                          numBands: Int = 8, shingleSize: Int = 3,
                          threshold: Double = 0.5,
@@ -627,15 +592,11 @@ object Dedup {
     // is untouched
     graft.functions.Expressions.simhash_agg(toks, bits)
 
-  /** Hamming distance between two simhash signatures. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Corpus-level duplicate-LINE removal — the C4/RefinedWeb boilerplate
     * scrub: any line whose exact text occurs more than `maxOccurrences`
     * times across the WHOLE corpus is removed from every document that
     * contains it (nav bars, cookie banners, "subscribe" footers);
-    * surviving lines re-join in original order under the same separator.
+    * lines split on "\n" and the survivors re-join in original order.
     * Output = input columns with `textCol` rewritten + `n_lines_dropped`.
     *
     * Scale shape (text must never ride the census):
@@ -658,10 +619,9 @@ object Dedup {
     * codegen'd, index-exact (ties of identical text in one doc drop all
     * copies, which is what a corpus count > maxOccurrences implies). */
   def dropDuplicateLines(df: DataFrame, idCol: String, textCol: String,
-      maxOccurrences: Long = 1, sep: String = "\n"): DataFrame = {
+      maxOccurrences: Long = 1): DataFrame = {
     require(maxOccurrences >= 1, "maxOccurrences must be >= 1")
-    val sepRe = java.util.regex.Pattern.quote(sep)
-    val parts = split(col(textCol), sepRe, -1) // limit -1 keeps trailing ""
+    val parts = split(col(textCol), "\n", -1) // limit -1 keeps trailing ""
     val hashed = df
       .select(col(idCol), posexplode(parts).as(Seq("__graft_idx", "__graft_line")))
       .withColumn("__graft_h", xxhash64(col("__graft_line")))
@@ -692,7 +652,7 @@ object Dedup {
       df.join(dropIdx, Seq(idCol), "left")
         .withColumn("n_lines_dropped", size(dropArr))
         .withColumn(textCol, array_join(
-          filter(parts, (_, i) => !array_contains(dropArr, i)), sep))
+          filter(parts, (_, i) => !array_contains(dropArr, i)), "\n"))
         .drop("__graft_drop")
     } finally hot.unpersist(blocking = false)
   }
@@ -701,7 +661,7 @@ object Dedup {
     * in-page dedup (navigation chrome, repeated banners, copy-pasted
     * paragraphs inside one page), complementary to the corpus-global
     * [[dropDuplicateLines]]: here each document is scrubbed against
-    * ITSELF, keeping the first occurrence of every line.
+    * ITSELF, keeping the first occurrence of every "\n"-separated line.
     *
     * Pure per-row map — split, keep-first filter, reassemble — with no
     * shuffle and no census: the 100 TB cost is one pass over the text
@@ -715,8 +675,7 @@ object Dedup {
     * short structural lines (blanks, separators) unconditionally, the
     * usual production guard against collapsing formatting. */
   def dropRepeatedLinesWithin(df: DataFrame, textCol: String,
-      minChars: Int = 0, sep: String = "\n"): DataFrame = {
-    val sepRe = java.util.regex.Pattern.quote(sep)
+      minChars: Int = 0): DataFrame = {
     // two barriers keep the claim honest: without them projection
     // collapse inlines the split into every keep-first lambda invocation
     // (re-splitting the whole document per line) and inlines the
@@ -726,11 +685,11 @@ object Dedup {
     val kept = col("__graft_kept")
     Parallelism.barrier(
       Parallelism.barrier(
-        df.withColumn("__graft_parts", split(col(textCol), sepRe, -1)))
+        df.withColumn("__graft_parts", split(col(textCol), "\n", -1)))
         .withColumn("__graft_kept", filter(parts, (l, i) =>
           (length(l) < minChars) || (array_position(parts, l) === i + 1))))
       .withColumn("n_lines_dropped", size(parts) - size(kept))
-      .withColumn(textCol, array_join(kept, sep))
+      .withColumn(textCol, array_join(kept, "\n"))
       .drop("__graft_parts", "__graft_kept")
   }
 

@@ -15,9 +15,12 @@ import graft.run.{BudgetExceededException, Enricher}
   * backpressure and lookahead, and `foreachBatch` runs the same Enricher
   * used in batch mode).
   *
-  * Cumulative budget across micro-batches (reference :1460-1462): spend
-  * accumulates driver-side; when the cap trips the query is stopped —
-  * rows already enriched are already written (micro-batch durability).
+  * Cumulative budget across micro-batches (reference :1460-1462): the
+  * spec's `processing.maxBudget` caps the whole stream, not each batch.
+  * Spend accumulates driver-side; the batch whose spend crosses the cap
+  * still reaches the sink, then the query fails with
+  * [[BudgetExceededException]] — rows already enriched are already
+  * written (micro-batch durability).
   */
 object StreamingEnrich {
 
@@ -47,13 +50,13 @@ object StreamingEnrich {
   def start(stream: DataFrame, spec: PipelineSpec, client: LlmClient,
             checkpointDir: String,
             sink: (DataFrame, Long) => Unit,
-            maxBudget: Option[BigDecimal] = None,
             drainAll: Boolean = true,
             runDir: Option[String] = None,
             keyColumn: Option[String] = None,
             retainLedgers: Boolean = false): StreamingQuery = {
     // strip the budget from the per-batch spec: enforcement is cumulative
     // across batches out here, not per-batch in there
+    val maxBudget = spec.processing.maxBudget
     val batchSpec = spec.copy(processing =
       spec.processing.copy(maxBudget = None))
     var spent = java.math.BigDecimal.ZERO

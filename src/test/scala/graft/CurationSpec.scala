@@ -97,26 +97,11 @@ class CurationSpec extends SparkSpec {
     assert(r == Seq((1L, 2L, 1), (2L, 0L, 0), (3L, 1L, 1)))
   }
 
-  test("bloom decontamination: identical output to the exact path") {
-    val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val train = docs.filter(col("doc_id") % 50 =!= 0)
-    val ev = docs.filter(col("doc_id") % 50 === 0)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").as[(Long, Long, Int)].collect().toSeq
-    val exact = rows(graft.operators.Decontamination
-      .flagContaminated(train, ev, "doc_id", "text", 3))
-    val bloom = rows(graft.operators.Decontamination
-      .flagContaminatedBloom(train, ev, "doc_id", "text", 3))
-    assert(exact == bloom)
-    assert(exact.exists(_._3 == 1) && exact.exists(_._3 == 0))
-  }
-
-  test("bloom decontamination: empty eval set -> all clean") {
+  test("decontamination: empty eval set -> all clean") {
     val train = Seq((1L, "a b c d e")).toDF("doc_id", "text")
     val emptyEv = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val r = graft.operators.Decontamination
-      .flagContaminatedBloom(train, emptyEv, "doc_id", "text", 3)
+      .flagContaminated(train, emptyEv, "doc_id", "text", 3)
       .as[(Long, Long, Int)].collect().toSeq
     assert(r == Seq((1L, 0L, 0)))
   }
@@ -479,10 +464,12 @@ class CurationSpec extends SparkSpec {
   }
 
   test("native band kernel matches declarative sha256/hex-slice formula") {
-    // minhashSignatures' fused kernel (and bandSignatures' BandMins)
+    // minhashSignatures' fused kernel and shingle_hash_bands' bm lane
     // must reproduce the transform(sha2)/conv(substring) arithmetic the
     // DuckDB oracles replay — byte for byte, including the <k-token
-    // null bands, null text, duplicate shingles, and non-ASCII
+    // null bands, null text, duplicate shingles, and non-ASCII; at
+    // numBands = 0 (no band digests, the containment/fuzzy-pair shape)
+    // the hsh lane must still equal the declarative hash set
     import graft.functions.TextFunctions.{shingles, tokens}
     val rnd = new scala.util.Random(11)
     val words = Vector("alpha", "beta", "gamma", "délta", "eps", "z")
@@ -493,7 +480,7 @@ class CurationSpec extends SparkSpec {
         (1 to 2 + rnd.nextInt(25)).map(_ => words(rnd.nextInt(6)))
           .mkString(" ")))))
       .toDF("doc_id", "text")
-    for ((numBands, k) <- Seq((8, 3), (4, 2), (6, 3))) {
+    for ((numBands, k) <- Seq((8, 3), (4, 2), (6, 3), (0, 3))) {
       val declarative = {
         val groups = (numBands + 3) / 4
         val sh = array_distinct(shingles(tokens(col("text")), k))

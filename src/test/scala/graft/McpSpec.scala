@@ -269,6 +269,38 @@ class McpSpec extends SparkSpec {
     assert(spark.read.parquet(o).count() == 30)
   }
 
+  test("two servers over one work dir never share a run id or run dir") {
+    import scala.jdk.CollectionConverters._
+    val work = Files.createTempDirectory("graft_mcp_two").toString
+    val cfg = "dataset:\n  input_columns: [text]\nprompt:\n  " +
+      "template: \"MT: {text}\"\noutput:\n  output_columns: [res]"
+    def files(runId: String): Set[String] = {
+      val d = java.nio.file.Paths.get(work, runId)
+      val walk = Files.walk(d)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(d.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    // each server numbers its runs from 1; the second starts after the
+    // first one's run has ended, as a restarted server would
+    val first = new McpServer.Service(spark, new MockLlmClient(), work)
+    val a = first.run(cfg, csv(Seq("x 1", "x 2")), out(), BigDecimal(5))
+    assert(await(first, a).path("state").asText == "SUCCEEDED")
+    val aFiles = files(a)
+    assert(aFiles.nonEmpty, "the run wrote nothing into its run dir")
+    val second = new McpServer.Service(spark, new MockLlmClient(), work)
+    val o = out()
+    val b = second.run(cfg, csv(Seq("y 1", "y 2", "y 3")), o, BigDecimal(5))
+    assert(b != a, s"second server re-issued $a")
+    val st = await(second, b)
+    assert(st.path("state").asText == "SUCCEEDED", st.toString)
+    assert(st.path("rows").asLong == 3)
+    assert(second.collect(b).path("output_path").asText == o)
+    assert(files(b).nonEmpty)
+    assert(files(a) == aFiles, "the second run wrote into the first's dir")
+    assert(first.status(a).path("rows").asLong == 2)
+  }
+
   test("list-checkpoints (CLI and MCP) counts the ledger of a file: run dir") {
     val work = Files.createTempDirectory("graft_mcp_uri").toString
     val service = new McpServer.Service(spark, new MockLlmClient(), work)

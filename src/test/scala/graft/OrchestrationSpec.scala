@@ -377,6 +377,41 @@ class StreamingEnrichSpec extends SparkSpec {
     assert(got("msg 7") == MockLlmClient.md5Hex("S:msg 7"))
   }
 
+  test("the spec's budget caps the whole stream: fails after the crossing batch") {
+    val srcDir = Files.createTempDirectory("graft_stream_cap_in").toString
+    val ckpt = Files.createTempDirectory("graft_stream_cap_ckpt").toString
+    // four one-file batches of equal-length rows, so each costs the same
+    for (f <- 0 until 4)
+      (0 until 10).map(i => s"capped $f $i").toDF("text")
+        .coalesce(1).write.parquet(s"$srcDir/f$f")
+    val spec = PipelineSpec(
+      dataset = DatasetSpec(Seq("text")),
+      prompt = PromptSpec("C:{text}"),
+      output = OutputSpec(Seq("out")))
+    val perBatch = BigDecimal(new Enricher(spec, new MockLlmClient())
+      .enrich((0 until 10).map(i => s"capped 0 $i").toDF("text"))
+      .metrics.cost)
+    assert(perBatch > 0)
+    // no single batch reaches the cap; the first two together do
+    val capped = spec.copy(processing =
+      spec.processing.copy(maxBudget = Some(perBatch * 1.5)))
+    val sunk = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val stream = spark.readStream.schema("text STRING")
+      .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*")
+    val q = graft.streaming.StreamingEnrich.start(
+      stream, capped, new MockLlmClient(), ckpt,
+      (batch, bid) => batch.collect().foreach(_ => sunk.add(bid)))
+    val e = intercept[Exception](q.awaitTermination())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[BudgetExceededException]),
+      s"expected a budget stop, got $e")
+    import scala.jdk.CollectionConverters._
+    // the crossing batch still reached the sink; nothing after it did
+    assert(sunk.asScala.toSeq.groupBy(identity).map { case (b, r) =>
+      b -> r.size } == Map(0L -> 10, 1L -> 10))
+  }
+
   test("scopedShufflePartitions: concurrent drains at their own counts, parent conf untouched") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val key = "spark.sql.shuffle.partitions"

@@ -244,16 +244,6 @@ class PlanSpec extends SparkSpec {
       s"corpus text crossed a shuffle:\n${exchanges.mkString("\n")}")
   }
 
-  test("bloom decontamination prunes map-side before the confirm join") {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val p = plan(graft.operators.Decontamination.flagContaminatedBloom(
-      docs.filter(col("doc_id") % 50 =!= 0),
-      docs.filter(col("doc_id") % 50 === 0), "doc_id", "text", 3))
-    assert(p.contains("might_contain"),
-      s"bloom prefilter missing from the plan:\n$p")
-    assert(p.contains("BroadcastHashJoin"), "confirm join must broadcast")
-  }
-
   test("line dedup: doc text never shuffles; bloom prunes map-side") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("text", concat_ws("\n", lit("BANNER"), col("text")))

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Print the size of the engine's main code, the graft.* conf keys it reads,
-and the default-valued parameters a caller can set.
+the default-valued parameters a caller can set, and the public members no
+other file names.
 
     python3 tools/size_report.py [--list] [--against OTHER_ROOT] [REPO_ROOT]
 
@@ -16,12 +17,27 @@ start and `def`) hold no `private` (so `private[graft]` is private too) and
 the parameter has a top-level `=` after its name (`x: Int = 5`; the `=>` of
 a function type is not one). Comments and string literals are blanked first.
 The enclosing class's visibility is not looked at, and case-class and class
-constructor fields are not defs, so neither counts. `--list` also prints
-each counted parameter as `file:line def param` (file relative to the repo
-root). `--against OTHER_ROOT` also prints OTHER_ROOT's totals and the knobs
-removed (in OTHER_ROOT only, at its line) and added (here only, at this
-tree's line) between the two checkouts, matched by (file, def, param) so
-lines shifted by other edits do not show as changes. Stdlib only.
+constructor fields are not defs, so neither counts.
+
+An unreferenced public member is a `def`, `val`, `var`, `type`, `class`,
+`trait` or `object` declared directly in the body of a class, trait or
+object under src/main (top-level declarations, locals inside a method body
+and members of anonymous classes are not members), with no `private`,
+`protected`, `override` or `implicit` among its modifiers, whose name occurs
+as a whole word in no other `.scala` file under src/ or perfbench/src
+(comments and string literals blanked). Names the language or the JVM call
+without naming them (`apply`, `unapply`, `main`, `toString`, ...) are
+skipped, and, as for parameters, the enclosing class's visibility is not
+looked at. A name shared with an unrelated member elsewhere counts as a
+reference, so the count errs low.
+
+`--list` also prints each counted parameter as `file:line def param` and
+each unreferenced member as `file:line kind name` (file relative to the
+repo root). `--against OTHER_ROOT` also prints OTHER_ROOT's totals (the
+unreferenced-member count included) and the knobs removed (in OTHER_ROOT
+only, at its line) and added (here only, at this tree's line) between the
+two checkouts, matched by (file, def, param) so lines shifted by other
+edits do not show as changes. Stdlib only.
 """
 import os
 import re
@@ -33,6 +49,14 @@ KEY_READ = re.compile(
 DEF = re.compile(r'\bdef\s+([^\s(\[:=]+)')
 PARAM_NAME = re.compile(r'\s*(?:implicit\s+)?(?:(?:val|var)\s+)?([^\s:]+)')
 PRIVATE = re.compile(r'\bprivate\b')
+MEMBER = re.compile(
+    r'\b(def|val|var|type|class|trait|object)\s+([A-Za-z_][A-Za-z0-9_]*)')
+TEMPLATE_KW = re.compile(r'\b(class|object|trait|def|val|var)\b')
+HIDDEN = re.compile(r'\b(private|protected|override|implicit)\b')
+NESTED = re.compile(r'\([^()]*\)|\[[^\[\]]*\]')
+IDENT = re.compile(r'[A-Za-z_][A-Za-z0-9_]*')
+IMPLICIT_NAMES = {"apply", "unapply", "unapplySeq", "update", "main",
+                  "toString", "equals", "hashCode", "this", "readResolve"}
 
 
 def blank_comments_and_strings(src):
@@ -157,6 +181,78 @@ def default_params(src):
     return found
 
 
+def template_depths(code):
+    """For each offset of `code`, whether its innermost enclosing brace
+    opens a class, trait or object body (top level counts as not)."""
+    inside = [False] * len(code)
+    stack = []
+    last = 0  # offset just past the previous structural `{`, `}` or `;`
+    for k, c in enumerate(code):
+        inside[k] = bool(stack) and stack[-1]
+        if c == "{":
+            seg, prev = code[last:k], None
+            while seg != prev:  # keywords inside (...) and [...] do not count
+                seg, prev = NESTED.sub(" ", seg), seg
+            kws = TEMPLATE_KW.findall(seg)
+            stack.append(bool(kws) and kws[-1] in ("class", "object", "trait"))
+            last = k + 1
+        elif c == "}":
+            if stack:
+                stack.pop()
+            last = k + 1
+        elif c == ";":
+            last = k + 1
+    return inside
+
+
+def public_members(code):
+    """The public members declared in template bodies of blanked `code`,
+    as (line, kind, name) triples."""
+    inside = template_depths(code)
+    found = []
+    for m in MEMBER.finditer(code):
+        kind, name = m.group(1), m.group(2)
+        if not inside[m.start()] or name in IMPLICIT_NAMES:
+            continue
+        stmt_start = max(code.rfind(c, 0, m.start()) for c in "\n;{}(,") + 1
+        if HIDDEN.search(code, stmt_start, m.start()):
+            continue
+        # a `val`/`var` inside a parameter list is a constructor field,
+        # and `case` marks a pattern, not a declaration
+        if code[stmt_start - 1:stmt_start] in "(," and stmt_start > 0:
+            continue
+        found.append((code.count("\n", 0, m.start()) + 1, kind, name))
+    return found
+
+
+def unreferenced_members(root):
+    """Public src/main members whose name occurs in no other .scala file
+    under src/ or perfbench/src, as (file, line, kind, name)."""
+    codes = {}
+    for top in (os.path.join(root, "src"),
+                os.path.join(root, "perfbench", "src")):
+        for dirpath, _, names in os.walk(top):
+            for name in names:
+                if name.endswith(".scala"):
+                    path = os.path.join(dirpath, name)
+                    with open(path, encoding="utf-8", errors="replace") as fh:
+                        codes[os.path.relpath(path, root)] = \
+                            blank_comments_and_strings(fh.read())
+    files_with = {}
+    for rel, code in codes.items():
+        for ident in set(IDENT.findall(code)):
+            files_with.setdefault(ident, set()).add(rel)
+    main_prefix = os.path.join("src", "main") + os.sep
+    out = []
+    for rel, code in sorted(codes.items()):
+        if not rel.startswith(main_prefix):
+            continue
+        for ln, kind, name in public_members(code):
+            if files_with.get(name, set()) <= {rel}:
+                out.append((rel, ln, kind, name))
+    return out
+
+
 def scan(root):
     """(lines, files, conf keys, [(file, line, def, param)]) of src/main."""
     main_dir = os.path.join(root, "src", "main")
@@ -214,12 +310,20 @@ def main():
     if listing:
         for rel, ln, d, p in sorted(params):
             print(f"{rel}:{ln} {d} {p}")
+    unref = unreferenced_members(root)
+    print(f"public members never referenced outside their own file: "
+          f"{len(unref)}")
+    if listing:
+        for rel, ln, kind, name in unref:
+            print(f"{rel}:{ln} {kind} {name}")
     if against:
         o_lines, o_files, _, o_params = scan(against)
         removed, added = knob_diff(o_params, params)
         print(f"against {against}: {o_lines:,} -> {lines:,} lines, "
               f"{o_files} -> {files} files, "
-              f"{len(o_params)} -> {len(params)} default-valued parameters")
+              f"{len(o_params)} -> {len(params)} default-valued parameters, "
+              f"{len(unreferenced_members(against))} -> {len(unref)} "
+              "unreferenced public members")
         print(f"knobs removed: {len(removed)}")
         for rel, ln, d, p in removed:
             print(f"- {rel}:{ln} {d} {p}")
