@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.{CurationFunctions, NfcNormalize, TextFunctions,
-  WordBoundaryTruncate}
+import graft.functions.{CurationFunctions, Expressions, TextFunctions}
 
 /** SparkSessionExtensions registration: exposes the engine's native
-  * expressions AND the composed text/curation functions to SQL users —
+  * kernels AND the composed text/curation functions to SQL users —
   *
   *   spark.sql("SELECT graft_nfc(text), graft_truncate_words(text, 100), " +
   *     "graft_redact_pii(text), graft_quality_score(text) ...")
@@ -19,22 +18,27 @@ import graft.functions.{CurationFunctions, NfcNormalize, TextFunctions,
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`.
   *
-  * Composed functions register through the Column→Expression bridge, so
-  * SQL callers get the exact same Catalyst tree (and codegen) as the
-  * Scala API — one semantics, two surfaces.
+  * Every function registers through the Column→Expression bridge, so SQL
+  * callers get the exact same Catalyst tree (and codegen) as the Scala
+  * API — one semantics, two surfaces.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  /** Register a 1-string-arg composed Column function under `name`. */
-  private def composed(ext: SparkSessionExtensions, name: String,
-      f: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit =
+  /** Register a Column function of `arity` arguments under `name`. */
+  private def register(ext: SparkSessionExtensions, name: String,
+      usage: String, arity: Int)(f: Seq[Expression] => Column): Unit =
     ext.injectFunction((
       new FunctionIdentifier(name),
       new ExpressionInfo(classOf[CurationFunctions.type].getName, name),
       (args: Seq[Expression]) => {
-        require(args.size == 1, s"$name(str)")
-        ColumnBridge.catalystExpression(f(ColumnBridge.column(args.head)))
+        require(args.size == arity, usage)
+        ColumnBridge.catalystExpression(f(args))
       }))
+
+  /** Register a 1-string-arg composed Column function under `name`. */
+  private def composed(ext: SparkSessionExtensions, name: String,
+      f: Column => Column): Unit =
+    register(ext, name, s"$name(str)", 1)(a => f(ColumnBridge.column(a.head)))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     composed(ext, "graft_redact_pii", CurationFunctions.redactPii)
@@ -48,33 +52,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     composed(ext, "graft_lang_id", TextFunctions.langId)
     composed(ext, "graft_token_count", c =>
       TextFunctions.tokenCount(c).cast("int"))
-    composed(ext, "graft_micro_vec", graft.functions.Expressions.micro_vec)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_nfc(str)")
-        NfcNormalize(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_truncate_words"),
-      new ExpressionInfo(classOf[WordBoundaryTruncate].getName,
-        "graft_truncate_words"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_truncate_words(str, maxLen)")
-        val maxLen = args(1) match {
-          case Literal(v: Int, _) => v
-          case other => other.eval().asInstanceOf[Number].intValue()
-        }
-        WordBoundaryTruncate(args.head, maxLen)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_term_counts"),
-      new ExpressionInfo(classOf[graft.functions.TermCounts].getName,
-        "graft_term_counts"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_term_counts(array<string>)")
-        graft.functions.TermCounts(args.head)
-      }))
+    composed(ext, "graft_micro_vec", Expressions.micro_vec)
+    composed(ext, "graft_nfc", Expressions.nfc_normalize)
+    register(ext, "graft_term_counts", "graft_term_counts(array<string>)",
+      1)(a => Expressions.term_counts(ColumnBridge.column(a.head)))
+    register(ext, "graft_truncate_words", "graft_truncate_words(str, maxLen)",
+      2)(a => Expressions.truncate_words(ColumnBridge.column(a.head),
+        a(1).eval().asInstanceOf[Number].intValue()))
   }
 }

@@ -1,21 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal,
+  RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the two preprocessing steps that can't
-  * be composed from built-ins (SURVEY §2.3): NFC normalization and
-  * word-boundary truncation. A codegen'd Expression beats a Scala UDF —
-  * no encoder round-trip, null handling for free, and the call inlines
-  * into the surrounding whole-stage-generated code
-  * (steering: Expression-with-doGenCode > UDF).
-  *
-  * Both generate a static call into [[ExprHelpers]], the standard pattern
-  * for JVM-library-backed expressions.
+/** The native kernels: the text, shingle, sketch and vector steps that a
+  * chain of built-ins would run interpreted or with per-element
+  * allocation (SURVEY §2.3). Each is one method here on Catalyst's
+  * internal types, called through Spark's own `StaticInvoke` by
+  * [[Expressions]]: Spark binds the inputs, skips the call on a null
+  * input and emits the static call inside the whole-stage-generated
+  * code, so a kernel needs no encoder round-trip (as a Scala UDF would)
+  * and no hand-written generated-Java string.
   */
 object ExprHelpers {
   /** Unicode NFC (reference: ondine/utils/input_preprocessing.py:45-60). */
@@ -973,625 +974,102 @@ object ExprHelpers {
   }
 }
 
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.nfc(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.nfc($c)")
-
-  override protected def withNewChildInternal(c: Expression): NfcNormalize =
-    copy(child = c)
-}
-
-case class WordBoundaryTruncate(child: Expression, maxLen: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.truncateWords(v.asInstanceOf[UTF8String], maxLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.truncateWords($c, $maxLen)")
-
-  override protected def withNewChildInternal(c: Expression): WordBoundaryTruncate =
-    copy(child = c)
-}
-
-case class KgramRollingHashes(child: Expression, k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.kgramRollingHashes(v.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.kgramRollingHashes($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): KgramRollingHashes =
-    copy(child = c)
-}
-
-case class WordShingleMinhash(child: Expression, k: Int, numBands: Int)
-    extends UnaryExpression {
+/** A kernel whose [[ExprHelpers]] method takes one element-kind code per
+  * array input: the index of that array's element type in `accepted`
+  * (float=0, double=1 for `vecDot`; byte=0 … long=3 for `vecDotLong`).
+  * The type is known only once the inputs resolve, so this node checks
+  * it at analysis (any other element type fails there, with no job run)
+  * and is then replaced by the `StaticInvoke` of `method` over
+  * `arrays ++ lead ++ kinds ++ tail`. Every such method may return null. */
+private[functions] case class ElementKindInvoke(method: String,
+    override val dataType: DataType, accepted: Seq[DataType],
+    arrays: Seq[Expression], lead: Seq[Expression], tail: Seq[Expression])
+    extends Expression with RuntimeReplaceable {
+  override def children: Seq[Expression] = arrays
   override def nullable: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def prettyName: String = method
 
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.wordShingleMinhash(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      k, numBands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} =
-        graft.functions.ExprHelpers.wordShingleMinhash($c, $k, $numBands);
-      ${ev.isNull} = ${ev.value} == null;""")
-
-  override protected def withNewChildInternal(c: Expression): WordShingleMinhash =
-    copy(child = c)
-}
-
-case class ShingleHashBands(child: Expression, k: Int, numBands: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField("hsh",
-        org.apache.spark.sql.types.ArrayType(LongType, containsNull = false),
-        nullable = false),
-      org.apache.spark.sql.types.StructField("bm",
-        org.apache.spark.sql.types.ArrayType(LongType, containsNull = false),
-        nullable = true)))
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.shingleHashBands(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      k, numBands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.shingleHashBands($c, $k, $numBands)")
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashBands =
-    copy(child = c)
-}
-
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.wordShingles(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.wordShingles($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): WordShingles =
-    copy(child = c)
-}
-
-case class TermCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("term", StringType,
-        nullable = true),
-      org.apache.spark.sql.types.StructField("cnt", LongType,
-        nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.termCounts(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.termCounts($c)")
-
-  override protected def withNewChildInternal(c: Expression): TermCounts =
-    copy(child = c)
-}
-
-case class VecDot(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, DoubleType => DT, FloatType => FT}
-  override def nullable: Boolean = true
-  override def dataType: DataType = DT
-
-  private def kind(e: Expression): Int =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case FT => 0
-      case DT => 1
-      case t => throw new IllegalArgumentException(s"vec_dot over $t array")
-    }
-  private lazy val (ak, bk) = (kind(left), kind(right))
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprHelpers.vecDot(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], ak, bk)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // freshName, NOT a literal local: two kernel instances in one
-      // codegen scope otherwise redefine the variable — janino rejects
-      // the whole generated class and the ENTIRE projection falls back
-      // to interpreted evaluation (the pathology these kernels exist
-      // to avoid)
-      val r = ctx.freshName("r")
-      s"""
-      java.lang.Double $r = graft.functions.ExprHelpers.vecDot($a, $b, $ak, $bk);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.doubleValue(); }"""
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecDot = copy(left = l, right = r)
-}
-
-case class VecDotLong(left: Expression, right: Expression,
-                      boundAbs: Long = 0L)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, ShortType}
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  private def kind(e: Expression): Int =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case ByteType => 0
-      case ShortType => 1
-      case IntegerType => 2
-      case LongType => 3
-      case t => throw new IllegalArgumentException(s"vec_dot_long over $t array")
-    }
-  private lazy val (ak, bk) = (kind(left), kind(right))
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val ad = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val bd = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (boundAbs > 0L) ExprHelpers.vecDotLongBounded(ad, bd, ak, bk, boundAbs)
-    else ExprHelpers.vecDotLong(ad, bd, ak, bk)
+  private def kind(e: Expression): Int = e.dataType match {
+    case ArrayType(t, _) => accepted.indexOf(t)
+    case _ => -1
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val call =
-        if (boundAbs > 0L)
-          s"graft.functions.ExprHelpers.vecDotLongBounded($a, $b, $ak, $bk, ${boundAbs}L)"
-        else s"graft.functions.ExprHelpers.vecDotLong($a, $b, $ak, $bk)"
-      val r = ctx.freshName("r")
-      s"""
-      java.lang.Long $r = $call;
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.longValue(); }"""
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecDotLong = copy(left = l, right = r)
-}
-
-case class DsirBuckets(child: Expression, buckets: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(w: Any): Any =
-    ExprHelpers.dsirBuckets(
-      w.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, w => {
-      val r = ctx.freshName("r")
-      s"""
-      org.apache.spark.sql.catalyst.util.ArrayData $r =
-        graft.functions.ExprHelpers.dsirBuckets($w, $buckets);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r; }"""
-    })
-
-  override protected def withNewChildInternal(c: Expression): DsirBuckets =
-    copy(child = c)
-}
-
-case class LshBucket(child: Expression, numPlanes: Int, tableSalt: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, DoubleType => DT,
-    FloatType => FT}
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  private lazy val kind: Int =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case FT => 0
-      case DT => 1
-      case t => throw new IllegalArgumentException(s"lsh_bucket over $t array")
+  override def checkInputDataTypes(): TypeCheckResult =
+    arrays.find(kind(_) < 0) match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(a) => TypeCheckResult.TypeCheckFailure(
+        s"$method expects array<${accepted.map(_.simpleString)
+          .mkString("|")}>, got ${a.dataType.simpleString}")
     }
 
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.lshBucket(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      kind, numPlanes, tableSalt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => s"""
-      ${ev.value} = graft.functions.ExprHelpers.lshBucket(
-        $v, $kind, $numPlanes, $tableSalt);""")
-
-  override protected def withNewChildInternal(c: Expression): LshBucket =
-    copy(child = c)
-}
-
-case class Int8Codes(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType => DT,
-    FloatType => FT}
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-
-  private lazy val kind: Int =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case FT => 0
-      case DT => 1
-      case t => throw new IllegalArgumentException(s"int8_codes over $t array")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.int8Codes(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], kind)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("r")
-      s"""
-      org.apache.spark.sql.catalyst.util.ArrayData $r =
-        graft.functions.ExprHelpers.int8Codes($v, $kind);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r; }"""
-    })
-
-  override protected def withNewChildInternal(c: Expression): Int8Codes =
-    copy(child = c)
-}
-
-case class MicroVec(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
-    DoubleType => DT, FloatType => FT}
-  override def nullable: Boolean = true
-  // containsNull = true kept for schema parity with the retired
-  // transform(round·cast) twin (cells are never null at runtime — a
-  // dirty vector nulls WHOLE, see ExprHelpers.microVec)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  // reject unsupported element types at ANALYSIS time, not mid-job on
-  // an executor (the declarative twin accepted any castable numeric;
-  // the kernel covers the four the operators feed it)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FT | DT | IntegerType | LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"micro_vec expects array<float|double|int|long>, got $t")
-    }
-
-  private lazy val kind: Int =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case FT => 0
-      case DT => 1
-      case IntegerType => 2
-      case LongType => 3
-      case t => throw new IllegalArgumentException(s"micro_vec over $t array")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.microVec(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], kind)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("r")
-      s"""
-      org.apache.spark.sql.catalyst.util.ArrayData $r =
-        graft.functions.ExprHelpers.microVec($v, $kind);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r; }"""
-    })
-
-  override protected def withNewChildInternal(c: Expression): MicroVec =
-    copy(child = c)
-}
-
-case class DsirLogw(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(w: Any, lut: Any): Any =
-    ExprHelpers.dsirLogw(
-      w.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      lut.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, lut) => {
-      val r = ctx.freshName("r")
-      s"""
-      java.lang.Long $r = graft.functions.ExprHelpers.dsirLogw($w, $lut);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.longValue(); }"""
-    })
+  override lazy val replacement: Expression = StaticInvoke(
+    ExprHelpers.getClass, dataType, method,
+    arrays ++ lead ++ arrays.map(a => Literal(kind(a))) ++ tail)
 
   override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DsirLogw = copy(left = l, right = r)
+      c: IndexedSeq[Expression]): ElementKindInvoke = copy(arrays = c)
 }
 
-case class SortedSetOps(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField("inter", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("uni", LongType,
-        nullable = false)))
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprHelpers.sortedSetOps(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ExprHelpers.sortedSetOps($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): SortedSetOps = copy(left = l, right = r)
-}
-
-case class PorterStem(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.porterStem(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.porterStem($c)")
-
-  override protected def withNewChildInternal(c: Expression): PorterStem =
-    copy(child = c)
-}
-
-case class ClippedCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprHelpers.clippedCount(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ExprHelpers.clippedCount($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ClippedCount = copy(left = l, right = r)
-}
-
-case class CmsCells(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.cmsCells(v.asInstanceOf[UTF8String], depth, width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.cmsCells($c, $depth, $width)")
-
-  override protected def withNewChildInternal(c: Expression): CmsCells =
-    copy(child = c)
-}
-
-case class CmsRareCount(left: Expression, right: Expression, depth: Int,
-                        width: Int, rareMax: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(toks: Any, lut: Any): Any =
-    ExprHelpers.cmsRareCount(
-      toks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      lut.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      depth, width, rareMax)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, l) =>
-      s"graft.functions.ExprHelpers.cmsRareCount($t, $l, $depth, $width, ${rareMax}L)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CmsRareCount = copy(left = l, right = r)
-}
-
-case class VecSqDistLong(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprHelpers.vecSqDistLong(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("r")
-      s"""
-      java.lang.Long $r = graft.functions.ExprHelpers.vecSqDistLong($a, $b);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.longValue(); }"""
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): VecSqDistLong = copy(left = l, right = r)
-}
-
-case class PqAssignMicroExpr(left: Expression, right: Expression,
-    cb: Array[Array[Array[Long]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprHelpers.pqAssignMicro(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Int], cb)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCbL", cb, "long[][][]")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("r")
-      s"""
-      java.lang.Integer $r =
-        graft.functions.ExprHelpers.pqAssignMicro($a, $b, $ref);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.intValue(); }"""
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): PqAssignMicroExpr = copy(left = l, right = r)
-}
-
-case class PqEncodeExpr(child: Expression, cb: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, ByteType,
-    DoubleType => DT, FloatType => FT}
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-
-  private lazy val fk: Int =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case FT => 0
-      case DT => 1
-      case t => throw new IllegalArgumentException(s"pq_encode over $t array")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.pqEncode(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cb, fk)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCbD", cb, "double[][][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("r")
-      s"""
-      org.apache.spark.sql.catalyst.util.ArrayData $r =
-        graft.functions.ExprHelpers.pqEncode($v, $ref, $fk);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r; }"""
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): PqEncodeExpr =
-    copy(child = c)
-}
-
-case class WhitespaceTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.whitespaceTokens(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.whitespaceTokens($c)")
-
-  override protected def withNewChildInternal(c: Expression): WhitespaceTokens =
-    copy(child = c)
-}
-
-case class SimhashAgg(child: Expression, bits: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.simhash(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.simhash($c, $bits)")
-
-  override protected def withNewChildInternal(c: Expression): SimhashAgg =
-    copy(child = c)
-}
-
-case class WindowMins(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.windowMins(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.windowMins($c, $w)")
-
-  override protected def withNewChildInternal(c: Expression): WindowMins =
-    copy(child = c)
-}
-
-case class DoubleOrderKey(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(v: Any): Any =
-    ExprHelpers.doubleOrderKey(v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ExprHelpers.doubleOrderKey($c)")
-
-  override protected def withNewChildInternal(c: Expression): DoubleOrderKey =
-    copy(child = c)
-}
-
+/** The Column API of the native kernels, one [[ExprHelpers]] call each.
+  * Scalar parameters ride as literals; a kernel's output type and
+  * nullability are stated here once. */
 object Expressions {
-  def nfc_normalize(c: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
+  private val LongArray = ArrayType(LongType, containsNull = false)
+  private val StringArray = ArrayType(StringType, containsNull = false)
+  private val ByteArray = ArrayType(ByteType, containsNull = false)
+  private val Floats = Seq(FloatType, DoubleType)
+  private val Integrals = Seq(ByteType, ShortType, IntegerType, LongType)
+
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** `ExprHelpers.<method>(args)`; null when an input is null, and also
+    * when the method returns null if `returnsNull`. */
+  private def invoke(method: String, dataType: DataType,
+                     returnsNull: Boolean = false)(args: Expression*): Column =
+    ColumnBridge.column(StaticInvoke(ExprHelpers.getClass, dataType, method,
+      args, returnNullable = returnsNull))
+
+  private def kinded(method: String, dataType: DataType,
+                     accepted: Seq[DataType], arrays: Seq[Column],
+                     lead: Seq[Expression] = Nil,
+                     tail: Seq[Expression] = Nil): Column =
+    ColumnBridge.column(ElementKindInvoke(method, dataType, accepted,
+      arrays.map(expr), lead, tail))
+
+  /** A codebook as an object literal: the generated code holds it as one
+    * reference, never as a Catalyst array. */
+  private def objectLit(cb: AnyRef): Literal =
+    Literal(cb, ObjectType(cb.getClass))
+
+  def nfc_normalize(c: Column): Column = invoke("nfc", StringType)(expr(c))
   def truncate_words(c: Column, maxLen: Int): Column =
-    ColumnBridge.column(
-      WordBoundaryTruncate(ColumnBridge.expression(c), maxLen))
+    invoke("truncateWords", StringType)(expr(c), Literal(maxLen))
   def double_order_key(c: Column): Column =
-    ColumnBridge.column(DoubleOrderKey(ColumnBridge.expression(c)))
+    invoke("doubleOrderKey", LongType)(expr(c))
   def kgram_rolling_hashes(c: Column, k: Int): Column =
-    ColumnBridge.column(KgramRollingHashes(ColumnBridge.expression(c), k))
+    invoke("kgramRollingHashes", LongArray)(expr(c), Literal(k))
   def window_mins(c: Column, w: Int): Column =
-    ColumnBridge.column(WindowMins(ColumnBridge.expression(c), w))
+    invoke("windowMins", LongArray)(expr(c), Literal(w))
   def word_shingle_minhash(c: Column, k: Int, numBands: Int): Column =
-    ColumnBridge.column(
-      WordShingleMinhash(ColumnBridge.expression(c), k, numBands))
+    invoke("wordShingleMinhash", LongArray, returnsNull = true)(
+      expr(c), Literal(k), Literal(numBands))
   def shingle_hash_bands(c: Column, k: Int, numBands: Int): Column =
-    ColumnBridge.column(
-      ShingleHashBands(ColumnBridge.expression(c), k, numBands))
+    invoke("shingleHashBands", StructType(Seq(
+      StructField("hsh", LongArray, nullable = false),
+      StructField("bm", LongArray, nullable = true))))(
+      expr(c), Literal(k), Literal(numBands))
   def simhash_agg(c: Column, bits: Int): Column =
-    ColumnBridge.column(SimhashAgg(ColumnBridge.expression(c), bits))
+    invoke("simhash", LongType)(expr(c), Literal(bits))
   def word_shingles(c: Column, k: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(c), k))
+    invoke("wordShingles", StringArray)(expr(c), Literal(k))
   /** Per-row (term, cnt) structs in first-occurrence order — the
     * shuffle-free half of an inverted-index build; see
     * [[ExprHelpers.termCounts]]. */
   def term_counts(c: Column): Column =
-    ColumnBridge.column(TermCounts(ColumnBridge.expression(c)))
+    invoke("termCounts", ArrayType(StructType(Seq(
+      StructField("term", StringType, nullable = true),
+      StructField("cnt", LongType, nullable = false))),
+      containsNull = false))(expr(c))
   /** Interpreted O(n·distinct) twin of [[term_counts]], kept only as the
     * parity oracle for the native kernel (spec-compared): array_distinct
     * preserves first-occurrence order, so element order and values must
@@ -1603,70 +1081,71 @@ object Expressions {
       size(filter(c, x => x <=> t)).cast("long").as("cnt")))
   }
   def vec_dot(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      VecDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    kinded("vecDot", DoubleType, Floats, Seq(a, b))
   def vec_dot_long(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      VecDotLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    kinded("vecDotLong", LongType, Integrals, Seq(a, b))
   /** Sign-LSH bucket key in one native pass over a memoized plane
     * table — see [[ExprHelpers.lshBucket]]. */
-  def lsh_bucket(vec: Column, numPlanes: Int, tableSalt: Int = 0): Column =
-    ColumnBridge.column(
-      LshBucket(ColumnBridge.expression(vec), numPlanes, tableSalt))
+  def lsh_bucket(vec: Column, numPlanes: Int, tableSalt: Int): Column =
+    kinded("lshBucket", LongType, Floats, Seq(vec),
+      tail = Seq(Literal(numPlanes), Literal(tableSalt)))
   /** Symmetric int8 quantization codes in one native pass — see
     * [[ExprHelpers.int8Codes]]. */
   def int8_codes(vec: Column): Column =
-    ColumnBridge.column(Int8Codes(ColumnBridge.expression(vec)))
-  /** 1e-6 micro quantization of a float/double vector in one native
-    * pass — see [[ExprHelpers.microVec]]. */
+    kinded("int8Codes", ByteArray, Floats, Seq(vec))
+  /** 1e-6 micro quantization of a float/double/int/long vector in one
+    * native pass — see [[ExprHelpers.microVec]]. `containsNull = true`
+    * is kept for schema parity with the retired transform(round·cast)
+    * twin; cells are never null (a dirty vector nulls whole). */
   def micro_vec(vec: Column): Column =
-    ColumnBridge.column(MicroVec(ColumnBridge.expression(vec)))
+    kinded("microVec", ArrayType(LongType, containsNull = true),
+      Floats ++ Seq(IntegerType, LongType), Seq(vec))
   /** DSIR feature buckets of a word array (unigrams then bigrams), one
     * md5 per gram — see [[ExprHelpers.dsirBuckets]]. */
   def dsir_buckets(words: Column, buckets: Int): Column =
-    ColumnBridge.column(
-      DsirBuckets(ColumnBridge.expression(words), buckets))
+    invoke("dsirBuckets", LongArray, returnsNull = true)(
+      expr(words), Literal(buckets))
   /** DSIR per-document log-weight Σ lut[bucket(gram)] in one pass — see
     * [[ExprHelpers.dsirLogw]]. */
   def dsir_logw(words: Column, lut: Column): Column =
-    ColumnBridge.column(
-      DsirLogw(ColumnBridge.expression(words), ColumnBridge.expression(lut)))
+    invoke("dsirLogw", LongType, returnsNull = true)(expr(words), expr(lut))
   /** [[vec_dot_long]] that additionally enforces |element| ≤ boundAbs on
     * the left array inside the native loop — the zero-extra-pass way to
-    * pin an overflow invariant the caller's long arithmetic needs. */
+    * pin an overflow invariant the caller's long arithmetic needs. A
+    * bound ≤ 0 checks nothing. */
   def vec_dot_long_bounded(a: Column, b: Column, boundAbs: Long): Column =
-    ColumnBridge.column(
-      VecDotLong(ColumnBridge.expression(a), ColumnBridge.expression(b),
-        boundAbs))
+    if (boundAbs > 0L)
+      kinded("vecDotLongBounded", LongType, Integrals, Seq(a, b),
+        tail = Seq(Literal(boundAbs)))
+    else vec_dot_long(a, b)
   def whitespace_tokens(c: Column): Column =
-    ColumnBridge.column(WhitespaceTokens(ColumnBridge.expression(c)))
-  def porter_stem(c: Column): Column =
-    ColumnBridge.column(PorterStem(ColumnBridge.expression(c)))
+    invoke("whitespaceTokens", StringArray)(expr(c))
+  def porter_stem(c: Column): Column = invoke("porterStem", StringType)(expr(c))
   def clipped_count(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      ClippedCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    invoke("clippedCount", LongType)(expr(a), expr(b))
   def sorted_set_ops(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      SortedSetOps(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    invoke("sortedSetOps", StructType(Seq(
+      StructField("inter", LongType, nullable = false),
+      StructField("uni", LongType, nullable = false))))(expr(a), expr(b))
   def cms_cells(c: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(CmsCells(ColumnBridge.expression(c), depth, width))
+    invoke("cmsCells", LongArray)(expr(c), Literal(depth), Literal(width))
   def cms_rare_count(toks: Column, lut: Column, depth: Int, width: Int,
                      rareMax: Long): Column =
-    ColumnBridge.column(CmsRareCount(ColumnBridge.expression(toks),
-      ColumnBridge.expression(lut), depth, width, rareMax))
+    invoke("cmsRareCount", LongType)(
+      expr(toks), expr(lut), Literal(depth), Literal(width), Literal(rareMax))
   def vec_sq_dist_long(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      VecSqDistLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    invoke("vecSqDistLong", LongType, returnsNull = true)(expr(a), expr(b))
   def pq_assign_micro(sub: Column, j: Column,
                       cb: Array[Array[Array[Long]]]): Column =
-    ColumnBridge.column(PqAssignMicroExpr(
-      ColumnBridge.expression(sub), ColumnBridge.expression(j), cb))
+    invoke("pqAssignMicro", IntegerType, returnsNull = true)(
+      expr(sub), expr(j), objectLit(cb))
   def pq_encode(vec: Column, cb: Array[Array[Array[Double]]]): Column =
-    ColumnBridge.column(PqEncodeExpr(ColumnBridge.expression(vec), cb))
+    kinded("pqEncode", ByteArray, Floats, Seq(vec),
+      lead = Seq(objectLit(cb)))
   /** Exact integral division (the SQL `div` operator) as a composable
     * Column — `a.divide(b)` is float division and rounds past 2^53. */
   def int_div(a: Column, b: Column): Column =
     ColumnBridge.column(
       org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        ColumnBridge.expression(a), ColumnBridge.expression(b)))
+        expr(a), expr(b)))
 }

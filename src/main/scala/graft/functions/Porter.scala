@@ -5,8 +5,8 @@ package graft.functions
   * the paper's rule tables. Stemming is the search-side text
   * normalization the reference's FTS5 sparse index gets from SQLite's
   * porter tokenizer option (crates/ondine-core uses FTS5; porter is
-  * its standard tokenizer flag) — here it is a pure function usable
-  * as a codegen'd Expression over token arrays.
+  * its standard tokenizer flag) — here it is a pure function that the
+  * native `porter_stem` kernel calls per token.
   *
   * Operates on lowercase a–z words of length ≥ 3 (shorter or
   * non-alphabetic tokens pass through unchanged, matching the common

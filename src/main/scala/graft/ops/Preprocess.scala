@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Everything compiles to codegen'd expressions: the strip/collapse steps
   * are built-in `regexp_replace` chains; NFC and word-boundary truncation
-  * are native Catalyst expressions with doGenCode
+  * are native kernels, static calls in the generated code
   * (graft.functions.Expressions) — no UDF boundary anywhere in the chain.
   */
 object Preprocess {

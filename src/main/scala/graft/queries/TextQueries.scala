@@ -922,8 +922,8 @@ object TextQueries {
 
   /** Porter-stemmed vocabulary census — the search-side normalization
     * the reference's FTS5 index gets from SQLite's porter tokenizer,
-    * as a codegen'd per-token map ([[graft.functions.Porter]] via the
-    * native `porter_stem` Expression; zero shuffle until the census).
+    * as a per-token map ([[graft.functions.Porter]] via the native
+    * `porter_stem` kernel; zero shuffle until the census).
     * Hash-verified since r11: the full rule chain IS SQL-expressible —
     * [[OracleSqlGen.q166Sql]] replays every paper step over the distinct
     * token set (c/v form via list_reduce, measure m as 'v+c+' run count,

@@ -3,7 +3,7 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.PipelineSpec
+import graft.core.{Json, PipelineSpec}
 import graft.llm.MockLlmClient
 import graft.ops.{ResponseParser, ResultMerger, RowIndex}
 
@@ -72,17 +72,16 @@ object ProviderBatch {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(runDir))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(registryPath(runDir)),
-      s"""{"job_id":"${run.jobId}","state":"${run.state}"}""")
+      Json.write(Json.obj("job_id" -> run.jobId, "state" -> run.state)))
   }
 
   def loadState(runDir: String): Option[BatchRun] = {
     val p = java.nio.file.Paths.get(registryPath(runDir))
     if (!java.nio.file.Files.exists(p)) None
     else {
-      val txt = java.nio.file.Files.readString(p)
-      val id = "\"job_id\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
-      val st = "\"state\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
-      for (i <- id; s <- st) yield BatchRun(i, s)
+      val n = Json.read(java.nio.file.Files.readString(p))
+      for (i <- Option(n.get("job_id")); s <- Option(n.get("state")))
+        yield BatchRun(i.asText, s.asText)
     }
   }
 

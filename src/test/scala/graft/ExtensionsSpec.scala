@@ -39,6 +39,11 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(c.getInt(3) == 3)
       assert(c.getString(4) == "en")
       assert(c.getDouble(5) > 0.0 && c.getDouble(5) <= 1.0)
+      val tc = spark.sql(
+        "SELECT graft_term_counts(array('b', 'a', 'b', NULL)) AS tc").head()
+        .getSeq[org.apache.spark.sql.Row](0)
+        .map(r => (Option(r.getString(0)), r.getLong(1)))
+      assert(tc == Seq((Some("b"), 2L), (Some("a"), 1L), (None, 1L)))
     } finally {
       SparkSession.clearActiveSession()
       prevDefault match {

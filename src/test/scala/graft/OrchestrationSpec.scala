@@ -343,6 +343,37 @@ class ProviderBatchSpec extends SparkSpec {
     assert(out("gamma") == MockLlmClient.md5Hex("P:gamma"))
     assert(ProviderBatch.loadState(dir).exists(_.state == "SUCCEEDED"))
   }
+
+  test("a job id holding a quote and a backslash survives the state file") {
+    val dir = Files.createTempDirectory("graft_batchapi_id").toString
+    val mock = new ProviderBatch.LocalMockBackend(spark, s"$dir/provider")
+    val odd = "job\"1\\x"
+    // answers only to the exact id it handed out
+    val backend = new ProviderBatch.BatchBackend {
+      private var real = ""
+      def submit(inputJsonlDir: String): String = {
+        real = mock.submit(inputJsonlDir); odd
+      }
+      def poll(jobId: String): String =
+        if (jobId == odd) mock.poll(real) else "FAILED"
+      def collect(jobId: String): String = {
+        require(jobId == odd, s"unknown job $jobId"); mock.collect(real)
+      }
+    }
+    val df = Seq((0L, "alpha"), (1L, "beta")).toDF("id", "text")
+    val spec = PipelineSpec(
+      dataset = DatasetSpec(Seq("text")),
+      prompt = PromptSpec("P:{text}"),
+      output = OutputSpec(Seq("out")))
+
+    ProviderBatch.submit(df, spec, dir, backend, Some("id"))
+    assert(ProviderBatch.loadState(dir).map(_.jobId).contains(odd))
+    val out = ProviderBatch.collect(df, spec, dir, backend, Some("id"))
+      .select("text", "out").as[(String, String)].collect().toMap
+    assert(out("beta") == MockLlmClient.md5Hex("P:beta"))
+    assert(ProviderBatch.loadState(dir)
+      .contains(ProviderBatch.BatchRun(odd, "SUCCEEDED")))
+  }
 }
 
 class StreamingEnrichSpec extends SparkSpec {

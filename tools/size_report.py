@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Print the size of the engine's main code, the graft.* conf keys it reads,
-the default-valued parameters a caller can set, and the public members no
-other file names.
+the default-valued parameters a caller can set, the public members no
+other file names, and the classes that extend a Catalyst expression type.
 
     python3 tools/size_report.py [--list] [--against OTHER_ROOT] [REPO_ROOT]
 
@@ -31,13 +31,21 @@ skipped, and, as for parameters, the enclosing class's visibility is not
 looked at. A name shared with an unrelated member elsewhere counts as a
 reference, so the count errs low.
 
-`--list` also prints each counted parameter as `file:line def param` and
-each unreferenced member as `file:line kind name` (file relative to the
-repo root). `--against OTHER_ROOT` also prints OTHER_ROOT's totals (the
-unreferenced-member count included) and the knobs removed (in OTHER_ROOT
-only, at its line) and added (here only, at this tree's line) between the
-two checkouts, matched by (file, def, param) so lines shifted by other
-edits do not show as changes. Stdlib only.
+A Catalyst expression class is a `class`, `trait` or `object` under
+src/main whose `extends ... with ...` clause names a type of the package
+`org.apache.spark.sql.catalyst.expressions` or one of its subpackages,
+written fully qualified or brought in by a named import of the same file
+(`import a.b.X`, `import a.b.{X, Y => Z}`, or the package itself); names
+brought in by a wildcard import are not followed, so the count errs low.
+
+`--list` also prints each counted parameter as `file:line def param`, each
+unreferenced member as `file:line kind name` and each Catalyst expression
+class as `file:line name` (file relative to the repo root).
+`--against OTHER_ROOT` also prints OTHER_ROOT's totals (the unreferenced
+member and expression class counts included) and the knobs removed (in
+OTHER_ROOT only, at its line) and added (here only, at this tree's line)
+between the two checkouts, matched by (file, def, param) so lines shifted
+by other edits do not show as changes. Stdlib only.
 """
 import os
 import re
@@ -55,6 +63,12 @@ TEMPLATE_KW = re.compile(r'\b(class|object|trait|def|val|var)\b')
 HIDDEN = re.compile(r'\b(private|protected|override|implicit)\b')
 NESTED = re.compile(r'\([^()]*\)|\[[^\[\]]*\]')
 IDENT = re.compile(r'[A-Za-z_][A-Za-z0-9_]*')
+TEMPLATE = re.compile(r'\b(?:class|trait|object)\s+([A-Za-z_][A-Za-z0-9_]*)')
+IMPORT = re.compile(
+    r'\bimport\s+([A-Za-z_][A-Za-z0-9_.]*)\.(\{[^}]*\}|[A-Za-z_][A-Za-z0-9_]*)')
+QUALIFIED = re.compile(
+    r'[A-Za-z_][A-Za-z0-9_]*(?:\s*\.\s*[A-Za-z_][A-Za-z0-9_]*)*')
+CATALYST_EXPRESSIONS = "org.apache.spark.sql.catalyst.expressions"
 IMPLICIT_NAMES = {"apply", "unapply", "unapplySeq", "update", "main",
                   "toString", "equals", "hashCode", "this", "readResolve"}
 
@@ -253,12 +267,74 @@ def unreferenced_members(root):
     return out
 
 
+def imported_names(code):
+    """Local name -> fully qualified name of the named imports of `code`."""
+    names = {}
+    for m in IMPORT.finditer(code):
+        prefix, sel = m.group(1), m.group(2)
+        for part in (sel[1:-1].split(",") if sel.startswith("{") else [sel]):
+            orig, _, local = (w.strip() for w in part.partition("=>"))
+            if orig and orig != "_" and local != "_":
+                names[local or orig] = f"{prefix}.{orig}"
+    return names
+
+
+def parent_types(code, i):
+    """The type names in the `extends ... with ...` clause of the template
+    header that continues at code[i] (just past the template's name)."""
+    def skip_ws(j):
+        while j < len(code) and code[j] in " \t\n":
+            j += 1
+        return j
+
+    j = skip_ws(i)
+    while True:  # type parameters, constructor lists, access modifiers
+        if j < len(code) and code[j] in "([":
+            j = skip_ws(balanced(code, j))
+            continue
+        m = re.compile(r'(?:private|protected)\b').match(code, j)
+        if not m:
+            break
+        j = skip_ws(m.end())
+    if not re.compile(r'extends\b').match(code, j):
+        return []
+    types, j = [], j + len("extends")
+    while True:
+        m = QUALIFIED.match(code, skip_ws(j))
+        if not m:
+            return types
+        types.append(re.sub(r"\s", "", m.group(0)))
+        j = skip_ws(m.end())
+        while j < len(code) and code[j] in "([":
+            j = skip_ws(balanced(code, j))
+        if not re.compile(r'with\b').match(code, j):
+            return types
+        j += len("with")
+
+
+def expression_classes(code):
+    """The templates of blanked `code` that extend a Catalyst expression
+    type, as (line, name) pairs."""
+    names = imported_names(code)
+    found = []
+    for m in TEMPLATE.finditer(code):
+        for t in parent_types(code, m.end()):
+            head, _, rest = t.partition(".")
+            full = names.get(head, head) + ("." + rest if rest else "")
+            if (full + ".").startswith(CATALYST_EXPRESSIONS + "."):
+                found.append((code.count("\n", 0, m.start()) + 1, m.group(1)))
+                break
+    return found
+
+
 def scan(root):
-    """(lines, files, conf keys, [(file, line, def, param)]) of src/main."""
+    """(lines, files, conf keys, [(file, line, def, param)],
+    [(file, line, class)] of the Catalyst expression classes) of src/main."""
     main_dir = os.path.join(root, "src", "main")
     lines = files = 0
     keys = set()
     params = []
+    exprs = []
     for dirpath, _, names in os.walk(main_dir):
         for name in names:
             if not name.endswith(".scala"):
@@ -272,7 +348,9 @@ def scan(root):
             keys.update(KEY_READ.findall(text))
             rel = os.path.relpath(path, root)
             params += [(rel, ln, d, p) for ln, d, p in default_params(text)]
-    return lines, files, keys, params
+            exprs += [(rel, ln, c) for ln, c in
+                      expression_classes(blank_comments_and_strings(text))]
+    return lines, files, keys, params, sorted(exprs)
 
 
 def knob_diff(old, new):
@@ -301,7 +379,7 @@ def main():
         del args[i:i + 2]
     root = args[0] if args else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), os.pardir)
-    lines, files, keys, params = scan(root)
+    lines, files, keys, params, exprs = scan(root)
     print(f"main scala: {lines:,} lines in {files} files")
     print(f"graft.* conf keys read by main code: {len(keys)}")
     for k in sorted(keys):
@@ -316,14 +394,19 @@ def main():
     if listing:
         for rel, ln, kind, name in unref:
             print(f"{rel}:{ln} {kind} {name}")
+    print(f"classes extending a Catalyst expression type: {len(exprs)}")
+    if listing:
+        for rel, ln, c in exprs:
+            print(f"{rel}:{ln} {c}")
     if against:
-        o_lines, o_files, _, o_params = scan(against)
+        o_lines, o_files, _, o_params, o_exprs = scan(against)
         removed, added = knob_diff(o_params, params)
         print(f"against {against}: {o_lines:,} -> {lines:,} lines, "
               f"{o_files} -> {files} files, "
               f"{len(o_params)} -> {len(params)} default-valued parameters, "
               f"{len(unreferenced_members(against))} -> {len(unref)} "
-              "unreferenced public members")
+              "unreferenced public members, "
+              f"{len(o_exprs)} -> {len(exprs)} Catalyst expression classes")
         print(f"knobs removed: {len(removed)}")
         for rel, ln, d, p in removed:
             print(f"- {rel}:{ln} {d} {p}")
