@@ -19,7 +19,8 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // match Bench: split single-file testdata parquet into real scan tasks
+      // as perfbench's curation inventory: split single-file testdata
+      // parquet into real scan tasks
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

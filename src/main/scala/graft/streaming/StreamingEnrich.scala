@@ -34,7 +34,7 @@ object StreamingEnrich {
     * wholesale after a crash; the replayed Enricher anti-joins its
     * partial ledger and re-invokes ONLY the calls whose chunk never
     * landed — a kill -9 mid-batch loses zero completed-chunk work and
-    * double-invokes nothing durable (StreamingCrashArm proves it with a
+    * double-invokes nothing durable (StreamingCrashSpec proves it with a
     * JVM halt; StreamingEnrichSpec replays a committed batch for the
     * zero-new-calls assert). `keyColumn` must uniquely key rows WITHIN
     * a batch (cross-batch uniqueness not required — ledgers are
@@ -44,16 +44,14 @@ object StreamingEnrich {
     * A batch's ledger is only useful until the engine COMMITS that
     * batch (a committed batch never replays), so once batch N's sink
     * returns, the ledgers of batches < N are dead weight — on an
-    * unbounded stream they would grow runDir forever. They are deleted
-    * best-effort by default; `retainLedgers = true` keeps them (the
-    * crash-arm measurement reads them post-run). */
+    * unbounded stream they would grow runDir forever, so they are
+    * deleted best-effort. */
   def start(stream: DataFrame, spec: PipelineSpec, client: LlmClient,
             checkpointDir: String,
             sink: (DataFrame, Long) => Unit,
             drainAll: Boolean = true,
             runDir: Option[String] = None,
-            keyColumn: Option[String] = None,
-            retainLedgers: Boolean = false): StreamingQuery = {
+            keyColumn: Option[String] = None): StreamingQuery = {
     // strip the budget from the per-batch spec: enforcement is cumulative
     // across batches out here, not per-batch in there
     val maxBudget = spec.processing.maxBudget
@@ -74,7 +72,7 @@ object StreamingEnrich {
           // Hadoop FileSystem, not java.io.File: the ledgers are
           // written via Spark parquet, so runDir may be hdfs://, s3a://
           // etc. — a local-only listing silently never deletes there
-          if (!retainLedgers) runDir.foreach { d =>
+          runDir.foreach { d =>
             try {
               val base = new org.apache.hadoop.fs.Path(d)
               val fs = base.getFileSystem(

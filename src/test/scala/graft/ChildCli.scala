@@ -5,32 +5,44 @@ import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
-/** Runs `graft.Main` in a child JVM with this JVM's flags and classpath:
-  * the CLI stops its Spark session on exit, so it cannot share a suite's.
+/** Runs a main class in a child JVM with this JVM's flags and classpath:
+  * the CLI stops its Spark session on exit and the crash children halt
+  * their JVM, so neither can share a suite's.
   */
 object ChildCli {
 
-  /** (exit code, the stdout lines that are JSON objects). */
-  def run(args: String*): (Int, Seq[String]) = {
+  /** (exit code, stdout) of `mainClass args` in a child JVM with heap
+    * `heap`, killed after `timeoutS` seconds. Its stderr goes to a temp
+    * file that the timeout error names. */
+  def run(mainClass: String, args: Seq[String], heap: String,
+          timeoutS: Int): (Int, String) = {
     val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala
       .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms"))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
-      jvmFlags ++ Seq("-cp", sys.props("java.class.path"), "graft.Main") ++
-      args
-    val log = Files.createTempFile("graft_cli", ".out")
+    // the client compiler alone boots a short-lived JVM fastest
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", s"-Xmx$heap",
+      "-XX:TieredStopAtLevel=1") ++ jvmFlags ++
+      Seq("-cp", sys.props("java.class.path"), mainClass) ++ args
+    val out = Files.createTempFile("graft_child", ".out")
+    val err = Files.createTempFile("graft_child", ".err")
     val pb = new ProcessBuilder(cmd: _*)
-      .redirectError(ProcessBuilder.Redirect.DISCARD)
-      .redirectOutput(log.toFile)
+      .redirectOutput(out.toFile)
+      .redirectError(err.toFile)
     pb.environment().put("SPARK_MASTER", "local[2]")
     pb.environment().put("SPARK_GRAFT_CPUS", "2")
     val proc = pb.start()
-    if (!proc.waitFor(300, TimeUnit.SECONDS)) {
+    if (!proc.waitFor(timeoutS, TimeUnit.SECONDS)) {
       proc.destroyForcibly().waitFor()
       throw new IllegalStateException(
-        s"graft.Main ${args.mkString(" ")} did not exit in 300 s")
+        s"$mainClass ${args.mkString(" ")} did not exit in $timeoutS s; " +
+          s"stderr in $err")
     }
-    (proc.exitValue(),
-      Files.readString(log).linesIterator.filter(_.startsWith("{")).toSeq)
+    (proc.exitValue(), Files.readString(out))
+  }
+
+  /** (exit code, the stdout lines that are JSON objects) of `graft.Main`. */
+  def cli(args: String*): (Int, Seq[String]) = {
+    val (code, out) = run("graft.Main", args, "1g", 300)
+    (code, out.linesIterator.filter(_.startsWith("{")).toSeq)
   }
 }

@@ -205,14 +205,14 @@ class HealthCheckSpec extends AnyFunSuite {
       val n = strict.readTree(line)
       assert(n.get("run_dir").asText == runDir && n.get("note").asText == note)
     }
-    val (lc, listed) = ChildCli.run("list-runs", "--registry", regDir)
+    val (lc, listed) = ChildCli.cli("list-runs", "--registry", regDir)
     assert(lc == 0 && listed.size == 1)
     check(listed.head)
     val (sc, status) = Main.statusJson(regDir, "ctl")
     assert(sc == 0)
     check(status.head)
     status.foreach(strict.readTree)
-    val (ic, inspected) = ChildCli.run("inspect", "--registry", regDir,
+    val (ic, inspected) = ChildCli.cli("inspect", "--registry", regDir,
       "--run-id", "ctl")
     assert(ic == 0 && inspected.size == 2)
     check(inspected.head)

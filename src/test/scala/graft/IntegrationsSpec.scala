@@ -125,28 +125,10 @@ class IntegrationsSpec extends SparkSpec {
         "prompt:\n  template: \"IT: {text}\"\noutput:\n  output_columns: [res]")
     val out = dir.resolve("out.parquet").toString
     // the CLI stops its Spark session on exit, so it runs in its own JVM
-    // with this JVM's flags and classpath
-    val jvmFlags = scala.jdk.CollectionConverters.ListHasAsScala(
-        java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments).asScala
-      .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms"))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
-      jvmFlags ++ Seq("-cp", sys.props("java.class.path"), "graft.Main",
-        "process", "--config", cfg.toString, "--input", in.toString,
-        "--output", out)
-    val log = dir.resolve("stdout.txt")
-    val pb = new ProcessBuilder(cmd: _*)
-      .redirectError(ProcessBuilder.Redirect.DISCARD)
-      .redirectOutput(log.toFile)
-    pb.environment().put("SPARK_MASTER", "local[2]")
-    pb.environment().put("SPARK_GRAFT_CPUS", "2")
-    val proc = pb.start()
-    val exited = proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
-    if (!exited) proc.destroyForcibly().waitFor()
-    val stdout = Files.readString(log)
-    assert(exited && proc.exitValue() == 0, stdout)
-    val j = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(stdout.linesIterator.filter(_.startsWith("{")).toSeq.last)
+    val (code, json) = ChildCli.cli("process", "--config", cfg.toString,
+      "--input", in.toString, "--output", out)
+    assert(code == 0 && json.nonEmpty, json.mkString("\n"))
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json.last)
     assert(j.get("rows").asLong == 4 && j.get("skipped").asLong == 0)
     assert(j.get("tokens_in").asLong > 0 && j.get("tokens_out").asLong > 0)
     assert(j.get("success_rate").asDouble == 1.0)

@@ -4,7 +4,6 @@ import java.io.File
 import java.math.{BigDecimal => JBigDecimal}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
@@ -32,17 +31,10 @@ class JournalSpec extends SparkSpec {
   /** Run the durable enrich in a child JVM until its client halts it. */
   private def crash(dir: String, batch: Int, repeat: Boolean, haltAfter: Int,
                     bills: String): Unit = {
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
-      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray() ++
-      Seq("-Xmx768m", "-XX:TieredStopAtLevel=1", "-Dspark.ui.enabled=false",
-        "-cp", sys.props("java.class.path"), "graft.JournalCrashChild",
-        dir, batch.toString, repeat.toString, haltAfter.toString, bills)
-    val log = new File(dir + ".log")
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(log).start()
-    assert(p.waitFor(180, TimeUnit.SECONDS), "crash child did not halt")
-    assert(p.exitValue() == HaltCode,
-      s"crash child exited ${p.exitValue()}, see $log")
+    val (code, _) = ChildCli.run("graft.JournalCrashChild",
+      Seq(dir, batch.toString, repeat.toString, haltAfter.toString, bills),
+      "768m", 180)
+    assert(code == HaltCode, s"crash child exited $code")
   }
 
   private def ledger(dir: String) = spark.read.parquet(s"$dir/responses")
@@ -50,10 +42,6 @@ class JournalSpec extends SparkSpec {
   private def callCost(l: DataFrame): JBigDecimal =
     Option(l.dropDuplicates("_attempt", "_call_id").agg(sum("cost")).head()
       .getDecimal(0)).getOrElse(JBigDecimal.ZERO)
-
-  private def journalDirs(dir: String): Seq[String] =
-    Option(new File(dir, CallJournal.DirName).listFiles()).toSeq.flatten
-      .map(_.getPath)
 
   private def assertMd5(data: DataFrame): Unit =
     data.select("text", "out").as[(String, String)].collect().foreach {
@@ -280,6 +268,11 @@ object JournalSpec {
     llm = LlmSpec(maxRetries = 0, concurrency = Concurrency),
     processing = ProcessingSpec(errorPolicy = ErrorPolicy.Fail, chunkRows = 20),
     output = OutputSpec(Seq("out")))
+
+  /** The attempt directories of the call journal under run dir `dir`. */
+  def journalDirs(dir: String): Seq[String] =
+    Option(new File(dir, CallJournal.DirName).listFiles()).toSeq.flatten
+      .map(_.getPath)
 
   /** (cost, item prompts) of every call a bills file records. */
   def readBills(path: String): Seq[(JBigDecimal, Seq[String])] =

@@ -350,13 +350,13 @@ class McpSpec extends SparkSpec {
       array(Main.listCheckpoints(s"$work/registry")))
 
     // list-providers and estimate through the CLI process itself
-    val (pc, providers) = ChildCli.run("list-providers")
+    val (pc, providers) = ChildCli.cli("list-providers")
     assert(pc == 0 &&
       wire(service.listProviders()).path("providers") == array(providers))
     val in = csv((0 until 12).map(i => s"estimate row $i"))
     val cfg = Files.createTempFile("graft_parity_est", ".yaml")
     Files.writeString(cfg, good)
-    val (ec, est) = ChildCli.run("estimate", "--config", cfg.toString,
+    val (ec, est) = ChildCli.cli("estimate", "--config", cfg.toString,
       "--input", in)
     assert(ec == 0 && est.size == 1)
     assert(wire(service.estimate(good, in)) == mapper.readTree(est.head))

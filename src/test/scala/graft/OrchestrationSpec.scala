@@ -539,9 +539,9 @@ class StreamingEnrichSpec extends SparkSpec {
     run()
     import scala.jdk.CollectionConverters._
     assert(sunk.asScala.map(_._1).toSet.size == 40)
-    // committed batches' ledgers are dropped as the stream advances
-    // (default retainLedgers = false): only the LAST batch's survives,
-    // plus the digitless stray the cleanup must ignore
+    // committed batches' ledgers are dropped as the stream advances:
+    // only the LAST batch's survives, plus the digitless stray the
+    // cleanup must ignore
     assert(new java.io.File(ledger).listFiles()
       .map(_.getName).filter(_.startsWith("batch_")).sorted.toSeq
       == Seq("batch_", "batch_000003"))

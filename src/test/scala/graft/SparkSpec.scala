@@ -18,6 +18,14 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Spark's own SharedSparkSessionBase settings: a projection over a
+      // local Seq is not folded away at optimization, and a generated
+      // class that does not compile fails the test instead of silently
+      // running interpreted
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      .config("spark.sql.codegen.fallback", "false")
+      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

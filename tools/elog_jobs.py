@@ -2,30 +2,10 @@
 
   python tools/elog_jobs.py <eventlog_dir> <label_substring>
 """
-import json, os, subprocess, sys
+import json, sys
 from collections import defaultdict
 
-
-def iter_lines(path):
-    files = []
-    if os.path.isdir(path):
-        for root, _dirs, names in os.walk(path):
-            for n in sorted(names):
-                if n.startswith("events_") or n.startswith("eventlog"):
-                    files.append(os.path.join(root, n))
-    else:
-        files = [path]
-    for f in sorted(files):
-        if f.endswith(".zstd"):
-            p = subprocess.Popen(["zstd", "-dc", "--long=31", f],
-                                 stdout=subprocess.PIPE)
-            for line in p.stdout:
-                yield line
-            p.wait()
-        else:
-            with open(f, "rb") as fh:
-                for line in fh:
-                    yield line
+from elog_profile import iter_lines
 
 
 def main():

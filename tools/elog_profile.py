@@ -4,9 +4,10 @@ stage flags. Reads a (rolling, possibly zstd) Spark event-log dir.
   python tools/elog_profile.py <eventlog_dir_or_appdir> [arm_substring]
 
 Aggregates SparkListenerJobStart/JobEnd by the job description label
-("arm:<name>" from Bench, or any setJobDescription value) and prints, per
-label: jobs, summed job wall (ms), tasks, max single-job wall, stages
-whose task count is 1 and wall > 300 ms (the parallelism-collapse flag).
+("arm:<name>" from perfbench's curation inventory, or any
+setJobDescription value) and prints, per label: jobs, summed job wall
+(ms), tasks, max single-job wall, stages whose task count is 1 and
+wall > 300 ms (the parallelism-collapse flag).
 
 A stage's label is the job description in its own StageSubmitted
 Properties; a stage without one (e.g. never submitted) keeps the label of
